@@ -184,11 +184,6 @@ CATALOG_QUERIES = [
     "docs_cube",
     "host_kcore",
     "stream_hll_sketch",
-    # continuation round 5, fourth batch: relational classics — the
-    # Q1 decimal scan-agg, Q3 sort-limit join, Q4 semi-join shapes
-    "pricing_summary",
-    "segment_top_orders",
-    "late_order_priorities",
     # continuation round 5, fourth batch: link-farm reciprocity and
     # the 5-truss (edge-support peeling over oriented triangles)
     "host_reciprocity",
@@ -201,63 +196,36 @@ CATALOG_QUERIES = [
     "concordance",
     "mirror_report",
     "host_anf",
-    # continuation round 5, fifth batch: Q5/Q16/Q18 relational shapes,
-    # the pareto skyline, seeded BFS closeness, the k-anonymity audit,
-    # politeness crawl sharding, and the dup-cluster histogram
-    "regional_revenue",
-    "parts_supplier_counts",
-    "large_order_customers",
-    "part_skyline",
+    # continuation round 5, fifth batch: seeded BFS closeness, the
+    # k-anonymity audit, politeness crawl sharding, and the dup-cluster
+    # histogram
     "host_closeness",
     "k_anonymity",
     "frontier_shards",
     "dup_cluster_stats",
     # continuation round 5, fifth batch: grid resample + forward fill
-    # (asof union-window reuse), PPSWOR weighted sampling, and the
-    # referential-integrity audit
+    # (asof union-window reuse) and PPSWOR weighted sampling
     "events_resample",
     "weighted_sample",
-    "integrity_report",
     # continuation round 5, fifth batch: tokenizer-vocab coverage and
     # streaming anomaly-bucket maintenance (count-delta merge)
     "vocab_coverage",
     "stream_anomalies",
-    # continuation round 5, sixth batch: Q13 outer-join distribution,
-    # Q19 disjunctive pushdown, Q21 per-order-agg rewrite, Q22
-    # cross-multiplied scalar-average anti-join
-    "order_count_distribution",
-    "disjunctive_part_revenue",
-    "waiting_suppliers",
-    "prospect_balances",
-    # continuation round 5, seventh batch: FD discovery (stack-unpivot
-    # profiler), RANGE-frame time rolling, AMS F2 sketch, positional
-    # phrase search, and the stream-static broadcast enrichment
-    "fd_discovery",
+    # continuation round 5, seventh batch: RANGE-frame time rolling,
+    # AMS F2 sketch, positional phrase search, and the stream-static
+    # broadcast enrichment
     "events_time_rolling",
     "ams_f2",
     "phrase_match",
     "stream_enriched",
-    # continuation round 5, seventh batch: Q6/Q10/Q15 pushdown /
-    # top-k-returns / max-tie shapes, IND discovery, the KMV bottom-k
-    # set sketch, the interval-overlap join, and the stream-stream
-    # state-store join
-    "forecast_revenue",
-    "returned_item_customers",
-    "top_revenue_suppliers",
-    "inclusion_stats",
-    "kmv_part_overlap",
+    # continuation round 5, seventh batch: the interval-overlap join
+    # and the stream-stream state-store join
     "interval_join",
     "stream_stream_join",
-    # continuation round 5, eighth batch: deterministic split report,
-    # Deequ-style expectations, journey trigrams, join-key skew audit,
-    # RFM segmentation, Q8 conditional share, Q9 profit rollup
+    # continuation round 5, eighth batch: deterministic split report
+    # and journey trigrams
     "dataset_split",
-    "expectations_report",
     "path_trigrams",
-    "skew_report",
-    "rfm_segments",
-    "market_share",
-    "nation_profit",
     # continuation round 5, eighth batch: seeded random-walk proximity
     # and the exact TWAP staircase integral
     "host_ppr",

@@ -10,7 +10,7 @@ for the physical knobs.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -35,20 +35,7 @@ class ExtractionConfig:
     ocr_language: str = "en"
 
     # --- physical plan (north_rule obligations) ---
-    repartition: int | None = None     # url-hash repartition width; None = leave alone
-    salt_buckets: int = 8              # salt fan-out for heavy hosts
-    heavy_host_fraction: float = 0.05  # host is "heavy" above this input share
     arrow_max_records: int = 256       # rows/Arrow batch (rows carry big binaries)
-
-    # --- field extraction ---
-    fields: tuple[str, ...] = (
-        "patient_name",
-        "donor_name",
-        "invoice_number",
-        "date",
-        "amount",
-        "diagnosis_code",
-    )
 
 
 DEFAULT_CONFIG = ExtractionConfig()

@@ -88,11 +88,7 @@ def choose_layout(
 
 def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> dict:
     args = build_parser().parse_args(argv)
-    cfg = ExtractionConfig(
-        ocr_engine=args.engine,
-        html_method=args.html_method,
-        salt_buckets=args.salt_buckets,
-    )
+    cfg = ExtractionConfig(ocr_engine=args.engine, html_method=args.html_method)
     owns_spark = spark is None
     if owns_spark:
         builder = SparkSession.builder.appName(f"extraction-{args.run_id}")

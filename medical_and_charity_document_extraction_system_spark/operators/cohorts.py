@@ -109,71 +109,3 @@ def funnel_stages(
     return out
 
 
-def rfm_segments(
-    orders: DataFrame,
-    cust_col: str = "o_custkey",
-    date_col: str = "o_orderdate",
-    price_col: str = "o_totalprice",
-    recency_days: tuple = (90, 365),
-    freq_min: tuple = (12, 8),
-    monetary_cents: tuple = (300_000_000, 150_000_000),
-) -> DataFrame:
-    """RFM customer segmentation (the classic retention cube): per
-    customer, Recency = whole days between their last order and the
-    corpus's last order (integer epoch-DAY difference, never a
-    calendar function — engines disagree on date_diff conventions),
-    Frequency = order count, Monetary = exact cents. Each dimension
-    buckets 2/1/0 by fixed integer thresholds (pure CASE — a scale-
-    safe projection; data-driven terciles are ccnet_buckets' job),
-    then one rollup over the <= 27 segments with the average order
-    value as ONE integer division. Two aggs + a one-row broadcast —
-    no window anywhere."""
-    day = 86_400_000_000
-    per = orders.groupBy(F.col(cust_col).alias("cust")).agg(
-        F.max(
-            F.expr(f"unix_micros(CAST({date_col} AS TIMESTAMP)) div {day}")
-        ).alias("last_day"),
-        F.count(F.lit(1)).cast("long").alias("freq"),
-        F.sum(
-            (F.col(price_col).cast("decimal(18,2)") * 100).cast("long")
-        ).alias("cents"),
-    )
-    gmax = per.agg(F.max("last_day").alias("corpus_last_day"))
-    r2, r1 = recency_days
-    f2, f1 = freq_min
-    m2, m1 = monetary_cents
-    scored = per.crossJoin(F.broadcast(gmax)).select(
-        "cust",
-        "freq",
-        "cents",
-        (F.col("corpus_last_day") - F.col("last_day")).alias("rec_days"),
-    )
-    return (
-        scored.select(
-            F.when(F.col("rec_days") < r2, 2)
-            .when(F.col("rec_days") < r1, 1)
-            .otherwise(0)
-            .cast("long")
-            .alias("r_bucket"),
-            F.when(F.col("freq") >= f2, 2)
-            .when(F.col("freq") >= f1, 1)
-            .otherwise(0)
-            .cast("long")
-            .alias("f_bucket"),
-            F.when(F.col("cents") >= m2, 2)
-            .when(F.col("cents") >= m1, 1)
-            .otherwise(0)
-            .cast("long")
-            .alias("m_bucket"),
-            "cents",
-        )
-        .groupBy("r_bucket", "f_bucket", "m_bucket")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_customers"),
-            F.sum("cents").cast("long").alias("total_cents"),
-        )
-        .withColumn(
-            "avg_cents",
-            F.expr("total_cents div n_customers").cast("long"),
-        )
-    )

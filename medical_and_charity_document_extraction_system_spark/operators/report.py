@@ -264,316 +264,3 @@ def dimensional_rollup(
         F.grouping_id().cast("long").alias("gid"), *aggs
     ).select(*dims, "gid", count_alias, *([sum_alias] if sum_col else []))
 
-
-def _fk_check(
-    name: str, fact: DataFrame, fk: str, dim: DataFrame, pk: str
-) -> DataFrame:
-    orphans = fact.select(F.col(fk).alias("k")).join(
-        dim.select(F.col(pk).alias("k")).distinct(), "k", "left_anti"
-    )
-    return fact.agg(F.count(F.lit(1)).alias("n_rows")).crossJoin(
-        orphans.agg(F.count(F.lit(1)).alias("n_bad"))
-    ).select(
-        F.lit(name).alias("check"),
-        F.col("n_rows").cast("long"),
-        F.col("n_bad").cast("long"),
-    )
-
-
-def integrity_report(
-    docs: DataFrame,
-    embeddings: DataFrame,
-    lineitem: DataFrame,
-    orders: DataFrame,
-    customer: DataFrame,
-    part: DataFrame,
-) -> DataFrame:
-    """Referential-integrity and key-uniqueness audit across the
-    harness tables: foreign-key orphan counts (left-anti joins — AQE
-    broadcasts the distinct key projections), duplicate-primary-key
-    counts, and a content-duplication probe (documents sharing a
-    text md5). One row per check:
-    (check, n_rows, n_bad, bad_bp) with the rate ONE integer
-    basis-point floor division.
-
-    The single-row aggs crossJoin into one row per check — constant-
-    size, not a data crossJoin. At 100 TB each check is one scan of
-    its fact table's key column (column-pruned) + a distinct build
-    side far smaller than the fact."""
-    dup_ids = (
-        docs.groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .where(F.col("c") > 1)
-        .agg(F.coalesce(F.sum("c"), F.lit(0)).alias("n_bad"))
-    )
-    dup_text = (
-        docs.groupBy(F.md5(F.col("text")).alias("fp"))
-        .agg(F.count(F.lit(1)).alias("c"))
-        .where(F.col("c") > 1)
-        .agg(F.coalesce(F.sum("c"), F.lit(0)).alias("n_bad"))
-    )
-    n_docs = docs.agg(F.count(F.lit(1)).alias("n_rows"))
-    checks = [
-        _fk_check("lineitem.orderkey->orders", lineitem, "l_orderkey", orders, "o_orderkey"),
-        _fk_check("orders.custkey->customer", orders, "o_custkey", customer, "c_custkey"),
-        _fk_check("lineitem.partkey->part", lineitem, "l_partkey", part, "p_partkey"),
-        _fk_check("embeddings.vecid->documents", embeddings, "vec_id", docs, "doc_id"),
-        n_docs.crossJoin(dup_ids).select(
-            F.lit("documents.docid unique").alias("check"),
-            F.col("n_rows").cast("long"),
-            F.col("n_bad").cast("long"),
-        ),
-        n_docs.crossJoin(dup_text).select(
-            F.lit("documents.text unique").alias("check"),
-            F.col("n_rows").cast("long"),
-            F.col("n_bad").cast("long"),
-        ),
-    ]
-    out = checks[0]
-    for c in checks[1:]:
-        out = out.unionByName(c)
-    return out.select(
-        "check",
-        "n_rows",
-        "n_bad",
-        F.expr("n_bad * 10000 div greatest(n_rows, 1)").cast("long").alias("bad_bp"),
-    )
-
-
-def fd_discovery(df: DataFrame, columns: list[str]) -> DataFrame:
-    """Functional-dependency discovery over a declared column set (the
-    schema-inference pass of a data profiler): for every ordered pair
-    (lhs, rhs), does lhs -> rhs hold, and how many lhs values violate
-    it? lhs -> rhs holds iff no lhs value maps to two distinct rhs
-    values.
-
-    Values are compared on their RENDERED string form (the
-    table_profile rule — uniform stack schema, engine-portable for
-    the int/string columns this is meant for; NULL renders to NULL
-    and groups as its own lhs value, while NULL rhs values are
-    ignored by the distinct count in both engines).
-
-    Plan shape: ONE scan. stack() emits k*(k-1) (pair, lhs_val,
-    rhs_val) rows per input row inside the projection, then a hash-agg
-    keyed by (pair, lhs_val) — uniformly distributed, map-side
-    combinable — and a second agg onto the k*(k-1) pair domain. Never
-    a per-pair rescan, never an Expand of stacked count-distincts."""
-    if len(columns) < 2:
-        raise ValueError("need at least two columns")
-    arms = []
-    for a in columns:
-        for b in columns:
-            if a != b:
-                arms.append(
-                    f"'{a}', '{b}', CAST(`{a}` AS STRING), CAST(`{b}` AS STRING)"
-                )
-    kv = df.select(
-        F.expr(f"stack({len(arms)}, {', '.join(arms)})").alias(
-            "lhs", "rhs", "lhs_val", "rhs_val"
-        )
-    )
-    per_lhs = kv.groupBy("lhs", "rhs", "lhs_val").agg(
-        F.countDistinct("rhs_val").alias("n_rhs")
-    )
-    return per_lhs.groupBy("lhs", "rhs").agg(
-        F.count(F.lit(1)).cast("long").alias("n_lhs_values"),
-        F.sum(F.when(F.col("n_rhs") > 1, 1).otherwise(0))
-        .cast("long")
-        .alias("n_violating"),
-        F.min(F.when(F.col("n_rhs") > 1, 0).otherwise(1))
-        .cast("long")
-        .alias("holds"),
-    )
-
-
-def inclusion_stats(
-    tables: dict[str, DataFrame],
-    pairs: list[tuple[str, str, str, str]],
-) -> DataFrame:
-    """Inclusion-dependency discovery (the foreign-key-profiling twin
-    of ``fd_discovery``): for each declared (child_table.child_col ->
-    parent_table.parent_col) candidate, how many DISTINCT non-NULL
-    child values are missing from the parent's value set, and does
-    the inclusion hold? Values compare on their rendered string form
-    (the table_profile rule); NULL child values are skipped, per the
-    standard IND definition.
-
-    Plan shape: each table is scanned ONCE — stack() unpivots only
-    the columns any pair references, a distinct bounded by the value
-    domains (map-side combinable), then ONE broadcast of the tiny
-    pair list tags child-side slices and ONE left-anti equi-join on
-    (parent_tbl, parent_col, val) finds the missing values. Never a
-    per-pair rescan."""
-    need: dict[str, list[str]] = {}
-    for ct, cc, pt, pc in pairs:
-        need.setdefault(ct, [])
-        need.setdefault(pt, [])
-        if cc not in need[ct]:
-            need[ct].append(cc)
-        if pc not in need[pt]:
-            need[pt].append(pc)
-    kvs = []
-    for t, cols in need.items():
-        arms = ", ".join(f"'{c}', CAST(`{c}` AS STRING)" for c in cols)
-        kvs.append(
-            tables[t]
-            .select(F.expr(f"stack({len(cols)}, {arms})").alias("col", "val"))
-            .where(F.col("val").isNotNull())
-            .select(F.lit(t).alias("tbl"), "col", "val")
-            .distinct()
-        )
-    kv = kvs[0]
-    for x in kvs[1:]:
-        kv = kv.unionByName(x)
-    spark = next(iter(tables.values())).sparkSession
-    pairs_df = spark.createDataFrame(
-        [(f"{ct}.{cc}", f"{pt}.{pc}", ct, cc, pt, pc) for ct, cc, pt, pc in pairs],
-        "child string, parent string, ct string, cc string,"
-        " pt string, pc string",
-    )
-    child_vals = kv.join(
-        F.broadcast(pairs_df),
-        (kv["tbl"] == F.col("ct")) & (kv["col"] == F.col("cc")),
-    ).select("child", "parent", "pt", "pc", "val")
-    parent_kv = kv.select(
-        F.col("tbl").alias("p_tbl"),
-        F.col("col").alias("p_col"),
-        F.col("val").alias("p_val"),
-    )
-    missing = child_vals.join(
-        parent_kv,
-        (F.col("pt") == F.col("p_tbl"))
-        & (F.col("pc") == F.col("p_col"))
-        & (F.col("val") == F.col("p_val")),
-        "left_anti",
-    )
-    totals = child_vals.groupBy("child", "parent").agg(
-        F.count(F.lit(1)).cast("long").alias("n_child_values")
-    )
-    miss = missing.groupBy("child", "parent").agg(
-        F.count(F.lit(1)).cast("long").alias("n_missing")
-    )
-    return (
-        totals.join(miss, ["child", "parent"], "left")
-        .select(
-            "child",
-            "parent",
-            "n_child_values",
-            F.coalesce(F.col("n_missing"), F.lit(0))
-            .cast("long")
-            .alias("n_missing"),
-        )
-        .withColumn(
-            "contained",
-            F.when(F.col("n_missing") == 0, 1).otherwise(0).cast("long"),
-        )
-    )
-
-
-def expectations_report(
-    tables: dict[str, DataFrame],
-    checks: list[tuple[str, str, str, int, int]],
-) -> DataFrame:
-    """Deequ-style data-quality constraint suite. Each check is
-    (check_type, table, column, lo, hi):
-
-    * ``row_count_min``  — observed = row count, passes if >= lo
-    * ``not_null``       — observed = NULL count, passes if 0
-    * ``unique``         — observed = rows minus distinct non-NULL
-                           values (duplicate surplus), passes if 0
-    * ``value_range``    — observed = rows outside [lo, hi] (as
-                           DECIMAL(18,2) — exact band edges, the
-                           forecast_revenue rule), passes if 0
-
-    Plan shape: each table is scanned ONCE — all of its checks
-    compile into a single aggregate row (conditional sums /
-    count-distincts side by side), then the per-check rows unpivot
-    from that one row via stack(). Adding a check adds an expression,
-    never a scan. FK/containment checks are ``inclusion_stats``'s
-    job — compose the two reports, don't re-implement joins here."""
-    by_table: dict[str, list[tuple[str, str, str, int, int]]] = {}
-    for c in checks:
-        by_table.setdefault(c[1], []).append(c)
-    outs = []
-    for t, tchecks in by_table.items():
-        aggs, arms = [], []
-        for i, (kind, _, col, lo, hi) in enumerate(tchecks):
-            if kind == "row_count_min":
-                obs = F.count(F.lit(1))
-                passed = f"CASE WHEN _o{i} >= {lo} THEN 1 ELSE 0 END"
-            elif kind == "not_null":
-                obs = F.sum(
-                    F.when(F.col(col).isNull(), 1).otherwise(0)
-                )
-                passed = f"CASE WHEN _o{i} = 0 THEN 1 ELSE 0 END"
-            elif kind == "unique":
-                obs = F.sum(
-                    F.when(F.col(col).isNotNull(), 1).otherwise(0)
-                ) - F.countDistinct(F.col(col))
-                passed = f"CASE WHEN _o{i} = 0 THEN 1 ELSE 0 END"
-            elif kind == "value_range":
-                v = F.col(col).cast("decimal(18,2)")
-                obs = F.sum(
-                    F.when(
-                        v.isNotNull()
-                        & (
-                            (v < F.lit(str(lo)).cast("decimal(18,2)"))
-                            | (v > F.lit(str(hi)).cast("decimal(18,2)"))
-                        ),
-                        1,
-                    ).otherwise(0)
-                )
-                passed = f"CASE WHEN _o{i} = 0 THEN 1 ELSE 0 END"
-            else:
-                raise ValueError(f"unknown check type: {kind}")
-            aggs.append(obs.cast("long").alias(f"_o{i}"))
-            target = f"{t}.{col}" if col else t
-            arms.append(
-                f"'{kind}', '{target}', CAST(_o{i} AS BIGINT),"
-                f" CAST({passed} AS BIGINT)"
-            )
-        one = tables[t].agg(*aggs)
-        outs.append(
-            one.select(
-                F.expr(
-                    f"stack({len(arms)}, {', '.join(arms)})"
-                ).alias("check_type", "target", "observed", "passed")
-            )
-        )
-    out = outs[0]
-    for x in outs[1:]:
-        out = out.unionByName(x)
-    return out
-
-
-def skew_report(
-    df: DataFrame, key_col: str, k: int = 10
-) -> DataFrame:
-    """Join-key skew diagnostic (what you run BEFORE a big join to
-    decide salting): per-key row counts, the k heaviest keys with
-    their share in basis points, and the skew factor max/mean as an
-    integer percentage (max * n_keys * 100 div n_rows — cross-
-    multiplied, no float). One map-side-combinable count agg; the
-    global stats re-aggregate the count table; top-k is
-    TakeOrdered(k) on (cnt DESC, key) — per-partition heaps, no
-    global sort. NULL keys count as a key (they hash-partition
-    together too — exactly why they matter in a skew audit)."""
-    counts = df.groupBy(
-        F.col(key_col).cast("string").alias("key")
-    ).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    stats = counts.agg(
-        F.count(F.lit(1)).cast("long").alias("n_keys"),
-        F.sum("cnt").cast("long").alias("n_rows"),
-        F.max("cnt").cast("long").alias("max_cnt"),
-    )
-    top = counts.orderBy(F.col("cnt").desc(), F.col("key")).limit(k)
-    return top.crossJoin(F.broadcast(stats)).select(
-        "key",
-        "cnt",
-        F.expr("cnt * 10000 div n_rows").cast("long").alias("share_bp"),
-        "n_keys",
-        "n_rows",
-        F.expr("max_cnt * n_keys * 100 div n_rows")
-        .cast("long")
-        .alias("skew_x100"),
-    )

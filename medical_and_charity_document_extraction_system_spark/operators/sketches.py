@@ -417,184 +417,3 @@ def ams_f2_report(
             .alias("err_bp"),
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# KMV (k-minimum-values / bottom-k) distinct sketch — Bar-Yossef 2002,
-# Beyer et al. 2007.
-#
-# Keep the k smallest md5-derived hashes of a set. Unlike HLL, the
-# KMV sketch supports INTERSECTION estimates: the bottom-k of a union
-# is computable from two sketches alone (bottom-k(A ∪ B) ⊆ kA ∪ kB),
-# and the fraction of those union hashes present in BOTH input
-# sketches estimates the Jaccard. Everything is integer: hashes are
-# the first 13 md5 hex digits (52 bits — wide enough that collisions
-# are negligible, narrow enough that (k-1) * 2^52 stays inside int64
-# in BOTH engines; recomputable from scratch in DuckDB), the
-# estimator is (k-1) * 2^52 DIV kth_min, and a group
-# with fewer than k distinct items reports its EXACT count (the
-# sketch holds the whole set). Selection reuses grouped_topk — never
-# a window over raw rows.
-
-KMV_K = 128
-KMV_SPACE = 1 << 52
-
-
-def kmv_hash(col: Column) -> Column:
-    """52-bit positive integer from the first 13 md5 hex digits."""
-    return F.conv(F.substring(F.md5(col.cast("string")), 1, 13), 16, 10).cast(
-        "bigint"
-    )
-
-
-def kmv_sketch(
-    df: DataFrame, key_col: str, item_col: str, k: int = KMV_K
-) -> DataFrame:
-    """Per-key bottom-k distinct item hashes: (key, kmv_hash) rows.
-    The distinct is a map-side-combinable hash-agg; selection is the
-    grouped_topk agg+join rule (score = -hash), so a mega-key never
-    funnels through one window task."""
-    from .topk import grouped_topk
-
-    hashes = (
-        df.select(
-            F.col(key_col).alias("kmv_key"),
-            kmv_hash(F.col(item_col)).alias("kmv_hash"),
-        )
-        .distinct()
-        .withColumn("_neg", -F.col("kmv_hash"))
-    )
-    return grouped_topk(hashes, "kmv_key", "_neg", "kmv_hash", k).select(
-        "kmv_key", "kmv_hash"
-    )
-
-
-def kmv_estimate(sketch: DataFrame, k: int = KMV_K) -> DataFrame:
-    """(key, n_kept, est): (k-1) * 2^52 DIV kth_min when the sketch is
-    full, the exact member count when the whole set fit."""
-    agg = sketch.groupBy("kmv_key").agg(
-        F.count(F.lit(1)).cast("long").alias("n_kept"),
-        F.max("kmv_hash").alias("kth"),
-    )
-    return agg.select(
-        "kmv_key",
-        "n_kept",
-        F.when(F.col("n_kept") < k, F.col("n_kept"))
-        .otherwise(
-            F.expr(f"CAST({k - 1} AS BIGINT) * {KMV_SPACE} div kth")
-        )
-        .cast("long")
-        .alias("est"),
-    )
-
-
-def kmv_pair_overlap(
-    sketch: DataFrame, key_a: str, key_b: str, k: int = KMV_K
-) -> DataFrame:
-    """Union/intersection estimates for one key pair from the two
-    sketches ALONE (the set-operation property HLL lacks): the union
-    sketch is the bottom-k of the two hash sets' union; hashes in it
-    that appear in BOTH input sketches estimate the intersection as
-    n_both * est_union DIV n_union_kept. When the union fits under k
-    every figure is exact by construction. One row out."""
-    from .topk import grouped_topk
-
-    a = sketch.where(F.col("kmv_key") == key_a).select("kmv_hash")
-    b = sketch.where(F.col("kmv_key") == key_b).select("kmv_hash")
-    u = (
-        a.unionByName(b)
-        .distinct()
-        .select(F.lit("u").alias("kmv_key"), "kmv_hash")
-        .withColumn("_neg", -F.col("kmv_hash"))
-    )
-    uk = grouped_topk(u, "kmv_key", "_neg", "kmv_hash", k).select("kmv_hash")
-    both = uk.join(a, "kmv_hash", "left_semi").join(b, "kmv_hash", "left_semi")
-    stats = uk.agg(
-        F.count(F.lit(1)).cast("long").alias("n_union_kept"),
-        F.max("kmv_hash").alias("kth"),
-    ).crossJoin(
-        F.broadcast(both.agg(F.count(F.lit(1)).cast("long").alias("n_both")))
-    )
-    return stats.select(
-        F.lit(key_a).alias("key_a"),
-        F.lit(key_b).alias("key_b"),
-        "n_union_kept",
-        "n_both",
-        F.when(F.col("n_union_kept") < k, F.col("n_union_kept"))
-        .otherwise(
-            F.expr(f"CAST({k - 1} AS BIGINT) * {KMV_SPACE} div kth")
-        )
-        .cast("long")
-        .alias("est_union"),
-    ).withColumn(
-        "est_intersection",
-        F.expr("n_both * est_union div n_union_kept").cast("long"),
-    )
-
-
-def kmv_pairs_overlap(
-    sketch: DataFrame,
-    pairs: list[tuple[str, str]],
-    k: int = KMV_K,
-) -> DataFrame:
-    """``kmv_pair_overlap`` for MANY pairs in ONE plan: the pair list
-    broadcasts, both sides' sketch rows tag themselves with their
-    pair via two equi-joins (never an OR-join), the per-pair union
-    bottom-k goes through one grouped_topk over the concatenated pair
-    key, and membership flags ride left joins off the same tagged
-    slices. Identical output rows to N single-pair calls, one job
-    instead of 3N tiny stages."""
-    spark = sketch.sparkSession
-    pdf = F.broadcast(
-        spark.createDataFrame(list(pairs), "key_a string, key_b string")
-    )
-    a_side = pdf.join(
-        sketch, sketch["kmv_key"] == F.col("key_a")
-    ).select("key_a", "key_b", "kmv_hash")
-    b_side = pdf.join(
-        sketch, sketch["kmv_key"] == F.col("key_b")
-    ).select("key_a", "key_b", "kmv_hash")
-    u = (
-        a_side.unionByName(b_side)
-        .distinct()
-        .withColumn(
-            "_pair", F.concat_ws("|", F.col("key_a"), F.col("key_b"))
-        )
-        .withColumn("_neg", -F.col("kmv_hash"))
-    )
-    from .topk import grouped_topk
-
-    uk = grouped_topk(u, "_pair", "_neg", "kmv_hash", k).select(
-        "key_a", "key_b", "kmv_hash"
-    )
-    am = a_side.withColumn("_ina", F.lit(1))
-    bm = b_side.withColumn("_inb", F.lit(1))
-    per = (
-        uk.join(am, ["key_a", "key_b", "kmv_hash"], "left")
-        .join(bm, ["key_a", "key_b", "kmv_hash"], "left")
-        .groupBy("key_a", "key_b")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_union_kept"),
-            F.max("kmv_hash").alias("kth"),
-            F.sum(
-                F.when(
-                    F.col("_ina").isNotNull() & F.col("_inb").isNotNull(), 1
-                ).otherwise(0)
-            )
-            .cast("long")
-            .alias("n_both"),
-        )
-    )
-    return per.select(
-        "key_a",
-        "key_b",
-        "n_union_kept",
-        "n_both",
-        F.when(F.col("n_union_kept") < k, F.col("n_union_kept"))
-        .otherwise(F.expr(f"CAST({k - 1} AS BIGINT) * {KMV_SPACE} div kth"))
-        .cast("long")
-        .alias("est_union"),
-    ).withColumn(
-        "est_intersection",
-        F.expr("n_both * est_union div n_union_kept").cast("long"),
-    )

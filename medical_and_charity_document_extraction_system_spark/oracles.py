@@ -910,33 +910,6 @@ FROM x GROUP BY 1, 2
 """
 
 
-def nation_revenue_sql() -> str:
-    """Join twin: money summed as DECIMAL(18,2) (exact, order-free),
-    one final cast to double — same convention as events_tumbling."""
-    return """
-SELECT n_name,
-       CAST(count(*) AS BIGINT) AS n_orders,
-       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-FROM orders
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-GROUP BY n_name
-"""
-
-
-def priority_line_revenue_sql() -> str:
-    return """
-SELECT o_orderpriority,
-       CAST(count(*) AS BIGINT) AS n_lines,
-       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-                * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-            AS DOUBLE) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-GROUP BY o_orderpriority
-"""
-
-
 def merge_sources_sql() -> str:
     """Twin of operators/maintenance.merge_sources (reference
     merge_pdfs, pdf_service.py:23-85): UNION ALL of the two halves,
@@ -4474,6 +4447,10 @@ FROM m
 """
 
 
+# ---------------------------------------------------------------------------
+# Grouping-sets cube and k-core twins
+
+
 def docs_cube_sql() -> str:
     """Twin of q_docs_cube: native grouping sets. DuckDB's
     GROUPING(a, b) packs the same bitmask as Spark's grouping_id()
@@ -4516,300 +4493,8 @@ SELECT node, CAST(count(*) AS BIGINT) AS core_deg FROM {prev} GROUP BY node
 
 
 # ---------------------------------------------------------------------------
-# Relational classics twins (operators/relational.py)
-
-_REV = ("CAST(l_extendedprice AS DECIMAL(18,2)) * "
-        "(CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))")
-
-
-def pricing_summary_sql(ship_cutoff: str = "1998-09-01") -> str:
-    """Twin of q_pricing_summary: TPC-H Q1 decimals — every sum exact
-    until one final double cast (the priority_line_revenue rule)."""
-    return f"""
-SELECT l_returnflag, l_linestatus,
-       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base,
-       CAST(sum({_REV}) AS DOUBLE) AS sum_disc_price,
-       CAST(sum({_REV} * (CAST(1 AS DECIMAL(18,2))
-                          + CAST(l_tax AS DECIMAL(18,2)))) AS DOUBLE)
-         AS sum_charge,
-       CAST(count(*) AS BIGINT) AS n_lines
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '{ship_cutoff}'
-GROUP BY 1, 2
-"""
-
-
-def segment_top_orders_sql(
-    segment: str = "BUILDING", cutoff: str = "1998-01-01", k: int = 10
-) -> str:
-    """Twin of q_segment_top_orders: the top-k edge orders by the
-    EXACT decimal revenue (ties by orderkey) before the double
-    export, exactly as the Spark side does."""
-    return f"""
-WITH c AS (SELECT c_custkey FROM customer WHERE c_mktsegment = '{segment}'),
-o AS (SELECT o_orderkey, o_custkey, epoch_us(o_orderdate) AS o_orderdate_us
-      FROM orders WHERE o_orderdate < TIMESTAMP '{cutoff}'),
-l AS (SELECT l_orderkey, {_REV} AS rev
-      FROM lineitem WHERE l_shipdate > TIMESTAMP '{cutoff}'),
-g AS (SELECT o.o_orderkey, min(o.o_orderdate_us) AS o_orderdate_us,
-             sum(l.rev) AS revenue_dec
-      FROM o JOIN c ON o.o_custkey = c.c_custkey
-      JOIN l ON o.o_orderkey = l.l_orderkey
-      GROUP BY 1)
-SELECT o_orderkey, o_orderdate_us, CAST(revenue_dec AS DOUBLE) AS revenue
-FROM g ORDER BY revenue_dec DESC, o_orderkey LIMIT {k}
-"""
-
-
-def late_order_priorities_sql(late_days: int = 90) -> str:
-    """Twin of q_late_order_priorities: EXISTS via a DISTINCT late
-    orderkey set; the lag compares exact epoch micros."""
-    lag_us = late_days * 86_400_000_000
-    return f"""
-WITH o AS (SELECT o_orderkey, o_orderpriority, epoch_us(o_orderdate) AS od_us
-           FROM orders),
-lk AS (SELECT DISTINCT o.o_orderkey
-       FROM o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-       WHERE epoch_us(l.l_shipdate) > o.od_us + {lag_us})
-SELECT o.o_orderpriority, CAST(count(*) AS BIGINT) AS n_late_orders
-FROM o JOIN lk USING (o_orderkey) GROUP BY 1
-"""
-
-
-def regional_revenue_sql(
-    region_name: str = "ASIA",
-    date_from: str = "1996-01-01",
-    date_to: str = "1997-01-01",
-) -> str:
-    """Twin of q_regional_revenue: TPC-H Q5 — same-nation
-    customer/supplier trade per nation of one region; exact decimal
-    revenue, one double cast."""
-    return f"""
-SELECT n.n_name, CAST(sum({_REV}) AS DOUBLE) AS revenue
-FROM lineitem l
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN supplier s ON l.l_suppkey = s.s_suppkey AND s.s_nationkey = c.c_nationkey
-JOIN nation n ON c.c_nationkey = n.n_nationkey
-JOIN region r ON n.n_regionkey = r.r_regionkey
-WHERE r.r_name = '{region_name}'
-  AND o.o_orderdate >= TIMESTAMP '{date_from}'
-  AND o.o_orderdate < TIMESTAMP '{date_to}'
-GROUP BY 1
-"""
-
-
-def promo_revenue_share_sql(
-    month_start: str = "1997-09-01", month_end: str = "1997-10-01"
-) -> str:
-    """Twin of q_promo_revenue_share: the share is integer basis
-    points over the scale-4 revenue lifted to integral units
-    (rev*10000 casts to BIGINT exactly), so no float division ever
-    happens; the two revenue exports are exact decimal sums cast
-    once."""
-    return f"""
-WITH li AS (
-  SELECT l_partkey, {_REV} AS rev FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '{month_start}'
-    AND l_shipdate < TIMESTAMP '{month_end}'
-),
-j AS (
-  SELECT rev, (p_type = 'PROMO') AS promo,
-         CAST(rev * 10000 AS BIGINT) AS units
-  FROM li JOIN part ON l_partkey = p_partkey
-)
-SELECT CAST(sum(CASE WHEN promo THEN rev
-                     ELSE CAST(0 AS DECIMAL(18,4)) END) AS DOUBLE) AS promo_rev,
-       CAST(sum(rev) AS DOUBLE) AS total_rev,
-       CAST(CAST(sum(CASE WHEN promo THEN units ELSE 0 END) AS BIGINT) * 10000
-            // greatest(CAST(sum(units) AS BIGINT), 1) AS BIGINT)
-         AS promo_share_bp
-FROM j
-"""
-
-
-def parts_supplier_counts_sql(exclude_brand: str = "Brand#9") -> str:
-    """Twin of q_parts_supplier_counts: Q16 over the DISTINCT
-    (partkey, suppkey) pairs lineitem observed, complaints analog =
-    negative-balance suppliers via NOT EXISTS."""
-    return f"""
-WITH pr AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
-ok AS (
-  SELECT pr.l_partkey, pr.l_suppkey FROM pr
-  WHERE NOT EXISTS (SELECT 1 FROM supplier s
-                    WHERE s.s_suppkey = pr.l_suppkey AND s.s_acctbal < 0)
-)
-SELECT p_brand, p_type, p_size,
-       CAST(count(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
-FROM ok JOIN part ON l_partkey = p_partkey
-WHERE p_brand <> '{exclude_brand}'
-GROUP BY 1, 2, 3
-"""
-
-
-def large_order_customers_sql(min_qty: int = 250) -> str:
-    """Twin of q_large_order_customers: Q18 — the HAVING on the exact
-    decimal per-order quantity sum decides membership; totalprice
-    passes through untouched."""
-    return f"""
-WITH big AS (
-  SELECT l_orderkey, sum(CAST(l_quantity AS DECIMAL(18,2))) AS sq
-  FROM lineitem GROUP BY 1
-  HAVING sum(CAST(l_quantity AS DECIMAL(18,2))) > {min_qty}
-)
-SELECT c_custkey, c_name, o_orderkey, epoch_us(o_orderdate) AS o_orderdate_us,
-       o_totalprice, CAST(sq AS DOUBLE) AS sum_qty
-FROM big JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-"""
-
-
-def part_skyline_sql() -> str:
-    """Twin of q_part_skyline: same corner construction — min price
-    per size, running strict-min window over the TINY size-domain agg
-    (sizes DESC), join back at (size, min price). Prices are compared
-    only, never combined."""
-    return """
-WITH mp AS (SELECT p_size, min(p_retailprice) AS mp FROM part GROUP BY 1),
-c AS (
-  SELECT p_size, mp,
-         min(mp) OVER (ORDER BY p_size DESC
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS bl
-  FROM mp
-),
-k AS (SELECT p_size, mp FROM c WHERE bl IS NULL OR mp < bl)
-SELECT p.p_partkey, p.p_name, p.p_size, p.p_retailprice
-FROM part p JOIN k ON p.p_size = k.p_size AND p.p_retailprice = k.mp
-"""
-
-
-def order_count_distribution_sql(
-    exclude_priority: str = "4-NOT SPECIFIED",
-) -> str:
-    """Twin of q_order_count_distribution: Q13 — LEFT OUTER join so
-    zero-order customers survive, count(o_orderkey) skips the NULLs,
-    second agg onto the count domain. Integers only."""
-    return f"""
-WITH per AS (
-  SELECT c.c_custkey, CAST(count(o.o_orderkey) AS BIGINT) AS c_count
-  FROM customer c
-  LEFT JOIN (SELECT o_custkey, o_orderkey FROM orders
-             WHERE o_orderpriority <> '{exclude_priority}') o
-    ON c.c_custkey = o.o_custkey
-  GROUP BY 1
-)
-SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
-FROM per GROUP BY 1
-"""
-
-
-def disjunctive_part_revenue_sql(
-    clauses: tuple = (
-        ("Brand#3", 1, 15, 1, 11),
-        ("Brand#12", 10, 30, 10, 20),
-        ("Brand#21", 20, 50, 20, 30),
-    ),
-) -> str:
-    """Twin of q_disjunctive_part_revenue: Q19 — the same three-way
-    disjunction evaluated on the joined row; quantity compared as an
-    exact decimal so the range edges agree."""
-    ors = " OR ".join(
-        f"(p_brand = '{b}' AND p_size BETWEEN {slo} AND {shi} "
-        f"AND q BETWEEN CAST({qlo} AS DECIMAL(18,2)) "
-        f"AND CAST({qhi} AS DECIMAL(18,2)))"
-        for b, slo, shi, qlo, qhi in clauses
-    )
-    return f"""
-WITH j AS (
-  SELECT {_REV} AS rev, CAST(l_quantity AS DECIMAL(18,2)) AS q,
-         p_brand, p_size
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-)
-SELECT CAST(sum(rev) AS DOUBLE) AS revenue,
-       CAST(count(*) AS BIGINT) AS n_lines
-FROM j WHERE {ors}
-"""
-
-
-def waiting_suppliers_sql(late_days: int = 90) -> str:
-    """Twin of q_waiting_suppliers: Q21 rewritten as ONE per-order
-    aggregation — ≥2 distinct suppliers, exactly 1 distinct late one,
-    min() recovers the culprit. Exact epoch-micros lag."""
-    lag_us = late_days * 86_400_000_000
-    late = f"epoch_us(l.l_shipdate) > o.od_us + {lag_us}"
-    return f"""
-WITH o AS (SELECT o_orderkey, epoch_us(o_orderdate) AS od_us FROM orders),
-g AS (
-  SELECT l.l_orderkey,
-         count(DISTINCT l.l_suppkey) AS n_supp,
-         count(DISTINCT CASE WHEN {late} THEN l.l_suppkey END) AS n_late,
-         min(CASE WHEN {late} THEN l.l_suppkey END) AS late_supp
-  FROM lineitem l JOIN o ON l.l_orderkey = o.o_orderkey
-  GROUP BY 1
-)
-SELECT s_suppkey, s_name, CAST(count(*) AS BIGINT) AS numwait
-FROM g JOIN supplier ON late_supp = s_suppkey
-WHERE n_supp >= 2 AND n_late = 1
-GROUP BY 1, 2
-"""
-
-
-def prospect_balances_sql(since: str = "2000-06-01") -> str:
-    """Twin of q_prospect_balances: Q22 — balances lifted to exact
-    integer cents, the average threshold cross-multiplied
-    (cents * n_pos > total_cents), lapsed buyers via NOT EXISTS over
-    the date-filtered orders."""
-    return f"""
-WITH cents AS (
-  SELECT c_custkey, c_nationkey,
-         CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS bal_cents
-  FROM customer
-),
-st AS (SELECT count(*) AS n_pos, sum(bal_cents) AS total_cents
-       FROM cents WHERE bal_cents > 0),
-q AS (
-  SELECT c.c_nationkey, c.bal_cents
-  FROM cents c, st
-  WHERE c.bal_cents * st.n_pos > st.total_cents
-    AND NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey
-                    AND o.o_orderdate >= TIMESTAMP '{since}')
-)
-SELECT c_nationkey, CAST(count(*) AS BIGINT) AS n_prospects,
-       CAST(sum(bal_cents) AS BIGINT) AS total_bal_cents
-FROM q GROUP BY 1
-"""
-
-
-def fd_discovery_sql(columns: tuple = ("o_orderkey", "o_custkey",
-                                       "o_orderstatus", "o_orderpriority"),
-                     table: str = "orders") -> str:
-    """Twin of q_fd_discovery: the same ordered-pair unpivot (UNION
-    ALL arms instead of stack), values compared on their rendered
-    string form; count(DISTINCT rhs_val) ignores NULLs in both
-    engines and a NULL lhs renders as its own group."""
-    arms = "\nUNION ALL\n".join(
-        f"SELECT '{a}' AS lhs, '{b}' AS rhs, CAST({a} AS VARCHAR) AS lhs_val,"
-        f" CAST({b} AS VARCHAR) AS rhs_val FROM {table}"
-        for a in columns
-        for b in columns
-        if a != b
-    )
-    return f"""
-WITH kv AS (
-{arms}
-),
-per AS (
-  SELECT lhs, rhs, lhs_val, count(DISTINCT rhs_val) AS n_rhs
-  FROM kv GROUP BY 1, 2, 3
-)
-SELECT lhs, rhs,
-       CAST(count(*) AS BIGINT) AS n_lhs_values,
-       CAST(sum(CASE WHEN n_rhs > 1 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_violating,
-       CAST(min(CASE WHEN n_rhs > 1 THEN 0 ELSE 1 END) AS BIGINT) AS holds
-FROM per GROUP BY 1, 2
-"""
+# Event-window, stream-join, sketch, sampling, host-graph and
+# text-audit twins
 
 
 def rolling_time_stats_sql(window_us: int = 3_600_000_000) -> str:
@@ -4979,52 +4664,6 @@ keyed AS (
 m AS (SELECT doc_id, weight, min(rk) AS sample_key FROM keyed GROUP BY 1, 2)
 SELECT doc_id, CAST(weight AS BIGINT) AS weight, sample_key
 FROM m ORDER BY sample_key, doc_id LIMIT {k}
-"""
-
-
-def integrity_report_sql() -> str:
-    """Twin of q_integrity_report: scalar-subquery orphan/dup counts
-    per check ("check" is a DuckDB reserved word — quoted). The rate
-    is the same integer basis-point floor division."""
-    return """
-WITH checks AS (
-  SELECT 'lineitem.orderkey->orders' AS c,
-         (SELECT count(*) FROM lineitem) AS n_rows,
-         (SELECT count(*) FROM lineitem l WHERE NOT EXISTS
-            (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)) AS n_bad
-  UNION ALL
-  SELECT 'orders.custkey->customer',
-         (SELECT count(*) FROM orders),
-         (SELECT count(*) FROM orders o WHERE NOT EXISTS
-            (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey))
-  UNION ALL
-  SELECT 'lineitem.partkey->part',
-         (SELECT count(*) FROM lineitem),
-         (SELECT count(*) FROM lineitem l WHERE NOT EXISTS
-            (SELECT 1 FROM part p WHERE p.p_partkey = l.l_partkey))
-  UNION ALL
-  SELECT 'embeddings.vecid->documents',
-         (SELECT count(*) FROM embeddings),
-         (SELECT count(*) FROM embeddings e WHERE NOT EXISTS
-            (SELECT 1 FROM documents d WHERE d.doc_id = e.vec_id))
-  UNION ALL
-  SELECT 'documents.docid unique',
-         (SELECT count(*) FROM documents),
-         (SELECT CAST(coalesce(sum(c), 0) AS BIGINT) FROM
-            (SELECT count(*) AS c FROM documents GROUP BY doc_id
-             HAVING count(*) > 1))
-  UNION ALL
-  SELECT 'documents.text unique',
-         (SELECT count(*) FROM documents),
-         (SELECT CAST(coalesce(sum(c), 0) AS BIGINT) FROM
-            (SELECT count(*) AS c FROM documents GROUP BY md5(text)
-             HAVING count(*) > 1))
-)
-SELECT c AS "check", CAST(n_rows AS BIGINT) AS n_rows,
-       CAST(n_bad AS BIGINT) AS n_bad,
-       CAST(CAST(n_bad AS BIGINT) * 10000
-            // greatest(CAST(n_rows AS BIGINT), 1) AS BIGINT) AS bad_bp
-FROM checks
 """
 
 
@@ -5353,268 +4992,6 @@ FROM ex JOIN s USING (node)
 """
 
 
-def forecast_revenue_sql(
-    date_from: str = "1996-01-01",
-    date_to: str = "1997-01-01",
-    disc_lo: str = "0.03",
-    disc_hi: str = "0.05",
-    qty_max: int = 24,
-) -> str:
-    """Twin of q_forecast_revenue: TPC-H Q6 — the discount band
-    compares as exact decimals (the band edges are not representable
-    doubles), revenue is ext*disc summed exactly and cast once."""
-    return f"""
-SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-               * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE)
-         AS forecast_revenue,
-       CAST(count(*) AS BIGINT) AS n_lines
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '{date_from}'
-  AND l_shipdate < TIMESTAMP '{date_to}'
-  AND CAST(l_discount AS DECIMAL(18,2))
-        BETWEEN CAST('{disc_lo}' AS DECIMAL(18,2))
-            AND CAST('{disc_hi}' AS DECIMAL(18,2))
-  AND l_quantity < {qty_max}
-"""
-
-
-def nation_trade_volume_sql(
-    nation_a: str = "NATION_1",
-    nation_b: str = "NATION_2",
-    date_from: str = "1995-01-01",
-    date_to: str = "1998-01-01",
-) -> str:
-    """Twin of q_nation_trade_volume: TPC-H Q7 — both directions of
-    trade between two nations per ship year; exact decimal revenue."""
-    return f"""
-SELECT ns.n_name AS supp_nation, nc.n_name AS cust_nation,
-       CAST(year(l.l_shipdate) AS BIGINT) AS ship_year,
-       CAST(sum({_REV}) AS DOUBLE) AS revenue
-FROM lineitem l
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-JOIN supplier s ON l.l_suppkey = s.s_suppkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN nation ns ON s.s_nationkey = ns.n_nationkey
-JOIN nation nc ON c.c_nationkey = nc.n_nationkey
-WHERE ns.n_name IN ('{nation_a}', '{nation_b}')
-  AND nc.n_name IN ('{nation_a}', '{nation_b}')
-  AND ns.n_name <> nc.n_name
-  AND l.l_shipdate >= TIMESTAMP '{date_from}'
-  AND l.l_shipdate < TIMESTAMP '{date_to}'
-GROUP BY 1, 2, 3
-"""
-
-
-def returned_item_customers_sql(
-    date_from: str = "1996-01-01",
-    date_to: str = "1996-04-01",
-    k: int = 20,
-) -> str:
-    """Twin of q_returned_item_customers: TPC-H Q10 — top-k on the
-    EXACT decimal revenue (ties by custkey) before the double export;
-    the wide customer columns join after the limit."""
-    return f"""
-WITH per AS (
-  SELECT o.o_custkey, sum({_REV}) AS rev_dec
-  FROM lineitem l
-  JOIN orders o ON l.l_orderkey = o.o_orderkey
-  WHERE l.l_returnflag = 'R'
-    AND o.o_orderdate >= TIMESTAMP '{date_from}'
-    AND o.o_orderdate < TIMESTAMP '{date_to}'
-  GROUP BY 1
-  ORDER BY rev_dec DESC, o.o_custkey
-  LIMIT {k}
-)
-SELECT c.c_custkey, c.c_name, CAST(c.c_acctbal AS DOUBLE) AS acctbal,
-       n.n_name, CAST(per.rev_dec AS DOUBLE) AS revenue
-FROM per
-JOIN customer c ON per.o_custkey = c.c_custkey
-JOIN nation n ON c.c_nationkey = n.n_nationkey
-"""
-
-
-def shipping_priority_classes_sql(late_days: int = 60) -> str:
-    """Twin of q_shipping_priority_classes: TPC-H Q12 adapted —
-    conditional counts per linestatus among late lines; the lag
-    compares exact epoch micros."""
-    lag_us = late_days * 86_400_000_000
-    return f"""
-SELECT l.l_linestatus,
-       CAST(sum(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                     THEN 1 ELSE 0 END) AS BIGINT) AS n_critical,
-       CAST(sum(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                     THEN 0 ELSE 1 END) AS BIGINT) AS n_regular
-FROM lineitem l
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-WHERE epoch_us(l.l_shipdate) > epoch_us(o.o_orderdate) + {lag_us}
-GROUP BY 1
-"""
-
-
-def top_revenue_suppliers_sql(
-    date_from: str = "1996-01-01", date_to: str = "1996-07-01"
-) -> str:
-    """Twin of q_top_revenue_suppliers: TPC-H Q15 — the max compares
-    on the EXACT decimal so revenue ties survive identically."""
-    return f"""
-WITH rev AS (
-  SELECT l_suppkey, sum({_REV}) AS rev_dec
-  FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '{date_from}'
-    AND l_shipdate < TIMESTAMP '{date_to}'
-  GROUP BY 1
-)
-SELECT s.s_suppkey, s.s_name, CAST(rev.rev_dec AS DOUBLE) AS total_revenue
-FROM rev
-JOIN supplier s ON rev.l_suppkey = s.s_suppkey
-WHERE rev.rev_dec = (SELECT max(rev_dec) FROM rev)
-"""
-
-
-def small_quantity_revenue_sql(
-    brand: str = "Brand#1", num: int = 1, den: int = 5
-) -> str:
-    """Twin of q_small_quantity_revenue: TPC-H Q17 — the correlated
-    average compares as cross-multiplied integer cents (qty*den*cnt <
-    sum*num); the weekly average is ONE double division of identical
-    operands."""
-    return f"""
-WITH li AS (
-  SELECT l.l_partkey,
-         CAST(CAST(l.l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT) AS qcents,
-         CAST(l.l_extendedprice AS DECIMAL(18,2)) AS price
-  FROM lineitem l
-  JOIN part p ON l.l_partkey = p.p_partkey
-  WHERE p.p_brand = '{brand}'
-),
-th AS (
-  SELECT l_partkey, sum(qcents) AS sum_qcents,
-         count(*) AS n_part_lines
-  FROM li GROUP BY 1
-)
-SELECT CAST(sum(li.price) AS DOUBLE) AS total_revenue,
-       CAST(count(*) AS BIGINT) AS n_lines,
-       CAST(sum(li.price) AS DOUBLE) / CAST(7.0 AS DOUBLE) AS avg_weekly
-FROM li
-JOIN th ON li.l_partkey = th.l_partkey
-WHERE li.qcents * {den} * th.n_part_lines < th.sum_qcents * {num}
-"""
-
-
-def inclusion_stats_sql(
-    pairs: tuple = (
-        ("lineitem", "l_orderkey", "orders", "o_orderkey"),
-        ("orders", "o_custkey", "customer", "c_custkey"),
-        ("customer", "c_nationkey", "nation", "n_nationkey"),
-        ("nation", "n_regionkey", "region", "r_regionkey"),
-        ("orders", "o_orderkey", "lineitem", "l_orderkey"),
-    ),
-) -> str:
-    """Twin of q_inclusion_stats: per candidate IND, distinct
-    non-NULL child values left-anti probed against the parent's
-    distinct set; values compare on their rendered string form."""
-    arms = "\nUNION ALL\n".join(
-        f"""SELECT '{ct}.{cc}' AS child, '{pt}.{pc}' AS parent,
-       CAST(count(*) AS BIGINT) AS n_child_values,
-       CAST(sum(CASE WHEN p.val IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_missing,
-       CAST(min(CASE WHEN p.val IS NULL THEN 0 ELSE 1 END) AS BIGINT)
-         AS contained
-FROM (SELECT DISTINCT CAST({cc} AS VARCHAR) AS val FROM {ct}
-      WHERE {cc} IS NOT NULL) c
-LEFT JOIN (SELECT DISTINCT CAST({pc} AS VARCHAR) AS val FROM {pt}) p
-       USING (val)"""
-        for ct, cc, pt, pc in pairs
-    )
-    return arms
-
-
-def kmv_part_overlap_sql(k: int = 128) -> str:
-    """Twin of q_kmv_part_overlap: per returnflag pair, the KMV
-    bottom-k union/intersection estimates next to the exact counts.
-    Hashes recompute from scratch (first 13 md5 hex = 52 bits);
-    bottom-k here is a plain row_number over the per-flag DISTINCT
-    hash table (tiny), the estimator (k-1)*2^52 // kth and the
-    intersection n_both * est_union // n_union_kept — integer floor
-    divisions in both engines."""
-    space = 1 << 52
-    return f"""
-WITH items AS (
-  SELECT DISTINCT l_returnflag AS flag, CAST(l_partkey AS VARCHAR) AS item
-  FROM lineitem
-),
-h AS (
-  SELECT flag,
-         CAST(('0x' || substr(md5(item), 1, 13)) AS BIGINT) AS hv
-  FROM items
-),
-sk AS (
-  SELECT flag, hv FROM (
-    SELECT flag, hv, row_number() OVER (PARTITION BY flag ORDER BY hv) AS rn
-    FROM h) WHERE rn <= {k}
-),
-est AS (
-  SELECT flag, CAST(count(*) AS BIGINT) AS n_kept, max(hv) AS kth FROM sk
-  GROUP BY 1
-),
-ex AS (SELECT flag, CAST(count(*) AS BIGINT) AS n_exact FROM items
-       GROUP BY 1),
-pairs(key_a, key_b) AS (VALUES ('A','N'), ('A','R'), ('N','R')),
-exu AS (
-  SELECT p.key_a, p.key_b, CAST(count(*) AS BIGINT) AS n_exact_inter
-  FROM pairs p
-  JOIN items a ON a.flag = p.key_a
-  JOIN items b ON b.flag = p.key_b AND b.item = a.item
-  GROUP BY 1, 2
-),
-uh AS (
-  SELECT p.key_a, p.key_b, s.hv
-  FROM pairs p JOIN sk s ON s.flag IN (p.key_a, p.key_b)
-  GROUP BY 1, 2, 3
-),
-uk AS (
-  SELECT key_a, key_b, hv FROM (
-    SELECT key_a, key_b, hv,
-           row_number() OVER (PARTITION BY key_a, key_b ORDER BY hv) AS rn
-    FROM uh) WHERE rn <= {k}
-),
-ust AS (
-  SELECT u.key_a, u.key_b,
-         CAST(count(*) AS BIGINT) AS n_union_kept,
-         max(u.hv) AS ukth,
-         CAST(sum(CASE WHEN sa.hv IS NOT NULL AND sb.hv IS NOT NULL
-                       THEN 1 ELSE 0 END) AS BIGINT) AS n_both
-  FROM uk u
-  LEFT JOIN sk sa ON sa.flag = u.key_a AND sa.hv = u.hv
-  LEFT JOIN sk sb ON sb.flag = u.key_b AND sb.hv = u.hv
-  GROUP BY 1, 2
-)
-SELECT p.key_a, p.key_b,
-       exa.n_exact AS n_exact_a, exb.n_exact AS n_exact_b,
-       CASE WHEN ea.n_kept < {k} THEN ea.n_kept
-            ELSE CAST({k - 1} AS BIGINT) * {space} // ea.kth END AS est_a,
-       CASE WHEN eb.n_kept < {k} THEN eb.n_kept
-            ELSE CAST({k - 1} AS BIGINT) * {space} // eb.kth END AS est_b,
-       exa.n_exact + exb.n_exact - exu.n_exact_inter AS n_exact_union,
-       exu.n_exact_inter,
-       ust.n_union_kept, ust.n_both,
-       CASE WHEN ust.n_union_kept < {k} THEN ust.n_union_kept
-            ELSE CAST({k - 1} AS BIGINT) * {space} // ust.ukth END
-         AS est_union,
-       CAST((ust.n_both *
-             CASE WHEN ust.n_union_kept < {k} THEN ust.n_union_kept
-                  ELSE CAST({k - 1} AS BIGINT) * {space} // ust.ukth END)
-            // ust.n_union_kept AS BIGINT) AS est_intersection
-FROM pairs p
-JOIN est ea ON ea.flag = p.key_a
-JOIN est eb ON eb.flag = p.key_b
-JOIN ex exa ON exa.flag = p.key_a
-JOIN ex exb ON exb.flag = p.key_b
-JOIN exu ON exu.key_a = p.key_a AND exu.key_b = p.key_b
-JOIN ust ON ust.key_a = p.key_a AND ust.key_b = p.key_b
-"""
-
-
 def interval_join_sql(
     error_window_s: int = 7200, click_window_s: int = 1800
 ) -> str:
@@ -5668,50 +5045,6 @@ FROM per
 """
 
 
-def expectations_report_sql() -> str:
-    """Twin of q_expectations_report: the same five checks as plain
-    per-check aggregates (the oracle needn't be single-scan)."""
-    return """
-SELECT 'row_count_min' AS check_type, 'orders' AS target,
-       CAST(count(*) AS BIGINT) AS observed,
-       CAST(CASE WHEN count(*) >= 1000 THEN 1 ELSE 0 END AS BIGINT)
-         AS passed
-FROM orders
-UNION ALL
-SELECT 'not_null', 'orders.o_custkey',
-       CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-       CAST(CASE WHEN sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) = 0
-                 THEN 1 ELSE 0 END AS BIGINT)
-FROM orders
-UNION ALL
-SELECT 'unique', 'orders.o_orderkey',
-       CAST(count(o_orderkey) - count(DISTINCT o_orderkey) AS BIGINT),
-       CAST(CASE WHEN count(o_orderkey) = count(DISTINCT o_orderkey)
-                 THEN 1 ELSE 0 END AS BIGINT)
-FROM orders
-UNION ALL
-SELECT 'unique', 'lineitem.l_orderkey',
-       CAST(count(l_orderkey) - count(DISTINCT l_orderkey) AS BIGINT),
-       CAST(CASE WHEN count(l_orderkey) = count(DISTINCT l_orderkey)
-                 THEN 1 ELSE 0 END AS BIGINT)
-FROM lineitem
-UNION ALL
-SELECT 'value_range', 'customer.c_acctbal',
-       CAST(sum(CASE WHEN CAST(c_acctbal AS DECIMAL(18,2))
-                          < CAST('-1000' AS DECIMAL(18,2))
-                       OR CAST(c_acctbal AS DECIMAL(18,2))
-                          > CAST('10000' AS DECIMAL(18,2))
-                     THEN 1 ELSE 0 END) AS BIGINT),
-       CAST(CASE WHEN sum(CASE WHEN CAST(c_acctbal AS DECIMAL(18,2))
-                                    < CAST('-1000' AS DECIMAL(18,2))
-                                 OR CAST(c_acctbal AS DECIMAL(18,2))
-                                    > CAST('10000' AS DECIMAL(18,2))
-                               THEN 1 ELSE 0 END) = 0
-                 THEN 1 ELSE 0 END AS BIGINT)
-FROM customer
-"""
-
-
 def path_trigrams_sql() -> str:
     """Twin of q_path_trigrams: two lags over the same total-key
     window; share is one integer division over the trigram total."""
@@ -5735,129 +5068,6 @@ SELECT t1, t2, t3, n_paths,
        CAST(n_paths * 10000 // (SELECT sum(n_paths) FROM c) AS BIGINT)
          AS share_bp
 FROM c
-"""
-
-
-def skew_report_sql(k: int = 10) -> str:
-    """Twin of q_skew_report: per-key counts over lineitem's join
-    key, top-k by (cnt DESC, key), skew = max*n_keys*100 // n_rows."""
-    return f"""
-WITH c AS (
-  SELECT CAST(l_orderkey AS VARCHAR) AS key,
-         CAST(count(*) AS BIGINT) AS cnt
-  FROM lineitem GROUP BY 1
-),
-s AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_keys,
-         CAST(sum(cnt) AS BIGINT) AS n_rows,
-         CAST(max(cnt) AS BIGINT) AS max_cnt
-  FROM c
-),
-top AS (SELECT key, cnt FROM c ORDER BY cnt DESC, key LIMIT {k})
-SELECT top.key, top.cnt,
-       CAST(top.cnt * 10000 // s.n_rows AS BIGINT) AS share_bp,
-       s.n_keys, s.n_rows,
-       CAST(s.max_cnt * s.n_keys * 100 // s.n_rows AS BIGINT) AS skew_x100
-FROM top, s
-"""
-
-
-def rfm_segments_sql(
-    recency_days: tuple = (90, 365),
-    freq_min: tuple = (12, 8),
-    monetary_cents: tuple = (300_000_000, 150_000_000),
-) -> str:
-    """Twin of q_rfm_segments: integer epoch-day recency (never a
-    calendar diff), exact cents, fixed CASE buckets, ONE integer
-    division for the segment average."""
-    r2, r1 = recency_days
-    f2, f1 = freq_min
-    m2, m1 = monetary_cents
-    return f"""
-WITH per AS (
-  SELECT o_custkey,
-         max(epoch_us(o_orderdate) // 86400000000) AS last_day,
-         CAST(count(*) AS BIGINT) AS freq,
-         CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
-                       AS BIGINT)) AS BIGINT) AS cents
-  FROM orders GROUP BY 1
-),
-scored AS (
-  SELECT freq, cents,
-         (SELECT max(last_day) FROM per) - last_day AS rec_days
-  FROM per
-),
-b AS (
-  SELECT CASE WHEN rec_days < {r2} THEN 2
-              WHEN rec_days < {r1} THEN 1 ELSE 0 END AS r_bucket,
-         CASE WHEN freq >= {f2} THEN 2
-              WHEN freq >= {f1} THEN 1 ELSE 0 END AS f_bucket,
-         CASE WHEN cents >= {m2} THEN 2
-              WHEN cents >= {m1} THEN 1 ELSE 0 END AS m_bucket,
-         cents
-  FROM scored
-)
-SELECT CAST(r_bucket AS BIGINT) AS r_bucket,
-       CAST(f_bucket AS BIGINT) AS f_bucket,
-       CAST(m_bucket AS BIGINT) AS m_bucket,
-       CAST(count(*) AS BIGINT) AS n_customers,
-       CAST(sum(cents) AS BIGINT) AS total_cents,
-       CAST(CAST(sum(cents) AS BIGINT) // count(*) AS BIGINT) AS avg_cents
-FROM b GROUP BY 1, 2, 3
-"""
-
-
-def market_share_sql(
-    region_name: str = "ASIA", supp_nation: str = "NATION_1"
-) -> str:
-    """Twin of q_market_share: TPC-H Q8 — conditional share-of-group
-    per order year; the share is one integer floor division over
-    summed scale-4 units."""
-    return f"""
-WITH j AS (
-  SELECT year(o.o_orderdate) AS order_year,
-         ns.n_name AS supp_nation,
-         {_REV} AS rev
-  FROM lineitem l
-  JOIN orders o ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  JOIN nation nc ON c.c_nationkey = nc.n_nationkey
-  JOIN region r ON nc.n_regionkey = r.r_regionkey
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  JOIN nation ns ON s.s_nationkey = ns.n_nationkey
-  WHERE r.r_name = '{region_name}'
-)
-SELECT CAST(order_year AS BIGINT) AS order_year,
-       CAST(sum(CASE WHEN supp_nation = '{supp_nation}' THEN rev
-                     ELSE CAST(0 AS DECIMAL(18,4)) END) AS DOUBLE)
-         AS nation_revenue,
-       CAST(sum(rev) AS DOUBLE) AS total_revenue,
-       CAST(sum(CASE WHEN supp_nation = '{supp_nation}'
-                     THEN CAST(rev * 10000 AS BIGINT) ELSE 0 END) * 10000
-            // greatest(sum(CAST(rev * 10000 AS BIGINT)), 1) AS BIGINT)
-         AS share_bp
-FROM j GROUP BY 1
-"""
-
-
-def nation_profit_sql(part_token: str = "widget") -> str:
-    """Twin of q_nation_profit: TPC-H Q9 adapted — profit =
-    rev - retail*qty in exact decimals on the row, one sum, one
-    double cast."""
-    return f"""
-SELECT ns.n_name AS supp_nation,
-       CAST(year(o.o_orderdate) AS BIGINT) AS order_year,
-       CAST(sum({_REV}
-                - CAST(p.p_retailprice AS DECIMAL(18,2))
-                  * CAST(l.l_quantity AS DECIMAL(18,2))) AS DOUBLE)
-         AS profit
-FROM lineitem l
-JOIN part p ON l.l_partkey = p.p_partkey
-JOIN supplier s ON l.l_suppkey = s.s_suppkey
-JOIN nation ns ON s.s_nationkey = ns.n_nationkey
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-WHERE p.p_name LIKE '%{part_token}%'
-GROUP BY 1, 2
 """
 
 

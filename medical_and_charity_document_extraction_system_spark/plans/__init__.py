@@ -1,1 +1,1 @@
-from .pipeline import run_extraction, run_extraction_branching  # noqa: F401
+from .pipeline import run_extraction  # noqa: F401

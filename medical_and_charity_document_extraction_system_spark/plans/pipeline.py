@@ -5,41 +5,22 @@ Spark re-expression of the reference's flagship trace
 /root/reference/backend/app/api/routes/ocr_routes.py:18-49 ->
 ocr_service.py:33-127):
 
-    scan -> route (direct-text | pdf | html | error)
-         -> per-branch extraction stage
-         -> unionByName
-         -> (optional) salted url-hash repartition at the source
+    scan -> ONE iterator-form mapInPandas stage
+            (route per row: direct-text | pdf | html | error
+             -> extraction -> field spans -> page rollup)
 
-Branching is the DataFrame analog of the reference's
-``if not is_scanned:`` at ocr_service.py:56: a routing column computed
-with builtins, then ``filter`` per branch + ``unionByName``. Catalyst
-column pruning means e.g. the direct-text branch never deserializes
-the ``html`` bytes.
-
-Two physical plans are provided:
-
-- **fused** (default, ``run_extraction``): ONE scan -> ONE
-  iterator-form ``mapInPandas`` stage that routes per row *inside*
-  Python — the direct analog of the reference's per-document dispatch
-  at ocr_service.py:56. This is the 100-TB plan: Spark does NOT share
-  scans between union branches, so the branching plan below reads the
-  input once per branch (4x I/O) and runs one Python worker pool per
-  pandas stage (3 concurrent pools = up to 3x oversubscription of
-  Python workers). Fusing restores 1x scan + 1 worker pool; measured
-  on 200k pages at local[32] it is ~3x faster and is what makes the
-  N->4N scaling efficiency hold.
-- **branching** (``run_extraction_branching``): routing column +
-  ``filter``/``unionByName`` branches, with the direct-text branch in
-  pure Catalyst builtins. Kept because it demonstrates the
-  column-pruning property (the direct branch never deserializes
-  ``html``) and is the better plan when the input is a cached/
-  re-used DataFrame rather than a cold scan.
+Routing happens per row inside Python — the direct analog of the
+reference's per-document ``if not is_scanned:`` dispatch at
+ocr_service.py:56. One plan, one scan, one Python worker pool: Spark
+does not share scans between union branches, so a filter-per-branch
+plan would read the input once per branch and run one Python worker
+pool per pandas stage. Layout (url-hash or salted-host repartition)
+is the job entrypoint's business (job.choose_layout), not the plan's.
 
 Scale notes (the properties that must hold at 10^12 rows):
 - **Zero mandatory shuffles.** The fused plan is scan -> narrow ops;
   pages stay inside their document's row, so the A1 rollup happens
-  in-stage (operators/rollup.py). The only shuffle ever introduced is
-  the *optional* explicit repartition for skew control.
+  in-stage (operators/rollup.py).
 - Heavy per-row work (DOM parse, PDF parse, OCR) is in iterator-form
   ``mapInPandas`` with per-worker engine caching (operators/engines.py)
   — one model init per Python worker, not per row or batch.
@@ -57,8 +38,6 @@ from typing import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..config import DEFAULT_CONFIG, ExtractionConfig
 from ..functions.fields import extract_spans
@@ -73,20 +52,8 @@ from ..schema import (
     METHOD_ERROR,
     METHOD_HTML,
     METHOD_OCR,
-    SPAN_STRUCT,
-    WORD_STRUCT,
 )
 from ..sources.pages import FAKE_PDF_MAGIC
-
-_PDF_MAGIC_HEX = b"%PDF".hex().upper()
-_FPDF_MAGIC_HEX = FAKE_PDF_MAGIC.hex().upper()
-
-_SPANS_TYPE = T.ArrayType(SPAN_STRUCT)
-
-
-@F.pandas_udf(_SPANS_TYPE)
-def _spans_udf(texts: pd.Series) -> pd.Series:
-    return texts.map(lambda t: extract_spans(t))
 
 
 def _error_record(url: str, lang, msg: str) -> dict:
@@ -227,129 +194,13 @@ def _fused_stage(cfg: ExtractionConfig):
     return run
 
 
-def _html_stage(cfg: ExtractionConfig):
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _records_frame(
-                [
-                    _process_html(url, data, lang, cfg)
-                    for url, data, lang in zip(pdf["url"], pdf["html"], pdf["lang"])
-                ]
-            )
-
-    return run
-
-
-def _pdf_stage(cfg: ExtractionConfig):
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _records_frame(
-                [
-                    _process_pdf(url, data, lang, cfg)
-                    for url, data, lang in zip(pdf["url"], pdf["html"], pdf["lang"])
-                ]
-            )
-
-    return run
-
-
 def run_extraction(
     pages_df: DataFrame, cfg: ExtractionConfig = DEFAULT_CONFIG
 ) -> DataFrame:
     """pages (url, warc_ts, html, text, lang) -> extractions (one
     row/url). Fused single-pass plan: ONE scan, ONE mapInPandas stage,
-    per-row routing inside Python. Identical output to
-    ``run_extraction_branching`` (tests assert it)."""
-    if cfg.repartition:
-        pages_df = pages_df.repartition(cfg.repartition, F.xxhash64("url"))
+    per-row routing inside Python."""
     return pages_df.select("url", "html", "text", "lang").mapInPandas(
         _fused_stage(cfg), schema=EXTRACTION_SCHEMA
     )
 
-
-def run_extraction_branching(
-    pages_df: DataFrame, cfg: ExtractionConfig = DEFAULT_CONFIG
-) -> DataFrame:
-    """pages (url, warc_ts, html, text, lang) -> extractions (one row/url)."""
-    if cfg.repartition:
-        # explicit url-hash repartition (north_rule); salting helper in
-        # plans/salting.py is used by the job entrypoint for skewed hosts
-        pages_df = pages_df.repartition(cfg.repartition, F.xxhash64("url"))
-
-    prefix6 = F.upper(F.hex(F.expr("substring(html, 1, 6)")))
-    prefix4 = F.upper(F.hex(F.expr("substring(html, 1, 4)")))
-    routed = pages_df.withColumn(
-        "_route",
-        F.when((F.col("text").isNotNull()) & (F.length("text") > 0), "direct")
-        .when(F.col("html").isNull(), "missing")
-        .when(
-            (prefix6 == _FPDF_MAGIC_HEX) | (prefix4 == _PDF_MAGIC_HEX), "pdf"
-        )
-        .otherwise("html"),
-    )
-
-    # ---- direct-text branch: pure builtins + the spans pandas_udf.
-    # Reference text path (ocr_service.py:56-77): single page,
-    # confidence 100.0, method direct_text_extraction.
-    d = routed.filter(F.col("_route") == "direct")
-    page_text = F.col("text")
-    full_text = F.concat(F.lit("--- Page 1 ---\n"), page_text)
-    n_words = F.size(F.filter(F.split(page_text, r"\s+"), lambda x: x != ""))
-    direct = d.select(
-        F.col("url"),
-        F.lit(False).alias("is_scanned"),
-        F.lit(METHOD_DIRECT).alias("processing_method"),
-        F.lit(1).alias("page_count"),
-        F.length(page_text).cast("long").alias("total_characters"),
-        n_words.cast("long").alias("total_words"),
-        F.lit(100.0).alias("average_confidence"),
-        full_text.alias("text"),
-        F.array(
-            F.struct(
-                F.lit(1).alias("page_number"),
-                page_text.alias("text"),
-                F.length(page_text).cast("int").alias("char_count"),
-                n_words.cast("int").alias("word_count"),
-                F.lit(100.0).alias("confidence"),
-                F.lit(None).cast(T.ArrayType(WORD_STRUCT)).alias("words"),
-            )
-        ).alias("pages"),
-        _spans_udf(full_text).alias("spans"),
-        F.lit("text").alias("engine"),
-        F.col("lang"),
-        F.lit(None).cast("string").alias("error"),
-        F.array().cast("array<string>").alias("steps_applied"),
-    )
-
-    # ---- missing-payload branch: builtin error records
-    m = routed.filter(F.col("_route") == "missing")
-    missing = m.select(
-        F.col("url"),
-        F.lit(False).alias("is_scanned"),
-        F.lit(METHOD_ERROR).alias("processing_method"),
-        F.lit(0).alias("page_count"),
-        F.lit(0).cast("long").alias("total_characters"),
-        F.lit(0).cast("long").alias("total_words"),
-        F.lit(0.0).alias("average_confidence"),
-        F.lit("").alias("text"),
-        F.array().cast(EXTRACTION_SCHEMA["pages"].dataType).alias("pages"),
-        F.array().cast(EXTRACTION_SCHEMA["spans"].dataType).alias("spans"),
-        F.lit("none").alias("engine"),
-        F.col("lang"),
-        F.lit("missing: no html and no text").alias("error"),
-        F.array().cast("array<string>").alias("steps_applied"),
-    )
-
-    sel = ["url", "html", "lang"]
-    html_branch = (
-        routed.filter(F.col("_route") == "html")
-        .select(*sel)
-        .mapInPandas(_html_stage(cfg), schema=EXTRACTION_SCHEMA)
-    )
-    pdf_branch = (
-        routed.filter(F.col("_route") == "pdf")
-        .select(*sel)
-        .mapInPandas(_pdf_stage(cfg), schema=EXTRACTION_SCHEMA)
-    )
-
-    return direct.unionByName(missing).unionByName(html_branch).unionByName(pdf_branch)

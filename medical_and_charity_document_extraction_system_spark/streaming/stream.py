@@ -35,12 +35,7 @@ def run_extraction_stream(
         .option("maxFilesPerTrigger", 16)
         .parquet(input_dir)
     )
-    # repartition is not stream-safe pre-agg in all modes; the stream
-    # path relies on source file splitting for parallelism
-    stream_cfg = cfg if cfg.repartition is None else ExtractionConfig(
-        **{**cfg.__dict__, "repartition": None}
-    )
-    out = run_extraction(stream, stream_cfg)
+    out = run_extraction(stream, cfg)
     writer = (
         out.writeStream.format("parquet")
         .option("path", output_dir)
@@ -198,10 +193,7 @@ def extraction_to_snapshot_stream(
         .option("maxFilesPerTrigger", 16)
         .parquet(input_dir)
     )
-    stream_cfg = cfg if cfg.repartition is None else ExtractionConfig(
-        **{**cfg.__dict__, "repartition": None}
-    )
-    out = run_extraction(stream, stream_cfg)
+    out = run_extraction(stream, cfg)
     table = SnapshotTable(spark, table_path)
     # scope the idempotence tag to THIS logical stream: epoch ids
     # restart at 0 for a fresh checkpoint, so a bare epoch tag would

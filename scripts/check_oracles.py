@@ -32,10 +32,7 @@ sys.path.insert(0, REPO)
 
 import duckdb  # noqa: E402
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+TABLES = ["events", "documents", "embeddings"]
 
 
 def norm_cell(v):

@@ -12,10 +12,7 @@ import __spark_entry__ as entry_mod
 
 from .conftest import SF_ORACLE
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+TABLES = ["events", "documents", "embeddings"]
 
 
 @pytest.fixture(scope="module")
@@ -77,3 +74,9 @@ def test_every_query_has_oracle_or_is_documented(spark):
     qs = entry_mod.queries()
     os_ = entry_mod.oracle_sql()
     assert set(os_) <= set(qs)
+
+
+def test_bench_catalog_queries_exist():
+    import bench
+
+    assert set(bench.CATALOG_QUERIES) <= set(entry_mod.queries())

@@ -1,51 +1,9 @@
-"""Fifth continuation batch: FD discovery, time-range rolling frames,
-AMS F2 sketch, positional phrase search, stream-static enrichment."""
+"""Fifth continuation batch: time-range rolling frames, AMS F2 sketch,
+positional phrase search, stream-static enrichment."""
 
 from datetime import datetime, timedelta
 
 import pyspark.sql.functions as F
-
-# ---------------------------------------------------------------- fd
-
-
-def _fd(spark):
-    # a -> b holds (each a value maps to one b); b -> a violated
-    # (b=10 maps to a in {1,2}); c has a NULL that must group as its
-    # own lhs value and be IGNORED as an rhs value.
-    rows = [
-        (1, 10, "x"),
-        (1, 10, "x"),
-        (2, 10, "y"),
-        (3, 30, None),
-        (3, 30, "z"),
-    ]
-    return spark.createDataFrame(rows, "a int, b int, c string")
-
-
-def test_fd_holds_and_violations(spark):
-    from medical_and_charity_document_extraction_system_spark.operators.report import fd_discovery
-
-    out = {
-        (r.lhs, r.rhs): (r.n_lhs_values, r.n_violating, r.holds)
-        for r in fd_discovery(_fd(spark), ["a", "b", "c"]).collect()
-    }
-    assert len(out) == 6
-    assert out[("a", "b")] == (3, 0, 1)  # a -> b holds
-    assert out[("b", "a")] == (2, 1, 0)  # b=10 -> {1,2}
-    # NULL rhs is ignored: a=3 maps to c in {NULL,'z'} -> distinct=1
-    assert out[("a", "c")] == (3, 0, 1)
-    # NULL lhs is its own group: c=NULL -> a=3 only, c='x' -> a=1
-    assert out[("c", "a")] == (4, 0, 1)
-
-
-def test_fd_requires_two_columns(spark):
-    import pytest
-
-    from medical_and_charity_document_extraction_system_spark.operators.report import fd_discovery
-
-    with pytest.raises(ValueError):
-        fd_discovery(_fd(spark), ["a"])
-
 
 # ---------------------------------------------------------------- rolling
 

@@ -1,12 +1,10 @@
-"""Path trigrams, join-key skew report, RFM segmentation."""
+"""Path trigrams, time-weighted means, SCD2 intervals, drift audit."""
 
 from datetime import datetime, timedelta
 
-from medical_and_charity_document_extraction_system_spark.operators.cohorts import rfm_segments
 from medical_and_charity_document_extraction_system_spark.operators.eventstats import (
     path_trigrams,
 )
-from medical_and_charity_document_extraction_system_spark.operators.report import skew_report
 
 _T0 = datetime(2024, 3, 1)
 
@@ -44,51 +42,6 @@ def test_path_trigrams_tiebreak_by_event_id(spark):
         for r in path_trigrams(_ev(spark, rows)).collect()
     ]
     assert out == [("a", "b", "c")]
-
-
-def test_skew_report_ranks_and_factors(spark):
-    df = spark.createDataFrame(
-        [(k,) for k in [1] * 6 + [2] * 3 + [3] * 1 + [None] * 2],
-        "k string",
-    )
-    rows = skew_report(df, "k", k=2).collect()
-    assert [(r.key, r.cnt) for r in rows] == [("1", 6), ("2", 3)]
-    r = rows[0]
-    assert (r.n_keys, r.n_rows) == (4, 12)  # NULL counts as a key
-    assert r.share_bp == 6 * 10000 // 12
-    assert r.skew_x100 == 6 * 4 * 100 // 12  # max/mean = 2.0 -> 200
-
-
-def _orders(spark, rows):
-    # (custkey, day_offset, price)
-    return spark.createDataFrame(
-        [
-            (i, c, "O", p, _T0 + timedelta(days=d), "5-LOW")
-            for i, (c, d, p) in enumerate(rows)
-        ],
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    )
-
-
-def test_rfm_bucket_edges(spark):
-    # corpus last day = day 400 (cust 3). cust 1: last day 0 ->
-    # recency 400 (bucket 0), 12 orders (freq 2), 12 * 1.00 total
-    # (mon 0). cust 2: last day 311 -> recency 89 (bucket 2, edge),
-    # 8 orders (freq 1, edge), total 3_000_000.00 (mon 2, edge).
-    rows = [(1, 0, 1.0)] * 12 + [(2, 311, 375_000.0)] * 8 + [
-        (3, 400, 10.0),
-    ]
-    out = {
-        (r.r_bucket, r.f_bucket, r.m_bucket): (
-            r.n_customers, r.total_cents, r.avg_cents
-        )
-        for r in rfm_segments(_orders(spark, rows)).collect()
-    }
-    assert out[(0, 2, 0)] == (1, 1200, 1200)
-    assert out[(2, 1, 2)] == (1, 300_000_000, 300_000_000)
-    assert out[(2, 0, 0)] == (1, 1000, 1000)  # cust 3: recency 0
-    assert len(out) == 3
 
 
 def test_time_weighted_mean_staircase(spark):

@@ -86,20 +86,6 @@ def test_error_rows_degrade_not_fail(by_url):
         assert r.error and r.text == "" and r.page_count == 0
 
 
-def test_fused_equals_branching_plan(spark, pages_small):
-    """The fused single-pass plan (1 scan, 1 Python pool) and the
-    filter/union branching plan must produce identical records — the
-    plan choice is physical only."""
-    from medical_and_charity_document_extraction_system_spark.plans import (
-        run_extraction_branching,
-    )
-
-    a = run_extraction(pages_small).collect()
-    b = run_extraction_branching(pages_small).collect()
-    key = lambda r: r.url  # noqa: E731
-    assert sorted(a, key=key) == sorted(b, key=key)
-
-
 def test_rerun_determinism(spark, pages_small):
     """Run the pipeline twice; outputs must be identical (reference
     evidence: 4 identical hospitalbill_*.json reruns)."""

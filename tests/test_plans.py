@@ -56,11 +56,6 @@ def test_aggregations_partial_then_final(spark):
     assert "md5(" in tree and "pythonUDF" not in tree.lower()
 
 
-def test_nation_dim_broadcasts(spark):
-    plan = plan_of(entry_mod.queries()["nation_revenue"](spark, SF_SMALL))
-    assert "BroadcastHashJoin" in plan
-
-
 @pytest.mark.parametrize(
     "name",
     ["minhash_near_dup", "simhash_near_dup", "embedding_near_dup_lsh",
@@ -162,33 +157,8 @@ def test_semdedup_pair_join_carries_ids_only(spark):
         assert "_vn" not in m.group(0) and "embedding" not in m.group(0)
 
 
-def test_forecast_revenue_pushes_all_three_predicates(spark):
-    plan = plan_of(entry_mod.queries()["forecast_revenue"](spark, SF_SMALL))
-    pushed = [l for l in plan.splitlines() if "PushedFilters" in l]
-    assert pushed
-    # date window and quantity cap reach the parquet reader (the
-    # decimal discount band stays a post-scan filter by design)
-    assert "GreaterThanOrEqual(l_shipdate" in pushed[0]
-    assert "LessThan(l_quantity" in pushed[0]
-
-
-def test_returned_customers_takeordered_before_wide_join(spark):
-    plan = plan_of(
-        entry_mod.queries()["returned_item_customers"](spark, SF_SMALL),
-        "simple",
-    )
-    assert "TakeOrderedAndProject" in plan  # never a global sort
-    assert "CartesianProduct" not in plan
-
-
 def test_phrase_match_joins_are_equi(spark):
     plan = plan_of(entry_mod.queries()["phrase_match"](spark, SF_SMALL), "simple")
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
 
-
-def test_fd_discovery_single_scan(spark):
-    df = entry_mod.queries()["fd_discovery"](spark, SF_SMALL)
-    tree = plan_of(df, "simple")
-    assert tree.count("Scan parquet") == 1  # stack unpivot, not per-pair
-    assert "Expand" not in tree  # countDistinct per group, no grouping sets

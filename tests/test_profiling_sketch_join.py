@@ -1,123 +1,4 @@
-"""Inclusion-dependency stats, KMV bottom-k set sketch, and the
-interval-x-interval overlap join."""
-
-import pyspark.sql.functions as F
-
-# ---------------------------------------------------------------- IND
-
-
-def test_inclusion_stats_holds_violated_and_null_child(spark):
-    from medical_and_charity_document_extraction_system_spark.operators.report import (
-        inclusion_stats,
-    )
-
-    child = spark.createDataFrame(
-        [(1, 10), (2, 10), (3, None), (9, 20)], "a int, b int"
-    )
-    parent = spark.createDataFrame([(1,), (2,), (10,), (20,)], "x int")
-    out = {
-        (r.child, r.parent): (r.n_child_values, r.n_missing, r.contained)
-        for r in inclusion_stats(
-            {"c": child, "p": parent},
-            [("c", "a", "p", "x"), ("c", "b", "p", "x")],
-        ).collect()
-    }
-    # a = {1,2,3,9}, NULL skipped is N/A here; 3 and 9 missing from p
-    assert out[("c.a", "p.x")] == (4, 2, 0)
-    # b = {10,20} (NULL child value SKIPPED), fully contained
-    assert out[("c.b", "p.x")] == (2, 0, 1)
-
-
-def test_inclusion_stats_rendered_string_compare(spark):
-    # int child vs string parent: values compare on the rendered form
-    from medical_and_charity_document_extraction_system_spark.operators.report import (
-        inclusion_stats,
-    )
-
-    child = spark.createDataFrame([(7,), (8,)], "a int")
-    parent = spark.createDataFrame([("7",), ("9",)], "s string")
-    r = inclusion_stats(
-        {"c": child, "p": parent}, [("c", "a", "p", "s")]
-    ).collect()[0]
-    assert (r.n_child_values, r.n_missing, r.contained) == (2, 1, 0)
-
-
-# ---------------------------------------------------------------- KMV
-
-
-def _items(spark, flag_items):
-    return spark.createDataFrame(flag_items, "flag string, item string")
-
-
-def test_kmv_small_set_is_exact_and_estimator_in_bounds(spark):
-    from medical_and_charity_document_extraction_system_spark.operators.sketches import (
-        kmv_estimate,
-        kmv_sketch,
-    )
-
-    small = _items(spark, [("s", f"i{i}") for i in range(40)])
-    r = kmv_estimate(kmv_sketch(small, "flag", "item", k=128), k=128).collect()[0]
-    assert (r.n_kept, r.est) == (40, 40)  # under k: exact by definition
-
-    big = _items(spark, [("b", f"i{i}") for i in range(3000)])
-    r = kmv_estimate(kmv_sketch(big, "flag", "item", k=128), k=128).collect()[0]
-    assert r.n_kept == 128
-    # sigma ~ 1/sqrt(k-1) = 8.9%; allow 4 sigma on one draw
-    assert abs(r.est - 3000) / 3000 < 0.36
-
-
-def test_kmv_sketch_is_duplicate_and_partitioning_invariant(spark):
-    from medical_and_charity_document_extraction_system_spark.operators.sketches import (
-        kmv_sketch,
-    )
-
-    base = [("s", f"i{i}") for i in range(500)]
-    a = {
-        r.kmv_hash
-        for r in kmv_sketch(_items(spark, base), "flag", "item", k=64).collect()
-    }
-    b = {
-        r.kmv_hash
-        for r in kmv_sketch(
-            _items(spark, base * 3).repartition(7), "flag", "item", k=64
-        ).collect()
-    }
-    assert a == b and len(a) == 64
-
-
-def test_kmv_pair_overlap_exact_when_union_fits(spark):
-    from medical_and_charity_document_extraction_system_spark.operators.sketches import (
-        kmv_pair_overlap,
-        kmv_sketch,
-    )
-
-    # |A|=30, |B|=30, |A∩B|=10 -> union 50 < k: everything exact
-    rows = [("a", f"i{i}") for i in range(30)] + [
-        ("b", f"i{i}") for i in range(20, 50)
-    ]
-    sk = kmv_sketch(_items(spark, rows), "flag", "item", k=128)
-    r = kmv_pair_overlap(sk, "a", "b", k=128).collect()[0]
-    assert (r.n_union_kept, r.est_union) == (50, 50)
-    assert (r.n_both, r.est_intersection) == (10, 10)
-
-
-def test_kmv_pair_overlap_estimates_large_sets(spark):
-    from medical_and_charity_document_extraction_system_spark.operators.sketches import (
-        kmv_pair_overlap,
-        kmv_sketch,
-    )
-
-    # |A|=|B|=2000 with 1000 shared -> union 3000, jaccard 1/3
-    rows = [("a", f"i{i}") for i in range(2000)] + [
-        ("b", f"i{i}") for i in range(1000, 3000)
-    ]
-    sk = kmv_sketch(_items(spark, rows), "flag", "item", k=128)
-    r = kmv_pair_overlap(sk, "a", "b", k=128).collect()[0]
-    assert abs(r.est_union - 3000) / 3000 < 0.36
-    assert abs(r.est_intersection - 1000) / 1000 < 0.75  # ratio compounds
-
-
-# ---------------------------------------------------------------- interval
+"""The interval-x-interval overlap join (operators/rangejoin.py)."""
 
 
 def _iv(spark, rows, side):
@@ -188,30 +69,3 @@ def test_interval_join_plan_has_no_nested_loop(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_kmv_pairs_overlap_equals_single_pair_calls(spark):
-    from medical_and_charity_document_extraction_system_spark.operators.sketches import (
-        kmv_pair_overlap,
-        kmv_pairs_overlap,
-        kmv_sketch,
-    )
-
-    rows = (
-        [("a", f"i{i}") for i in range(300)]
-        + [("b", f"i{i}") for i in range(150, 450)]
-        + [("c", f"j{i}") for i in range(50)]
-    )
-    sk = kmv_sketch(_items(spark, rows), "flag", "item", k=64).cache()
-    pairs = [("a", "b"), ("a", "c"), ("b", "c")]
-    one_plan = {
-        (r.key_a, r.key_b): (
-            r.n_union_kept, r.n_both, r.est_union, r.est_intersection
-        )
-        for r in kmv_pairs_overlap(sk, pairs, k=64).collect()
-    }
-    singles = {}
-    for a, b in pairs:
-        r = kmv_pair_overlap(sk, a, b, k=64).collect()[0]
-        singles[(a, b)] = (
-            r.n_union_kept, r.n_both, r.est_union, r.est_intersection
-        )
-    assert one_plan == singles and len(one_plan) == 3

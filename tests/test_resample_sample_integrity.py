@@ -1,15 +1,11 @@
-"""Round-5 batch: grid resample + ffill (operators/asof.resample_ffill),
-PPSWOR weighted sampling (operators/sampling.weighted_sample), and the
-referential-integrity audit (operators/report.integrity_report)."""
+"""Round-5 batch: grid resample + ffill (operators/asof.resample_ffill)
+and PPSWOR weighted sampling (operators/sampling.weighted_sample)."""
 
 from datetime import datetime
 
 from pyspark.sql import functions as F
 
 from medical_and_charity_document_extraction_system_spark.operators.asof import resample_ffill
-from medical_and_charity_document_extraction_system_spark.operators.report import (
-    integrity_report,
-)
 from medical_and_charity_document_extraction_system_spark.operators.sampling import (
     weighted_sample,
 )
@@ -77,27 +73,3 @@ def test_weighted_sample_zero_weight_clamps_to_one(spark):
     assert all(r.weight == 1 for r in rows)
 
 
-def test_integrity_report_finds_planted_orphans_and_dups(spark):
-    docs = spark.createDataFrame(
-        [(1, "same"), (2, "same"), (3, "uniq")], "doc_id long, text string"
-    )
-    emb = spark.createDataFrame(
-        [(1,), (99,)], "vec_id long"  # 99 -> orphan
-    )
-    li = spark.createDataFrame(
-        [(10, 100), (11, 100), (12, 200)], "l_orderkey long, l_partkey long"
-    )
-    orders = spark.createDataFrame([(10, 5), (11, 6)], "o_orderkey long, o_custkey long")
-    customer = spark.createDataFrame([(5,)], "c_custkey long")
-    part = spark.createDataFrame([(100,)], "p_partkey long")
-    got = {
-        r.check: r
-        for r in integrity_report(docs, emb, li, orders, customer, part).collect()
-    }
-    assert got["lineitem.orderkey->orders"].n_bad == 1  # orderkey 12
-    assert got["orders.custkey->customer"].n_bad == 1  # custkey 6
-    assert got["lineitem.partkey->part"].n_bad == 1  # partkey 200
-    assert got["embeddings.vecid->documents"].n_bad == 1  # vec 99
-    assert got["documents.docid unique"].n_bad == 0
-    dup = got["documents.text unique"]
-    assert dup.n_bad == 2 and dup.bad_bp == 2 * 10000 // 3

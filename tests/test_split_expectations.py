@@ -1,13 +1,10 @@
-"""Deterministic dataset split and the Deequ-style constraint suite."""
+"""Deterministic dataset split."""
 
 import pytest
 
 from medical_and_charity_document_extraction_system_spark.operators.mixing import (
     assign_split,
     split_report,
-)
-from medical_and_charity_document_extraction_system_spark.operators.report import (
-    expectations_report,
 )
 
 
@@ -45,51 +42,3 @@ def test_split_rejects_bad_percentages(spark):
     with pytest.raises(ValueError):
         assign_split(_docs(spark, 1), train_pct=95, val_pct=5)
 
-
-def test_expectations_pass_fail_and_null_handling(spark):
-    t = spark.createDataFrame(
-        [(1, 10.0), (2, None), (2, 99999.0)], "k long, v double"
-    )
-    out = {
-        (r.check_type, r.target): (r.observed, r.passed)
-        for r in expectations_report(
-            {"t": t},
-            [
-                ("row_count_min", "t", "", 5, 0),  # 3 < 5: fail
-                ("not_null", "t", "v", 0, 0),  # one NULL: fail
-                ("unique", "t", "k", 0, 0),  # k=2 twice: fail
-                ("value_range", "t", "v", 0, 100),  # 99999 out: fail
-            ],
-        ).collect()
-    }
-    assert out[("row_count_min", "t")] == (3, 0)
-    assert out[("not_null", "t.v")] == (1, 0)
-    assert out[("unique", "t.k")] == (1, 0)
-    # NULL values are exempt from the range check (only 99999 flags)
-    assert out[("value_range", "t.v")] == (1, 0)
-
-
-def test_expectations_single_scan_per_table(spark):
-    import contextlib
-    import io
-
-    t = spark.createDataFrame([(1, 1.0)], "k long, v double")
-    df = expectations_report(
-        {"t": t},
-        [
-            ("row_count_min", "t", "", 1, 0),
-            ("not_null", "t", "v", 0, 0),
-            ("unique", "t", "k", 0, 0),
-        ],
-    )
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("simple")
-    # one source, all checks on one aggregate row
-    assert buf.getvalue().count("LocalTableScan") <= 2  # agg+distinct split
-
-
-def test_expectations_unknown_kind_raises(spark):
-    t = spark.createDataFrame([(1,)], "k long")
-    with pytest.raises(ValueError):
-        expectations_report({"t": t}, [("median_under", "t", "k", 5, 0)])
