@@ -11,8 +11,8 @@ Fields are the ones visible in the reference's golden hospital-bill
 fixture (patient name, physician, invoice number, dates, amounts) plus
 the charity/medical additions from FIXTURES.md section 3.
 
-Pure Python; called from pandas-UDF stages. Patterns are applied in
-registry order, matches merged and sorted by (start, field).
+Pure Python; called per document inside Python stages. Patterns are
+applied in registry order, matches merged and sorted by (start, field).
 """
 
 from __future__ import annotations
@@ -32,15 +32,41 @@ FIELD_PATTERNS: dict[str, re.Pattern[str]] = {
 RULE_CONFIDENCE = 100.0  # rule-based extraction is certain (cf. the
 # reference's direct-text path confidence=100.0, ocr_service.py:59-68)
 
+# ``date`` and ``diagnosis_code`` open with ``\b``, so sre has no literal
+# prefix to scan for and attempts a match at every position of the
+# text. Their candidates are found instead by a literal-led lookahead on
+# the first separator (field -> (anchor, separator offset in a match)),
+# and each candidate is confirmed with the field's own pattern.
+_ANCHORS: dict[str, tuple[re.Pattern[str], int]] = {
+    "date": (re.compile(r"/(?=\d\d/\d\d\b)"), 2),
+    "diagnosis_code": (re.compile(r"\.(?=\d\b)"), 3),
+}
 
-def extract_spans(text: str | None, fields: tuple[str, ...] | None = None) -> list[dict]:
+
+def _anchored_finditer(pat: re.Pattern[str], anchor: re.Pattern[str], offset: int, text: str):
+    r"""``pat.finditer(text)`` for a pattern whose every match has
+    ``anchor`` at ``offset``: the same non-overlapping matches, left to
+    right. ``pat.match(text, i)`` sees the real text before ``i``, so
+    the leading ``\b`` tests the same boundary as in ``finditer``."""
+    end = 0
+    for a in anchor.finditer(text):
+        i = a.start() - offset
+        if i < end:  # before the text, or inside the previous match
+            continue
+        m = pat.match(text, i)
+        if m is not None:
+            end = m.end()
+            yield m
+
+
+def extract_spans(text: str | None) -> list[dict]:
     if not text:
         return []
-    names = fields if fields is not None else tuple(FIELD_PATTERNS)
     out: list[dict] = []
-    for name in names:
-        pat = FIELD_PATTERNS[name]
-        for m in pat.finditer(text):
+    for name, pat in FIELD_PATTERNS.items():
+        anchor = _ANCHORS.get(name)
+        matches = pat.finditer(text) if anchor is None else _anchored_finditer(pat, *anchor, text)
+        for m in matches:
             out.append(
                 {
                     "field": name,

@@ -12,14 +12,18 @@ a method registry with an ``auto`` mode that branches on input
 statistics (binarizer.py:43-62 branches on pixel std; we branch on
 overall link share).
 
-Pure Python on purpose: this module is called from inside a
-``mapInPandas`` stage (one Arrow batch at a time); it must not import
-pyspark. Uses only stdlib ``html.parser`` (no bs4/lxml dependency).
+Pure Python on purpose: this module is called from inside the
+``mapInArrow`` extraction stage (one Arrow batch at a time); it must
+not import pyspark. No bs4/lxml dependency: ``main_text`` segments with
+``extract_blocks_fast``, a regex markup scanner; ``extract_blocks``
+(stdlib ``html.parser``) is the reference it is tested against.
 """
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass
+from html import unescape
 from html.parser import HTMLParser
 
 # tags that open a new text block (flush the current segment)
@@ -108,31 +112,62 @@ def extract_blocks(html_str: str) -> list[Block]:
 # ---------------------------------------------------- fast regex scanner
 # stdlib HTMLParser spends ~84% of the extraction stage's CPU in
 # per-tag attribute parsing and position tracking we never use. This
-# scanner tokenizes with one compiled regex and feeds the same
+# scanner finds markup with one compiled regex and feeds the same
 # block/drop/link state machine; on well-formed HTML the output is
-# identical (tests assert equality over the whole synthetic corpus).
-# Divergence is confined to pathological tag soup (stray '<' recovery),
-# where neither answer is canonical.
+# identical to ``extract_blocks`` (tests assert equality over the whole
+# synthetic corpus). Divergence is confined to pathological tag soup
+# (stray '<' recovery), where neither answer is canonical.
 
-_TOKEN_RE = __import__("re").compile(
-    r"<!--.*?(?:-->|$)"                       # comments (unterminated: to EOF)
+# group 1: the whole token, group 2: a tag's slash + name
+_MARKUP_RE = re.compile(
+    r"(<!--.*?(?:-->|$)"                      # comments (unterminated: to EOF)
     r"|<!\[CDATA\[.*?(?:\]\]>|$)"             # CDATA
     r"|<![^>]*>?"                             # doctype / declarations
     r"|<\?[^>]*>?"                            # processing instructions
-    r"|<(/?)([a-zA-Z][a-zA-Z0-9:_-]*)"        # tag open: slash + name
-    r"(?:\"[^\"]*\"|'[^']*'|[^>\"'])*>?"      #   attrs (quoted '>' safe)
-    r"|[^<]+",                                # text run
-    __import__("re").S,
+    r"|<(/?[a-zA-Z][a-zA-Z0-9:_-]*)"          # tag: slash + name
+    r"(?:[^>\"']+|\"[^\"]*\"|'[^']*')*>?)",   #   attrs (quoted '>' safe)
+    re.S,
 )
 _RAWTEXT_END = {
-    "script": __import__("re").compile(r"</script[\s>]", __import__("re").I),
-    "style": __import__("re").compile(r"</style[\s>]", __import__("re").I),
+    "script": re.compile(r"</script[\s>]", re.I),
+    "style": re.compile(r"</style[\s>]", re.I),
 }
+
+# what a tag token does to the scanner's state
+_NONE, _FLUSH, _DROP_OPEN, _DROP_CLOSE, _LINK_OPEN, _LINK_CLOSE, _RAWTEXT = range(7)
+
+
+def _tag_action(token_name: str) -> int:
+    closing = token_name[0] == "/"
+    tag = (token_name[1:] if closing else token_name).lower()
+    if tag in _RAWTEXT_END:
+        # a stray close outside a rawtext body: script/style are
+        # DROP_TAGS, so it pops drop depth like the stdlib twin
+        return _DROP_CLOSE if closing else _RAWTEXT
+    if tag in DROP_TAGS:
+        if tag in VOID_TAGS:
+            return _NONE
+        return _DROP_CLOSE if closing else _DROP_OPEN
+    if tag == "a":
+        return _LINK_CLOSE if closing else _LINK_OPEN
+    return _FLUSH if tag in BLOCK_TAGS else _NONE
+
+
+def _runs_text(gap: str, pos: int, skip_until: int) -> str:
+    """Text of a gap between two markup tokens that holds a stray '<'
+    or starts inside a skipped rawtext body. Each stray '<' is dropped
+    and splits the gap into runs; a run that starts before
+    ``skip_until`` is dropped, and each run is unescaped on its own (an
+    entity split by a stray '<' stays literal)."""
+    out = []
+    for run in gap.split("<"):
+        if run and pos >= skip_until:
+            out.append(unescape(run) if "&" in run else run)
+        pos += len(run) + 1
+    return "".join(out)
 
 
 def extract_blocks_fast(html_str: str) -> list[Block]:
-    import html as _h
-
     blocks: list[Block] = []
     chunks: list[str] = []
     append = chunks.append
@@ -149,68 +184,60 @@ def extract_blocks_fast(html_str: str) -> list[Block]:
             chunks.clear()
         link_chars = 0
 
-    # finditer drives the token walk in C (the re.match-with-pos loop
-    # this replaces spent most of its time in Python loop overhead —
-    # measured ~1.5x on the fused extraction stage). A stray '<' that
-    # forms no token is skipped by finditer exactly as the old loop's
-    # pos+=1 recovery did; rawtext (script/style) bodies are skipped by
-    # position, so their inner tokens are discarded unexamined.
-    # Per-call tag-dispatch cache: one dict hit replaces
-    # lower() + three set-membership tests on every tag token.
-    tag_kind: dict[str, int] = {}  # 0 plain, 1 rawtext, 2 drop, 3 dropvoid, 4 a, 5 block
+    # ``split`` cuts the input at markup tokens in C, giving
+    # [text, token, tag name, text, token, tag name, ..., text]: the
+    # text between two tokens comes out as one slice. A '<' that starts
+    # no token stays in the slice (see ``_runs_text``). Rawtext
+    # (script/style) bodies are skipped by position: a token or text run
+    # that starts before ``skip_until`` is discarded unexamined.
+    # Per-call action cache: one dict hit replaces lower() + three
+    # set-membership tests on every tag token.
+    actions: dict[str, int] = {}
     skip_until = 0
-    for m in _TOKEN_RE.finditer(html_str):
-        if skip_until:
-            if m.start() < skip_until:
-                continue
-            skip_until = 0
-        if m.lastindex is None:  # text run / comment / doctype / PI
-            tok = m.group(0)
-            if tok[0] == "<":
-                continue
+    pos = 0  # input offset of the current token or text
+    n = len(html_str)
+    parts = _MARKUP_RE.split(html_str)
+    parts[0:0] = ("", None)  # an empty token before the leading text
+    it = iter(parts)
+    for tok, name, text in zip(it, it, it):
+        start = pos
+        pos += len(tok)
+        if name is not None and start >= skip_until:
+            act = actions.get(name)
+            if act is None:
+                act = actions[name] = _tag_action(name)
+            if act == _FLUSH:
+                flush()
+            elif act == _DROP_OPEN:
+                drop_depth += 1
+            elif act == _DROP_CLOSE:
+                if drop_depth:
+                    drop_depth -= 1
+            elif act == _LINK_OPEN:
+                link_depth += 1
+            elif act == _LINK_CLOSE:
+                if link_depth:
+                    link_depth -= 1
+            elif act == _RAWTEXT:
+                # skip content up to the end tag; with none, the rest of
+                # the input is body and is dropped
+                close = _RAWTEXT_END[name.lower()].search(html_str, pos)
+                if close is None:
+                    break
+                gt = html_str.find(">", close.start())
+                skip_until = gt + 1 if gt != -1 else n
+                # script/style are DROP_TAGS: nothing emitted
+        if text:
             if drop_depth == 0:
-                data = _h.unescape(tok) if ("&" in tok) else tok
+                data = text
+                if pos < skip_until or "<" in data:
+                    data = _runs_text(data, pos, skip_until)
+                elif "&" in data:
+                    data = unescape(data)
                 append(data)
                 if link_depth:
                     link_chars += len("".join(data.split()))
-            continue
-        name = m.group(2)
-        kind = tag_kind.get(name)
-        if kind is None:
-            tag = name.lower()
-            if tag in _RAWTEXT_END:
-                kind = 1
-            elif tag in DROP_TAGS:
-                kind = 3 if tag in VOID_TAGS else 2
-            elif tag == "a":
-                kind = 4
-            elif tag in BLOCK_TAGS:
-                kind = 5
-            else:
-                kind = 0
-            tag_kind[name] = kind
-        if kind == 0:
-            continue
-        closing = m.group(1) == "/"
-        if kind == 5:
-            flush()
-        elif kind == 2:
-            drop_depth = max(0, drop_depth + (-1 if closing else 1))
-        elif kind == 4:
-            link_depth = max(0, link_depth + (-1 if closing else 1))
-        elif kind == 1:
-            if closing:
-                # stray close outside a rawtext body: script/style are
-                # DROP_TAGS, so it pops drop depth like the stdlib twin
-                drop_depth = max(0, drop_depth - 1)
-            else:
-                # rawtext element: skip content up to its end tag
-                end = _RAWTEXT_END[name.lower()].search(html_str, m.end())
-                if end is None:
-                    break
-                gt = html_str.find(">", end.start())
-                skip_until = gt + 1 if gt != -1 else len(html_str)
-                # script/style are DROP_TAGS: nothing emitted
+            pos += len(text)
     flush()
     return blocks
 
@@ -239,18 +266,14 @@ def main_text(
     method: str = "auto",
     min_block_chars: int = 12,
     max_link_density: float = 0.35,
-    parser: str = "fast",
 ) -> str:
     """Extract main content; kept blocks joined by ``\\n``.
 
     ``auto`` (reference ``_auto_binarize`` pattern, binarizer.py:43-62):
     pages with zero link text have no boilerplate signal -> ``plain``;
-    otherwise ``density``. ``parser``: "fast" (regex scanner, default)
-    or "stdlib" (html.parser) — identical output on well-formed HTML.
+    otherwise ``density``. Blocks come from ``extract_blocks_fast``.
     """
-    blocks = (
-        extract_blocks_fast(html_str) if parser == "fast" else extract_blocks(html_str)
-    )
+    blocks = extract_blocks_fast(html_str)
     if method == "auto":
         total_link = sum(b.link_chars for b in blocks)
         method = "plain" if total_link == 0 else "density"

@@ -5,7 +5,7 @@ Spark re-expression of the reference's flagship trace
 /root/reference/backend/app/api/routes/ocr_routes.py:18-49 ->
 ocr_service.py:33-127):
 
-    scan -> ONE iterator-form mapInPandas stage
+    scan -> ONE iterator-form mapInArrow stage
             (route per row: direct-text | pdf | html | error
              -> extraction -> field spans -> page rollup)
 
@@ -14,7 +14,7 @@ reference's per-document ``if not is_scanned:`` dispatch at
 ocr_service.py:56. One plan, one scan, one Python worker pool: Spark
 does not share scans between union branches, so a filter-per-branch
 plan would read the input once per branch and run one Python worker
-pool per pandas stage. Layout (url-hash or salted-host repartition)
+pool per Python stage. Layout (url-hash or salted-host repartition)
 is the job entrypoint's business (job.choose_layout), not the plan's.
 
 Scale notes (the properties that must hold at 10^12 rows):
@@ -22,8 +22,12 @@ Scale notes (the properties that must hold at 10^12 rows):
   pages stay inside their document's row, so the A1 rollup happens
   in-stage (operators/rollup.py).
 - Heavy per-row work (DOM parse, PDF parse, OCR) is in iterator-form
-  ``mapInPandas`` with per-worker engine caching (operators/engines.py)
-  — one model init per Python worker, not per row or batch.
+  ``mapInArrow`` with per-worker engine caching (operators/engines.py)
+  — one model init per Python worker, not per row or batch. Arrow in
+  and Arrow out: the input columns are read as Python lists and the
+  records built straight into a record batch, so no pandas frame is
+  made on either side (pyspark's pandas->Arrow conversion of the
+  nested ``pages``/``spans`` columns cost ~4x ``from_pylist``).
 - Rows carry MB-scale binaries: keep
   ``spark.sql.execution.arrow.maxRecordsPerBatch`` small
   (config.spark_conf_overrides).
@@ -36,8 +40,10 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..config import DEFAULT_CONFIG, ExtractionConfig
 from ..functions.fields import extract_spans
@@ -167,29 +173,55 @@ def _is_pdf_payload(data: bytes) -> bool:
     return data.startswith(FAKE_PDF_MAGIC) or data.startswith(b"%PDF")
 
 
+def _route_rows(cfg: ExtractionConfig, urls, htmls, texts, langs) -> list[dict]:
+    """One extraction record per input row, in input order: per-row
+    routing inside Python — the direct analog of the reference's
+    per-document ``if not is_scanned:`` dispatch (ocr_service.py:56)."""
+    records = []
+    for url, data, txt, lang in zip(urls, htmls, texts, langs):
+        try:
+            if txt is not None and len(txt) > 0:
+                records.append(_process_direct(url, txt, lang))
+            elif data is None:
+                records.append(_error_record(url, lang, _MISSING_MSG))
+            elif _is_pdf_payload(bytes(data)):
+                records.append(_process_pdf(url, data, lang, cfg))
+            else:
+                records.append(_process_html(url, data, lang, cfg))
+        except Exception as exc:
+            records.append(_error_record(url, lang, f"route: {exc}"))
+    return records
+
+
 def _fused_stage(cfg: ExtractionConfig):
-    """Single-pass stage: per-row routing inside Python — the direct
-    analog of the reference's per-document ``if not is_scanned:``
-    dispatch (ocr_service.py:56). One scan, one Python worker pool."""
+    """The fused stage over pandas batches: ``_route_rows`` with each
+    batch's records as one pandas frame (spans as lists of dicts). A
+    thin adapter for in-process replays; ``run_extraction`` runs
+    ``_arrow_stage``."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            records = []
-            for url, data, txt, lang in zip(
-                pdf["url"], pdf["html"], pdf["text"], pdf["lang"]
-            ):
-                try:
-                    if txt is not None and len(txt) > 0:
-                        records.append(_process_direct(url, txt, lang))
-                    elif data is None:
-                        records.append(_error_record(url, lang, _MISSING_MSG))
-                    elif _is_pdf_payload(bytes(data)):
-                        records.append(_process_pdf(url, data, lang, cfg))
-                    else:
-                        records.append(_process_html(url, data, lang, cfg))
-                except Exception as exc:
-                    records.append(_error_record(url, lang, f"route: {exc}"))
-            yield _records_frame(records)
+            yield _records_frame(
+                _route_rows(cfg, pdf["url"], pdf["html"], pdf["text"], pdf["lang"])
+            )
+
+    return run
+
+
+def _arrow_stage(cfg: ExtractionConfig):
+    """The fused stage over Arrow batches, with no pandas round trip:
+    the four input columns are read as Python lists and the records
+    are built straight into an ``EXTRACTION_SCHEMA`` record batch."""
+
+    schema = to_arrow_schema(EXTRACTION_SCHEMA)
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            records = _route_rows(
+                cfg,
+                *(batch.column(c).to_pylist() for c in ("url", "html", "text", "lang")),
+            )
+            yield pa.RecordBatch.from_pylist(records, schema=schema)
 
     return run
 
@@ -198,9 +230,8 @@ def run_extraction(
     pages_df: DataFrame, cfg: ExtractionConfig = DEFAULT_CONFIG
 ) -> DataFrame:
     """pages (url, warc_ts, html, text, lang) -> extractions (one
-    row/url). Fused single-pass plan: ONE scan, ONE mapInPandas stage,
+    row/url). Fused single-pass plan: ONE scan, ONE mapInArrow stage,
     per-row routing inside Python."""
-    return pages_df.select("url", "html", "text", "lang").mapInPandas(
-        _fused_stage(cfg), schema=EXTRACTION_SCHEMA
+    return pages_df.select("url", "html", "text", "lang").mapInArrow(
+        _arrow_stage(cfg), schema=EXTRACTION_SCHEMA
     )
-

@@ -3,7 +3,7 @@
 The reference is request/response (no streaming — SURVEY.md section
 2.8) and the north_rule specifies batch with checkpoint resume; this
 module exists because the same DataFrame plan runs unchanged as a
-stream: ``run_extraction`` is narrow transformations + mapInPandas,
+stream: ``run_extraction`` is narrow transformations + mapInArrow,
 all streaming-compatible. Use case: continuous ingestion of new WARC
 drops into the extractions table.
 

@@ -131,7 +131,7 @@ reaches only ~0.76 efficiency from 8->32 processes and ~0.85 from
 4->16. The Spark number above should be read against that measured
 machine ceiling, not against 1.0. On a real multi-executor cluster the
 contention term disappears (each executor owns its cores); the plan
-properties that matter there — one scan, one narrow mapInPandas
+properties that matter there — one scan, one narrow mapInArrow
 stage, zero shuffles, splits >> slots, deterministic per-url work —
 all hold by construction (see plans/pipeline.py).
 

@@ -112,3 +112,56 @@ def test_ocr_pages_carry_word_records(by_url):
             else:
                 assert p.words is None
     assert n_ocr > 10
+
+
+def test_arrow_stage_equals_pandas_adapter(spark, pages_small):
+    """``run_extraction`` (the mapInArrow stage) returns, column by
+    column, the records ``_fused_stage`` (the pandas adapter that
+    in-process replays drive) builds for the same rows: every route,
+    error records, OCR ``pages[].words``, ``steps_applied`` and null
+    ``lang``."""
+    from medical_and_charity_document_extraction_system_spark.config import DEFAULT_CONFIG
+    from medical_and_charity_document_extraction_system_spark.functions.minipdf import build_pdf
+    from medical_and_charity_document_extraction_system_spark.plans import pipeline
+    from medical_and_charity_document_extraction_system_spark.schema import EXTRACTION_SCHEMA
+    from medical_and_charity_document_extraction_system_spark.sources.pages import (
+        render_fake_pdf,
+        render_html,
+    )
+
+    pdf = build_pdf([
+        "Patient: Ana Lima seen on 01/02/03 at the clinic for a checkup",
+        "Diagnosis code J45.9, amount due $12.50, Invoice 54321 attached",
+    ])
+    extra = [
+        ("x:text-null-lang", None, "Invoice 12345 on 04/05/06", None),
+        ("x:html-null-lang", render_html(7, "Donor: Bo Ng gave $5.00 &amp; more"), None, None),
+        ("x:ocr-null-lang", render_fake_pdf(3, "short"), None, None),
+        ("x:pdf", pdf, None, "eng"),
+        ("x:pdf-truncated", pdf[:40], None, "eng"),
+        ("x:missing", None, None, "eng"),
+        ("x:empty-text", None, "", None),
+        ("x:junk", b"\xff\xfe<p>", None, "deu"),
+    ]
+    cols = ["url", "html", "text", "lang"]
+    rows = pages_small.select(*cols).union(
+        spark.createDataFrame(extra, pages_small.select(*cols).schema)
+    )
+    got = {r.url: r.asDict(recursive=True) for r in pipeline.run_extraction(rows).collect()}
+    frame = next(pipeline._fused_stage(DEFAULT_CONFIG)(iter([rows.toPandas()])))
+    want = frame.to_dict("records")
+    assert len(got) == len(want) == rows.count()
+    for rec in want:
+        out = got[rec["url"]]
+        for field in EXTRACTION_SCHEMA.fieldNames():
+            assert out[field] == rec[field], (rec["url"], field)
+
+    methods = {r["processing_method"] for r in want}
+    assert methods == {"direct_text_extraction", "html_extraction", "ocr_pipeline", "error"}
+    ocr = [r for r in want if r["processing_method"] == "ocr_pipeline"]
+    assert all(r["steps_applied"] and r["pages"][0]["words"] for r in ocr)
+    assert got["x:ocr-null-lang"]["lang"] is None
+    assert got["x:pdf"]["processing_method"] == "direct_text_extraction"
+    assert {got[u]["error"].split(":")[0] for u in ("x:pdf-truncated", "x:missing", "x:junk")} == {
+        "pdf", "missing", "html"
+    }

@@ -28,7 +28,8 @@ def test_fused_extraction_zero_shuffles_one_scan(spark):
     tree = plan_of(df, "simple")  # tree only: node counts are exact
     assert "Exchange" not in tree  # zero shuffles, at any scale
     assert tree.count("Scan parquet") == 1  # one pass over the input
-    assert "MapInPandas" in tree
+    # exactly the extraction stage: synthesize_pages has its own MapInPandas
+    assert tree.count("MapInArrow") == 1
     # column pruning reaches the scan: warc_ts never deserialized
     read_schema = [l for l in plan_of(df).splitlines() if "ReadSchema" in l]
     assert read_schema and "warc_ts" not in read_schema[0]
