@@ -179,33 +179,6 @@ def q_stream_host_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(outp).select("host", "total_pages")
 
 
-def q_stream_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming session windows over the events stream (one
-    availableNow batch; 30-min gap, 2-h watermark). Oracle: the batch
-    session reconstruction PLUS the append-mode finalization rule
-    (w_end <= max(ts) - watermark) — session merge and watermark
-    semantics both pinned (oracles.stream_user_sessions_sql)."""
-    from medical_and_charity_document_extraction_system_spark.streaming import (
-        user_sessions_stream,
-    )
-
-    base = _stage_dir("stream_sess_")
-    inp, outp, ck = f"{base}/in", f"{base}/out", f"{base}/ck"
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    ev.withColumn("ts", F.col("ts").cast("timestamp")).write.mode(
-        "overwrite"
-    ).parquet(inp)
-    q = user_sessions_stream(spark, inp, outp, ck)
-    q.awaitTermination()
-    return spark.read.parquet(outp).select(
-        "user_id",
-        F.date_format("w_start", "yyyy-MM-dd HH:mm:ss").alias("w_start"),
-        F.date_format("w_end", "yyyy-MM-dd HH:mm:ss").alias("w_end"),
-        "n_events",
-        "sum_value",
-    )
-
-
 def q_stream_snapshot_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming extraction committed into the snapshot-versioned
     table via foreachBatch — one append snapshot per micro-batch
@@ -796,18 +769,6 @@ def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(_doc_id(), redact_text(F.col("text")).alias("redacted"))
 
 
-def q_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization of the events stream (30-min gap):
-    lag -> boundary flag -> running-sum windows, exact decimal value
-    sums. The batch twin of the stateful streaming operator."""
-    from medical_and_charity_document_extraction_system_spark.operators.sessions import (
-        sessionize,
-    )
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return sessionize(ev)
-
-
 BM25_TERMS = ["table", "scan", "index"]
 
 
@@ -835,57 +796,6 @@ def q_bm25_scores_tfmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return bm25_scores_tfmap(_docs(spark, sf_dir), BM25_TERMS)
-
-
-def q_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark's NATIVE session_window operator (the engine-level form
-    of q_user_sessions' manual lag/cumsum): gap-merged windows are
-    half-open, so an event landing exactly at prev_ts + gap starts a
-    NEW session, and the emitted window end is last_ts + gap. The
-    oracle reconstructs exactly those semantics (>= split, end =
-    max(ts) + interval) — the two session queries together pin both
-    boundary conventions."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    sw = F.session_window(F.col("ts").cast("timestamp"), "30 minutes")
-    return (
-        ev.groupBy("user_id", sw)
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
-        )
-        .select(
-            "user_id",
-            F.date_format("session_window.start", "yyyy-MM-dd HH:mm:ss").alias("w_start"),
-            F.date_format("session_window.end", "yyyy-MM-dd HH:mm:ss").alias("w_end"),
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def q_events_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-level aggregation via ROLLUP (event_type, day):
-    per-(type, day), per-type subtotals, and the grand total in one
-    pass — grouping-set breadth with a direct SQL twin."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    day = F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day")
-    out = (
-        ev.select("event_type", day, "value")
-        .rollup("event_type", "day")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
-        )
-    )
-    # rolled-up levels surface as '(all)' instead of NULL: grouping
-    # keys stay totally ordered for any comparator (and unambiguous —
-    # event_type/day values can never be the literal '(all)')
-    return out.select(
-        F.coalesce("event_type", F.lit("(all)")).alias("event_type"),
-        F.coalesce("day", F.lit("(all)")).alias("day"),
-        "n_events",
-        "sum_value",
-    )
 
 
 def q_stream_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1222,18 +1132,6 @@ def q_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     return candidate_eval(cand, truth)
 
 
-def q_events_json_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured payload rollup (operators/report.
-    json_field_stats): get_json_object pulls props.$.k (JVM codegen,
-    NULL on malformed — counted via n_parsed), one hash-agg of exact
-    integers per event_type."""
-    from medical_and_charity_document_extraction_system_spark.operators.report import (
-        json_field_stats,
-    )
-
-    return json_field_stats(spark.read.parquet(f"{sf_dir}/events.parquet"))
-
-
 def q_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid search (operators/retrieval.py): BM25 top-20 + cosine
     top-20 fused by reciprocal-rank fusion (1/(60+r) per run — ONE
@@ -1277,19 +1175,6 @@ def q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return table_profile(_docs(spark, sf_dir))
-
-
-def q_events_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wide per-user activity matrix (operators/report.
-    pivot_event_stats): a real .pivot() with an EXPLICIT value list
-    (no schema-inference job), count + exact-decimal sum per event
-    type. The twin is conditional FILTER aggregation — the relational
-    meaning of the pivot."""
-    from medical_and_charity_document_extraction_system_spark.operators.report import (
-        pivot_event_stats,
-    )
-
-    return pivot_event_stats(spark.read.parquet(f"{sf_dir}/events.parquet"))
 
 
 def q_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1352,95 +1237,6 @@ def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return winnow_fingerprints(_docs(spark, sf_dir))
-
-
-def q_events_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trailing rows-frame stats per user (operators/rolling.py):
-    count / exact-decimal sum / max of value over each event's 3
-    predecessors + itself, frame-ordered by the TOTAL (epoch_us,
-    event_id) key. One shuffle on user_id, sliding-buffer frame —
-    never materializes the partition. Decimal sum keeps the result
-    independent of accumulation order (events_tumbling precedent)."""
-    from medical_and_charity_document_extraction_system_spark.operators.rolling import (
-        rolling_event_stats,
-    )
-
-    return rolling_event_stats(
-        spark.read.parquet(f"{sf_dir}/events.parquet"), n_preceding=3
-    )
-
-
-def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed range join (operators/rangejoin.py): every click
-    inside the 30-minute window after an error by the same user —
-    incident attribution. Bin-bucketed equi-join on (user_id, 30-min
-    bin), never a nested-loop: each interval expands to <= 2 bins, a
-    point has exactly one, so pairs emit exactly once. All arithmetic
-    exact int64 microseconds; the twin is DuckDB's native BETWEEN
-    (IEJoin) plan."""
-    from medical_and_charity_document_extraction_system_spark.operators.rangejoin import (
-        range_join_bins,
-    )
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    clicks = ev.where(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        "user_id",
-        us.alias("click_ts_us"),
-    )
-    errors = ev.where(F.col("event_type") == "error").select(
-        F.col("event_id").alias("error_id"),
-        "user_id",
-        us.alias("start_us"),
-        (us + F.lit(1_800_000_000).cast("long")).alias("end_us"),
-    )
-    j = range_join_bins(
-        clicks, errors, key_col="user_id", ts_col="click_ts_us",
-        start_col="start_us", end_col="end_us",
-    )
-    return j.select(
-        "click_id",
-        "error_id",
-        "user_id",
-        "click_ts_us",
-        F.col("start_us").alias("error_ts_us"),
-        (F.col("click_ts_us") - F.col("start_us")).alias("delta_us"),
-    )
-
-
-def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed as-of join (operators/asof.py — the temporal
-    operator Spark lacks; DuckDB's native ASOF JOIN is the twin):
-    each click event matched to the user's latest view at-or-before
-    its timestamp (classic attribution). Union-window form: ONE
-    shuffle on user_id, no join node; right-side ties at the same
-    instant are removed by a deterministic min_by rule in both
-    engines. Timestamps travel as unix_micros bigints."""
-    from medical_and_charity_document_extraction_system_spark.operators.asof import (
-        asof_join,
-    )
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    clicks = ev.where(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts"
-    )
-    views = ev.where(F.col("event_type") == "view")
-    j = asof_join(
-        clicks, views, key_col="user_id", ts_col="ts",
-        right_cols=("event_id", "value"), right_id_col="event_id",
-    )
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
-    r_ts_us = F.unix_micros(F.col("r_ts").cast("timestamp"))
-    return j.select(
-        "event_id",
-        "user_id",
-        ts_us.alias("ts_us"),
-        r_ts_us.alias("r_ts_us"),
-        "r_event_id",
-        "r_value",
-        (ts_us - r_ts_us).alias("age_us"),
-    )
 
 
 def q_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2848,19 +2644,6 @@ def q_pdf_pages_type0(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour window aggregation (batch twin of the
-    streaming rollup in streaming/)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return ev.groupBy(
-        F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH:mm:ss").alias("hour"),
-        "event_type",
-    ).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
-    )
-
-
 def q_source_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source top-3 documents by (n_chars DESC, doc_id ASC) —
     the curation primitive "keep each host's k best docs", computed
@@ -2878,33 +2661,6 @@ def q_source_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return grouped_topk(docs, "source", "n_chars", "doc_id", k=3)
 
 
-def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Retention triangle over the events stream (operators/cohorts.
-    cohort_retention): users bucketed by epoch DAY of first activity,
-    counted per (cohort, age). Integer-only (epoch-microsecond floor
-    division, session tz pinned UTC); no window anywhere — distinct +
-    two user-keyed aggs + one join."""
-    from medical_and_charity_document_extraction_system_spark.operators.cohorts import (
-        cohort_retention,
-    )
-
-    return cohort_retention(spark.read.parquet(f"{sf_dir}/events.parquet"))
-
-
-def q_funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered first-touch funnel view -> click -> purchase
-    (operators/cohorts.funnel_stages): stage i = users with a step-i
-    event strictly after their earliest continuing step-(i-1) event.
-    One filter + user-keyed join + min-agg per step; per-user state
-    shrinks monotonically. Oracle chains the identical per-step
-    CTEs."""
-    from medical_and_charity_document_extraction_system_spark.operators.cohorts import (
-        funnel_stages,
-    )
-
-    return funnel_stages(spark.read.parquet(f"{sf_dir}/events.parquet"))
-
-
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic quota sampling: exactly 5 docs per source, the
     bottom-5 by md5-hash rank of the id (operators/sampling.
@@ -2919,95 +2675,6 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs(spark, sf_dir).select("source", "doc_id", "lang")
     return stratified_sample(docs, "source", "doc_id", k=5)
-
-
-def q_events_hopping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hopping (sliding) 1-hour window with a 15-minute slide — the
-    overlapping-window member of the temporal family (tumbling and
-    session windows are already covered). Built with the native
-    F.window(ts, '1 hour', '15 minutes'): each event lands in exactly
-    4 windows on the 15-minute epoch grid. Window starts are emitted
-    as epoch MICROSECONDS (tz-free; the session tz is pinned UTC so
-    unix_micros == DuckDB epoch_us), values summed as decimal for an
-    order-free sum. Oracle expands each event's 4 grid starts with a
-    generate_series cross join."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = F.window(F.col("ts").cast("timestamp"), "1 hour", "15 minutes")
-    return (
-        ev.groupBy(w.alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_value"),
-        )
-        .select(
-            F.unix_micros("w.start").alias("window_start_us"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order Markov transition matrix over the event stream
-    (operators/eventstats.py): lag window over the total (epoch_us,
-    event_id) order per user, then (prev, next) counts rated in
-    integer basis points against prev-type row totals (ONE floor
-    division of exact integers). Scale: one entity-key window shuffle
-    + two hash-aggs over a |types|^2-bounded table; the rate join
-    broadcasts the totals."""
-    from medical_and_charity_document_extraction_system_spark.operators.eventstats import (
-        event_transitions,
-    )
-
-    return event_transitions(spark.read.parquet(f"{sf_dir}/events.parquet"))
-
-
-def q_events_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Volume anomaly flags per (event_type, hour bucket): the
-    3-sigma rule evaluated WITHOUT dividing — both sides of
-    (n*c - total)^2 > 9 * (n*sumsq - total^2) are exact int64 cross
-    products (operators/eventstats.bucket_anomalies). Two map-side-
-    combinable hash-aggs + a broadcast join back; no windows, no
-    floats anywhere."""
-    from medical_and_charity_document_extraction_system_spark.operators.eventstats import (
-        bucket_anomalies,
-    )
-
-    return bucket_anomalies(spark.read.parquet(f"{sf_dir}/events.parquet"))
-
-
-def q_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval UNION per user: events extend to [ts, ts + value
-    seconds) spans (exact micros via the DECIMAL(18,2) route, never a
-    double cast) and overlapping spans merge into maximal islands via
-    the cumulative-max-end rule (operators/eventstats.
-    interval_coverage). This is the member of the temporal family gap
-    sessionization cannot express: an interval nested inside a longer
-    predecessor must not break the island. One entity-key shuffle,
-    two streaming rows-frame windows, one hash-agg."""
-    from medical_and_charity_document_extraction_system_spark.operators.eventstats import (
-        interval_coverage,
-    )
-
-    return interval_coverage(spark.read.parquet(f"{sf_dir}/events.parquet"))
-
-
-def q_trend_slopes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact per-type least-squares trend of value over time
-    (operators/eventstats.trend_slopes): x = whole minutes since the
-    global earliest event, y = exact cents; slope numerator and
-    denominator are int64 cross products of one map-side-combinable
-    moment aggregation, exported with ONE final division. The
-    regression analog of the corpus_report convention: never let a
-    float fold into an aggregation."""
-    from medical_and_charity_document_extraction_system_spark.operators.eventstats import (
-        trend_slopes,
-    )
-
-    return trend_slopes(spark.read.parquet(f"{sf_dir}/events.parquet"))
 
 
 def q_docs_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3088,47 +2755,6 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return vocab_coverage(_docs(spark, sf_dir), vocab_size=16)
-
-
-def q_stream_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming maintenance of the anomaly bucket table
-    (streaming/stream.bucket_count_stream): events arrive as
-    micro-batches (8 files, 2 per trigger -> 4 epochs), each epoch
-    writes its count DELTA, and the merged table feeds the SAME
-    integer-sigma rule — so the result must equal the one-shot
-    events_anomalies bit-for-bit (counts commute across any batch
-    slicing; the mean/variance statistics are recomputed from the
-    merged table, never merged incrementally). Same oracle as
-    events_anomalies."""
-    from medical_and_charity_document_extraction_system_spark.operators.eventstats import (
-        anomalies_from_counts,
-    )
-    from medical_and_charity_document_extraction_system_spark.streaming import (
-        bucket_count_stream,
-        read_bucket_counts,
-    )
-
-    base = _stage_dir("stream_anom_")
-    inp, regs, ck = f"{base}/in", f"{base}/regs", f"{base}/ck"
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    ev.repartition(8).write.mode("overwrite").parquet(inp)
-    q = bucket_count_stream(spark, inp, regs, ck, max_files_per_trigger=2)
-    q.awaitTermination()
-    return anomalies_from_counts(read_bucket_counts(spark, regs))
-
-
-def q_events_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-grid resample with forward fill (operators/asof.
-    resample_ffill): each user's irregular events land on a 6-hour
-    epoch-micros grid, every point carrying the latest event
-    at-or-before it (NULL before the first event). Reuses the
-    asof_join union-window — ONE shuffle on user_id, no join node.
-    Oracle: generate_series grid + DuckDB native ASOF LEFT JOIN."""
-    from medical_and_charity_document_extraction_system_spark.operators.asof import (
-        resample_ffill,
-    )
-
-    return resample_ffill(spark.read.parquet(f"{sf_dir}/events.parquet"))
 
 
 def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3323,24 +2949,6 @@ def q_host_anf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return neighborhood_anf(_host_edges(_docs(spark, sf_dir)), radius=2)
 
 
-def q_events_time_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trailing ONE-HOUR stats per user (operators/rolling.
-    rolling_time_stats): count / exact-decimal sum of value over a
-    RANGE frame on epoch micros — the time-based twin of
-    events_rolling's rows frame. RANGE frames need no tiebreak key
-    (equal-timestamp rows are peers with identical frames in both
-    engines); one shuffle on user_id, then a linear sliding pass
-    whose buffer holds only the in-window rows."""
-    from medical_and_charity_document_extraction_system_spark.operators.rolling import (
-        rolling_time_stats,
-    )
-
-    return rolling_time_stats(
-        spark.read.parquet(f"{sf_dir}/events.parquet"),
-        window_us=3_600_000_000,
-    )
-
-
 def q_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AMS tug-of-war F2 sketch (operators/sketches.ams_registers —
     Alon/Matias/Szegedy 1996): 64 integer registers estimate the
@@ -3396,99 +3004,6 @@ def q_phrase_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     return phrase_match(_docs(spark, sf_dir), phrase=("batch", "batch"))
 
 
-def q_stream_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-static enrichment (streaming/stream.
-    enriched_events_stream): the event stream (8 files, 2 per trigger
-    -> 4 epochs) inner-joins a BROADCAST static user-tier dimension —
-    no state store, no watermark, the canonical stream-static join —
-    and each micro-batch writes its per-(tier, event_type)
-    count/decimal-sum DELTA to an epoch-keyed path. The merged totals
-    must equal the one-shot batch join (the oracle) because counts
-    and exact decimal sums commute over any batch slicing."""
-    from medical_and_charity_document_extraction_system_spark.streaming import (
-        enriched_events_stream,
-        read_enriched_totals,
-        user_tier_dim,
-    )
-
-    base = _stage_dir("stream_enrich_")
-    inp, out, ck = f"{base}/in", f"{base}/out", f"{base}/ck"
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    events.repartition(8).write.mode("overwrite").parquet(inp)
-    dim = user_tier_dim(events)
-    q = enriched_events_stream(
-        spark, inp, dim, out, ck, max_files_per_trigger=2
-    )
-    q.awaitTermination()
-    return read_enriched_totals(spark, out)
-
-
-def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval-x-interval overlap join (operators/rangejoin.
-    interval_overlap_join): every (error-window, click-window) pair
-    of the same user that intersects — both sides explode to
-    30-minute bins, equi-join on (user, bin), and the exactly-once
-    rule keeps a pair only in the bin containing max(starts), so no
-    dedup shuffle exists. The oracle is the plain all-pairs overlap
-    join (DuckDB IEJoin); overlap_us is exact int64."""
-    from medical_and_charity_document_extraction_system_spark.operators.rangejoin import (
-        interval_overlap_join,
-    )
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    left = ev.where(F.col("event_type") == "error").select(
-        "user_id",
-        F.col("event_id").alias("error_id"),
-        us.alias("l_start_us"),
-        (us + 7200 * 1_000_000).alias("l_end_us"),
-    )
-    right = ev.where(F.col("event_type") == "click").select(
-        "user_id",
-        F.col("event_id").alias("click_id"),
-        us.alias("r_start_us"),
-        (us + 1800 * 1_000_000).alias("r_end_us"),
-    )
-    return interval_overlap_join(
-        left, right, "user_id", bin_width_us=1_800_000_000
-    ).select("user_id", "error_id", "click_id", "overlap_us")
-
-
-def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream inner join (streaming/stream.
-    stream_stream_click_attribution): clicks and errors arrive as
-    TWO event-time streams of the same staged corpus (8 files, 2 per
-    trigger); Spark buffers each side in the state store and emits
-    every (click within 30min after error, same user) pair exactly
-    once. The union of epoch outputs must equal the one-shot batch
-    range join — the SAME oracle as range_join. The watermark is set
-    beyond the corpus span so state eviction can never drop a
-    late-sliced partner (documented in the operator)."""
-    from medical_and_charity_document_extraction_system_spark.streaming import (
-        read_stream_join_pairs,
-        stream_stream_click_attribution,
-    )
-
-    base = _stage_dir("stream_ssj_")
-    inp, out, ck = f"{base}/in", f"{base}/out", f"{base}/ck"
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    ev.repartition(8).write.mode("overwrite").parquet(inp)
-    # size state partitions to the state volume, not the session
-    # default: the state store pays per-partition fixed cost every
-    # micro-batch, and this join's state is a few thousand rows
-    # (measured 29s -> ~8s at sf0.01 with 32 -> 8 partitions)
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = stream_stream_click_attribution(
-            spark, inp, out, ck, max_files_per_trigger=4
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    return read_stream_join_pairs(spark, out)
-
-
 def q_dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic train/val/test split report (operators/mixing.
     assign_split): bucket = md5(id) mod 100 — a document's split
@@ -3500,19 +3015,6 @@ def q_dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return split_report(_docs(spark, sf_dir))
-
-
-def q_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Second-order journey mining (operators/eventstats.
-    path_trigrams): consecutive event-type triples per user on the
-    total (epoch_us, event_id) ordering — two stacked lags collapse
-    into ONE window node (one shuffle, one sort); the count table is
-    |types|^3-bounded and the global share total re-aggregates it."""
-    from medical_and_charity_document_extraction_system_spark.operators.eventstats import (
-        path_trigrams,
-    )
-
-    return path_trigrams(spark.read.parquet(f"{sf_dir}/events.parquet"))
 
 
 def q_host_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3529,21 +3031,6 @@ def q_host_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return pagerank_personalized(
         _host_edges(_docs(spark, sf_dir)), seed="host0"
-    )
-
-
-def q_events_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-weighted mean value per user (operators/eventstats.
-    time_weighted_means): each value holds until the user's next
-    event (lead on the total (epoch_us, id) key), so the mean is the
-    exact integral of the value staircase — decimal x int64 weighted
-    sums, ONE double division. One shuffle, one window node."""
-    from medical_and_charity_document_extraction_system_spark.operators.eventstats import (
-        time_weighted_means,
-    )
-
-    return time_weighted_means(
-        spark.read.parquet(f"{sf_dir}/events.parquet")
     )
 
 
@@ -3568,34 +3055,6 @@ def q_source_topk_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     return grouped_topk_dense(t, "source", "n_tokens", "doc_id", k=3)
 
 
-def q_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SCD2 validity-interval build (operators/eventstats.
-    scd2_intervals): per user, consecutive runs of the same event
-    type collapse to [valid_from, valid_to) rows — the CDC-to-
-    slowly-changing-dimension compression. One lag marks change
-    points, one lead over the change points alone closes intervals;
-    both windows share the key shuffle."""
-    from medical_and_charity_document_extraction_system_spark.operators.eventstats import (
-        scd2_intervals,
-    )
-
-    return scd2_intervals(spark.read.parquet(f"{sf_dir}/events.parquet"))
-
-
-def q_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distribution-drift audit (operators/eventstats.drift_report):
-    per event type, first-half vs second-half counts and a scaled
-    chi-square contribution — abs() BEFORE the split floor divisions
-    (signed integer division conventions differ across engines; the
-    single-division form would need d^2*10^4 ~ 4e22, past int64 in
-    BOTH engines)."""
-    from medical_and_charity_document_extraction_system_spark.operators.eventstats import (
-        drift_report,
-    )
-
-    return drift_report(spark.read.parquet(f"{sf_dir}/events.parquet"))
-
-
 # ---------------------------------------------------------------- driver
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
@@ -3603,10 +3062,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Catalog order is attestation-aware: the correctness gate
-    samples the FIRST 50 entries, so the queries with no attestation
-    row (CORRECTNESS_r0*.json) lead, then the rest by the round of
-    their latest row, oldest first. The full-catalog replica
+    """The 154 catalog queries. Order is attestation-aware: the
+    correctness gate samples the FIRST 50 entries, so the 56 queries
+    with no attestation row (CORRECTNESS_r0*.json) lead, then the rest
+    by the round of their latest row, oldest first
+    (tests/test_entry_contract.py::test_gate_window_is_never_attested
+    pins the window). The full-catalog replica
     (scripts/check_oracles.py) checks every entry regardless."""
     return {
         # --- never attested ---
@@ -3666,18 +3127,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "gopher_repetition": q_gopher_repetition,
         "dup_ngram_coverage": q_dup_ngram_coverage,
         "quality_filter": q_quality_filter,
-        "event_transitions": q_event_transitions,
-        "events_anomalies": q_events_anomalies,
-        "interval_coverage": q_interval_coverage,
-        "trend_slopes": q_trend_slopes,
-        "events_json_stats": q_events_json_stats,
-        "events_pivot": q_events_pivot,
-        "events_rolling": q_events_rolling,
-        "events_hopping": q_events_hopping,
-        "cohort_retention": q_cohort_retention,
-        "funnel_stages": q_funnel_stages,
-        "range_join": q_range_join,
-        "asof_join": q_asof_join,
         # --- last attested in CORRECTNESS_r03.json ---
         "embedding_near_dup_lsh": q_embedding_near_dup_lsh,
         "minhash_near_dup": q_minhash_near_dup,
@@ -3715,7 +3164,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bpe_token_count": q_bpe_token_count,
         "fingerprint": q_fingerprint,
         "merge_sources": q_merge_sources,
-        "events_tumbling": q_events_tumbling,
         # --- last attested in CORRECTNESS_r04.json ---
         "inverted_index": q_inverted_index,
         "snapshot_merge": q_snapshot_merge,
@@ -3763,10 +3211,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "chunk_documents": q_chunk_documents,
         "url_dedup": q_url_dedup,
         "embedding_near_dup": q_embedding_near_dup,
-        "user_sessions": q_user_sessions,
-        "session_windows": q_session_windows,
-        "events_rollup": q_events_rollup,
-        "stream_user_sessions": q_stream_user_sessions,
         # --- last attested in CORRECTNESS_r05.json ---
         "source_topk_dense": q_source_topk_dense,
         "host_ppr": q_host_ppr,
@@ -3784,16 +3228,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "host_anf": q_host_anf,
         "ann_recall_eval": q_ann_recall_eval,
         "host_reciprocity": q_host_reciprocity,
-        "scd2_intervals": q_scd2_intervals,
-        "drift_report": q_drift_report,
-        "events_twap": q_events_twap,
-        "path_trigrams": q_path_trigrams,
-        "stream_stream_join": q_stream_stream_join,
-        "interval_join": q_interval_join,
-        "events_time_rolling": q_events_time_rolling,
-        "stream_enriched": q_stream_enriched,
-        "stream_anomalies": q_stream_anomalies,
-        "events_resample": q_events_resample,
     }
 
 
@@ -3821,36 +3255,6 @@ def oracle_sql(sf_dir: str = "/root/testdata/sf0.01") -> dict[str, str]:
         "host_anf": oracles.host_anf_sql(),
         "ann_recall_eval": oracles.lsh_recall_eval_sql(),
         "host_reciprocity": oracles.host_reciprocity_sql(),
-        "scd2_intervals": oracles.scd2_intervals_sql(),
-        "drift_report": oracles.drift_report_sql(),
-        "events_twap": oracles.time_weighted_means_sql(),
-        "path_trigrams": oracles.path_trigrams_sql(),
-        # stream-stream join: epoch union must equal the batch range join
-        "stream_stream_join": oracles.range_join_sql(),
-        "interval_join": oracles.interval_join_sql(),
-        "events_time_rolling": oracles.rolling_time_stats_sql(),
-        # stream-static join: epoch-delta merge == one-shot batch join
-        "stream_enriched": oracles.enriched_event_totals_sql(),
-        # streaming count-delta merge must equal the one-shot rule
-        "stream_anomalies": oracles.bucket_anomalies_sql(),
-        "events_resample": oracles.events_resample_sql(),
-        "event_transitions": oracles.event_transitions_sql(),
-        "events_anomalies": oracles.bucket_anomalies_sql(),
-        "interval_coverage": oracles.interval_coverage_sql(),
-        "trend_slopes": oracles.trend_slopes_sql(),
-        "stream_user_sessions": oracles.stream_user_sessions_sql(),
-        "events_tumbling": oracles.events_tumbling_sql(),
-        "user_sessions": oracles.user_sessions_sql(),
-        "session_windows": oracles.session_windows_sql(),
-        "events_rollup": oracles.events_rollup_sql(),
-        "asof_join": oracles.asof_join_sql(),
-        "range_join": oracles.range_join_sql(),
-        "events_hopping": oracles.events_hopping_sql(),
-        "cohort_retention": oracles.cohort_retention_sql(),
-        "funnel_stages": oracles.funnel_stages_sql(),
-        "events_json_stats": oracles.events_json_stats_sql(),
-        "events_pivot": oracles.events_pivot_sql(),
-        "events_rolling": oracles.events_rolling_sql(),
         "host_ktruss": oracles.host_ktruss_sql(),
         # streaming register-max merge must equal the one-shot sketch
         "stream_hll_sketch": oracles.hll_host_cardinality_sql(),

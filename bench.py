@@ -5,13 +5,15 @@
 
 Env:
     SPARK_GRAFT_SF_DIR  input scale dir (default /root/testdata/sf0.1)
-    SPARK_GRAFT_CPUS    local[] width (default 32)
+    SPARK_GRAFT_CPUS    local[] width (default: the CPUs this process
+                        may run on)
     BENCH_REPEAT        corpus amplification for the extraction query
                         (default 40 -> 200k pages at sf0.1)
     BENCH_CORPUS_DIR    where the amplified pages parquet lives
-                        (default /tmp/bench_pages_<sf>_<repeat>; reused
-                        across runs so local[8] vs local[32] time the
-                        same bytes)
+                        (default $TMPDIR/bench_pages_<sf>_<repeat>; reused
+                        across runs so the local[N] and local[4N]
+                        legs of scripts/scaling_bench.py time the same
+                        bytes)
     BENCH_EXTRACTION_ONLY  set to 1 to time only the headline
                         extraction query (the scaling-efficiency legs
                         alternate N/4N runs and don't need the
@@ -27,21 +29,26 @@ from __future__ import annotations
 
 import json
 import os
+import tempfile
 import time
 
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
 from medical_and_charity_document_extraction_system_spark.plans import run_extraction
-from medical_and_charity_document_extraction_system_spark.session import get_spark
+from medical_and_charity_document_extraction_system_spark.session import (
+    default_cpus,
+    get_spark,
+)
 from medical_and_charity_document_extraction_system_spark.sources import synthesize_pages
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(default_cpus())
 REPEAT = int(os.environ.get("BENCH_REPEAT", "40"))
 SF = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
 CORPUS = os.environ.get(
-    "BENCH_CORPUS_DIR", f"/tmp/bench_pages_sf{SF}_x{REPEAT}"
+    "BENCH_CORPUS_DIR",
+    os.path.join(tempfile.gettempdir(), f"bench_pages_sf{SF}_x{REPEAT}"),
 )
 
 # the non-extraction headline queries, run straight from the catalog
@@ -54,7 +61,6 @@ CATALOG_QUERIES = [
     "topk_cosine",
     "embedding_near_dup",
     "embedding_near_dup_lsh",
-    "events_tumbling",
     "image_preprocess",
     # round-3 additions: the same E/D/K/B chain through the pure-Python
     # PNG and baseline-JPEG codecs (real-corpus container cost)
@@ -103,14 +109,10 @@ CATALOG_QUERIES = [
     # fixed point, localCheckpoint-chained rounds)
     "host_hits",
     # final round 5: trigram stupid-backoff LM scoring, keyword-
-    # taxonomy tagging, the per-source corpus report, and the two
-    # temporal operators (union-window as-of join, bin-bucketed
-    # range join)
+    # taxonomy tagging, and the per-source corpus report
     "lm_quality_trigram",
     "topic_tags",
     "corpus_report",
-    "asof_join",
-    "range_join",
     # continuation round 5: exact posting-join similarity (the
     # LSH-free complement), label-propagation communities and
     # degree-oriented triangle counts over the shared host graph,
@@ -120,20 +122,13 @@ CATALOG_QUERIES = [
     "host_triangles",
     "snapshot_changelog",
     # continuation round 5, second batch: tokenizer fertility (reuses
-    # the session BPE training), hopping windows, per-group top-k
+    # the session BPE training), per-group top-k
     "bpe_fertility",
-    "events_hopping",
     "source_topk",
     "stratified_sample",
-    # continuation round 5, third batch: event-analytics staples —
-    # retention triangle and the ordered first-touch funnel
-    "cohort_retention",
-    "funnel_stages",
     # continuation round 5: exact Levenshtein similarity join
     # (q-gram count filter + FastSS deletion neighborhoods)
     "edit_distance_pairs",
-    # continuation round 5: trailing rows-frame stats per user
-    "events_rolling",
     # continuation round 5: MOSS winnowing fingerprints (per-doc
     # array HOFs, zero shuffles)
     "winnow_fingerprints",
@@ -146,17 +141,13 @@ CATALOG_QUERIES = [
     # continuation round 5: perceptual image dedup (integer dHash +
     # banded hamming join)
     "image_near_dup",
-    # continuation round 5: one-scan column profiler and the wide
-    # per-user pivot matrix
+    # continuation round 5: one-scan column profiler
     "table_profile",
-    "events_pivot",
     # continuation round 5: survivorship consolidation over near-dup
     # components (golden record)
     "golden_records",
     # continuation round 5: hybrid search (BM25 + cosine, RRF-fused)
     "hybrid_retrieval",
-    # continuation round 5: JSON props extraction rollup
-    "events_json_stats",
     # continuation round 5: blocking-scheme precision/recall audit
     "dedup_eval",
     # continuation round 5: fuzzy-key entity resolution composite
@@ -173,14 +164,8 @@ CATALOG_QUERIES = [
     "quality_ensemble",
     # continuation round 5: manifest-schema evolution read path
     "snapshot_evolution",
-    # continuation round 5, fourth batch: event-stream analytics
-    # (Markov transitions, integer-sigma anomalies, interval union,
-    # exact OLS trends), grouping-sets cube, k-core peeling, and
-    # streaming HLL register maintenance
-    "event_transitions",
-    "events_anomalies",
-    "interval_coverage",
-    "trend_slopes",
+    # continuation round 5, fourth batch: grouping-sets cube, k-core
+    # peeling, and streaming HLL register maintenance
     "docs_cube",
     "host_kcore",
     "stream_hll_sketch",
@@ -203,42 +188,24 @@ CATALOG_QUERIES = [
     "k_anonymity",
     "frontier_shards",
     "dup_cluster_stats",
-    # continuation round 5, fifth batch: grid resample + forward fill
-    # (asof union-window reuse) and PPSWOR weighted sampling
-    "events_resample",
+    # continuation round 5, fifth batch: PPSWOR weighted sampling and
+    # tokenizer-vocab coverage
     "weighted_sample",
-    # continuation round 5, fifth batch: tokenizer-vocab coverage and
-    # streaming anomaly-bucket maintenance (count-delta merge)
     "vocab_coverage",
-    "stream_anomalies",
-    # continuation round 5, seventh batch: RANGE-frame time rolling,
-    # AMS F2 sketch, positional phrase search, and the stream-static
-    # broadcast enrichment
-    "events_time_rolling",
+    # continuation round 5, seventh batch: AMS F2 sketch and positional
+    # phrase search
     "ams_f2",
     "phrase_match",
-    "stream_enriched",
-    # continuation round 5, seventh batch: the interval-overlap join
-    # and the stream-stream state-store join
-    "interval_join",
-    "stream_stream_join",
     # continuation round 5, eighth batch: deterministic split report
-    # and journey trigrams
+    # and seeded random-walk proximity
     "dataset_split",
-    "path_trigrams",
-    # continuation round 5, eighth batch: seeded random-walk proximity
-    # and the exact TWAP staircase integral
     "host_ppr",
-    "events_twap",
-    # continuation round 5, ninth batch: dense-rank top-k, SCD2
-    # change-point compression, integer chi-square drift audit
+    # continuation round 5, ninth batch: dense-rank top-k
     "source_topk_dense",
-    "scd2_intervals",
-    "drift_report",
 ]
 
 
-# split count for the timed scan: fixed so local[8] and local[32] read
+# split count for the timed scan: fixed so every local[] width reads
 # identical splits; ~4 waves at 32 cores keeps the tail balanced.
 TARGET_SPLITS = 128
 

@@ -22,9 +22,11 @@ every rank arm exists and no NULL/-0.0 coalescing is needed.
 Scale shape: the cross-set pair generation here is the exact
 brute-force form (bounded label groups); at corpus scale swap it for
 the ANN candidate paths (ann_topk_lsh / ivf_topk) and keep the
-margin arithmetic — the scoring is candidate-source-agnostic. Ranks
-come from grouped_topk (agg-based thresholds) with the row_number
-window running only over the <= k surviving rows per key.
+margin arithmetic — the scoring is candidate-source-agnostic. The
+brute-force form refuses label groups whose product exceeds
+``MAX_PAIRS``. Ranks come from grouped_topk (agg-based thresholds)
+with the row_number window running only over the <= k surviving rows
+per key.
 """
 
 from __future__ import annotations
@@ -42,6 +44,10 @@ from medical_and_charity_document_extraction_system_spark.operators.similarity i
 from medical_and_charity_document_extraction_system_spark.operators.topk import (
     grouped_topk,
 )
+
+# cross-join bound: every pair costs one Python fold-dot, so past this
+# the brute-force candidate set is the wrong tool
+MAX_PAIRS = 10_000_000
 
 
 def _normalized(emb: DataFrame, label: int, id_alias: str, v_alias: str) -> DataFrame:
@@ -112,6 +118,12 @@ def bitext_mine(
     ca, cb = na.count(), nb.count()
     if ca < knn or cb < knn:
         raise ValueError(f"both sides need >= knn rows (got {ca}, {cb})")
+    if ca * cb > MAX_PAIRS:
+        raise ValueError(
+            f"bitext_mine: {ca} x {cb} = {ca * cb} candidate pairs exceeds "
+            f"the cross-join bound ({MAX_PAIRS}); use an ANN candidate "
+            "path (ann_topk_lsh / ivf_topk) and keep the margin scoring."
+        )
     scores = _fold_cos_pairs(na.crossJoin(nb)).cache()
     da = _rank_sum(scores, "id_a", "id_b", knn)
     db = _rank_sum(scores, "id_b", "id_a", knn)

@@ -1,8 +1,8 @@
 """Inverted-index construction: term -> postings with positions.
 
-The retrieval-side artifact of the corpus (BM25 scoring in
-operators/sessions.py consumes these statistics query-side; this
-operator materializes the full index a search service would serve):
+The retrieval-side artifact of the corpus (BM25 scoring —
+operators/sessions.bm25_scores, used by operators/retrieval.py —
+consumes these statistics query-side; this operator materializes the full index a search service would serve):
 one row per (term, document) with term frequency and the ordered
 position list, plus the term's document frequency.
 

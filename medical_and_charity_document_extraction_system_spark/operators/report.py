@@ -167,71 +167,6 @@ def apply_report_deltas(
     )
 
 
-def json_field_stats(
-    events: DataFrame,
-    field: str = "k",
-    json_col: str = "props",
-    group_col: str = "event_type",
-) -> DataFrame:
-    """Semi-structured payload rollup: extract an integer field from a
-    JSON string column (``get_json_object`` — JVM codegen, no Python;
-    malformed/missing JSON yields NULL, counted separately) and
-    aggregate per group. The event-properties parsing step every
-    clickstream pipeline runs before its props columns get promoted
-    to real columns. One map-side-combinable hash-agg; all outputs
-    exact integers."""
-    k = F.get_json_object(F.col(json_col), f"$.{field}").cast("long")
-    return (
-        events.select(F.col(group_col).alias("event_type"), k.alias("k"))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.count("k").cast("long").alias("n_parsed"),
-            F.sum("k").cast("long").alias("sum_k"),
-            F.min("k").cast("long").alias("min_k"),
-            F.max("k").cast("long").alias("max_k"),
-            F.countDistinct("k").cast("long").alias("n_distinct_k"),
-        )
-    )
-
-
-PIVOT_EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
-
-
-def pivot_event_stats(
-    events: DataFrame,
-    event_types: tuple[str, ...] = PIVOT_EVENT_TYPES,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    value_col: str = "value",
-) -> DataFrame:
-    """Wide per-entity activity matrix via a real pivot: one row per
-    key, a count and an exact-decimal value sum per event type — the
-    feature-matrix shape model trainers consume. The pivot value list
-    is EXPLICIT (deterministic output schema, no extra distinct job);
-    absent (key, type) combos yield count 0 and sum NULL — exactly
-    what conditional aggregation produces, so the twin is FILTER
-    aggs. One shuffle on the entity key."""
-    base = events.select(
-        F.col(key_col).alias("user_id"),
-        F.col(type_col).alias("etype"),
-        F.col(value_col).cast("decimal(18,2)").alias("v"),
-    )
-    wide = (
-        base.groupBy("user_id")
-        .pivot("etype", list(event_types))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("v").alias("sum"),
-        )
-    )
-    out = [F.col("user_id")]
-    for t in event_types:
-        out.append(F.coalesce(F.col(f"{t}_n"), F.lit(0)).cast("long").alias(f"n_{t}"))
-        out.append(F.col(f"{t}_sum").cast("double").alias(f"sum_{t}"))
-    return wide.select(*out)
-
-
 def dimensional_rollup(
     df: DataFrame,
     dims: list[str],

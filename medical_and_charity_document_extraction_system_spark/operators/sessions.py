@@ -1,38 +1,16 @@
-"""Event sessionization + BM25 relevance scoring.
+"""BM25 relevance scoring over the documents table.
 
-Two classic batch analytics operators over the harness tables:
-
-- ``sessionize``: gap-based sessions (a new session starts when a
-  user's inter-event gap exceeds ``gap_seconds``) via the standard
-  lag -> boundary-flag -> running-sum window pattern. Pure JVM window
-  expressions; the gap compares ``unix_micros`` (DuckDB ``epoch_us``)
-  so sub-second timestamps never truncate differently across engines.
-  This is the batch twin of the stateful streaming shape
-  (applyInPandasWithState in streaming/stream.py).
-
-  KEY-SKEW BOUND (r4, documented deliberately): the
-  ``Window.partitionBy(user_id)`` serializes one user's FULL history
-  into a single task — inherent to any per-key ordered operator
-  (Flink keyed streams and DuckDB's PARTITION BY share it). The work
-  is linear in history length (lag + running sum, no quadratic term),
-  so the bound is one task processing the heaviest user: at 10^12
-  events even a pathological bot with 10^8 events is a ~GB-scale
-  sort-spill task, not an OOM (pinned by the planted heavy-user test,
-  tests/test_textops.py). Histories beyond that should be pre-split
-  by (user, coarse time bucket) with boundary-session merge — the
-  classic two-phase form — or handled by the watermarked streaming
-  twin, which never holds more than the open session per key.
-
-- ``bm25_scores``: Okapi BM25 for a fixed query-term list. The
-  corpus statistics (N, avg doc length, per-term document frequency)
-  are integers reduced in one tiny aggregate; idf values are computed
-  in PYTHON from those integers and injected as double literals into
-  the scoring expression — deliberately, because Java's Math.log and
-  DuckDB's libm ln() are each allowed 1-ulp error and may disagree,
-  which would break the bit-exact oracle gate. With idf as literals,
-  both engines evaluate the identical scalar expression tree in the
-  identical order. The stats collect is O(len(query_terms)) values —
-  bounded, like the checkpoint bucket-id collect.
+``bm25_scores`` (and its tf-map form ``bm25_scores_tfmap``): Okapi
+BM25 for a fixed query-term list. The corpus statistics (N, avg doc
+length, per-term document frequency) are integers reduced in one
+tiny aggregate; idf values are computed in PYTHON from those integers
+and injected as double literals into the scoring expression —
+deliberately, because Java's Math.log and DuckDB's libm ln() are each
+allowed 1-ulp error and may disagree, which would break the bit-exact
+oracle gate. With idf as literals, both engines evaluate the
+identical scalar expression tree in the identical order. The stats
+collect is O(len(query_terms)) values — bounded, like the checkpoint
+bucket-id collect.
 """
 
 from __future__ import annotations
@@ -41,45 +19,8 @@ import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..functions.textstats import tokens
-
-SESSION_GAP_SECONDS = 1800
-
-
-def sessionize(
-    df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    order_tiebreak: str = "event_id",
-    gap_seconds: int = SESSION_GAP_SECONDS,
-) -> DataFrame:
-    """(events) -> one row per (user, session): session_seq (1-based
-    per user), n_events, formatted start/end, exact decimal value sum."""
-    w = Window.partitionBy(user_col).orderBy(ts_col, order_tiebreak)
-    prev = F.lag(ts_col).over(w)
-    # parquet timestamps load as TIMESTAMP_NTZ; the session is pinned
-    # UTC (session.py) so the cast is the identity instant
-    gap_us = F.unix_micros(F.col(ts_col).cast("timestamp")) - F.unix_micros(
-        prev.cast("timestamp")
-    )
-    brk = F.when(prev.isNull() | (gap_us > gap_seconds * 1_000_000), 1).otherwise(0)
-    sess = F.sum(brk).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    tagged = df.select(
-        F.col(user_col),
-        F.col(ts_col),
-        F.col("value"),
-        sess.cast("int").alias("session_seq"),
-    )
-    return tagged.groupBy(user_col, "session_seq").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.date_format(F.min(ts_col), "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-        F.date_format(F.max(ts_col), "yyyy-MM-dd HH:mm:ss").alias("session_end"),
-        F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
-    )
 
 
 def bm25_scores(

@@ -28,6 +28,9 @@ from pyspark.sql import functions as F
 
 LSH_SEED = 42
 
+# lsh_recall_eval's exact leg cross-joins base x queries
+MAX_RECALL_EVAL_PAIRS = 10_000_000
+
 # last cached normalized+bucketed table per session (applicationId) as
 # (semantic plan hash, DataFrame) — see embedding_near_dup_lsh: a new
 # INPUT evicts the previous cache; the same input reuses it
@@ -865,7 +868,9 @@ def lsh_recall_eval(
     (cos DESC, id ASC) on identical doubles, so the DuckDB twin's
     plain windows land on identical members. Scale: queries and their
     bucket keys broadcast; candidates stay (qid, id) pairs; no window
-    ever sees raw base rows (grouped_topk aggregates first)."""
+    ever sees raw base rows (grouped_topk aggregates first). The exact
+    leg is a base x queries cross join, so the call refuses when that
+    product exceeds ``MAX_RECALL_EVAL_PAIRS`` (one narrow count)."""
     from .topk import grouped_topk
 
     e = emb.select(
@@ -877,6 +882,16 @@ def lsh_recall_eval(
         F.col("vid").alias("qid"), F.col("v").alias("qv")
     )
     base = e.where(~is_q)
+    n = e.agg(
+        F.count(F.when(is_q, 1)).alias("q"), F.count(F.when(~is_q, 1)).alias("b")
+    ).first()
+    if n.q * n.b > MAX_RECALL_EVAL_PAIRS:
+        raise ValueError(
+            f"lsh_recall_eval: {n.b} base x {n.q} query rows = {n.q * n.b} "
+            f"exact pairs exceeds the cross-join bound "
+            f"({MAX_RECALL_EVAL_PAIRS}); raise query_mod to hold out "
+            "fewer queries."
+        )
     bucketed = with_lsh_buckets(e, dim, "v", tables, bits, seed).select(
         "vid", F.posexplode("_buckets").alias("tbl", "key")
     )

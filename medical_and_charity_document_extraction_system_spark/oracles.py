@@ -466,16 +466,6 @@ walk(node, label) AS (
 """
 
 
-def events_tumbling_sql() -> str:
-    return """
-SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
-       event_type,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-FROM events GROUP BY 1, 2
-"""
-
-
 def source_topk_sql(k: int = 3) -> str:
     """Twin of q_source_topk: the textbook row_number window — the
     Spark side must land on the identical row set through its
@@ -655,27 +645,6 @@ LIMIT {top_k}
 """
 
 
-def events_json_stats_sql(field: str = "k") -> str:
-    """Twin of q_events_json_stats: try_cast-to-JSON + ->> extraction
-    (NULL on malformed, same as Spark's get_json_object), identical
-    integer aggregates."""
-    return f"""
-WITH p AS (
-  SELECT event_type,
-         CAST(try_cast(props AS JSON) ->> '$.{field}' AS BIGINT) AS k
-  FROM events
-)
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(count(k) AS BIGINT) AS n_parsed,
-       CAST(sum(k) AS BIGINT) AS sum_k,
-       CAST(min(k) AS BIGINT) AS min_k,
-       CAST(max(k) AS BIGINT) AS max_k,
-       CAST(count(DISTINCT k) AS BIGINT) AS n_distinct_k
-FROM p GROUP BY event_type
-"""
-
-
 def table_profile_sql() -> str:
     """Twin of q_table_profile: UNION-ALL unpivot of the documents
     columns to (col, rendered value), same counting aggregates.
@@ -700,27 +669,6 @@ SELECT col AS "column",
        min(val) AS min_str,
        max(val) AS max_str
 FROM kv GROUP BY col
-"""
-
-
-def events_pivot_sql(
-    event_types: tuple[str, ...] = ("click", "error", "purchase", "signup", "view"),
-) -> str:
-    """Twin of q_events_pivot: conditional (FILTER) aggregation — the
-    relational spelling of an explicit-value-list pivot. Absent combos
-    are count 0 / sum NULL in both engines."""
-    cols = []
-    for t in event_types:
-        cols.append(
-            f"CAST(count(*) FILTER (event_type = '{t}') AS BIGINT) AS n_{t}"
-        )
-        cols.append(
-            f"CAST(sum(CAST(value AS DECIMAL(18,2)))"
-            f" FILTER (event_type = '{t}') AS DOUBLE) AS sum_{t}"
-        )
-    return f"""
-SELECT user_id, {", ".join(cols)}
-FROM events GROUP BY user_id
 """
 
 
@@ -818,21 +766,6 @@ FROM sel
 """
 
 
-def events_rolling_sql(n_preceding: int = 3) -> str:
-    """Twin of q_events_rolling: the same rows-frame window in SQL.
-    The (epoch_us, event_id) order is total, the sum is exact decimal,
-    min/max are order-free — nothing for engines to disagree on."""
-    return f"""
-SELECT event_id, user_id, epoch_us(ts) AS us,
-       CAST(count(*) OVER w AS BIGINT) AS n_window,
-       CAST(sum(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE) AS roll_sum,
-       CAST(max(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE) AS roll_max
-FROM events
-WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id
-             ROWS BETWEEN {n_preceding} PRECEDING AND CURRENT ROW)
-"""
-
-
 def edit_distance_pairs_sql(max_dist: int = 4, prefix_len: int = 24) -> str:
     """Twin of q_edit_distance_pairs: the straightforward all-pairs
     Levenshtein join (DuckDB's levenshtein == Spark's: unit-cost
@@ -848,65 +781,6 @@ SELECT a.id AS id_a, b.id AS id_b,
 FROM t a JOIN t b
   ON a.id < b.id AND abs(length(a.s) - length(b.s)) <= {max_dist}
 WHERE levenshtein(a.s, b.s) <= {max_dist}
-"""
-
-
-def cohort_retention_sql(bucket_us: int = 86_400_000_000) -> str:
-    """Twin of q_cohort_retention: epoch-day buckets by integer floor
-    division, first bucket per user, (cohort, age) counts over the
-    distinct (user, bucket) activity set."""
-    return f"""
-WITH e AS (
-  SELECT user_id AS u, epoch_us(ts) // {bucket_us} AS bucket FROM events
-),
-a AS (SELECT DISTINCT u, bucket FROM e),
-f AS (SELECT u, min(bucket) AS cohort FROM a GROUP BY u)
-SELECT cohort, bucket - cohort AS age, CAST(count(*) AS BIGINT) AS n_active
-FROM a JOIN f USING (u) GROUP BY 1, 2
-"""
-
-
-def funnel_stages_sql(steps: tuple[str, ...] = ("view", "click", "purchase")) -> str:
-    """Twin of q_funnel_stages: per-step CTEs — stage i keeps users
-    with a step-i event strictly after their earliest stage-(i-1)
-    time (min over continuing events)."""
-    ctes = [
-        f"""s1 AS (
-  SELECT user_id AS u, min(epoch_us(ts)) AS t
-  FROM events WHERE event_type = '{steps[0]}' GROUP BY 1
-)"""
-    ]
-    for i, step in enumerate(steps[1:], 2):
-        ctes.append(f"""s{i} AS (
-  SELECT e.user_id AS u, min(epoch_us(e.ts)) AS t
-  FROM events e JOIN s{i - 1} ON e.user_id = s{i - 1}.u
-   AND epoch_us(e.ts) > s{i - 1}.t
-  WHERE e.event_type = '{step}' GROUP BY 1
-)""")
-    selects = [
-        f"SELECT CAST({i} AS BIGINT) AS stage, '{step}' AS step, "
-        f"CAST((SELECT count(*) FROM s{i}) AS BIGINT) AS n_users"
-        for i, step in enumerate(steps, 1)
-    ]
-    return "WITH " + ",\n".join(ctes) + "\n" + "\nUNION ALL ".join(selects)
-
-
-def events_hopping_sql() -> str:
-    """Twin of q_events_hopping: each event's 4 hopping-window starts
-    are the 15-minute grid floor minus k slides (k = 0..3 — exactly
-    the windows Spark's F.window(1h, 15m) assigns), in epoch
-    microseconds so no timezone or formatting is involved."""
-    return """
-WITH e AS (SELECT epoch_us(ts) AS us, event_type, value FROM events),
-x AS (
-  SELECT us - (us % 900000000) - k * 900000000 AS window_start_us,
-         event_type, value
-  FROM e CROSS JOIN generate_series(0, 3) AS t(k)
-)
-SELECT window_start_us, event_type,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-FROM x GROUP BY 1, 2
 """
 
 
@@ -1396,38 +1270,6 @@ FROM ({inner})
 """
 
 
-def user_sessions_sql(gap_seconds: int = 1800) -> str:
-    """Twin of operators/sessions.sessionize: lag -> boundary flag ->
-    running sum, gap compared in epoch microseconds (epoch_us =
-    Spark's unix_micros), value summed in decimal for order-free
-    exactness."""
-    return f"""
-WITH l AS (
-  SELECT user_id, event_id, ts, value,
-         lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS pts
-  FROM events
-),
-f AS (
-  SELECT *, CASE WHEN pts IS NULL
-                   OR epoch_us(ts) - epoch_us(pts) > {gap_seconds * 1_000_000}
-                 THEN 1 ELSE 0 END AS brk
-  FROM l
-),
-s AS (
-  SELECT *, CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                ROWS UNBOUNDED PRECEDING) AS INT) AS session_seq
-  FROM f
-)
-SELECT user_id, session_seq,
-       count(*) AS n_events,
-       strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-       strftime(max(ts), '%Y-%m-%d %H:%M:%S') AS session_end,
-       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-FROM s
-GROUP BY user_id, session_seq
-"""
-
-
 def _dlit(x: float) -> str:
     # quoted-repr -> DOUBLE: a bare float literal parses as DECIMAL in
     # DuckDB (loses -0.0 and precision); repr round-trips exactly
@@ -1520,92 +1362,6 @@ f AS (
   FROM lex FULL JOIN vec ON lex.id = vec.id
 )
 SELECT doc_id, r_a, r_b, rrf FROM f ORDER BY rrf DESC, doc_id LIMIT {top_k}
-"""
-
-
-def session_windows_sql(gap_seconds: int = 1800) -> str:
-    """Twin of q_session_windows (Spark's native session_window):
-    half-open merge — split when gap >= the window duration — and the
-    emitted end is last event ts + gap."""
-    return f"""
-WITH l AS (
-  SELECT user_id, event_id, ts, value,
-         lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS pts
-  FROM events
-),
-f AS (
-  SELECT *, CASE WHEN pts IS NULL
-                   OR epoch_us(ts) - epoch_us(pts) >= {gap_seconds * 1_000_000}
-                 THEN 1 ELSE 0 END AS brk
-  FROM l
-),
-s AS (
-  SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                           ROWS UNBOUNDED PRECEDING) AS sess
-  FROM f
-)
-SELECT user_id,
-       strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS w_start,
-       strftime(max(ts) + INTERVAL {gap_seconds} SECOND, '%Y-%m-%d %H:%M:%S') AS w_end,
-       count(*) AS n_events,
-       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-FROM s
-GROUP BY user_id, sess
-"""
-
-
-def stream_user_sessions_sql(
-    gap_seconds: int = 1800, watermark_seconds: int = 7200
-) -> str:
-    """Twin of q_stream_user_sessions: the session_windows
-    reconstruction (half-open merge, end = last ts + gap) filtered by
-    the append-mode finalization rule — a session emits iff its end
-    <= max(event time) - watermark when the availableNow drain
-    finishes."""
-    return f"""
-WITH l AS (
-  SELECT user_id, event_id, ts, value,
-         lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS pts
-  FROM events
-),
-f AS (
-  SELECT *, CASE WHEN pts IS NULL
-                   OR epoch_us(ts) - epoch_us(pts) >= {gap_seconds * 1_000_000}
-                 THEN 1 ELSE 0 END AS brk
-  FROM l
-),
-s AS (
-  SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                           ROWS UNBOUNDED PRECEDING) AS sess
-  FROM f
-),
-sessions AS (
-  SELECT user_id,
-         min(ts) AS ws,
-         max(ts) + INTERVAL {gap_seconds} SECOND AS we,
-         count(*) AS n_events,
-         CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-  FROM s GROUP BY user_id, sess
-)
-SELECT user_id,
-       strftime(ws, '%Y-%m-%d %H:%M:%S') AS w_start,
-       strftime(we, '%Y-%m-%d %H:%M:%S') AS w_end,
-       n_events, sum_value
-FROM sessions
-WHERE we <= (SELECT max(ts) FROM events) - INTERVAL {watermark_seconds} SECOND
-"""
-
-
-def events_rollup_sql() -> str:
-    """Twin of q_events_rollup: GROUP BY ROLLUP. Spark emits NULL for
-    the rolled-up levels; DuckDB ROLLUP does the same."""
-    return """
-SELECT coalesce(event_type, '(all)') AS event_type,
-       coalesce(strftime(date_trunc('day', ts), '%Y-%m-%d'), '(all)') AS day,
-       count(*) AS n_events,
-       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-FROM events
-GROUP BY ROLLUP (event_type, strftime(date_trunc('day', ts), '%Y-%m-%d'))
 """
 
 
@@ -3041,60 +2797,6 @@ FROM cb
 """
 
 
-def range_join_sql() -> str:
-    """Twin of q_range_join: the plain BETWEEN join (DuckDB plans it
-    as its native IEJoin); the Spark side's bin bucketing must emit
-    exactly the same pair set."""
-    return """
-WITH c AS (
-  SELECT event_id AS click_id, user_id, epoch_us(ts) AS click_ts_us
-  FROM events WHERE event_type = 'click'
-),
-e AS (
-  SELECT event_id AS error_id, user_id, epoch_us(ts) AS error_ts_us
-  FROM events WHERE event_type = 'error'
-)
-SELECT c.click_id, e.error_id, c.user_id,
-       c.click_ts_us, e.error_ts_us,
-       c.click_ts_us - e.error_ts_us AS delta_us
-FROM c JOIN e
-  ON c.user_id = e.user_id
- AND c.click_ts_us BETWEEN e.error_ts_us AND e.error_ts_us + 1800000000
-"""
-
-
-def asof_join_sql() -> str:
-    """Twin of q_asof_join: DuckDB's native ASOF LEFT JOIN against
-    the same min_by-deduplicated right side. ASOF picks the greatest
-    right ts satisfying ts_left >= ts_right — exactly the
-    union-window semantics (right rows sort before ts-equal left
-    rows)."""
-    return """
-WITH c AS (
-  SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'
-),
-v0 AS (
-  SELECT user_id, ts,
-         min_by(event_id, event_id) AS r_event_id,
-         min_by(value, event_id) AS r_value
-  FROM events WHERE event_type = 'view'
-  GROUP BY user_id, ts
-),
-j AS (
-  SELECT c.event_id, c.user_id, c.ts,
-         v0.ts AS r_ts, v0.r_event_id, v0.r_value
-  FROM c ASOF LEFT JOIN v0
-    ON c.user_id = v0.user_id AND c.ts >= v0.ts
-)
-SELECT event_id, user_id,
-       epoch_us(ts) AS ts_us,
-       epoch_us(r_ts) AS r_ts_us,
-       r_event_id, r_value,
-       epoch_us(ts) - epoch_us(r_ts) AS age_us
-FROM j
-"""
-
-
 def corpus_report_sql() -> str:
     """Twin of q_corpus_report (operators/report.py): one grouped
     aggregation; every rate is an exact integer division, so no float
@@ -4330,124 +4032,6 @@ FROM pc GROUP BY shard
 
 
 # ---------------------------------------------------------------------------
-# Event-stream analytics twins (operators/eventstats.py)
-
-
-def event_transitions_sql() -> str:
-    """Twin of q_event_transitions: the same lag window over the
-    total (epoch_us, event_id) order, counts re-aggregated for row
-    totals, basis-point rate by integer floor division."""
-    return """
-WITH e AS (SELECT user_id, epoch_us(ts) AS us, event_id, event_type FROM events),
-x AS (
-  SELECT event_type AS next_type,
-         lag(event_type) OVER (PARTITION BY user_id ORDER BY us, event_id)
-           AS prev_type
-  FROM e
-),
-c AS (SELECT prev_type, next_type, CAST(count(*) AS BIGINT) AS n_trans
-      FROM x WHERE prev_type IS NOT NULL GROUP BY 1, 2),
-t AS (SELECT prev_type, CAST(sum(n_trans) AS BIGINT) AS prev_total
-      FROM c GROUP BY 1)
-SELECT c.prev_type, c.next_type, c.n_trans, t.prev_total,
-       CAST(c.n_trans * 10000 // t.prev_total AS BIGINT) AS rate_bp
-FROM c JOIN t USING (prev_type)
-"""
-
-
-def bucket_anomalies_sql(bucket_us: int = 3_600_000_000, k_sigma: int = 3) -> str:
-    """Twin of q_events_anomalies: the cross-multiplied k-sigma rule
-    — (n*c - total)^2 > k^2 * (n*sumsq - total^2) — evaluated in
-    exact int64 on both sides, so no mean/variance is ever divided."""
-    k2 = k_sigma * k_sigma
-    return f"""
-WITH c AS (
-  SELECT event_type,
-         (epoch_us(ts) // {bucket_us}) * {bucket_us} AS bucket_us_start,
-         CAST(count(*) AS BIGINT) AS n_events
-  FROM events GROUP BY 1, 2
-),
-s AS (SELECT event_type, CAST(count(*) AS BIGINT) AS nb,
-             CAST(sum(n_events) AS BIGINT) AS tot,
-             CAST(sum(n_events * n_events) AS BIGINT) AS sumsq
-      FROM c GROUP BY 1)
-SELECT c.event_type, c.bucket_us_start, c.n_events,
-       CAST((s.nb * c.n_events - s.tot) * (s.nb * c.n_events - s.tot)
-            AS BIGINT) AS dev_sq,
-       CAST({k2} * (s.nb * s.sumsq - s.tot * s.tot) AS BIGINT) AS thresh_sq,
-       (s.nb > 1 AND
-        (s.nb * c.n_events - s.tot) * (s.nb * c.n_events - s.tot)
-          > {k2} * (s.nb * s.sumsq - s.tot * s.tot)) AS is_anomaly
-FROM c JOIN s USING (event_type)
-"""
-
-
-def interval_coverage_sql() -> str:
-    """Twin of q_interval_coverage: cumulative-max interval union.
-    Durations go double -> DECIMAL(18,2) -> exact integer micros (the
-    events_rolling decimal convention); islands break on the running
-    max end over ALL predecessors, not the previous row's end."""
-    return """
-WITH b AS (
-  SELECT user_id, epoch_us(ts) AS start_us, event_id AS eid,
-         epoch_us(ts)
-           + CAST(CAST(value AS DECIMAL(18,2)) * 1000000 AS BIGINT) AS end_us
-  FROM events
-),
-f AS (
-  SELECT user_id, start_us, end_us, eid,
-         CASE WHEN max(end_us) OVER wprev IS NULL
-                OR start_us > max(end_us) OVER wprev
-              THEN 1 ELSE 0 END AS new_island
-  FROM b
-  WINDOW wprev AS (PARTITION BY user_id ORDER BY start_us, eid
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-),
-g AS (
-  SELECT user_id, start_us, end_us,
-         sum(new_island) OVER (PARTITION BY user_id ORDER BY start_us, eid
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-  FROM f
-)
-SELECT user_id, CAST(island AS BIGINT) AS island,
-       min(start_us) AS start_us, max(end_us) AS end_us,
-       CAST(count(*) AS BIGINT) AS n_events
-FROM g GROUP BY 1, 2
-"""
-
-
-def trend_slopes_sql() -> str:
-    """Twin of q_trend_slopes: integer moment sums (x in whole
-    minutes since the global min, y in exact cents), cross-product
-    numerator/denominator, ONE final double division. DuckDB sums
-    return HUGEINT — cast to BIGINT before the cross products."""
-    return """
-WITH t0 AS (SELECT min(epoch_us(ts)) AS t0 FROM events),
-b AS (
-  SELECT event_type,
-         (epoch_us(ts) - (SELECT t0 FROM t0)) // 60000000 AS x,
-         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS y
-  FROM events
-),
-m AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-         CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-         CAST(sum(x * y) AS BIGINT) AS sxy,
-         CAST(sum(x * x) AS BIGINT) AS sxx
-  FROM b GROUP BY 1
-)
-SELECT event_type, n_events,
-       CAST(n_events * sxy - sx * sy AS BIGINT) AS slope_num,
-       CAST(n_events * sxx - sx * sx AS BIGINT) AS slope_den,
-       CASE WHEN n_events * sxx - sx * sx <> 0
-            THEN CAST(n_events * sxy - sx * sy AS DOUBLE)
-                   / CAST(n_events * sxx - sx * sx AS DOUBLE)
-            END AS slope_cents_per_min
-FROM m
-"""
-
-
-# ---------------------------------------------------------------------------
 # Grouping-sets cube and k-core twins
 
 
@@ -4493,25 +4077,7 @@ SELECT node, CAST(count(*) AS BIGINT) AS core_deg FROM {prev} GROUP BY node
 
 
 # ---------------------------------------------------------------------------
-# Event-window, stream-join, sketch, sampling, host-graph and
-# text-audit twins
-
-
-def rolling_time_stats_sql(window_us: int = 3_600_000_000) -> str:
-    """Twin of q_events_time_rolling: the same RANGE frame on epoch
-    micros — frame membership depends on the ORDER value only, so
-    equal-timestamp peers share frames in both engines; count is
-    integer, the sum an exact decimal cast once."""
-    return f"""
-SELECT event_id, user_id, us,
-       CAST(count(*) OVER w AS BIGINT) AS n_window,
-       CAST(sum(v) OVER w AS DOUBLE) AS win_sum
-FROM (SELECT event_id, user_id, epoch_us(ts) AS us,
-             CAST(value AS DECIMAL(18,2)) AS v
-      FROM events)
-WINDOW w AS (PARTITION BY user_id ORDER BY us
-             RANGE BETWEEN {window_us} PRECEDING AND CURRENT ROW)
-"""
+# Sketch, sampling, host-graph and text-audit twins
 
 
 def ams_f2_sql(r: int = 64) -> str:
@@ -4572,28 +4138,6 @@ GROUP BY 1
 """
 
 
-def enriched_event_totals_sql() -> str:
-    """Twin of q_stream_enriched: the one-shot stream-static join —
-    per-user tier dim from the full batch, inner join, (tier, type)
-    counts and exact decimal sums. Equal to the epoch-delta merge
-    because counts and decimal sums commute over any batch
-    slicing."""
-    return """
-WITH dim AS (
-  SELECT user_id,
-         CASE WHEN count(*) >= 75 THEN 2
-              WHEN count(*) >= 60 THEN 1
-              ELSE 0 END AS tier
-  FROM events GROUP BY 1
-)
-SELECT tier, e.event_type,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(sum(CAST(e.value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-FROM events e JOIN dim USING (user_id)
-GROUP BY 1, 2
-"""
-
-
 def vocab_coverage_sql(vocab_size: int = 64) -> str:
     """Twin of q_vocab_coverage: same shared tokenizer fragment, same
     top-V tie rule (count DESC, term), coverage as one integer
@@ -4615,32 +4159,6 @@ SELECT source, n_tokens, n_covered, n_terms,
        CAST(n_covered * 10000 // greatest(n_tokens, 1) AS BIGINT)
          AS coverage_bp
 FROM a
-"""
-
-
-def events_resample_sql(step_us: int = 21_600_000_000) -> str:
-    """Twin of q_events_resample: the grid is generate_series over
-    the same step-floored bounds (identical % arithmetic), the fill
-    is DuckDB's native ASOF LEFT JOIN against the min_by-deduped
-    right side — the asof_join twin construction."""
-    return f"""
-WITH e AS (
-  SELECT user_id, epoch_us(ts) AS us, event_id, value FROM events
-),
-b AS (SELECT user_id, min(us) AS mn, max(us) AS mx FROM e GROUP BY 1),
-g AS (
-  SELECT user_id,
-         unnest(generate_series(mn - mn % {step_us},
-                                mx - mx % {step_us}, {step_us})) AS us
-  FROM b
-),
-r AS (
-  SELECT user_id, us, min(event_id) AS r_event_id,
-         min_by(value, event_id) AS r_value
-  FROM e GROUP BY 1, 2
-)
-SELECT g.user_id, g.us, r.us AS r_us, r.r_event_id, r.r_value
-FROM g ASOF LEFT JOIN r ON g.user_id = r.user_id AND g.us >= r.us
 """
 
 
@@ -4992,33 +4510,6 @@ FROM ex JOIN s USING (node)
 """
 
 
-def interval_join_sql(
-    error_window_s: int = 7200, click_window_s: int = 1800
-) -> str:
-    """Twin of q_interval_join: the plain all-pairs overlap join
-    (DuckDB plans it as IEJoin) — max(starts) <= min(ends) on closed
-    intervals, exact int64 micros, overlap_us = min(ends) -
-    max(starts)."""
-    ew, cw = error_window_s * 1_000_000, click_window_s * 1_000_000
-    return f"""
-WITH e AS (
-  SELECT user_id, event_id AS error_id, epoch_us(ts) AS l_start_us,
-         epoch_us(ts) + {ew} AS l_end_us
-  FROM events WHERE event_type = 'error'
-),
-c AS (
-  SELECT user_id, event_id AS click_id, epoch_us(ts) AS r_start_us,
-         epoch_us(ts) + {cw} AS r_end_us
-  FROM events WHERE event_type = 'click'
-)
-SELECT e.user_id, e.error_id, c.click_id,
-       CAST(least(e.l_end_us, c.r_end_us)
-            - greatest(e.l_start_us, c.r_start_us) AS BIGINT) AS overlap_us
-FROM e JOIN c ON e.user_id = c.user_id
-WHERE greatest(e.l_start_us, c.r_start_us) <= least(e.l_end_us, c.r_end_us)
-"""
-
-
 def split_report_sql(train_pct: int = 90, val_pct: int = 5) -> str:
     """Twin of q_dataset_split: identical md5-bucket assignment and
     token totals; share is one integer division."""
@@ -5042,32 +4533,6 @@ SELECT split, n_docs, n_tokens,
        CAST(n_docs * 10000 // (SELECT sum(n_docs) FROM per) AS BIGINT)
          AS share_bp
 FROM per
-"""
-
-
-def path_trigrams_sql() -> str:
-    """Twin of q_path_trigrams: two lags over the same total-key
-    window; share is one integer division over the trigram total."""
-    return """
-WITH base AS (
-  SELECT user_id, epoch_us(ts) AS us, event_id, event_type
-  FROM events
-),
-tri AS (
-  SELECT lag(event_type, 2) OVER w AS t1,
-         lag(event_type, 1) OVER w AS t2,
-         event_type AS t3
-  FROM base
-  WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)
-),
-c AS (
-  SELECT t1, t2, t3, CAST(count(*) AS BIGINT) AS n_paths
-  FROM tri WHERE t1 IS NOT NULL GROUP BY 1, 2, 3
-)
-SELECT t1, t2, t3, n_paths,
-       CAST(n_paths * 10000 // (SELECT sum(n_paths) FROM c) AS BIGINT)
-         AS share_bp
-FROM c
 """
 
 
@@ -5121,34 +4586,6 @@ SELECT node, units AS rank_units FROM {prev}
 """
 
 
-def time_weighted_means_sql() -> str:
-    """Twin of q_events_twap: lead-duration integration at whole-
-    second granularity — cents x seconds stays exact int64 (the
-    micros form needs a 17-digit decimal whose double-cast rounds
-    differently across engines); ONE double division."""
-    return """
-WITH base AS (
-  SELECT user_id AS k, epoch_us(ts) AS us, event_id AS eid,
-         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-  FROM events
-),
-seg AS (
-  SELECT k, cents, (lead(us) OVER w - us) // 1000000 AS dt_s
-  FROM base
-  WINDOW w AS (PARTITION BY k ORDER BY us, eid)
-),
-per AS (
-  SELECT k, CAST(count(*) AS BIGINT) AS n_segments,
-         CAST(sum(dt_s) AS BIGINT) AS span_s,
-         CAST(sum(cents * dt_s) AS BIGINT) AS wsum
-  FROM seg WHERE dt_s IS NOT NULL GROUP BY 1
-)
-SELECT k AS user_id, n_segments, span_s, wsum AS wsum_cents_s,
-       CAST(wsum AS DOUBLE) / CAST(span_s * 100 AS DOUBLE) AS twap
-FROM per WHERE span_s > 0
-"""
-
-
 def source_topk_dense_sql(k: int = 3) -> str:
     """Twin of q_source_topk_dense: the textbook dense_rank window —
     equal to the class-table agg+join rule because membership is a
@@ -5164,53 +4601,4 @@ SELECT doc_id, source, n_tokens FROM (
            AS dr
   FROM t
 ) WHERE dr <= {k}
-"""
-
-
-def scd2_intervals_sql() -> str:
-    """Twin of q_scd2_intervals: lag marks change points on the total
-    (epoch_us, id) ordering, lead over the change points alone closes
-    each interval."""
-    return """
-WITH base AS (
-  SELECT user_id AS k, epoch_us(ts) AS us, event_id AS eid,
-         event_type AS attr
-  FROM events
-),
-marked AS (
-  SELECT k, us, eid, attr, lag(attr) OVER w AS prev_attr
-  FROM base
-  WINDOW w AS (PARTITION BY k ORDER BY us, eid)
-)
-SELECT k AS user_id, attr, us AS valid_from_us,
-       lead(us) OVER (PARTITION BY k ORDER BY us, eid) AS valid_to_us
-FROM marked
-WHERE prev_attr IS NULL OR attr <> prev_attr
-"""
-
-
-def drift_report_sql(split_ts: str = "2024-01-16") -> str:
-    """Twin of q_drift_report: per-category halves counts; the
-    chi-square contribution takes abs(d) BEFORE the two floor
-    divisions (signed integer division conventions differ across
-    engines)."""
-    return f"""
-WITH c AS (
-  SELECT event_type AS category,
-         CAST(sum(CASE WHEN ts < TIMESTAMP '{split_ts}' THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_ref,
-         CAST(sum(CASE WHEN ts < TIMESTAMP '{split_ts}' THEN 0 ELSE 1 END)
-              AS BIGINT) AS n_cur
-  FROM events GROUP BY 1
-),
-t AS (SELECT CAST(sum(n_ref) AS BIGINT) AS tot_ref,
-             CAST(sum(n_cur) AS BIGINT) AS tot_cur FROM c)
-SELECT c.category, c.n_ref, c.n_cur,
-       CAST(CASE WHEN c.n_ref = 0 THEN -1
-            ELSE ((abs(c.n_cur * t.tot_ref - c.n_ref * t.tot_cur) * 100)
-                  // t.tot_ref)
-                 * ((abs(c.n_cur * t.tot_ref - c.n_ref * t.tot_cur) * 100)
-                    // t.tot_cur)
-                 // c.n_ref END AS BIGINT) AS chi2_contrib_bp
-FROM c, t
 """

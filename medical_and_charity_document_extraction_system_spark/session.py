@@ -9,13 +9,19 @@ from pyspark.sql import SparkSession
 from .config import DEFAULT_CONFIG, ExtractionConfig, spark_conf_overrides
 
 
+def default_cpus() -> str:
+    """local[] width: ``SPARK_GRAFT_CPUS`` when set, else the number of
+    CPUs this process may run on."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "extraction-engine",
     master: str | None = None,
     cfg: ExtractionConfig = DEFAULT_CONFIG,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     # local mode: the driver IS the executor — size the heap for the
     # task width, not for a thin coordinator. 8g with 32 task threads
     # left every post-warmup query GC-bound (measured 3-5x slowdowns

@@ -1,21 +1,13 @@
 from .stream import (  # noqa: F401
-    bucket_count_stream,
     dedup_url_stream,
-    enriched_events_stream,
     extraction_to_snapshot_stream,
     cms_register_stream,
-    read_bucket_counts,
     host_running_totals_stream,
     hll_register_stream,
     incremental_dedup_stream,
     read_cms_registers,
-    read_enriched_totals,
     read_hll_registers,
-    user_tier_dim,
     host_rate_stream,
     recrawl_merge_stream,
-    read_stream_join_pairs,
-    stream_stream_click_attribution,
     run_extraction_stream,
-    user_sessions_stream,
 )

@@ -10,6 +10,21 @@ drops into the extractions table.
 ``trigger(availableNow=True)`` gives batch-like one-shot draining with
 streaming checkpoints — the recommended pattern for incremental
 backfills.
+
+Streams:
+
+- ``run_extraction_stream``: the extraction plan, appended to parquet;
+- ``host_rate_stream``: watermarked tumbling-window pages per host;
+- ``dedup_url_stream``: exact url dedup within the watermark;
+- ``extraction_to_snapshot_stream``: extraction committed into a
+  snapshot table per micro-batch;
+- ``host_running_totals_stream``: stateful per-host running totals;
+- ``recrawl_merge_stream``: re-crawl upserts into a snapshot table;
+- ``cms_register_stream`` / ``hll_register_stream``: epoch-keyed
+  Count-Min / HyperLogLog register deltas (read back merged by
+  ``read_cms_registers`` / ``read_hll_registers``);
+- ``incremental_dedup_stream``: near-dup pairs against a growing
+  MinHash signature store.
 """
 
 from __future__ import annotations
@@ -110,56 +125,6 @@ def dedup_url_stream(
     )
     writer = (
         deduped.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-EVENTS_SCHEMA = (
-    "event_id long, ts timestamp, user_id long, event_type string, "
-    "value double, props string"
-)
-
-
-def user_sessions_stream(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Streaming session windows: gap-merged per-user sessions with
-    watermark-bounded state. Append mode emits a session once the
-    watermark passes its end (last event + gap) — the emission rule
-    the oracle reconstructs arithmetically, so BOTH the session merge
-    and the finalization semantics sit under the bit-exact gate. The
-    streaming twin of the batch q_session_windows."""
-    from pyspark.sql import functions as F
-
-    stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(input_dir)
-    agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy("user_id", F.session_window("ts", gap).alias("session_window"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
-        )
-        .select(
-            "user_id",
-            F.col("session_window.start").alias("w_start"),
-            F.col("session_window.end").alias("w_end"),
-            "n_events",
-            "sum_value",
-        )
-    )
-    writer = (
-        agg.writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
@@ -516,243 +481,3 @@ def read_hll_registers(spark: SparkSession, registers_dir: str):
     deltas = spark.read.parquet(f"{registers_dir}/epoch_*")
     keys = [c for c in deltas.columns if c not in ("bucket", "mreg")]
     return deltas.groupBy(*keys, "bucket").agg(F.max("mreg").alias("mreg"))
-
-
-def bucket_count_stream(
-    spark: SparkSession,
-    input_dir: str,
-    registers_dir: str,
-    checkpoint_dir: str,
-    bucket_us: int = 3_600_000_000,
-    available_now: bool = True,
-    max_files_per_trigger: int = 2,
-) -> StreamingQuery:
-    """Streaming maintenance of the per-(type, time-bucket) count
-    table that feeds the integer-sigma anomaly rule
-    (operators/eventstats.anomalies_from_counts): each micro-batch
-    writes its own count DELTA to an epoch-keyed subdirectory —
-    replays overwrite the same path (idempotent, the cms_register_
-    stream contract) and counts merge by addition, so the one-shot
-    table equals the groupBy-SUM of the deltas under ANY batch
-    slicing. The anomaly STATISTICS (mean/variance) are computed
-    from the merged table at read time, never incrementally —
-    sum-of-squares does not merge across epochs that touch the same
-    bucket, and recomputing it from the (small) bucket table is one
-    cheap agg."""
-    from ..operators.eventstats import bucket_counts
-
-    schema = spark.read.parquet(input_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-
-    def commit_batch(batch_df, epoch_id: int) -> None:
-        bucket_counts(batch_df, bucket_us).write.mode("overwrite").parquet(
-            f"{registers_dir}/epoch_{epoch_id}"
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def read_bucket_counts(spark: SparkSession, registers_dir: str):
-    """Merge every epoch's count delta into the current bucket table
-    — one groupBy-SUM (counts commute across any slicing)."""
-    from pyspark.sql import functions as F
-
-    deltas = spark.read.parquet(f"{registers_dir}/epoch_*")
-    return deltas.groupBy("event_type", "bucket_us_start").agg(
-        F.sum("n_events").alias("n_events")
-    )
-
-
-def user_tier_dim(events_batch):
-    """The static enrichment dimension for ``enriched_events_stream``:
-    per-user lifetime activity tier (0/1/2 by total event count —
-    integer thresholds chosen inside the harness's 49..88
-    events-per-user band so all three tiers are inhabited).
-    Computed ONCE from the batch
-    table; at scale this is the slowly-changing dim a warehouse
-    maintains separately."""
-    from pyspark.sql import functions as F
-
-    return events_batch.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_total")
-    ).select(
-        "user_id",
-        F.when(F.col("n_total") >= 75, 2)
-        .when(F.col("n_total") >= 60, 1)
-        .otherwise(0)
-        .cast("int")
-        .alias("tier"),
-    )
-
-
-def enriched_events_stream(
-    spark: SparkSession,
-    input_dir: str,
-    dim_df,
-    out_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-    max_files_per_trigger: int = 2,
-) -> StreamingQuery:
-    """Stream-static enrichment: the event stream inner-joins a
-    BROADCAST static dimension (no state store, no watermark — the
-    static side is re-resolvable per micro-batch, which is exactly
-    what stream-static joins are for), then each micro-batch writes
-    its per-(tier, event_type) count/decimal-sum DELTA to an
-    epoch-keyed path. Replays overwrite their own epoch (idempotent,
-    the cms/bucket-stream contract); counts and exact decimal sums
-    both merge by addition, so the merged table equals the one-shot
-    batch join under any batch slicing."""
-    from pyspark.sql import functions as F
-
-    schema = spark.read.parquet(input_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    enriched = stream.join(F.broadcast(dim_df), "user_id")
-
-    def commit_batch(batch_df, epoch_id: int) -> None:
-        (
-            batch_df.groupBy("tier", "event_type")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_events"),
-                F.sum(F.col("value").cast("decimal(18,2)")).alias("sum_value"),
-            )
-            .write.mode("overwrite")
-            .parquet(f"{out_dir}/epoch_{epoch_id}")
-        )
-
-    writer = (
-        enriched.writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def read_enriched_totals(spark: SparkSession, out_dir: str):
-    """Merge the epoch deltas into the current (tier, event_type)
-    totals — counts and exact decimal sums both commute."""
-    from pyspark.sql import functions as F
-
-    deltas = spark.read.parquet(f"{out_dir}/epoch_*")
-    return deltas.groupBy("tier", "event_type").agg(
-        F.sum("n_events").cast("long").alias("n_events"),
-        F.sum("sum_value").cast("double").alias("total_value"),
-    )
-
-
-def stream_stream_click_attribution(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    window_us: int = 1_800_000_000,
-    watermark_delay: str = "3650 days",
-    available_now: bool = True,
-    max_files_per_trigger: int = 2,
-) -> StreamingQuery:
-    """STREAM-STREAM inner join (the one Structured Streaming join
-    class the suite didn't yet exercise): clicks join errors of the
-    same user within ``window_us`` after the error — the streaming
-    twin of the batch ``range_join`` catalog query, sharing its
-    oracle. Both sides are event-time streams of the SAME staged
-    corpus; Spark buffers each side in the state store and emits a
-    pair exactly ONCE when its partner arrives, so the union of
-    epoch outputs equals the one-shot batch join under any file
-    slicing.
-
-    The watermark bounds the buffered state: a side's rows older
-    than max(event time) - delay are evicted, and a pair whose
-    partner arrives later than that is silently DROPPED — which is
-    correct streaming semantics but nondeterministic under replay
-    slicing. Here the delay is set beyond the corpus's total time
-    span so eviction can never fire and the result is a pure
-    function of the data; a production deployment sets it to the
-    real out-of-orderness bound. Epoch outputs are overwrite-keyed
-    (replay-idempotent, the cms/bucket contract)."""
-    from pyspark.sql import functions as F
-
-    schema = spark.read.parquet(input_dir).schema
-
-    def _src():
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(input_dir)
-        )
-
-    clicks = (
-        _src()
-        .where(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").cast("timestamp").alias("click_ts"),
-        )
-        .withWatermark("click_ts", watermark_delay)
-    )
-    errors = (
-        _src()
-        .where(F.col("event_type") == "error")
-        .select(
-            F.col("event_id").alias("error_id"),
-            F.col("user_id").alias("e_user_id"),
-            F.col("ts").cast("timestamp").alias("error_ts"),
-        )
-        .withWatermark("error_ts", watermark_delay)
-    )
-    joined = clicks.join(
-        errors,
-        (F.col("c_user_id") == F.col("e_user_id"))
-        & (F.col("click_ts") >= F.col("error_ts"))
-        & (
-            F.unix_micros(F.col("click_ts"))
-            <= F.unix_micros(F.col("error_ts")) + F.lit(window_us)
-        ),
-        "inner",
-    ).select(
-        "click_id",
-        "error_id",
-        F.col("c_user_id").alias("user_id"),
-        F.unix_micros(F.col("click_ts")).alias("click_ts_us"),
-        F.unix_micros(F.col("error_ts")).alias("error_ts_us"),
-        (
-            F.unix_micros(F.col("click_ts")) - F.unix_micros(F.col("error_ts"))
-        ).alias("delta_us"),
-    )
-
-    def commit_batch(batch_df, epoch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            f"{out_dir}/epoch_{epoch_id}"
-        )
-
-    writer = (
-        joined.writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def read_stream_join_pairs(spark: SparkSession, out_dir: str):
-    """Union the epoch outputs — each matched pair was emitted in
-    exactly one epoch, so plain concatenation IS the join result."""
-    return spark.read.parquet(f"{out_dir}/epoch_*")

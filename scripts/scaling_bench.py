@@ -1,6 +1,7 @@
 """Scaling-efficiency evidence (BASELINE.json north_rule: >=0.8 from
-N to 4N executors; sandbox stand-in: local[8] vs local[32] on the
-same sf0.1 corpus).
+N to 4N executors; single-host stand-in: local[N] vs local[4N] on the
+same sf0.1 corpus, N = this machine's CPU count // 4 by default, so
+local[1] vs local[4] on a 4-core host).
 
 Runs bench.py in fresh subprocesses (fresh JVM each) at both widths,
 computes throughput + efficiency from the end-to-end extraction
@@ -41,16 +42,19 @@ def run_bench(
 
 
 def main() -> None:
+    n_cpus = len(os.sched_getaffinity(0))
     p = argparse.ArgumentParser()
     p.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     p.add_argument("--repeat", type=int, default=120)
-    # N=4 -> 4N=16 stays inside the box's linear-scaling regime
-    # (full-width 32-process load hits hypervisor contention that a
-    # real multi-executor cluster does not have; see the probe note
-    # in the generated report)
-    p.add_argument("--n", type=int, default=4)
+    # 4N = the machine's width: a wider local[] only oversubscribes
+    p.add_argument("--n", type=int, default=n_cpus // 4)
     p.add_argument("--pairs", type=int, default=3)
     args = p.parse_args()
+    if args.n < 1:
+        p.error(
+            f"N must be >= 1 (got {args.n}); the default is the CPU count "
+            f"// 4 and this machine has {n_cpus} CPUs"
+        )
 
     # INTERLEAVED pairs: this VM's absolute speed drifts on ~10-minute
     # scales (hypervisor neighbors); sequential N-then-4N legs alias
@@ -67,8 +71,8 @@ def main() -> None:
     big_full = run_bench(args.n * 4, args.sf_dir, args.repeat)
     # corpus scale-up at full width: throughput must not DROP as the
     # corpus grows (a super-linear term would surface here first)
-    grow_small = run_bench(32, args.sf_dir, 40)
-    grow_big = run_bench(32, args.sf_dir, 400)
+    grow_small = run_bench(args.n * 4, args.sf_dir, 40, extraction_only=True)
+    grow_big = run_bench(args.n * 4, args.sf_dir, 400, extraction_only=True)
 
     effs = sorted(b["docs_per_sec"] / (4.0 * s_["docs_per_sec"]) for s_, b in pairs)
     eff = effs[len(effs) // 2]
@@ -99,8 +103,9 @@ stages -> field spans -> in-stage rollup -> count) over
 amplified x{args.repeat}), fresh JVM per run. The N and 4N legs run
 as {args.pairs} INTERLEAVED back-to-back pairs (this VM's absolute
 speed drifts on ~10-minute scales; sequential legs alias the drift
-into the ratio — one sequential run this round read 0.52 while
-interleaved pairs in the same hour read {', '.join(f"{e:.2f}" for e in effs)}).
+into the ratio — on a 32-core host one sequential run read 0.52
+while interleaved pairs in the same hour read 0.86-0.99). The pairs
+here read {', '.join(f"{e:.2f}" for e in effs)}.
 The table shows the median-efficiency pair.
 
 | parallelism | docs/sec | wall sec |
@@ -119,23 +124,21 @@ machine's linear-scaling ceiling".)
 
 Per-query seconds at 4N: {json.dumps(big_full['queries'])}
 
-### Hardware ceiling attribution
+### Caveat: one host
 
-This sandbox is one 32-core VM, so "N vs 4N executors" is evidenced as
-`local[{args.n}]` vs `local[{args.n * 4}]` on identical input splits.
-The box itself scales sublinearly under full-width load (hypervisor
-contention, fixed 2.1 GHz clocks): a pure-`multiprocessing` probe with
-NO Spark (`scripts/cpu_scaling_probe.py`) measures the per-core
-slowdown any engine pays here — e.g. a cache-resident arithmetic loop
-reaches only ~0.76 efficiency from 8->32 processes and ~0.85 from
-4->16. The Spark number above should be read against that measured
-machine ceiling, not against 1.0. On a real multi-executor cluster the
-contention term disappears (each executor owns its cores); the plan
-properties that matter there — one scan, one narrow mapInArrow
-stage, zero shuffles, splits >> slots, deterministic per-url work —
-all hold by construction (see plans/pipeline.py).
+Every leg ran on one {n_cpus}-CPU VM, so "N vs 4N
+executors" is evidenced as `local[{args.n}]` vs `local[{args.n * 4}]` on
+identical input splits of the same machine; no second host was
+measured. At 4N the legs share the box with the driver JVM and with
+hypervisor neighbours, so the number above is a lower bound on what a
+cluster whose executors own their cores would show; a pure-
+`multiprocessing` probe with NO Spark (`scripts/cpu_scaling_probe.py`)
+measures the ceiling the machine itself allows. The plan properties
+that matter on a cluster — one scan, one narrow mapInArrow stage, zero
+shuffles, splits >> slots, deterministic per-url work — all hold by
+construction (see plans/pipeline.py).
 
-### Corpus scale-up check (local[32])
+### Corpus scale-up check (local[{args.n * 4}])
 
 Same pipeline, growing corpus (sf{big['sf']} documents amplified),
 steady-state best-of-2 after warmup:

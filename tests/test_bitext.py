@@ -85,3 +85,15 @@ def test_rejects_small_sides(spark):
     b = [(10, [1.0, 0.0]), (11, [0.0, 1.0])]
     with pytest.raises(ValueError):
         bitext_mine(_emb(spark, a, b), knn=4)
+
+
+def test_refuses_cross_join_above_max_pairs(spark, monkeypatch):
+    from medical_and_charity_document_extraction_system_spark.operators import bitext
+
+    from .conftest import SF_SMALL
+
+    # sf0.001 holds ~50 vectors per label: 2500 pairs > a bound of 100
+    monkeypatch.setattr(bitext, "MAX_PAIRS", 100)
+    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
+    with pytest.raises(ValueError, match=r"cross-join bound \(100\)"):
+        bitext_mine(emb)

@@ -80,3 +80,18 @@ def test_bench_catalog_queries_exist():
     import bench
 
     assert set(bench.CATALOG_QUERIES) <= set(entry_mod.queries())
+
+
+def test_gate_window_is_never_attested():
+    # the correctness gate samples the FIRST 50 catalog entries: they
+    # must all be queries no CORRECTNESS_r0*.json row has signed yet
+    import json
+    from pathlib import Path
+
+    attested = set()
+    for f in Path(entry_mod.__file__).parent.glob("CORRECTNESS_r0*.json"):
+        attested |= set(json.loads(f.read_text()))
+    assert attested, "no CORRECTNESS_r0*.json files found"
+    window = list(entry_mod.queries())[:50]
+    assert len(window) == 50
+    assert not attested & set(window)

@@ -1,11 +1,8 @@
-"""table_profile + pivot_event_stats (operators/report.py)."""
-
-from datetime import datetime
+"""table_profile + report deltas (operators/report.py)."""
 
 import pytest
 
 from medical_and_charity_document_extraction_system_spark.operators.report import (
-    pivot_event_stats,
     table_profile,
 )
 
@@ -34,59 +31,6 @@ def test_table_profile_rejects_empty(spark):
     df = spark.createDataFrame([(1,)], "x long")
     with pytest.raises(ValueError):
         table_profile(df, columns=[])
-
-
-def _events(spark, rows):
-    # rows: (user, type, value)
-    data = [(u, datetime(2024, 1, 1), t, v) for (u, t, v) in rows]
-    return spark.createDataFrame(
-        data, "user_id long, ts timestamp, event_type string, value double"
-    )
-
-
-def test_pivot_counts_and_sums(spark):
-    rows = [
-        (1, "click", 1.5),
-        (1, "click", 2.5),
-        (1, "view", 10.0),
-        (2, "purchase", 5.0),
-    ]
-    out = {r.user_id: r for r in pivot_event_stats(_events(spark, rows)).collect()}
-    assert out[1].n_click == 2 and out[1].sum_click == 4.0
-    assert out[1].n_view == 1 and out[1].sum_view == 10.0
-    # absent combos: count 0, sum NULL (the conditional-agg convention)
-    assert out[1].n_purchase == 0 and out[1].sum_purchase is None
-    assert out[2].n_purchase == 1 and out[2].sum_purchase == 5.0
-
-
-def test_pivot_ignores_types_outside_list(spark):
-    rows = [(1, "weird", 1.0), (1, "click", 1.0)]
-    out = pivot_event_stats(_events(spark, rows)).collect()[0]
-    assert out.n_click == 1
-    assert not any(c.endswith("weird") for c in out.asDict())
-
-
-def test_json_field_stats(spark):
-    from medical_and_charity_document_extraction_system_spark.operators.report import (
-        json_field_stats,
-    )
-
-    rows = [
-        (1, datetime(2024, 1, 1), "click", 1.0, '{"k": 5}'),
-        (2, datetime(2024, 1, 1), "click", 1.0, '{"k": 7}'),
-        (3, datetime(2024, 1, 1), "click", 1.0, "not json"),
-        (4, datetime(2024, 1, 1), "view", 1.0, '{"other": 1}'),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, event_type string, value double,"
-        " props string",
-    )
-    out = {r.event_type: r for r in json_field_stats(df).collect()}
-    c = out["click"]
-    assert (c.n_events, c.n_parsed, c.sum_k, c.min_k, c.max_k) == (3, 2, 12, 5, 7)
-    v = out["view"]
-    assert v.n_parsed == 0 and v.sum_k is None
 
 
 def test_apply_report_deltas_ivm(spark):

@@ -26,6 +26,17 @@ from medical_and_charity_document_extraction_system_spark.streaming import (
 )
 
 
+def test_default_cpus_is_affinity_unless_env_set(monkeypatch):
+    from medical_and_charity_document_extraction_system_spark.session import (
+        default_cpus,
+    )
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_cpus() == str(len(os.sched_getaffinity(0)))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cpus() == "3"
+
+
 def test_find_heavy_hosts(pages_small):
     heavy = find_heavy_hosts(pages_small, heavy_fraction=0.2)
     assert heavy == ["host0.example.com"]  # planted ~40% skew

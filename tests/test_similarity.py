@@ -415,3 +415,12 @@ def test_lsh_recall_eval_planted_duplicates_always_hit(spark):
         q: (r.n_exact, r.n_cand, r.n_hits, r.recall_bp)
         for q, r in got.items()
     }
+
+
+def test_lsh_recall_eval_refuses_cross_join_above_bound(emb, monkeypatch):
+    from medical_and_charity_document_extraction_system_spark.operators import similarity
+
+    # sf0.001: 10 held-out queries x 490 base rows = 4900 exact pairs
+    monkeypatch.setattr(similarity, "MAX_RECALL_EVAL_PAIRS", 1000)
+    with pytest.raises(ValueError, match=r"cross-join bound \(1000\)"):
+        similarity.lsh_recall_eval(emb)

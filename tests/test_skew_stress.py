@@ -184,114 +184,3 @@ def test_edit_distance_hot_segment_within_budget(spark):
     # random 19-char tails at dist<=2 are combinatorially implausible
     assert len(got) < 20
     assert elapsed < BUDGET_SEC, f"hot-segment edit join took {elapsed:.0f}s"
-
-
-def test_interval_coverage_whale_user_within_budget(spark):
-    """One user holding 80% of all events serializes only its own
-    window partition (the documented sessionize bound): a 60k-event
-    whale plus 5k spread users must finish inside the budget and
-    produce exactly one island for the whale's overlapping chain."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from medical_and_charity_document_extraction_system_spark.operators.eventstats import (
-        interval_coverage,
-    )
-
-    n_whale, n_rest = 60_000, 5_000
-    base = spark.range(n_whale + n_rest).select(
-        F.col("id").alias("event_id"),
-        F.when(F.col("id") < n_whale, F.lit(0))
-        .otherwise(F.col("id"))
-        .alias("user_id"),
-        # whale events start 1s apart with 10s durations: one island
-        F.timestamp_micros(
-            F.lit(1_700_000_000_000_000) + F.col("id") * 1_000_000
-        ).alias("ts"),
-        F.lit(10.0).alias("value"),
-    )
-    t0 = time.time()
-    out = interval_coverage(base)
-    whale = out.where("user_id = 0").collect()
-    n_islands = out.count()
-    elapsed = time.time() - t0
-    assert len(whale) == 1 and whale[0].n_events == n_whale
-    assert n_islands == 1 + n_rest
-    assert elapsed < BUDGET_SEC, f"whale interval_coverage took {elapsed:.0f}s"
-
-
-def test_event_transitions_whale_user_within_budget(spark):
-    """Same whale shape through the transition lag window: output
-    stays |types|^2-bounded and the whale partition streams."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from medical_and_charity_document_extraction_system_spark.operators.eventstats import (
-        event_transitions,
-    )
-
-    n = 80_000
-    base = spark.range(n).select(
-        F.col("id").alias("event_id"),
-        (F.col("id") % 17 == 0).cast("long").alias("user_id"),
-        F.timestamp_micros(
-            F.lit(1_700_000_000_000_000) + F.col("id") * 1_000_000
-        ).alias("ts"),
-        F.concat(F.lit("t"), (F.col("id") % 5).cast("string")).alias(
-            "event_type"
-        ),
-    )
-    t0 = time.time()
-    out = event_transitions(base.withColumn("value", F.lit(0.0)))
-    rows = out.collect()
-    elapsed = time.time() - t0
-    assert 0 < len(rows) <= 25  # |types|^2 bound
-    assert sum(r.n_trans for r in rows) == n - 2  # two users
-    assert elapsed < BUDGET_SEC, f"whale transitions took {elapsed:.0f}s"
-
-
-def test_interval_overlap_join_whale_user_within_budget(spark):
-    """The interval-overlap join's skew story: a whale user owning
-    most intervals on BOTH sides hashes to one (key, bin) partition
-    stream, but the bin explosion spreads its intervals across many
-    bins, so the equi-join stays AQE-splittable. 20k x 20k whale
-    intervals laid out so each bin meets ~2 per side must finish
-    inside budget with the exact pair count (each left interval
-    overlaps its right twin and the next one)."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from medical_and_charity_document_extraction_system_spark.operators.rangejoin import (
-        interval_overlap_join,
-    )
-
-    n = 20_000
-    w = 10_000_000  # 10s bins
-    left = spark.range(n).select(
-        F.lit(0).cast("long").alias("user_id"),
-        F.col("id").alias("l_id"),
-        (F.col("id") * w).alias("l_start_us"),
-        (F.col("id") * w + w // 2).alias("l_end_us"),
-    )
-    right = spark.range(n).select(
-        F.lit(0).cast("long").alias("user_id"),
-        F.col("id").alias("r_id"),
-        (F.col("id") * w + w // 4).alias("r_start_us"),
-        (F.col("id") * w + w + w // 4).alias("r_end_us"),
-    )
-    t0 = time.time()
-    out = interval_overlap_join(
-        left, right, "user_id",
-        l_start="l_start_us", l_end="l_end_us",
-        r_start="r_start_us", r_end="r_end_us",
-        bin_width_us=w,
-    )
-    n_pairs = out.count()
-    elapsed = time.time() - t0
-    # left i overlaps right i ([i*w + w/4, i*w + w/2]) and right i-1
-    # (its tail [i*w, i*w + w/4] covers left i's head)
-    assert n_pairs == 2 * n - 1
-    assert elapsed < BUDGET_SEC, f"whale interval join took {elapsed:.0f}s"

@@ -177,38 +177,6 @@ def test_url_dedup_catalog_groups(spark):
     assert all("#" not in r.curl and "utm" not in r.curl for r in rows)
 
 
-# --------------------------------------------------------- sessionize
-def test_sessionize_gap_semantics(spark):
-    import datetime as dt
-
-    from medical_and_charity_document_extraction_system_spark.operators.sessions import (
-        sessionize,
-    )
-
-    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-    rows = [
-        # user 1: 3 events in one session, then a 31-min gap
-        (0, t0, 1, "a", 1.0, "{}"),
-        (1, t0 + dt.timedelta(minutes=10), 1, "a", 2.0, "{}"),
-        (2, t0 + dt.timedelta(minutes=29), 1, "a", 3.0, "{}"),
-        (3, t0 + dt.timedelta(minutes=61), 1, "a", 4.0, "{}"),
-        # user 2: exactly-30-min gap does NOT split (strictly greater)
-        (4, t0, 2, "a", 1.0, "{}"),
-        (5, t0 + dt.timedelta(minutes=30), 2, "a", 1.0, "{}"),
-    ]
-    ev = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, "
-              "event_type string, value double, props string"
-    )
-    out = {(r.user_id, r.session_seq): r for r in sessionize(ev).collect()}
-    assert out[(1, 1)].n_events == 3 and out[(1, 1)].sum_value == 6.0
-    assert out[(1, 2)].n_events == 1 and out[(1, 2)].sum_value == 4.0
-    assert out[(2, 1)].n_events == 2
-    assert (2, 2) not in out
-    assert out[(1, 1)].session_start == "2024-01-01 00:00:00"
-    assert out[(1, 1)].session_end == "2024-01-01 00:29:00"
-
-
 def test_bm25_ranks_term_frequency(spark):
     from medical_and_charity_document_extraction_system_spark.operators.sessions import (
         bm25_scores,
@@ -293,53 +261,6 @@ def test_remove_frequent_lines_broadcast_guard(spark):
     hplan = hinted._jdf.queryExecution().analyzed().toString()
     assert "ResolvedHint" in hplan, hplan
     assert sorted(map(tuple, guarded.collect())) == sorted(map(tuple, hinted.collect()))
-
-
-def test_sessionize_heavy_user_within_budget(spark):
-    """Planted power user: ONE user holds 150k of 160k events (the
-    web-scale bot shape). The per-user window serializes that history
-    into one task — the documented bound (operators/sessions.py) — and
-    must stay linear: complete well inside a minute and produce the
-    arithmetically expected session count."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from medical_and_charity_document_extraction_system_spark.operators.sessions import (
-        sessionize,
-    )
-
-    heavy = spark.range(150_000).select(
-        F.lit("bot").alias("user_id"),
-        # every 97th event jumps past the 1800s gap -> new session
-        F.to_timestamp(
-            F.lit("2024-01-01 00:00:00")
-        ).cast("timestamp")
-        + F.make_dt_interval(
-            F.lit(0), F.lit(0), F.lit(0),
-            (F.col("id") * 10 + (F.col("id") / 97).cast("long") * 2000).cast("double"),
-        ),
-        F.col("id").alias("event_id"),
-        F.lit(1.0).alias("value"),
-    ).toDF("user_id", "ts", "event_id", "value")
-    light = spark.range(10_000).select(
-        F.concat(F.lit("u"), (F.col("id") % 1000).cast("string")).alias("user_id"),
-        (
-            F.to_timestamp(F.lit("2024-01-01 00:00:00")).cast("timestamp")
-            + F.make_dt_interval(F.lit(0), F.lit(0), F.lit(0), (F.col("id") * 7).cast("double"))
-        ).alias("ts"),
-        F.col("id").alias("event_id"),
-        F.lit(1.0).alias("value"),
-    )
-    ev = heavy.unionByName(light)
-    t0 = time.time()
-    out = sessionize(ev).collect()
-    elapsed = time.time() - t0
-    assert elapsed < 60, f"heavy-user sessionize took {elapsed:.1f}s"
-    bot = [r for r in out if r.user_id == "bot"]
-    # gap fires when (id//97) increments: ids 0..149999 -> 1547 groups
-    assert len(bot) == 150_000 // 97 + 1
-    assert sum(r.n_events for r in bot) == 150_000
 
 
 # ---------------------------------------------------- gopher rules (r4)

@@ -1,15 +1,6 @@
 """Round-5 batch: vocabulary coverage (operators/keywords.
-vocab_coverage) and streaming bucket-count maintenance
-(streaming/stream.bucket_count_stream)."""
+vocab_coverage)."""
 
-import glob
-from datetime import datetime
-
-from pyspark.sql import functions as F
-
-from medical_and_charity_document_extraction_system_spark.operators.eventstats import (
-    bucket_counts,
-)
 from medical_and_charity_document_extraction_system_spark.operators.keywords import (
     vocab_coverage,
 )
@@ -40,44 +31,3 @@ def test_vocab_coverage_boundary_tie_breaks_by_term(spark):
     )
     r = vocab_coverage(docs, vocab_size=2).collect()[0]
     assert r.n_covered == 3  # a(2) + b(1), c excluded
-
-
-def test_bucket_count_stream_merge_equals_one_shot(spark, tmp_path):
-    from medical_and_charity_document_extraction_system_spark.streaming import (
-        bucket_count_stream,
-        read_bucket_counts,
-    )
-
-    ev = spark.createDataFrame(
-        [
-            (i, datetime(2024, 1, 1, i % 12, 5 * (i % 11)), "t%d" % (i % 3))
-            for i in range(60)
-        ],
-        "event_id long, ts timestamp, event_type string",
-    )
-    inp, regs, ck = (
-        str(tmp_path / "in"),
-        str(tmp_path / "regs"),
-        str(tmp_path / "ck"),
-    )
-    ev.repartition(6).write.parquet(inp)
-    bucket_count_stream(spark, inp, regs, ck, max_files_per_trigger=2).awaitTermination()
-    epochs = glob.glob(f"{regs}/epoch_*")
-    assert len(epochs) >= 2  # genuinely incremental
-    merged = {
-        (r.event_type, r.bucket_us_start): r.n_events
-        for r in read_bucket_counts(spark, regs).collect()
-    }
-    one_shot = {
-        (r.event_type, r.bucket_us_start): r.n_events
-        for r in bucket_counts(ev).collect()
-    }
-    assert merged == one_shot
-    # replay with the same checkpoint: no new epochs, same table
-    bucket_count_stream(spark, inp, regs, ck, max_files_per_trigger=2).awaitTermination()
-    assert sorted(glob.glob(f"{regs}/epoch_*")) == sorted(epochs)
-    merged2 = {
-        (r.event_type, r.bucket_us_start): r.n_events
-        for r in read_bucket_counts(spark, regs).collect()
-    }
-    assert merged2 == one_shot
