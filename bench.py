@@ -32,8 +32,6 @@ import os
 import tempfile
 import time
 
-from pyspark.sql import functions as F
-
 import __spark_entry__ as entry_mod
 from medical_and_charity_document_extraction_system_spark.plans import run_extraction
 from medical_and_charity_document_extraction_system_spark.session import (
@@ -103,8 +101,6 @@ CATALOG_QUERIES = [
     "bpe_train",
     "collocations",
     "hist_quantiles",
-    "ann_topk_sq8",
-    "ann_topk_pq",
     # late round 5: iterative HITS over the shared host graph (integer
     # fixed point, localCheckpoint-chained rounds)
     "host_hits",
@@ -169,22 +165,18 @@ CATALOG_QUERIES = [
     "docs_cube",
     "host_kcore",
     "stream_hll_sketch",
-    # continuation round 5, fourth batch: link-farm reciprocity and
-    # the 5-truss (edge-support peeling over oriented triangles)
-    "host_reciprocity",
+    # continuation round 5, fourth batch: the 5-truss (edge-support
+    # peeling over oriented triangles)
     "host_ktruss",
     # continuation round 5, fourth batch: ANN recall@k audit (exact
     # vs LSH top-k per held-out query)
     "ann_recall_eval",
-    # continuation round 5, fourth batch: KWIC snippets, mirror
-    # triage, and HyperBall radius-2 neighborhood sketches
+    # continuation round 5, fourth batch: KWIC snippets and mirror
+    # triage
     "concordance",
     "mirror_report",
-    "host_anf",
-    # continuation round 5, fifth batch: seeded BFS closeness, the
-    # k-anonymity audit, politeness crawl sharding, and the dup-cluster
-    # histogram
-    "host_closeness",
+    # continuation round 5, fifth batch: the k-anonymity audit,
+    # politeness crawl sharding, and the dup-cluster histogram
     "k_anonymity",
     "frontier_shards",
     "dup_cluster_stats",
@@ -192,14 +184,10 @@ CATALOG_QUERIES = [
     # tokenizer-vocab coverage
     "weighted_sample",
     "vocab_coverage",
-    # continuation round 5, seventh batch: AMS F2 sketch and positional
-    # phrase search
-    "ams_f2",
+    # continuation round 5, seventh batch: positional phrase search
     "phrase_match",
     # continuation round 5, eighth batch: deterministic split report
-    # and seeded random-walk proximity
     "dataset_split",
-    "host_ppr",
     # continuation round 5, ninth batch: dense-rank top-k
     "source_topk_dense",
 ]
@@ -316,18 +304,13 @@ def main() -> None:
         # 5.6s vs its 1.9s steady state). A long-running cluster job
         # amortizes worker start over hours; the headline metric is
         # sustained docs/sec, so warm first, then time.
-        def _clear_training_caches() -> None:
-            # session-scoped model caches (BPE merges, SQ8 params, PQ
-            # codebooks) memoize driver-side training across catalog
-            # queries; a timed run must pay the REAL end-to-end cost,
-            # not a cache hit from its own warmup
-            for cache_name in ("_BPE_CACHE", "_SQ8_CACHE", "_PQ_CACHE"):
-                getattr(entry_mod, cache_name, {}).clear()
-
         qs[name](spark, SF_DIR).count()
         best_q = None
         for _ in range(2):
-            _clear_training_caches()
+            # the session-scoped BPE merge cache memoizes driver-side
+            # training across catalog queries; a timed run must pay the
+            # REAL end-to-end cost, not a cache hit from its own warmup
+            entry_mod._BPE_CACHE.clear()
             t0 = time.time()
             qs[name](spark, SF_DIR).count()
             dt = time.time() - t0

@@ -1,11 +1,15 @@
 """Job configuration.
 
 The reference drives behavior from a pydantic ``Settings`` object
-(/root/reference/backend/app/config/settings.py:8-140). We keep the
-same knobs that matter to the data path (preprocessing toggles at
-settings.py:47-51, default engine at :36, scanned threshold at
-pdf_service.py:249) as a plain frozen dataclass plus ``spark.conf``
-for the physical knobs.
+(backend/app/config/settings.py:8-140). We keep only the knobs a
+caller sets — the HTML method and the OCR engine, both ``job.py``
+flags — and the Arrow batch size, as a plain frozen dataclass plus
+``spark.conf`` for the physical knobs. The data-path constants the
+reference also exposes (block-length and link-density cutoffs, the
+scanned-page sample and threshold at pdf_service.py:249, the
+preprocessing toggles at settings.py:47-51, the OCR language) are the
+defaults of the functions that use them (functions/html_extract,
+operators/pdf, functions/normalize, operators/engines).
 """
 
 from __future__ import annotations
@@ -15,26 +19,8 @@ from dataclasses import dataclass
 
 @dataclass(frozen=True)
 class ExtractionConfig:
-    # --- HTML boilerplate stripping (functions/html_extract.py) ---
-    html_method: str = "auto"          # auto|density|plain
-    min_block_chars: int = 12          # drop blocks shorter than this
-    max_link_density: float = 0.35     # drop blocks with more link text
-
-    # --- scanned-vs-text predicate (reference pdf_service.py:231-259) ---
-    scanned_sample_pages: int = 3      # sample first <=3 pages (:237)
-    scanned_char_threshold: float = 50.0  # avg chars/page (:249)
-
-    # --- preprocessing toggles (reference settings.py:47-51) ---
-    enable_enhance: bool = True
-    enable_denoise: bool = True
-    enable_deskew: bool = True
-    enable_binarize: bool = True
-
-    # --- OCR engine registry (reference engine_factory.py:15-84) ---
+    html_method: str = "auto"          # auto|density|plain (functions/html_extract.py)
     ocr_engine: str = "stub"           # stub|easyocr|paddleocr (tesseract blocked)
-    ocr_language: str = "en"
-
-    # --- physical plan (north_rule obligations) ---
     arrow_max_records: int = 256       # rows/Arrow batch (rows carry big binaries)
 
 

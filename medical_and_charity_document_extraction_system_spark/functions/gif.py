@@ -1,9 +1,8 @@
 """Pure-Python GIF codec (GIF87a/89a, LZW) — stdlib + numpy.
 
-The real-corpus *animated* container: with PNG/JPEG (images) and WAV
-(audio) covered natively, GIF gives the video path a genuine
-multi-frame format — ``operators/multimodal.sample_frames`` accepts
-animated GIFs and samples real decoded frames. Public-spec code only
+One of the image suffixes the reference accepts, decoded natively
+next to PNG/JPEG/BMP/TIFF/WebP (``functions/imageio.decode_auto``
+takes the first frame of an animated file). Public-spec code only
 (GIF89a specification, CompuServe 1990).
 
 Decoder: global/local color tables, multiple image descriptors

@@ -21,8 +21,8 @@ every rank arm exists and no NULL/-0.0 coalescing is needed.
 
 Scale shape: the cross-set pair generation here is the exact
 brute-force form (bounded label groups); at corpus scale swap it for
-the ANN candidate paths (ann_topk_lsh / ivf_topk) and keep the
-margin arithmetic — the scoring is candidate-source-agnostic. The
+the LSH ANN candidate path (ann_topk_lsh) and keep the margin
+arithmetic — the scoring is candidate-source-agnostic. The
 brute-force form refuses label groups whose product exceeds
 ``MAX_PAIRS``. Ranks come from grouped_topk (agg-based thresholds)
 with the row_number window running only over the <= k surviving rows
@@ -122,7 +122,7 @@ def bitext_mine(
         raise ValueError(
             f"bitext_mine: {ca} x {cb} = {ca * cb} candidate pairs exceeds "
             f"the cross-join bound ({MAX_PAIRS}); use an ANN candidate "
-            "path (ann_topk_lsh / ivf_topk) and keep the margin scoring."
+            "path (ann_topk_lsh) and keep the margin scoring."
         )
     scores = _fold_cos_pairs(na.crossJoin(nb)).cache()
     da = _rank_sum(scores, "id_a", "id_b", knn)

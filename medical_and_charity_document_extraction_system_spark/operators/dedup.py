@@ -244,12 +244,12 @@ def write_signature_store(
     mode: str = "overwrite",
 ) -> None:
     """Materialize MinHash signatures + band keys as a write-once
-    parquet table — the dedup analog of similarity.write_ivf_clustered.
-    A 100-TB pipeline signs its corpus ONCE; every recrawl batch then
-    joins against this store instead of re-running the Arrow signature
-    stage over petabytes (the expensive stage, measured ~3s per 60k
-    docs here; at corpus scale it dominates the whole job). Grow it
-    with ``mode="append"`` after each ingested batch.
+    parquet table. A 100-TB pipeline signs its corpus ONCE; every
+    recrawl batch then joins against this store instead of re-running
+    the Arrow signature stage over petabytes (the expensive stage,
+    measured ~3s per 60k docs here; at corpus scale it dominates the
+    whole job). Grow it with ``mode="append"`` after each ingested
+    batch.
 
     UPSERT SEMANTICS (revision-aware, r4): a recrawl re-ingests urls
     it has seen — sometimes with REVISED text. Rows carry the text's

@@ -21,8 +21,8 @@ Float discipline (the bm25 rule from CLAUDE.md, extended):
   one IEEE op applied in the same order, hence bit-identical.
 
 The O(V) interpreted ``size(filter(...))`` per term mirrors
-bm25_scores; for large vocabularies the Arrow tf-map form
-(bm25_scores_tfmap) is the template to follow.
+bm25_scores; for large vocabularies count terms in one vectorized
+Arrow pass per document instead.
 
 Scale shape: training is one explode + hash-agg + top-V limit (the
 collect is V rows, driver-safe); scoring is a zero-shuffle

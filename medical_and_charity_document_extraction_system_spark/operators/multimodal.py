@@ -1,12 +1,13 @@
-"""Multimodal columns: image/audio/video as opaque ``binary`` plus
-typed metadata, with decode/feature/resize/frame-sample stages as
-vectorized Arrow stages.
+"""Multimodal columns: media as opaque ``binary`` plus typed
+metadata, with image decode/feature/resize stages as vectorized Arrow
+stages.
 
-Image decode is REAL for PNG (pure-Python codec, functions/png.py)
-and netpbm; JPEG/WebP and audio codecs need libraries NOT in this
-container and stay gated (clearly-marked NotImplementedError, with a
-deterministic fake carrying the Spark-side plumbing — schema,
-partitioning, UDF signature, Arrow batch shape). Mirrors how the
+Image decode is REAL for every suffix the reference accepts (the
+pure-Python codecs in functions/: PNG, baseline JPEG, GIF, BMP, TIFF,
+lossless WebP, netpbm); the shapes those codecs do not cover fall back
+to PIL when installed, else raise a documented gate. Media features
+use a deterministic fake embedding carrying the Spark-side plumbing —
+schema, partitioning, UDF signature, Arrow batch shape — the way the
 reference gates real OCR engines behind the registry while the
 deterministic stub carries the tests (operators/engines.py).
 """
@@ -192,235 +193,6 @@ def resize_images(
     return df.select(
         F.col(id_col).cast("long").alias(id_col), F.col(image_col)
     ).mapInPandas(run, schema=schema)
-
-
-FRAME_MAGIC = b"FRAMES\n"
-
-
-def encode_frames(frames: list[np.ndarray]) -> bytes:
-    """Deterministic multi-frame container: ``FRAMES\\n`` + length-
-    prefixed netpbm frames — the test stand-in for a real video codec
-    (the Spark-side plumbing is what is under test; a real deployment
-    swaps this for ffmpeg-in-a-UDF)."""
-    from ..functions import netpbm
-
-    parts = [FRAME_MAGIC]
-    for fr in frames:
-        data = netpbm.encode(fr)
-        parts.append(len(data).to_bytes(8, "big"))
-        parts.append(data)
-    return b"".join(parts)
-
-
-def decode_frames(payload: bytes) -> list["np.ndarray"]:
-    from ..functions import netpbm
-
-    if not payload.startswith(FRAME_MAGIC):
-        raise ValueError("not a FRAMES container")
-    out = []
-    pos = len(FRAME_MAGIC)
-    while pos < len(payload):
-        n = int.from_bytes(payload[pos : pos + 8], "big")
-        pos += 8
-        out.append(netpbm.decode(bytes(payload[pos : pos + n])))
-        pos += n
-    return out
-
-
-def attach_fake_video(
-    df: DataFrame, id_col: str = "doc_id", fan_out: bool = True,
-    codec: str = "frames",
-) -> DataFrame:
-    """(id) -> (media_id, payload): 1 + id%5 frames of deterministic
-    synthetic pages — pure function of the id. ``codec="frames"`` is
-    the length-prefixed test container; ``codec="gif"`` encodes the
-    SAME frames as a real animated GIF89a (functions/gif.py), so the
-    sampler exercises a genuine multi-frame format. fan_out as in
-    attach_page_images."""
-    if codec not in ("frames", "gif"):
-        raise ValueError(f"unknown video codec {codec!r}")
-    if fan_out:
-        df = df.select(id_col).repartition(
-            df.sparkSession.sparkContext.defaultParallelism
-        )
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-            T.StructField("n_frames", T.IntegerType(), False),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions import gif
-
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads, counts = [], []
-            for i in ids:
-                n = 1 + int(i) % 5
-                frames = [
-                    render_page_image(int(i) * 31 + f, height=24, width=32)
-                    for f in range(n)
-                ]
-                if codec == "gif":
-                    rgb = [np.stack([fr] * 3, axis=2) for fr in frames]
-                    payloads.append(gif.encode_gif(rgb))
-                else:
-                    payloads.append(encode_frames(frames))
-                counts.append(n)
-            yield pd.DataFrame(
-                {"media_id": ids, "payload": payloads, "n_frames": counts}
-            )
-
-    return df.select(id_col).mapInPandas(run, schema=schema)
-
-
-def sample_frames(
-    df: DataFrame,
-    every_k: int = 2,
-    id_col: str = "media_id",
-    video_col: str = "payload",
-) -> DataFrame:
-    """Frame sampling (flatMap: one row per KEPT frame — every k-th,
-    0-indexed): video binary -> (media_id, frame_index, frame,
-    n_frames_total). The decimation step before per-frame feature
-    extraction; more output rows than input rows, zero shuffle."""
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("frame_index", T.IntegerType(), False),
-            T.StructField("frame", T.BinaryType(), True),
-            T.StructField("n_frames_total", T.IntegerType(), False),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions import gif, netpbm
-
-        for pdf in batches:
-            mids, idxs, frames, totals = [], [], [], []
-            for mid, payload in zip(pdf[id_col], pdf[video_col]):
-                raw = bytes(payload)
-                try:
-                    if raw[:4] == b"GIF8":  # real animated container
-                        frs = gif.decode_gif(raw)
-                        enc = lambda fr: gif.encode_gif([fr])  # noqa: E731
-                    else:
-                        frs = decode_frames(raw)
-                        enc = netpbm.encode
-                except ValueError:
-                    continue
-                for j in range(0, len(frs), every_k):
-                    mids.append(int(mid))
-                    idxs.append(j)
-                    frames.append(enc(frs[j]))
-                    totals.append(len(frs))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(mids, dtype="int64"),
-                    "frame_index": pd.Series(idxs, dtype="int32"),
-                    "frame": frames,
-                    "n_frames_total": pd.Series(totals, dtype="int32"),
-                }
-            )
-
-    return df.select(
-        F.col(id_col).cast("long").alias(id_col), F.col(video_col)
-    ).mapInPandas(run, schema=schema)
-
-
-def synth_audio(media_id: int, rate: int = 8000) -> np.ndarray:
-    """Deterministic square-wave clip, pure function of the id (no
-    RNG): n = 800 + id%50 samples, amplitude 1000 + id%500, half
-    period 2 + id%7 — chosen so every audio feature is exact integer
-    arithmetic the oracle recomputes (RMS of a square wave IS its
-    amplitude; crossings = (n-1) // halfperiod)."""
-    n = 800 + media_id % 50
-    p = 2 + media_id % 7
-    a = 1000 + media_id % 500
-    return np.where((np.arange(n) // p) % 2 == 0, a, -a).astype(np.int16)
-
-
-def attach_fake_audio(
-    df: DataFrame, id_col: str = "doc_id", fan_out: bool = True, rate: int = 8000
-) -> DataFrame:
-    """(id) -> (media_id, payload = REAL WAV bytes) — the audio
-    analog of attach_page_images; payloads decode with any WAV
-    reader, not just ours."""
-    from ..functions import wavpcm
-
-    if fan_out:
-        df = df.select(id_col).repartition(
-            df.sparkSession.sparkContext.defaultParallelism
-        )
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "payload": [
-                        wavpcm.encode_wav(synth_audio(int(i), rate), rate)
-                        for i in ids
-                    ],
-                }
-            )
-
-    return df.select(id_col).mapInPandas(run, schema=schema)
-
-
-AUDIO_FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("n_samples", T.IntegerType(), True),
-        T.StructField("sample_rate", T.IntegerType(), True),
-        T.StructField("duration_ms", T.DoubleType(), True),
-        T.StructField("peak", T.LongType(), True),
-        T.StructField("rms", T.DoubleType(), True),
-        T.StructField("zero_crossings", T.IntegerType(), True),
-        T.StructField("error", T.StringType(), True),
-    ]
-)
-
-
-def extract_audio_features(
-    df: DataFrame, id_col: str = "media_id", audio_col: str = "payload"
-) -> DataFrame:
-    """Real audio decode + per-clip features (duration, peak, RMS,
-    zero crossings) as one Arrow stage — zero shuffle; undecodable
-    payloads degrade to error rows."""
-    from ..functions import wavpcm
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("media_id", "n_samples", "sample_rate", "duration_ms",
-                "peak", "rms", "zero_crossings", "error")
-        for pdf in batches:
-            out = {k: [] for k in cols}
-            for mid, payload in zip(pdf[id_col], pdf[audio_col]):
-                out["media_id"].append(int(mid))
-                try:
-                    samples, rate = wavpcm.decode_wav(bytes(payload))
-                    f = wavpcm.audio_features(samples, rate)
-                    for k in cols[1:-1]:
-                        out[k].append(f[k])
-                    out["error"].append(None)
-                except Exception as exc:
-                    for k in cols[1:-1]:
-                        out[k].append(None)
-                    out["error"].append(str(exc)[:200])
-            yield pd.DataFrame(out)
-
-    return df.select(
-        F.col(id_col).cast("long").alias(id_col), F.col(audio_col)
-    ).mapInPandas(run, schema=AUDIO_FEATURES_SCHEMA)
 
 
 def decode_image(payload: bytes) -> "np.ndarray":

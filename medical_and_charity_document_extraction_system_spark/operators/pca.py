@@ -5,7 +5,7 @@ pipeline (pre-ANN compression, SemDeDup's preprocessing, probing
 drift between embedding versions): fit principal components on a
 bounded sample, project every vector onto the top-k components.
 
-Determinism discipline (the ann_topk_ivf centroid-literal playbook):
+Determinism discipline (the semdedup centroid-literal playbook):
 
 - the fit runs ONCE, driver-side, on the sample *ordered by the id
   column* and capped at ``sample_rows`` — identical bytes into numpy

@@ -1,16 +1,15 @@
 """BM25 relevance scoring over the documents table.
 
-``bm25_scores`` (and its tf-map form ``bm25_scores_tfmap``): Okapi
-BM25 for a fixed query-term list. The corpus statistics (N, avg doc
-length, per-term document frequency) are integers reduced in one
-tiny aggregate; idf values are computed in PYTHON from those integers
-and injected as double literals into the scoring expression —
-deliberately, because Java's Math.log and DuckDB's libm ln() are each
-allowed 1-ulp error and may disagree, which would break the bit-exact
-oracle gate. With idf as literals, both engines evaluate the
-identical scalar expression tree in the identical order. The stats
-collect is O(len(query_terms)) values — bounded, like the checkpoint
-bucket-id collect.
+``bm25_scores``: Okapi BM25 for a fixed query-term list. The corpus
+statistics (N, avg doc length, per-term document frequency) are
+integers reduced in one tiny aggregate; idf values are computed in
+PYTHON from those integers and injected as double literals into the
+scoring expression — deliberately, because Java's Math.log and
+DuckDB's libm ln() are each allowed 1-ulp error and may disagree,
+which would break the bit-exact oracle gate. With idf as literals,
+both engines evaluate the identical scalar expression tree in the
+identical order. The stats collect is O(len(query_terms)) values —
+bounded, like the checkpoint bucket-id collect.
 """
 
 from __future__ import annotations
@@ -58,83 +57,6 @@ def bm25_scores(
         contrib = F.lit(idfs[i]) * (
             tf * (k1 + 1.0)
             / (tf + k1 * (1.0 - b + b * (F.col("_dl").cast("double") / F.lit(avgdl))))
-        )
-        score = contrib if score is None else score + contrib
-    return (
-        base.select(F.col(id_col), score.alias("bm25"))
-        .where(F.col("bm25") > 0.0)
-    )
-
-
-def bm25_scores_tfmap(
-    df: DataFrame,
-    query_terms: list[str],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
-    """BM25 via ONE Arrow pass per document instead of one interpreted
-    higher-order scan per query term — the long-query scale form of
-    ``bm25_scores`` (whose ``F.size(F.filter(...))`` per term is
-    interpreted, not codegen'd, and linear in term count; fine at 3
-    terms, wrong at 50). A vectorized pandas UDF tokenizes each doc
-    once and emits (dl, [tf per term]); the scoring expression is then
-    pure JVM arithmetic over integer tf counts, BUILT IN THE SAME
-    ORDER with the SAME Python-float idf/avgdl literals as
-    ``bm25_scores`` — so both forms (and the DuckDB twin) are
-    bit-exact equal. Tokenization inside the UDF replicates the JVM's
-    Java-regex ``\\s`` (ASCII-only) so token counts can never drift
-    from ``functions.textstats.tokens``."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    terms = list(query_terms)
-
-    def _stats_fn(texts):
-        import re
-
-        # Java \s is [ \t\n\x0B\f\r] (ASCII), unlike Python's Unicode \s
-        ws = re.compile("[ \t\n\x0b\f\r]+")
-        dls, tfs = [], []
-        for t in texts:
-            toks = [x for x in ws.split(t or "") if x]
-            dls.append(len(toks))
-            counts = {}
-            for x in toks:
-                counts[x] = counts.get(x, 0) + 1
-            tfs.append([counts.get(q, 0) for q in terms])
-        return pd.DataFrame({"dl": dls, "tf": tfs})
-
-    # this module uses lazy (string) annotations, which pandas_udf's
-    # signature inference can't resolve — attach real type objects
-    _stats_fn.__annotations__ = {"texts": pd.Series, "return": pd.DataFrame}
-    _stats = pandas_udf(_stats_fn, "struct<dl:long, tf:array<long>>")
-
-    base = df.select(F.col(id_col), _stats(F.col(text_col)).alias("_s"))
-    # corpus stats reduce the SAME Arrow pass's integers (n, sum dl,
-    # per-term doc frequency) — no second tokenization of the corpus
-    stats = base.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("_s.dl").alias("sumdl"),
-        *[
-            F.sum((F.col("_s.tf").getItem(i) > 0).cast("long")).alias(f"df{i}")
-            for i in range(len(terms))
-        ],
-    ).first()
-    n = stats.n
-    avgdl = stats.sumdl / n
-    idfs = [
-        math.log((n - stats[f"df{i}"] + 0.5) / (stats[f"df{i}"] + 0.5) + 1.0)
-        for i in range(len(terms))
-    ]
-    dl = F.col("_s.dl").cast("double")
-    score = None
-    for i in range(len(terms)):
-        tf = F.col("_s.tf").getItem(i).cast("double")
-        contrib = F.lit(idfs[i]) * (
-            tf * (k1 + 1.0)
-            / (tf + k1 * (1.0 - b + b * (dl / F.lit(avgdl))))
         )
         score = contrib if score is None else score + contrib
     return (

@@ -369,8 +369,8 @@ def train_ivf_centroids(
 
     The sample is the ``sample_rows`` smallest ids (TakeOrdered): a
     bare ``limit`` is partition-layout-dependent, which would make the
-    centroids — and every ivf_topk answer — change when the input's
-    file layout changes, against the determinism-everywhere
+    centroids — and every semantic_dedup answer — change when the
+    input's file layout changes, against the determinism-everywhere
     invariant."""
     sample = (
         df.select(id_col, vec_col).orderBy(id_col).limit(sample_rows)
@@ -384,8 +384,8 @@ def kmeans_fit(
     mat: np.ndarray, n_clusters: int, iters: int = 10, seed: int = LSH_SEED
 ) -> np.ndarray:
     """The deterministic Lloyd core shared by ``train_ivf_centroids``
-    and the DuckDB oracle builder (oracles.ann_topk_ivf_sql reruns it
-    on the same sample and emits the centroids as SQL literals)."""
+    and the DuckDB oracle builder (oracles.semdedup_sql reruns it on
+    the same sample and emits the centroids as SQL literals)."""
     mat = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
     rng = np.random.RandomState(seed)
     idx = rng.choice(len(mat), size=min(n_clusters, len(mat)), replace=False)
@@ -406,8 +406,7 @@ def with_ivf_cluster(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Adds ``_ivf`` (nearest-centroid id) via one numpy matmul per
-    Arrow batch. At scale this column is written once and the table is
-    partitioned/clustered by it — probes then prune partitions."""
+    Arrow batch."""
     cent = centroids
 
     @F.pandas_udf("int")
@@ -417,89 +416,6 @@ def with_ivf_cluster(
         return pd.Series(np.argmax(mat @ cent.T, axis=1).astype(np.int32))
 
     return df.withColumn("_ivf", _assign(F.col(vec_col).cast("array<double>")))
-
-
-def _probe_clusters(
-    centroids: np.ndarray, query_vec: list[float], nprobe: int
-) -> list[int]:
-    q = np.asarray(query_vec, dtype=np.float64)
-    q = q / max(np.linalg.norm(q), 1e-12)
-    return [int(p) for p in np.argsort(-(centroids @ q))[:nprobe]]
-
-
-def _score_topk(
-    df: DataFrame, query_vec: list[float], k: int, vec_col: str, id_col: str
-) -> DataFrame:
-    v = F.col(vec_col).cast("array<double>")
-    qcol = F.array(*[F.lit(float(x)) for x in query_vec])
-    return (
-        df.select(F.col(id_col), cosine(v, qcol).alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), id_col)
-        .limit(k)
-    )
-
-
-def ivf_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    centroids: np.ndarray | None = None,
-    nprobe: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_clusters: int = 16,
-) -> DataFrame:
-    """IVF approximate top-k: score only rows in the ``nprobe``
-    clusters nearest the query. Cost drops from O(N) to
-    O(N * nprobe / n_clusters); recall grows with nprobe (nprobe =
-    n_clusters degenerates to exact brute force). Here ``_ivf`` is
-    computed on the fly (full scan, filtered post-assignment); the
-    materialized layout below prunes at the source instead."""
-    if centroids is None:
-        centroids = train_ivf_centroids(df, n_clusters=n_clusters, vec_col=vec_col)
-    probe = _probe_clusters(centroids, query_vec, nprobe)
-    clustered = with_ivf_cluster(df, centroids, vec_col)
-    return _score_topk(
-        clustered.where(F.col("_ivf").isin(probe)), query_vec, k, vec_col, id_col
-    )
-
-
-def write_ivf_clustered(
-    df: DataFrame,
-    path: str,
-    centroids: np.ndarray,
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the IVF layout: assign ``_ivf`` once and write the
-    table PARTITIONED by it — the write-once cost that makes every
-    subsequent probe read ``nprobe / n_clusters`` of the data. At
-    100 TB this is the difference between an ANN query scanning 100 TB
-    (on-the-fly assignment) and scanning ~6 TB at nprobe=4/64: the
-    probe's ``_ivf IN (...)`` predicate becomes a PartitionFilters
-    entry, pruned at file listing before a single byte is read."""
-    with_ivf_cluster(df, centroids, vec_col).write.mode("overwrite").partitionBy(
-        "_ivf"
-    ).parquet(path)
-
-
-def ivf_topk_pruned(
-    spark,
-    path: str,
-    query_vec: list[float],
-    centroids: np.ndarray,
-    k: int = 10,
-    nprobe: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Probe the materialized IVF layout written by
-    ``write_ivf_clustered``: the cluster filter is a partition-column
-    predicate, so Spark prunes unprobed clusters at planning time
-    (verify with .explain(\"formatted\") — PartitionFilters contains
-    ``_ivf IN …`` and the scanned-file count drops accordingly)."""
-    probe = _probe_clusters(centroids, query_vec, nprobe)
-    df = spark.read.parquet(path).where(F.col("_ivf").isin(probe))
-    return _score_topk(df, query_vec, k, vec_col, id_col)
 
 
 def semantic_dedup(
@@ -516,9 +432,9 @@ def semantic_dedup(
     via k-means clustering + within-cluster cosine.
 
     Every embedding is assigned to its nearest centroid (the IVF
-    coarse quantizer — same deterministic ``kmeans_fit`` as
-    ``ivf_topk``); within each cluster a row is a semantic duplicate
-    of the earliest (= lowest-id) sufficiently-similar row. Returns
+    coarse quantizer, the deterministic ``kmeans_fit``); within each
+    cluster a row is a semantic duplicate of the earliest (= lowest-id)
+    sufficiently-similar row. Returns
     ``(id, cid, max_prev_cos, keep)``: ``max_prev_cos`` is the row's
     maximum cosine to any SAME-CLUSTER row with a smaller id (NULL
     for the cluster's first row), ``keep = max_prev_cos IS NULL OR
@@ -540,7 +456,7 @@ def semantic_dedup(
     doubles is order-free, so the aggregate — and therefore the
     keep decision — is deterministic. Cluster assignment uses a GEMM;
     the oracle builder asserts every assignment margin > 1e-9 so
-    GEMM-vs-fold rounding cannot flip it (the ann_topk_ivf trick).
+    GEMM-vs-fold rounding cannot flip it.
     """
     if centroids is None:
         centroids = train_ivf_centroids(
@@ -605,241 +521,6 @@ def semantic_dedup(
             F.col("max_prev_cos").isNull()
             | (F.col("max_prev_cos") <= F.lit(threshold))
         ).alias("keep"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# SQ8 scalar quantization: the memory side of similarity search. A
-# float32 embedding column at 10^12 rows is the storage bottleneck;
-# per-dimension affine quantization to uint8 cuts it 4x and turns
-# scoring into EXACT INTEGER dot products (SIMD-friendly on a real
-# cluster, and — for this repo — free of every float-fold hazard:
-# once quantized, ranking is bigint arithmetic both engines agree on
-# bit-for-bit). The only floats are the per-dim (min, scale) params,
-# computed ONCE driver-side and shared with the SQL twin as literals
-# (the DSIR discipline), and the floor(t + 0.5) rounding — floor, not
-# round(), because round() half-way semantics differ across engines.
-
-
-def sq8_params_from_minmax(
-    mins: list[float], maxs: list[float]
-) -> list[tuple[float, float]]:
-    """Per-dimension (min, scale) with scale = 255/(max-min); a
-    constant dimension gets scale 0 (quantizes to 0 everywhere).
-    Pure Python so the oracle builder derives the IDENTICAL doubles
-    from duckdb-side min/max (which are exact data values)."""
-    out = []
-    for mn, mx in zip(mins, maxs):
-        rng = mx - mn
-        out.append((mn, (255.0 / rng) if rng > 0 else 0.0))
-    return out
-
-
-def sq8_quantize_vec(
-    vec: list[float], params: list[tuple[float, float]]
-) -> list[int]:
-    """Python-side quantizer for the query vector — the same
-    floor((x-mn)*s + 0.5) clamp the column expression applies."""
-    import math
-
-    out = []
-    for x, (mn, s) in zip(vec, params):
-        q = math.floor((float(x) - mn) * s + 0.5)
-        out.append(max(0, min(255, int(q))))
-    return out
-
-
-def sq8_quantize_col(
-    vec_col: str, params: list[tuple[float, float]]
-) -> list[Column]:
-    """One uint8-valued integer Column per dimension: floor((x-mn)*s
-    + 0.5) clamped to [0, 255]. The (mn, s) literals are Python
-    doubles — identical to the oracle's quoted-repr literals."""
-    cols = []
-    for i, (mn, s) in enumerate(params):
-        t = (
-            F.element_at(F.col(vec_col), i + 1).cast("double") - F.lit(mn)
-        ) * F.lit(s)
-        q = F.floor(t + F.lit(0.5)).cast("long")
-        cols.append(F.least(F.greatest(q, F.lit(0)), F.lit(255)))
-    return cols
-
-
-def ann_topk_sq8(
-    emb: DataFrame,
-    params: list[tuple[float, float]],
-    q_ints: list[int],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Top-k by EXACT integer dot product between the SQ8-quantized
-    corpus and the pre-quantized query. The whole score is one
-    codegen'd projection (64 element_at + integer multiply-adds per
-    row — max term 255*255*64 < 2^23, nowhere near overflow), then a
-    TakeOrdered; no shuffle other than the top-k reduction."""
-    qcols = sq8_quantize_col(vec_col, params)
-    dot = None
-    for qc, qi in zip(qcols, q_ints):
-        term = qc * F.lit(int(qi)).cast("long")
-        dot = term if dot is None else dot + term
-    return (
-        emb.select(F.col(id_col), dot.alias("dot_q"))
-        .orderBy(F.col("dot_q").desc(), id_col)
-        .limit(k)
-    )
-
-
-# ---------------------------------------------------------------------------
-# Product quantization (Jegou et al. 2011): the codebook side of
-# similarity search. SQ8 (above) compresses per dimension; PQ splits
-# the vector into M subvectors and snaps each to one of K learned
-# centroids — 64 float32 dims become M=8 uint4 codes (32x smaller),
-# and query scoring (ADC) is M table lookups per row. The repo's
-# determinism rules shape the implementation:
-#
-# - codebooks come from a plain-L2 deterministic Lloyd
-#   (kmeans_l2_fit — NOT the spherical kmeans_fit: PQ quantizes
-#   subvector geometry, normalizing subvectors would distort it) over
-#   a bounded ordered sample, so the oracle builder re-derives
-#   identical codebooks from the same parquet;
-# - encoding is a numpy argmin per Arrow batch (the semdedup GEMM
-#   pattern); the oracle derives codes independently in SQL from the
-#   same centroid literals, and the builder ASSERTS every row's
-#   top-2 distance margin so BLAS-vs-fold rounding cannot flip a code;
-# - the ADC distance table is quantized to int64 at 2^40 fixed point
-#   (the DSIR discipline): per-row scores are exact integer sums of M
-#   table entries — order-free — and the exported double is one
-#   power-of-two descale.
-
-PQ_M = 8  # subvectors
-PQ_K = 16  # centroids per subvector
-PQ_FP_BITS = 40
-PQ_FP_SCALE = 1 << PQ_FP_BITS
-
-
-def kmeans_l2_fit(
-    mat: np.ndarray, n_clusters: int, iters: int = 10, seed: int = LSH_SEED
-) -> np.ndarray:
-    """Plain (non-spherical) deterministic Lloyd for PQ codebooks:
-    same seeded-sorted init as kmeans_fit, L2 assignment, arithmetic-
-    mean update, empty clusters keep their previous centroid."""
-    rng = np.random.RandomState(seed)
-    idx = rng.choice(len(mat), size=min(n_clusters, len(mat)), replace=False)
-    cent = mat[np.sort(idx)].astype(np.float64).copy()
-    for _ in range(iters):
-        d2 = ((mat[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-        assign = np.argmin(d2, axis=1)
-        for c in range(len(cent)):
-            members = mat[assign == c]
-            if len(members):
-                cent[c] = members.mean(axis=0)
-    return cent
-
-
-def pq_train(
-    mat: np.ndarray, m: int = PQ_M, k: int = PQ_K
-) -> list[np.ndarray]:
-    """One codebook per subvector slice. ``mat`` is the bounded
-    training sample (rows ordered by id — the semdedup convention);
-    dim must divide evenly into m slices."""
-    n, dim = mat.shape
-    assert dim % m == 0, (dim, m)
-    sub = dim // m
-    return [
-        kmeans_l2_fit(mat[:, j * sub : (j + 1) * sub].astype(np.float64), k)
-        for j in range(m)
-    ]
-
-
-def pq_codes_np(mat: np.ndarray, codebooks: list[np.ndarray]) -> np.ndarray:
-    """(n, m) int32 codes — argmin L2 per subvector (first index wins
-    ties; the builder's margin assert makes ties impossible)."""
-    m = len(codebooks)
-    sub = mat.shape[1] // m
-    cols = []
-    for j, cb in enumerate(codebooks):
-        s = mat[:, j * sub : (j + 1) * sub].astype(np.float64)
-        d2 = ((s[:, None, :] - cb[None, :, :]) ** 2).sum(axis=2)
-        cols.append(np.argmin(d2, axis=1).astype(np.int32))
-    return np.stack(cols, axis=1)
-
-
-def pq_code_margins(mat: np.ndarray, codebooks: list[np.ndarray]) -> float:
-    """Smallest top-2 assignment gap across all rows and subvectors —
-    the builder asserts this clears 1e-9 before trusting that numpy
-    argmin and the SQL fold-order argmin agree."""
-    m = len(codebooks)
-    sub = mat.shape[1] // m
-    worst = float("inf")
-    for j, cb in enumerate(codebooks):
-        s = mat[:, j * sub : (j + 1) * sub].astype(np.float64)
-        d2 = ((s[:, None, :] - cb[None, :, :]) ** 2).sum(axis=2)
-        top2 = np.sort(d2, axis=1)[:, :2]
-        worst = min(worst, float((top2[:, 1] - top2[:, 0]).min()))
-    return worst
-
-
-def pq_encode(
-    df: DataFrame,
-    codebooks: list[np.ndarray],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """(id, code array<int>) via one numpy argmin per Arrow batch."""
-    cbs = [cb.copy() for cb in codebooks]
-
-    @F.pandas_udf("array<int>")
-    def _enc(vecs: pd.Series) -> pd.Series:
-        mat = np.array([list(v) for v in vecs], dtype=np.float64)
-        codes = pq_codes_np(mat, cbs)
-        return pd.Series(list(codes.tolist()))
-
-    return df.select(
-        F.col(id_col), _enc(F.col(vec_col).cast("array<double>")).alias("code")
-    )
-
-
-def pq_distance_table_fp(
-    query_vec: list[float],
-    codebooks: list[np.ndarray],
-    fp_scale: int = PQ_FP_SCALE,
-) -> list[list[int]]:
-    """ADC table ||q_j - c||^2 per (subvector, centroid), quantized
-    to int64 fixed point. Shared by the entry query and the oracle
-    builder so both engines hold the same literals."""
-    q = np.asarray(query_vec, dtype=np.float64)
-    m = len(codebooks)
-    sub = len(q) // m
-    out = []
-    for j, cb in enumerate(codebooks):
-        d2 = ((q[j * sub : (j + 1) * sub][None, :] - cb) ** 2).sum(axis=1)
-        out.append([int(round(float(d) * fp_scale)) for d in d2])
-    return out
-
-
-def pq_adc_topk(
-    encoded: DataFrame,
-    dtab_fp: list[list[int]],
-    k: int = 10,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Top-k NEAREST by the exact-integer ADC score: per row, sum the
-    M fixed-point table entries its codes select — M element_at
-    lookups into literal arrays, zero joins, order-free bigint adds."""
-    score = None
-    for j, row in enumerate(dtab_fp):
-        arr = F.array(*[F.lit(v).cast("long") for v in row])
-        term = F.element_at(arr, F.element_at(F.col("code"), j + 1) + 1)
-        score = term if score is None else score + term
-    return (
-        encoded.select(
-            F.col(id_col),
-            score.cast("long").alias("adc_fp"),
-            (score.cast("double") / F.lit(float(PQ_FP_SCALE))).alias("adc"),
-        )
-        .orderBy("adc_fp", id_col)
-        .limit(k)
     )
 
 

@@ -313,107 +313,3 @@ def hist_quantiles(
             ((qbin + 1) * width - 1).cast("long").alias(f"p{p}_upper")
         )
     return cum.groupBy(*key_cols).agg(*aggs)
-
-
-# ---------------------------------------------------------------------------
-# AMS F2 (second frequency moment) sketch — Alon, Matias & Szegedy 1996.
-#
-# F2 = sum over distinct items of count(item)^2 measures the skew of a
-# frequency distribution (join-size estimation, self-join cardinality,
-# repetitiveness of a token stream). Exact F2 needs the full per-item
-# count table; the AMS "tug-of-war" sketch keeps R integer registers:
-# register r accumulates sum(count(x) * sign_r(x)) where sign_r is a
-# ±1 hash, and E[register^2] = F2.
-#
-# Determinism and portability follow the HLL/CMS rules: the sign is
-# the parity of one md5 nibble of "r:term" (the DuckDB twin recomputes
-# it from scratch), every register is an int64 SUM (order-free,
-# map-side combinable, merges across batches by plain addition), the
-# estimate is sum(register^2) floor-divided by R — no float anywhere,
-# in either engine. Register values are O(sqrt(F2)); their squares
-# need headroom, so at extreme corpus scale shard the stream by a
-# term-hash prefix and sum the per-shard F2s (F2 is additive across
-# disjoint item sets).
-
-AMS_R = 64  # registers
-
-
-def ams_sign(term: Column, r: int) -> Column:
-    """±1 from the parity of the first md5 nibble of "r:term"."""
-    nib = F.conv(
-        F.substring(F.md5(F.concat(F.lit(f"{r}:"), term)), 1, 1), 16, 10
-    ).cast("bigint")
-    return (nib % 2) * 2 - 1
-
-
-def ams_registers(
-    term_counts: DataFrame,
-    term_col: str = "term",
-    count_col: str = "cnt",
-    r: int = AMS_R,
-) -> DataFrame:
-    """Build the R-register tug-of-war table from a (term, count)
-    stream. Addition commutes: raw occurrence rows (count 1) and
-    pre-aggregated counts produce the identical sketch, and register
-    tables from disjoint batches merge by summation
-    (``merge_ams_registers``). The fan-out is R rows per DISTINCT
-    term — aggregate to term counts first, never explode the raw
-    token stream R ways."""
-    t, c = F.col(term_col), F.col(count_col)
-    fanout = term_counts.select(
-        c.alias("_c"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).cast("int").alias("r"),
-                        (ams_sign(t, i) * c).alias("signed"),
-                    )
-                    for i in range(r)
-                ]
-            )
-        ).alias("_rs"),
-    )
-    return (
-        fanout.select("_rs.r", "_rs.signed")
-        .groupBy("r")
-        .agg(F.sum("signed").cast("long").alias("reg"))
-    )
-
-
-def merge_ams_registers(*regs: DataFrame) -> DataFrame:
-    """Union register tables from independent batches — groupBy SUM
-    per register; the AMS merge operator (signed sums commute)."""
-    u = regs[0]
-    for x in regs[1:]:
-        u = u.unionByName(x)
-    return u.groupBy("r").agg(F.sum("reg").cast("long").alias("reg"))
-
-
-def ams_f2_report(
-    registers: DataFrame, term_counts: DataFrame, count_col: str = "cnt"
-) -> DataFrame:
-    """One-row summary: the sketch estimate (mean of squared registers
-    as ONE integer floor division) next to the exact F2, with the
-    error in integer basis points. The register table is <= R rows —
-    both aggregates are driver-trivial; exact F2 reuses the term-count
-    table the registers were built from (one extra map-side agg)."""
-    c = F.col(count_col)
-    est = registers.agg(
-        F.count(F.lit(1)).cast("long").alias("n_registers"),
-        F.expr("sum(reg * reg) div count(*)").cast("long").alias("f2_estimate"),
-    )
-    exact = term_counts.agg(F.sum(c * c).cast("long").alias("f2_exact"))
-    return (
-        est.crossJoin(F.broadcast(exact))
-        .select(
-            "n_registers",
-            "f2_exact",
-            "f2_estimate",
-            F.expr(
-                "abs(f2_estimate - f2_exact) * 10000 div greatest(f2_exact, 1)"
-            )
-            .cast("long")
-            .alias("err_bp"),
-        )
-    )

@@ -20,9 +20,9 @@ once, then each keyword count once (the interpreted-HOF staging
 discipline from operators/lm.py), then cheap integer sums. No joins,
 no explode, no aggregation: per-row cost is O(taxonomy keywords),
 embarrassingly parallel at any corpus size. For taxonomies with
-thousands of keywords the Arrow tf-map form (bm25_scores_tfmap) is
-the documented scale path; at dictionary sizes like this one the
-all-JVM projection wins.
+thousands of keywords one vectorized Arrow counting pass per document
+is the scale path; at dictionary sizes like this one the all-JVM
+projection wins.
 """
 
 from __future__ import annotations

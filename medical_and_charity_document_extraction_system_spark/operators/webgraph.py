@@ -33,9 +33,7 @@ projection. PageRank shuffles the edge list once per iteration
 pre-partitioning edges and ranks on the node key (plans/bucketing.py)
 makes the per-iteration join co-located, leaving only the inflow agg
 shuffle. ``pagerank_fixed`` runs a fixed unrolled K (the oracle needs a
-finite SQL twin); ``pagerank_converged`` decides K at runtime
-(stop when the max per-node change hits an exact integer fixed
-point), same arithmetic, localCheckpoint per round.
+finite SQL twin) and cuts the round lineage every five rounds.
 """
 
 from __future__ import annotations
@@ -169,73 +167,6 @@ def pagerank_fixed(
         if (it + 1) % 5 == 0 and (it + 1) < iterations:
             ranks = ranks.localCheckpoint(eager=True)
     return ranks.select("node", F.col("units").alias("rank_units"))
-
-
-def pagerank_converged(
-    edges: DataFrame,
-    max_iter: int = 50,
-    tol_units: int = 0,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    unit: int = 1_000_000,
-    d_num: int = 85,
-    d_den: int = 100,
-) -> tuple[DataFrame, int]:
-    """Convergence-driven PageRank: iterate until the max per-node
-    rank change is <= ``tol_units`` (integer fixed-point reaches an
-    EXACT fixed point, so tol 0 terminates), else stop at
-    ``max_iter``. Returns (ranks, iterations_run). Identical
-    arithmetic to pagerank_fixed — after k rounds the two are
-    bit-equal by construction; this form just decides k at runtime
-    (the oracle-bound unrolled-K twin cannot, SQL needs a finite
-    plan). Each round's ranks are eagerly localCheckpoint'ed: the
-    convergence test is a per-round ACTION anyway, so materializing
-    there both feeds the delta join without recompute and keeps the
-    plan O(1)-tall instead of O(iterations)."""
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct()
-    e = e.localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("od")).localCheckpoint(eager=True)
-    base = unit - (d_num * unit) // d_den
-    ranks = nodes.select(
-        "node", F.lit(unit).cast("long").alias("units")
-    ).localCheckpoint(eager=True)
-    it = 0
-    while it < max_iter:
-        inflow = (
-            e.join(ranks, e["src"] == ranks["node"])
-            .join(deg, "src")
-            .select("dst", F.expr("units DIV od").alias("contrib"))
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("inflow"))
-        )
-        new_ranks = nodes.join(
-            inflow, nodes["node"] == inflow["dst"], "left"
-        ).select(
-            "node",
-            (
-                F.lit(base).cast("long")
-                + F.expr(f"({d_num} * coalesce(inflow, 0L)) DIV {d_den}")
-            ).alias("units"),
-        ).localCheckpoint(eager=True)
-        it += 1
-        delta = (
-            new_ranks.alias("a")
-            .join(ranks.alias("b"), "node")
-            .agg(F.max(F.abs(F.col("a.units") - F.col("b.units"))).alias("d"))
-            .first()["d"]
-        )
-        ranks = new_ranks
-        if delta is not None and delta <= tol_units:
-            break
-    return ranks.select("node", F.col("units").alias("rank_units")), it
 
 
 def hits_fixed(
@@ -566,60 +497,6 @@ def kcore_converged(
     )
 
 
-def link_reciprocity(
-    edges: DataFrame, src_col: str = "src", dst_col: str = "dst"
-) -> DataFrame:
-    """Per-host link-spam reciprocity signals over the directed
-    simple graph (self-loops dropped): out-degree, in-degree,
-    reciprocated out-edge count (dst links back), and the reciprocity
-    rate in integer basis points — link farms trade links, editorial
-    graphs mostly don't (the TrustRank/link-spam feature family).
-    ONE distinct edge list feeds three map-side-combinable aggs plus
-    one self-equi-join on the reversed key; the final assembly joins
-    three host-cardinality tables. Returns
-    (host, out_deg, in_deg, n_reciprocal, reciprocity_bp)."""
-    e = (
-        edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
-        .where(F.col(src_col) != F.col(dst_col))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    out_deg = e.groupBy(F.col("s").alias("host")).agg(
-        F.count(F.lit(1)).alias("out_deg")
-    )
-    in_deg = e.groupBy(F.col("d").alias("host")).agg(
-        F.count(F.lit(1)).alias("in_deg")
-    )
-    rev = e.select(F.col("d").alias("s"), F.col("s").alias("d"))
-    recip = (
-        e.join(rev, ["s", "d"], "left_semi")
-        .groupBy(F.col("s").alias("host"))
-        .agg(F.count(F.lit(1)).alias("n_reciprocal"))
-    )
-    return (
-        out_deg.join(in_deg, "host", "full_outer")
-        .join(recip, "host", "left")
-        .select(
-            "host",
-            F.coalesce("out_deg", F.lit(0)).cast("long").alias("out_deg"),
-            F.coalesce("in_deg", F.lit(0)).cast("long").alias("in_deg"),
-            F.coalesce("n_reciprocal", F.lit(0))
-            .cast("long")
-            .alias("n_reciprocal"),
-            F.when(
-                F.coalesce("out_deg", F.lit(0)) > 0,
-                F.expr(
-                    "(coalesce(n_reciprocal, 0) * 10000)"
-                    " DIV coalesce(out_deg, 1)"
-                ),
-            )
-            .otherwise(F.lit(0))
-            .cast("long")
-            .alias("reciprocity_bp"),
-        )
-    )
-
-
 def _edge_support(ud: DataFrame) -> DataFrame:
     """Triangle support per canonical undirected edge (a < b): the
     number of triangles the edge closes, computed by the SAME
@@ -735,208 +612,3 @@ def ktruss_fixed(
         )
     return _edge_support(ud)
 
-
-def neighborhood_anf(
-    edges: DataFrame,
-    radius: int = 2,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    with_exact: bool = True,
-) -> DataFrame:
-    """Approximate neighborhood function via sketch propagation —
-    HyperBall (Boldi & Vigna 2013) / ANF (Palmer et al. 2002): every
-    node holds an HLL register set of its ball, and one round of
-    "merge each neighbor's sketch into mine" grows the radius by 1.
-    The whole radius-r neighborhood-size estimate costs r rounds of
-    (edge join + register groupBy-MAX) over |V| * 256 integer cells —
-    the exact ball computation it replaces materializes the ball
-    SETS, which on a web graph explodes combinatorially by radius.
-
-    Registers are the deterministic md5 sketches of
-    operators/sketches.py, so the DuckDB twin recomputes every cell
-    from scratch; merges are integer max — bit-reproducible under any
-    partitioning. ``with_exact`` also runs the exact BFS ball
-    (bounded here; at corpus scale you run the sketch only — that is
-    the point) so the estimate's quality is visible in the output.
-    Nodes with only self-loops (or no edges) are absent — the
-    _symmetric_edges convention shared with kcore/LPA. Returns
-    (node, n_exact, n_buckets, n_empty, hll_estimate); n_exact and
-    the sketch both INCLUDE the node itself."""
-    from .sketches import hll_estimate_from_registers, hll_register_cols
-
-    sym = _symmetric_edges(edges, src_col, dst_col).localCheckpoint(eager=True)
-    nodes = sym.select("node").distinct().localCheckpoint(eager=True)
-    bucket, rho = hll_register_cols(F.col("node"))
-    regs = nodes.select("node", bucket.alias("bucket"), rho.alias("mreg"))
-    for _ in range(radius):
-        pushed = sym.join(
-            regs.withColumnRenamed("node", "nbr"), "nbr"
-        ).select("node", "bucket", "mreg")
-        regs = (
-            pushed.unionByName(regs.select("node", "bucket", "mreg"))
-            .groupBy("node", "bucket")
-            .agg(F.max("mreg").alias("mreg"))
-            .localCheckpoint(eager=True)
-        )
-    est = hll_estimate_from_registers(regs, ["node"])
-    if not with_exact:
-        return est
-    ball = nodes.select("node", F.col("node").alias("member"))
-    for _ in range(radius):
-        # ball and sym share lineage (nodes derives from sym) —
-        # explicit aliases keep the self-join unambiguous
-        expanded = (
-            ball.alias("bl")
-            .join(sym.alias("sm"), F.col("bl.member") == F.col("sm.node"))
-            .select(
-                F.col("bl.node").alias("node"),
-                F.col("sm.nbr").alias("member"),
-            )
-        )
-        ball = ball.unionByName(expanded).distinct().localCheckpoint(eager=True)
-    exact = ball.groupBy("node").agg(
-        F.count(F.lit(1)).cast("long").alias("n_exact")
-    )
-    return exact.join(est, "node").select(
-        "node", "n_exact", "n_buckets", "n_empty", "hll_estimate"
-    )
-
-
-def bfs_closeness(
-    edges: DataFrame,
-    seeds: DataFrame,
-    rounds: int = 6,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    assert_converged: bool = True,
-) -> DataFrame:
-    """Exact closeness centrality from a SEED SET by synchronous
-    multi-source BFS over the directed simple graph: ``rounds``
-    relaxations of (frontier join edges -> dist+1, min per
-    (seed, node)). A node's distance is the round it is first
-    reached, which IS the shortest path length, so distances never
-    shrink later and a stable (seed, node) row count certifies
-    convergence — the kcore_fixed one-count assert.
-
-    Closeness is emitted float-free: ``(n_reached - 1) * 10000`` div
-    ``sum_dist`` integer basis points (Bavelas closeness scaled; 0
-    when the seed reaches nothing). sum(dist) stays integer.
-
-    Scale: the state is |seeds| x |reachable| rows — run ALL-pairs
-    closeness only on bounded graphs; at web scale you sample seeds
-    (this is exactly Eppstein-Wang estimation: mean distance from a
-    seed sample), which keeps the per-round join |seeds|-bounded and
-    co-partitioned on the join key. localCheckpoint cuts per-round
-    lineage like pagerank_fixed. Reference parity: the reference has
-    no graph layer; this extends the crawl-analysis suite
-    (host_pagerank / host_hits / kcore) with a distance signal.
-    """
-    e = (
-        edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
-        .where(F.col(src_col) != F.col(dst_col))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    state = seeds.select(
-        F.col("node").alias("seed"),
-        F.col("node").alias("node"),
-        F.lit(0).cast("int").alias("dist"),
-    ).localCheckpoint(eager=True)
-    prev_n = None
-    for r in range(rounds):
-        nxt = state.join(e, state["node"] == e["s"]).select(
-            "seed", F.col("d").alias("node"), (F.col("dist") + 1).alias("dist")
-        )
-        state = (
-            state.unionByName(nxt)
-            .groupBy("seed", "node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-        if r == rounds - 2:
-            prev_n = state.count()
-    if assert_converged and rounds >= 2:
-        n_last = state.count()
-        assert prev_n == n_last, (
-            f"BFS not converged after {rounds} rounds "
-            f"({prev_n} -> {n_last} (seed,node) rows); raise `rounds`"
-        )
-    return state.groupBy("seed").agg(
-        F.count(F.lit(1)).cast("long").alias("n_reached"),
-        F.sum("dist").cast("long").alias("sum_dist"),
-    ).select(
-        F.col("seed").alias("host"),
-        "n_reached",
-        "sum_dist",
-        F.expr(
-            "CASE WHEN sum_dist > 0 THEN (n_reached - 1) * 10000 div sum_dist"
-            " ELSE 0 END"
-        ).cast("long").alias("closeness_bp"),
-    )
-
-
-def pagerank_personalized(
-    edges: DataFrame,
-    seed: str,
-    iterations: int = 4,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    unit: int = 1_000_000,
-    d_num: int = 85,
-    d_den: int = 100,
-) -> DataFrame:
-    """Personalized PageRank (random walk with restart at ONE seed
-    node): identical integer fixed-point arithmetic to
-    ``pagerank_fixed``, except the (1-d) teleport mass lands entirely
-    on the seed — r0 is ``unit`` at the seed and 0 elsewhere, and
-    each round's base term is seed-conditional. Ranks measure
-    proximity to the seed (the "related hosts" primitive behind
-    SALSA-ish link recommendations). Same per-round co-partitionable
-    join, same localCheckpoint cuts — bit-reproducible under any
-    partitioning."""
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct()
-    e = e.localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    deg = (
-        e.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("od"))
-        .localCheckpoint(eager=True)
-    )
-    base = unit - (d_num * unit) // d_den
-    seed_base = F.when(F.col("node") == seed, F.lit(base)).otherwise(
-        F.lit(0)
-    ).cast("long")
-    ranks = nodes.select(
-        "node",
-        F.when(F.col("node") == seed, F.lit(unit))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("units"),
-    )
-    for it in range(iterations):
-        inflow = (
-            e.join(ranks, e["src"] == ranks["node"])
-            .join(deg, "src")
-            .select("dst", F.expr("units DIV od").alias("contrib"))
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("inflow"))
-        )
-        ranks = nodes.join(
-            inflow, nodes["node"] == inflow["dst"], "left"
-        ).select(
-            "node",
-            (
-                seed_base
-                + F.expr(f"({d_num} * coalesce(inflow, 0L)) DIV {d_den}")
-            ).alias("units"),
-        )
-        if (it + 1) % 5 == 0 and (it + 1) < iterations:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks.select("node", F.col("units").alias("rank_units"))

@@ -1438,140 +1438,6 @@ FROM r GROUP BY source
 """
 
 
-def ann_topk_sq8_sql(
-    sf_dir: str = "/root/testdata/sf0.01", k: int = 10
-) -> str:
-    """Twin of q_ann_topk_sq8: per-dim (min, scale) re-derived from
-    the same parquet with duckdb, run through the SAME Python helpers
-    (sq8_params_from_minmax / sq8_quantize_vec) so every double
-    literal is identical by construction; the ranking itself is
-    integer arithmetic. floor(t + 0.5), never round() — round()'s
-    half-way semantics differ across engines."""
-    import duckdb
-
-    from .operators.similarity import (
-        sq8_params_from_minmax,
-        sq8_quantize_vec,
-    )
-
-    con = duckdb.connect()
-    dim = con.sql(
-        f"SELECT len(embedding) FROM '{sf_dir}/embeddings.parquet' "
-        "WHERE vec_id = 0"
-    ).fetchone()[0]
-    mm = con.sql(
-        "SELECT "
-        + ", ".join(
-            f"min(embedding[{i + 1}]), max(embedding[{i + 1}])"
-            for i in range(dim)
-        )
-        + f" FROM '{sf_dir}/embeddings.parquet' WHERE vec_id <> 0"
-    ).fetchone()
-    qvec = con.sql(
-        f"SELECT embedding FROM '{sf_dir}/embeddings.parquet' WHERE vec_id = 0"
-    ).fetchone()[0]
-    con.close()
-    params = sq8_params_from_minmax(
-        [float(mm[2 * i]) for i in range(dim)],
-        [float(mm[2 * i + 1]) for i in range(dim)],
-    )
-    q_ints = sq8_quantize_vec([float(x) for x in qvec], params)
-
-    def term(i: int) -> str:
-        mn, s = params[i]
-        qexpr = (
-            f"least(greatest(CAST(floor((CAST(embedding[{i + 1}] AS DOUBLE) "
-            f"- CAST('{mn!r}' AS DOUBLE)) * CAST('{s!r}' AS DOUBLE) "
-            f"+ 0.5) AS BIGINT), 0), 255)"
-        )
-        return f"{qexpr} * {q_ints[i]}"
-
-    dot = " + ".join(term(i) for i in range(dim))
-    return f"""
-SELECT vec_id, CAST({dot} AS BIGINT) AS dot_q
-FROM embeddings WHERE vec_id <> 0
-ORDER BY dot_q DESC, vec_id
-LIMIT {k}
-"""
-
-
-def ann_topk_pq_sql(
-    sf_dir: str = "/root/testdata/sf0.01",
-    k: int = 10,
-    sample_rows: int = 10000,
-) -> str:
-    """Full oracle for q_ann_topk_pq. Codebooks are a pure function of
-    the embeddings table (deterministic L2 Lloyd over the sample_rows
-    smallest corpus ids — the SAME sample the entry query collects),
-    so the builder reruns pq_train on the parquet, asserts every
-    corpus row's top-2 assignment margin (numpy argmin vs the SQL
-    fold-order argmin cannot disagree past 1e-9), and emits centroids
-    + the int64 fixed-point ADC table as literals. Codes are derived
-    IN SQL (row_number over the centroid cross join); the per-row
-    score is SUM over 8 bigint table entries — order-free."""
-    import duckdb
-    import numpy as np
-
-    from .operators.similarity import (
-        PQ_FP_SCALE,
-        PQ_K,
-        PQ_M,
-        pq_code_margins,
-        pq_distance_table_fp,
-        pq_train,
-    )
-
-    con = duckdb.connect()
-    rows = con.sql(
-        f"SELECT vec_id, embedding FROM '{sf_dir}/embeddings.parquet' "
-        "WHERE vec_id <> 0 ORDER BY vec_id"
-    ).fetchall()
-    qvec = con.sql(
-        f"SELECT embedding FROM '{sf_dir}/embeddings.parquet' WHERE vec_id = 0"
-    ).fetchone()[0]
-    con.close()
-    mat = np.array([list(r[1]) for r in rows], dtype=np.float64)
-    codebooks = pq_train(mat[:sample_rows])
-    assert pq_code_margins(mat, codebooks) > 1e-9, "PQ assignment near-tie"
-    dtab = pq_distance_table_fp([float(x) for x in qvec], codebooks)
-
-    sub = mat.shape[1] // PQ_M
-    cb_rows = ",\n".join(
-        f"({j}, {c}, [{', '.join(repr(float(x)) for x in codebooks[j][c])}])"
-        for j in range(PQ_M)
-        for c in range(PQ_K)
-    )
-    dt_rows = ",\n".join(
-        f"({j}, {c}, {dtab[j][c]})" for j in range(PQ_M) for c in range(PQ_K)
-    )
-    d2 = " + ".join(
-        f"((e.v[cb.j*{sub}+{t + 1}] - cb.c[{t + 1}])"
-        f" * (e.v[cb.j*{sub}+{t + 1}] - cb.c[{t + 1}]))"
-        for t in range(sub)
-    )
-    return f"""
-WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings WHERE vec_id <> 0),
-cb0(j, cid, craw) AS (VALUES {cb_rows}),
-cb AS (SELECT j, cid, list_transform(craw, x -> CAST(x AS DOUBLE)) AS c FROM cb0),
-codes AS (
-  SELECT vec_id, j, cid FROM (
-    SELECT e.vec_id, cb.j, cb.cid,
-           row_number() OVER (PARTITION BY e.vec_id, cb.j
-                              ORDER BY ({d2}) ASC, cb.cid) AS rn
-    FROM e CROSS JOIN cb
-  ) WHERE rn = 1
-),
-dt(j, cid, dfp) AS (VALUES {dt_rows}),
-s AS (SELECT vec_id, sum(dfp) AS adc_fp
-      FROM codes JOIN dt USING (j, cid) GROUP BY vec_id)
-SELECT vec_id, CAST(adc_fp AS BIGINT) AS adc_fp,
-       CAST(adc_fp AS DOUBLE) / CAST('{float(PQ_FP_SCALE)!r}' AS DOUBLE) AS adc
-FROM s ORDER BY adc_fp, vec_id
-LIMIT {k}
-"""
-
-
 def hist_quantiles_sql(bins: int = 64, width: int = 16) -> str:
     """Twin of q_hist_quantiles: identical integer bin assignment,
     cumulative bin counts, and the float-free ceil threshold
@@ -1625,97 +1491,6 @@ SELECT CASE WHEN m >= 14 AND m < 16 THEN 'html' ELSE 'none' END AS error_family,
        count(*) AS n_docs
 FROM base
 GROUP BY 1, 2
-"""
-
-
-# ------------------------------------------------------------ IVF twin
-def ann_topk_ivf_sql(
-    sf_dir: str = "/root/testdata/sf0.01",
-    k: int = 10,
-    nprobe: int = 4,
-    n_clusters: int = 16,
-    sample_rows: int = 10000,
-    dim: int = 64,
-    query_vec_id: int = 0,
-) -> str:
-    """Full oracle for the *pruned* (nprobe < n_clusters) IVF top-k.
-
-    The coarse quantizer is a pure function of the embeddings table
-    (seeded Lloyd over the ``sample_rows`` smallest ids), so the
-    builder reruns the SAME ``kmeans_fit`` on the same sample — read
-    straight from the parquet with duckdb, no Spark — and emits the
-    centroids as SQL literals (the trick the LSH oracles use for their
-    projection matrices). DuckDB then re-derives cluster assignment
-    (argmax centroid dot; normalization drops out of the argmax),
-    the nprobe probe list, and the exact-cosine top-k from scratch.
-
-    BLAS-vs-fold rounding can only flip an assignment or the probe
-    boundary on a near-exact tie; the builder asserts every decision
-    margin exceeds 1e-9 (~1e5 x the rounding scale), so the SQL's
-    fold-order dots provably agree with the UDF's GEMM.
-    """
-    import duckdb
-    import numpy as np
-
-    from .operators.similarity import kmeans_fit
-
-    con = duckdb.connect()
-    emb = con.sql(
-        f"SELECT vec_id, embedding FROM '{sf_dir}/embeddings.parquet' "
-        f"WHERE vec_id <> {query_vec_id} ORDER BY vec_id"
-    ).fetchall()
-    qrow = con.sql(
-        f"SELECT embedding FROM '{sf_dir}/embeddings.parquet' "
-        f"WHERE vec_id = {query_vec_id}"
-    ).fetchone()
-    con.close()
-    mat = np.array([list(r[1]) for r in emb], dtype=np.float64)
-    cent = kmeans_fit(mat[:sample_rows], n_clusters)
-    q = np.array(list(qrow[0]), dtype=np.float64)
-
-    # margin assertions: no decision is close enough for summation
-    # order to flip it (data is fixed, so this holds for every run)
-    vn = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-    d = vn @ cent.T
-    top2 = np.sort(d, axis=1)[:, -2:]
-    assert (top2[:, 1] - top2[:, 0]).min() > 1e-9, "assignment near-tie"
-    qd = np.sort(cent @ (q / np.linalg.norm(q)))[::-1]
-    assert qd[nprobe - 1] - qd[nprobe] > 1e-9, "probe-boundary near-tie"
-
-    cent_rows = ",\n".join(
-        f"({c}, [{', '.join(repr(float(x)) for x in cent[c])}])"
-        for c in range(len(cent))
-    )
-    vdot = _DOT.format(n=dim, a="e.v", b="cent.c")
-    qdot = _DOT.format(n=dim, a="cent.c", b="q.qv")
-    cosexpr = _cos("e.v", "q.qv", dim)
-    return f"""
-WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings WHERE vec_id <> {query_vec_id}),
-cent(cid, craw) AS (VALUES {cent_rows}),
-centd AS (SELECT cid, list_transform(craw, x -> CAST(x AS DOUBLE)) AS c FROM cent),
-q AS (SELECT v AS qv FROM (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                           FROM embeddings) WHERE vec_id = {query_vec_id}),
-assign AS (
-  SELECT vec_id, cid FROM (
-    SELECT e.vec_id, cent.cid,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY ({vdot}) DESC, cent.cid) AS rn
-    FROM e CROSS JOIN centd cent
-  ) WHERE rn = 1
-),
-probe AS (
-  SELECT cid FROM (
-    SELECT cent.cid, row_number() OVER (ORDER BY ({qdot}) DESC, cent.cid) AS rn
-    FROM centd cent CROSS JOIN q
-  ) WHERE rn <= {nprobe}
-)
-SELECT e.vec_id, {cosexpr} AS cos_sim
-FROM e JOIN assign ON assign.vec_id = e.vec_id
-       JOIN probe ON probe.cid = assign.cid
-       CROSS JOIN q
-ORDER BY cos_sim DESC, e.vec_id
-LIMIT {k}
 """
 
 
@@ -1799,47 +1574,6 @@ SELECT doc_id AS media_id,
        CAST({height} AS INT) AS height,
        CAST(NULL AS VARCHAR) AS error
 FROM documents WHERE doc_id < {n}
-"""
-
-
-def video_frame_sample_sql(n: int = 200) -> str:
-    """Frame-sample construction oracle: n_frames = 1 + id%5,
-    kept (every 2nd, 0-indexed) = ceil(n/2), and the kept indices are
-    0,2,4,... so their sum is k*(k-1)."""
-    return f"""
-WITH v AS (
-  SELECT doc_id, CAST(1 + doc_id % 5 AS INT) AS n_frames,
-         (1 + doc_id % 5 + 1) // 2 AS k
-  FROM documents WHERE doc_id < {n}
-)
-SELECT doc_id AS media_id, n_frames,
-       CAST(k AS BIGINT) AS n_sampled,
-       CAST(k * (k - 1) AS BIGINT) AS sum_kept_idx
-FROM v
-"""
-
-
-def audio_features_sql(n: int = 300, rate: int = 8000) -> str:
-    """Twin of q_audio_features over multimodal.synth_audio clips:
-    n = 800 + id%50, half period p = 2 + id%7, amplitude
-    a = 1000 + id%500; RMS of a square wave = a exactly (sqrt of a
-    perfect-square double), duration is exact double division,
-    crossings = (n-1) // p."""
-    return f"""
-WITH a AS (
-  SELECT doc_id,
-         800 + doc_id % 50  AS n,
-         2 + doc_id % 7     AS p,
-         1000 + doc_id % 500 AS amp
-  FROM documents WHERE doc_id < {n}
-)
-SELECT doc_id AS media_id,
-       CAST(n AS INT) AS n_samples,
-       CAST(n * 1000 AS DOUBLE) / {rate} AS duration_ms,
-       CAST(amp AS BIGINT) AS peak,
-       CAST(amp AS DOUBLE) AS rms,
-       CAST((n - 1) // p AS INT) AS zero_crossings
-FROM a
 """
 
 
@@ -2684,7 +2418,7 @@ def unigram_lm_sql(
     (parity tokenizer, Counter, math.log — the same floats the Spark
     query derives) and emits every log-prob as a quoted-repr literal
     in the SAME fixed-order fold (operators/lm.unigram_lm_sql_exprs).
-    Engine-side ln never runs; data-derived literals, the IVF/LSH
+    Engine-side ln never runs; data-derived literals, the LSH/semdedup
     oracle trick."""
     from .operators.lm import unigram_lm_count_exprs, unigram_lm_fold_expr
 
@@ -3350,11 +3084,11 @@ def semdedup_sql(
     The coarse quantizer is a pure function of the embeddings table
     (seeded Lloyd over the sample_rows smallest ids — the SAME sample
     train_ivf_centroids takes), so the builder reruns kmeans_fit on
-    the parquet directly and emits the centroids as SQL literals (the
-    ann_topk_ivf trick). DuckDB re-derives cluster assignment (argmax
-    centroid dot — normalization drops out of the argmax), the
-    within-cluster earlier-id pair set, each pair's fold-order cosine
-    over pre-normalized vectors (bit-identical to the Spark side's
+    the parquet directly and emits the centroids as SQL literals.
+    DuckDB re-derives cluster assignment (argmax centroid dot —
+    normalization drops out of the argmax), the within-cluster
+    earlier-id pair set, each pair's fold-order cosine over
+    pre-normalized vectors (bit-identical to the Spark side's
     _fold_dot), the order-free max per row, and the keep decision.
 
     Assignment uses a GEMM on the Spark side vs fold-order dots here;
@@ -4080,38 +3814,6 @@ SELECT node, CAST(count(*) AS BIGINT) AS core_deg FROM {prev} GROUP BY node
 # Sketch, sampling, host-graph and text-audit twins
 
 
-def ams_f2_sql(r: int = 64) -> str:
-    """Twin of q_ams_f2: the one-shot sketch build — equal to the
-    Spark side's parity-half merge because every register is an
-    integer SUM (commutes over any slicing). The ±1 sign is the
-    parity of one md5 nibble of 'r:term'; estimate and error are
-    integer floor divisions."""
-    return f"""
-WITH tc AS (
-  SELECT term, count(*) AS cnt
-  FROM (SELECT unnest({_TOKS}) AS term FROM documents)
-  GROUP BY 1
-),
-regs AS (
-  SELECT g.r, sum(tc.cnt * ((CAST(('0x' || substr(md5(CAST(g.r AS VARCHAR)
-                     || ':' || tc.term), 1, 1)) AS BIGINT) % 2) * 2 - 1))
-           AS reg
-  FROM tc CROSS JOIN (SELECT unnest(range(0, {r})) AS r) g
-  GROUP BY 1
-),
-est AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_registers,
-         CAST(sum(reg * reg) // count(*) AS BIGINT) AS f2_estimate
-  FROM regs
-),
-ex AS (SELECT CAST(sum(cnt * cnt) AS BIGINT) AS f2_exact FROM tc)
-SELECT n_registers, f2_exact, f2_estimate,
-       CAST(abs(f2_estimate - f2_exact) * 10000
-            // greatest(f2_exact, 1) AS BIGINT) AS err_bp
-FROM est, ex
-"""
-
-
 def phrase_match_sql(phrase: tuple = ("batch", "batch")) -> str:
     """Twin of q_phrase_match: per phrase slot a filtered positional
     posting list aligned to its start position, joined on (doc,
@@ -4185,46 +3887,6 @@ FROM m ORDER BY sample_key, doc_id LIMIT {k}
 """
 
 
-def host_closeness_sql(rounds: int = 4) -> str:
-    """Twin of q_host_closeness: the same multi-source BFS unrolled
-    one distance-relaxation CTE per round over the shared host graph
-    (AS MATERIALIZED — each round reads the previous twice via the
-    UNION ALL). Seeds are hosts with index % 4 == 1; closeness is the
-    same integer basis-point floor division."""
-    steps = [
-        """d0 AS MATERIALIZED (
-  SELECT node AS seed, node, 0 AS dist FROM nodes
-  WHERE CAST(substr(node, 5) AS INTEGER) % 4 = 1
-)"""
-    ]
-    for r in range(1, rounds + 1):
-        p = f"d{r - 1}"
-        steps.append(
-            f"""d{r} AS MATERIALIZED (
-  SELECT seed, node, min(dist) AS dist FROM (
-    SELECT seed, node, dist FROM {p}
-    UNION ALL
-    SELECT {p}.seed, e.dst AS node, {p}.dist + 1 AS dist
-    FROM {p} JOIN e ON {p}.node = e.src
-  ) GROUP BY 1, 2
-)"""
-        )
-    return f"""
-WITH {_host_graph_ctes()},
-{", ".join(steps)},
-agg AS (
-  SELECT seed, CAST(count(*) AS BIGINT) AS n_reached,
-         CAST(sum(dist) AS BIGINT) AS sum_dist
-  FROM d{rounds} GROUP BY 1
-)
-SELECT seed AS host, n_reached, sum_dist,
-       CAST(CASE WHEN sum_dist > 0
-                 THEN (n_reached - 1) * 10000 // sum_dist
-                 ELSE 0 END AS BIGINT) AS closeness_bp
-FROM agg
-"""
-
-
 def k_anonymity_sql(k: int = 5, len_bucket: int = 100) -> str:
     """Twin of q_k_anonymity: same QI cells, same per-language
     rollup, the risk rate ONE integer basis-point floor division."""
@@ -4287,31 +3949,6 @@ SELECT CAST(cluster_size AS BIGINT) AS cluster_size,
        CAST(count(*) AS BIGINT) AS n_clusters,
        CAST(CAST(sum(cluster_size) AS BIGINT) AS BIGINT) AS n_docs
 FROM sz GROUP BY 1
-"""
-
-
-def host_reciprocity_sql() -> str:
-    """Twin of q_host_reciprocity: directed simple graph (self-loops
-    out), three cardinality aggs + an EXISTS for the reciprocated
-    count, basis points by integer floor division."""
-    return f"""
-WITH {_host_graph_ctes()},
-ed AS (SELECT DISTINCT src AS s, dst AS d FROM e WHERE src <> dst),
-o AS (SELECT s AS host, CAST(count(*) AS BIGINT) AS out_deg FROM ed GROUP BY 1),
-i AS (SELECT d AS host, CAST(count(*) AS BIGINT) AS in_deg FROM ed GROUP BY 1),
-r AS (SELECT ed.s AS host, CAST(count(*) AS BIGINT) AS n_reciprocal
-      FROM ed
-      WHERE EXISTS (SELECT 1 FROM ed r2 WHERE r2.s = ed.d AND r2.d = ed.s)
-      GROUP BY 1)
-SELECT host,
-       CAST(coalesce(o.out_deg, 0) AS BIGINT) AS out_deg,
-       CAST(coalesce(i.in_deg, 0) AS BIGINT) AS in_deg,
-       CAST(coalesce(r.n_reciprocal, 0) AS BIGINT) AS n_reciprocal,
-       CAST(CASE WHEN coalesce(o.out_deg, 0) > 0
-                 THEN coalesce(r.n_reciprocal, 0) * 10000
-                        // coalesce(o.out_deg, 1)
-                 ELSE 0 END AS BIGINT) AS reciprocity_bp
-FROM o FULL OUTER JOIN i USING (host) LEFT JOIN r USING (host)
 """
 
 
@@ -4452,64 +4089,6 @@ FROM crawl GROUP BY 1 HAVING count(DISTINCT host) >= {min_hosts}
 """
 
 
-def host_anf_sql(radius: int = 2) -> str:
-    """Twin of q_host_anf: every HLL register recomputed from md5
-    scratch (the hll_host_cardinality fragment), radius rounds of
-    push-and-max over the shared host graph, the exact BFS ball as
-    DISTINCT set unions. Sketch/ball CTEs AS MATERIALIZED — each
-    feeds the next round twice."""
-    from .operators.sketches import ALPHA_NUM, M, P
-
-    shift53 = "(CAST(1 AS BIGINT) << 53)"
-    parts = []
-    prev, prev_ball = "m0", "b0"
-    for i in range(1, radius + 1):
-        parts.append(f""",
-p{i} AS (SELECT s.node, r.bucket, r.mreg
-         FROM sym s JOIN {prev} r ON r.node = s.nbr),
-m{i} AS MATERIALIZED (
-  SELECT node, bucket, max(mreg) AS mreg FROM (
-    SELECT node, bucket, mreg FROM p{i}
-    UNION ALL SELECT node, bucket, mreg FROM {prev}
-  ) GROUP BY node, bucket),
-x{i} AS (SELECT b.node, s.nbr AS member
-         FROM {prev_ball} b JOIN sym s ON s.node = b.member),
-b{i} AS MATERIALIZED (
-  SELECT DISTINCT node, member FROM (
-    SELECT node, member FROM x{i}
-    UNION ALL SELECT node, member FROM {prev_ball}
-  ))""")
-        prev, prev_ball = f"m{i}", f"b{i}"
-    return f"""
-WITH {_host_graph_ctes()},
-und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-        FROM e WHERE src <> dst),
-sym AS MATERIALIZED (
-  SELECT a AS node, b AS nbr FROM und
-  UNION ALL SELECT b AS node, a AS nbr FROM und),
-nodes2 AS (SELECT DISTINCT node FROM sym),
-m0 AS MATERIALIZED (
-  SELECT node, h60 % {M} AS bucket,
-         CASE WHEN (h60 >> {P}) > 0 THEN 53 - length(bin(h60 >> {P}))
-              ELSE 53 END AS mreg
-  FROM (SELECT node,
-               CAST(('0x' || substr(md5(node), 1, 15)) AS BIGINT) AS h60
-        FROM nodes2)),
-b0 AS (SELECT node, node AS member FROM nodes2){"".join(parts)},
-s AS (SELECT node, count(*) AS nb,
-             sum(CAST(1 AS BIGINT) << (53 - mreg)) AS ss
-      FROM {prev} GROUP BY node),
-ex AS (SELECT node, CAST(count(*) AS BIGINT) AS n_exact
-       FROM {prev_ball} GROUP BY node)
-SELECT ex.node, ex.n_exact,
-       CAST(s.nb AS BIGINT) AS n_buckets,
-       CAST({M} - s.nb AS BIGINT) AS n_empty,
-       CAST('{ALPHA_NUM!r}' AS DOUBLE)
-         / CAST(s.ss + ({M} - s.nb) * {shift53} AS DOUBLE) AS hll_estimate
-FROM ex JOIN s USING (node)
-"""
-
-
 def split_report_sql(train_pct: int = 90, val_pct: int = 5) -> str:
     """Twin of q_dataset_split: identical md5-bucket assignment and
     token totals; share is one integer division."""
@@ -4533,56 +4112,6 @@ SELECT split, n_docs, n_tokens,
        CAST(n_docs * 10000 // (SELECT sum(n_docs) FROM per) AS BIGINT)
          AS share_bp
 FROM per
-"""
-
-
-def _ppr_round_ctes(
-    iterations: int, unit: int, d_num: int, d_den: int, seed: str
-) -> tuple[str, str]:
-    """Personalized-PageRank rounds: identical to
-    ``_pagerank_round_ctes`` except the (1-d) base mass is
-    seed-conditional."""
-    base = unit - (d_num * unit) // d_den
-    iters = []
-    prev = "r0"
-    for i in range(1, iterations + 1):
-        iters.append(f"""
-i{i} AS (
-  SELECT e.dst AS node, sum({prev}.units // deg.od) AS inflow
-  FROM e JOIN {prev} ON e.src = {prev}.node JOIN deg ON e.src = deg.src
-  GROUP BY e.dst
-),
-r{i} AS (
-  SELECT n.node,
-         CAST(CASE WHEN n.node = '{seed}' THEN {base} ELSE 0 END
-              + ({d_num} * coalesce(i{i}.inflow, 0)) // {d_den} AS BIGINT)
-           AS units
-  FROM nodes n LEFT JOIN i{i} USING (node)
-)""")
-        prev = f"r{i}"
-    return ",".join(iters), prev
-
-
-def host_ppr_sql(
-    seed: str = "host0",
-    iterations: int = 4,
-    unit: int = 1_000_000,
-    d_num: int = 85,
-    d_den: int = 100,
-) -> str:
-    """Twin of q_host_ppr: personalized PageRank from one seed host —
-    r0 puts the whole unit on the seed, each round's teleport mass is
-    seed-conditional, everything else matches the host PageRank
-    twin."""
-    rounds, prev = _ppr_round_ctes(iterations, unit, d_num, d_den, seed)
-    return f"""
-WITH {_host_graph_ctes()},
-deg AS (SELECT src, count(*) AS od FROM e GROUP BY src),
-r0 AS (SELECT node,
-              CAST(CASE WHEN node = '{seed}' THEN {unit} ELSE 0 END
-                   AS BIGINT) AS units
-       FROM nodes),{rounds}
-SELECT node, units AS rank_units FROM {prev}
 """
 
 

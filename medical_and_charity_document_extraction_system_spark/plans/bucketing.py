@@ -9,11 +9,9 @@ so the join plan contains no Exchange on the bucketed sides — the
 
 This is Spark's native bucketing (`DataFrameWriter.bucketBy` +
 `saveAsTable` — requires a session catalog table, not a bare parquet
-path) and the batch analog of what the IVF-partitioned layout does
-for ANN probes (operators/similarity.write_ivf_clustered) and the
-signature store does for dedup (operators/dedup.write_signature_store
-— bucket that store by id with this module and the verification join
-co-locates too).
+path) and the batch analog of what the signature store does for
+dedup (operators/dedup.write_signature_store — bucket that store by
+id with this module and the verification join co-locates too).
 
 ``tests/test_plans.py`` asserts the physical property directly: a
 self-join of the bucketed table plans ZERO Exchange operators, while

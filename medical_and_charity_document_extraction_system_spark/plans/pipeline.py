@@ -108,12 +108,7 @@ def _records_frame(records: list[dict]) -> pd.DataFrame:
 def _process_html(url, data, lang, cfg: ExtractionConfig) -> dict:
     try:
         html_str = bytes(data).decode("utf-8")
-        text = main_text(
-            html_str,
-            method=cfg.html_method,
-            min_block_chars=cfg.min_block_chars,
-            max_link_density=cfg.max_link_density,
-        )
+        text = main_text(html_str, method=cfg.html_method)
         return _finish_record(
             url, lang,
             [{"text": text, "confidence": 100.0}],
@@ -126,25 +121,14 @@ def _process_html(url, data, lang, cfg: ExtractionConfig) -> dict:
 def _process_pdf(url, data, lang, cfg: ExtractionConfig) -> dict:
     try:
         page_texts = extract_pdf_pages(bytes(data))
-        scanned = is_scanned(
-            page_texts,
-            sample_pages=cfg.scanned_sample_pages,
-            char_threshold=cfg.scanned_char_threshold,
-        )
-        if not scanned:
+        if not is_scanned(page_texts):
             pages = [{"text": t, "confidence": 100.0} for t in page_texts]
             return _finish_record(url, lang, pages, METHOD_DIRECT, "text", False, [])
-        engine = get_engine(cfg.ocr_engine, cfg.ocr_language)
+        engine = get_engine(cfg.ocr_engine)
         pages, steps = [], []
         for t in page_texts:
             try:
-                processed, steps = preprocess_text(
-                    t,
-                    cfg.enable_enhance,
-                    cfg.enable_denoise,
-                    cfg.enable_deskew,
-                    cfg.enable_binarize,
-                )
+                processed, steps = preprocess_text(t)
                 res = engine.process_page(processed, lang)
                 pages.append(res)
             except Exception:

@@ -101,7 +101,7 @@ def test_media_decoders_never_crash_uncontrolled():
     import numpy as np
 
     from medical_and_charity_document_extraction_system_spark.functions import (
-        gif, jpeg, minipdf, netpbm, png, wavpcm,
+        gif, jpeg, minipdf, netpbm, png,
     )
     from medical_and_charity_document_extraction_system_spark.sources import warc
 
@@ -111,13 +111,12 @@ def test_media_decoders_never_crash_uncontrolled():
         (png.encode_png(img), png.decode_png, (png.PngError, ValueError)),
         (jpeg.encode_jpeg(img), jpeg.decode_jpeg, (jpeg.JpegError, ValueError)),
         (gif.encode_gif([rgb]), gif.decode_gif, (gif.GifError, ValueError)),
-        (wavpcm.encode_wav(np.arange(-50, 50, dtype=np.int16)),
-         wavpcm.decode_wav, (wavpcm.WavError, ValueError)),
         (netpbm.encode(img), netpbm.decode, (ValueError,)),
         (minipdf.build_pdf(["fuzz page"], xref_stream=True),
          minipdf.extract_text_pages, (ValueError,)),
     ]
-    for seed, (valid, decode, errs) in enumerate(cases):
+    # fixed per-decoder seeds, so each decoder keeps its own mutation set
+    for seed, (valid, decode, errs) in zip((0, 1, 2, 4, 5), cases):
         decode(valid)  # sanity: the unmutated payload decodes
         for payload in _mutations(valid, seed):
             try:

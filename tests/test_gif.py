@@ -116,33 +116,6 @@ def test_garbage_rejected():
         decode_gif(b"GIF89a" + b"\x00" * 7 + b"\x3b")  # no frames
 
 
-def test_sample_frames_gif_matches_frames_container(spark):
-    """The sampler must produce identical (media_id, frame_index,
-    n_frames) rows from GIF and FRAMES payloads of the same video,
-    and the sampled GIF frames must decode to the same pixels."""
-    from medical_and_charity_document_extraction_system_spark.operators.multimodal import (
-        attach_fake_video,
-        sample_frames,
-    )
-
-    docs = spark.range(10).withColumnRenamed("id", "doc_id")
-    a = sample_frames(attach_fake_video(docs, codec="frames"), every_k=2).collect()
-    b = sample_frames(attach_fake_video(docs, codec="gif"), every_k=2).collect()
-    key = lambda r: (r.media_id, r.frame_index)  # noqa: E731
-    ra = {key(r): r for r in a}
-    rb = {key(r): r for r in b}
-    assert set(ra) == set(rb) and len(ra) > 10
-    from medical_and_charity_document_extraction_system_spark.functions import gif, netpbm
-
-    for k in ra:
-        assert ra[k].n_frames_total == rb[k].n_frames_total
-        gray = netpbm.decode(bytes(ra[k].frame))
-        # GIF canvases are padded to the video's max frame extent
-        # (disposal-2 background); the frame rect itself is identical
-        rgb = gif.decode_gif(bytes(rb[k].frame))[0]
-        assert (rgb[: gray.shape[0], : gray.shape[1], 0] == gray).all()
-
-
 def test_disposal2_background_uses_global_table_with_local_frames():
     """Review regression: a frame with a small LOCAL color table and
     disposal 2 must restore background from the GLOBAL table (a large

@@ -1,10 +1,6 @@
-"""Round-5 batch: BFS closeness, k-anonymity audit, crawl sharding,
-dup-cluster stats (operators/webgraph.bfs_closeness,
-privacy.k_anonymity_report, crawl.frontier_shards,
+"""Round-5 batch: k-anonymity audit, crawl sharding, dup-cluster stats
+(operators/privacy.k_anonymity_report, crawl.frontier_shards,
 dedup.component_size_stats)."""
-
-import pytest
-from pyspark.sql import functions as F
 
 from medical_and_charity_document_extraction_system_spark.operators.crawl import frontier_shards
 from medical_and_charity_document_extraction_system_spark.operators.dedup import (
@@ -13,40 +9,6 @@ from medical_and_charity_document_extraction_system_spark.operators.dedup import
 from medical_and_charity_document_extraction_system_spark.operators.privacy import (
     k_anonymity_report,
 )
-from medical_and_charity_document_extraction_system_spark.operators.webgraph import bfs_closeness
-
-
-def _edges(spark, pairs):
-    return spark.createDataFrame(pairs, "src string, dst string")
-
-
-def test_bfs_closeness_path_graph(spark):
-    # a -> b -> c -> d : from a, dists 0,1,2,3 -> sum 6, n 4
-    e = _edges(spark, [("a", "b"), ("b", "c"), ("c", "d")])
-    seeds = spark.createDataFrame([("a",), ("d",)], "node string")
-    got = {r.host: r for r in bfs_closeness(e, seeds, rounds=4).collect()}
-    assert got["a"].n_reached == 4 and got["a"].sum_dist == 6
-    # (4-1)*10000 div 6 = 5000
-    assert got["a"].closeness_bp == 5000
-    # d reaches nothing (directed): n=1, sum=0, bp=0
-    assert got["d"].n_reached == 1 and got["d"].sum_dist == 0
-    assert got["d"].closeness_bp == 0
-
-
-def test_bfs_closeness_shortest_path_wins(spark):
-    # a->b->c and a->c directly: dist(a,c) must be 1, not 2
-    e = _edges(spark, [("a", "b"), ("b", "c"), ("a", "c")])
-    seeds = spark.createDataFrame([("a",)], "node string")
-    r = bfs_closeness(e, seeds, rounds=3).collect()[0]
-    assert r.n_reached == 3 and r.sum_dist == 2
-
-
-def test_bfs_closeness_convergence_assert_fires(spark):
-    # 5-chain needs 4 rounds; 2 rounds must raise, not return partial
-    e = _edges(spark, [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e")])
-    seeds = spark.createDataFrame([("a",)], "node string")
-    with pytest.raises(AssertionError, match="not converged"):
-        bfs_closeness(e, seeds, rounds=2).collect()
 
 
 def test_k_anonymity_report_cells_and_rate(spark):

@@ -73,38 +73,6 @@ def test_resize_degrades_on_bad_payload(spark):
     assert r.image is None and r.error is not None
 
 
-def test_frames_roundtrip_and_sampling(spark):
-    import numpy as np
-
-    from medical_and_charity_document_extraction_system_spark.functions import netpbm
-    from medical_and_charity_document_extraction_system_spark.operators.multimodal import (
-        attach_fake_video,
-        decode_frames,
-        encode_frames,
-        render_page_image,
-        sample_frames,
-    )
-
-    frames = [render_page_image(i, height=16, width=20) for i in range(5)]
-    rt = decode_frames(encode_frames(frames))
-    assert len(rt) == 5 and all(np.array_equal(a, b) for a, b in zip(frames, rt))
-
-    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").limit(30)
-    vids = attach_fake_video(docs)
-    sampled = sample_frames(vids, every_k=2).collect()
-    by_media = {}
-    for r in sampled:
-        by_media.setdefault(r.media_id, []).append(r)
-    for mid, rows in by_media.items():
-        n = 1 + mid % 5
-        assert sorted(r.frame_index for r in rows) == list(range(0, n, 2))
-        assert all(r.n_frames_total == n for r in rows)
-        # kept frame content matches the deterministic renderer
-        r0 = next(r for r in rows if r.frame_index == 0)
-        exp = render_page_image(int(mid) * 31, height=24, width=32)
-        assert np.array_equal(netpbm.decode(bytes(r0.frame)), exp)
-
-
 def test_png_fed_preprocess_matches_netpbm_fed(spark):
     """Same pixels in a PNG container must produce byte-identical
     preprocessing results (dims, skew, steps) and pixel-identical
@@ -179,64 +147,3 @@ def test_decode_image_handles_png_netpbm_jpeg_and_gates_rest():
     with _pytest.raises(NotImplementedError, match="PIL"):
         decode_image(b"II\x00\x00 not any container")  # truly unknown
 
-
-def test_wav_roundtrip_and_foreign_shapes():
-    import struct
-
-    import numpy as np
-    import pytest as _pytest
-
-    from medical_and_charity_document_extraction_system_spark.functions.wavpcm import (
-        WavError, audio_features, decode_wav, encode_wav,
-    )
-
-    rng = np.random.RandomState(1)
-    mono = rng.randint(-30000, 30000, 500).astype(np.int16)
-    stereo = rng.randint(-30000, 30000, (400, 2)).astype(np.int16)
-    s, r = decode_wav(encode_wav(mono, 16000))
-    assert r == 16000 and (s == mono).all()
-    s2, _ = decode_wav(encode_wav(stereo, 44100))
-    assert s2.shape == (400, 2) and (s2 == stereo).all()
-    assert encode_wav(mono) == encode_wav(mono)  # deterministic
-
-    # 8-bit PCM and unknown-chunk skipping (foreign writer shapes)
-    data8 = bytes(range(64))
-    fmt = struct.pack("<HHIIHH", 1, 1, 8000, 8000, 1, 8)
-    junk = b"LIST" + struct.pack("<I", 5) + b"xxxxx\x00"  # odd size, padded
-    body = (b"WAVE" + junk + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(data8)) + data8)
-    wav8 = b"RIFF" + struct.pack("<I", len(body)) + body
-    s8, r8 = decode_wav(wav8)
-    assert r8 == 8000 and s8[0] == (0 - 128) * 256 and s8[-1] == (63 - 128) * 256
-
-    with _pytest.raises(WavError):
-        decode_wav(b"RIFFxxxxNOPE")
-    # compressed format rejected
-    badfmt = struct.pack("<HHIIHH", 7, 1, 8000, 8000, 1, 8)  # mu-law
-    body = (b"WAVE" + b"fmt " + struct.pack("<I", len(badfmt)) + badfmt
-            + b"data" + struct.pack("<I", 2) + b"ab")
-    with _pytest.raises(WavError, match="PCM"):
-        decode_wav(b"RIFF" + struct.pack("<I", len(body)) + body)
-
-    f = audio_features(mono, 16000)
-    assert f["n_samples"] == 500 and f["peak"] == int(np.abs(mono).max())
-
-
-def test_audio_features_catalog_semantics(spark):
-    from medical_and_charity_document_extraction_system_spark.operators.multimodal import (
-        attach_fake_audio, extract_audio_features, synth_audio,
-    )
-
-    docs = spark.range(20).withColumnRenamed("id", "doc_id")
-    out = {r.media_id: r for r in
-           extract_audio_features(attach_fake_audio(docs)).collect()}
-    assert set(out) == set(range(20))
-    for i in range(20):
-        n, p, a = 800 + i % 50, 2 + i % 7, 1000 + i % 500
-        r = out[i]
-        assert r.error is None
-        assert r.n_samples == n and r.peak == a
-        assert r.rms == float(a)                       # square wave: exact
-        assert r.zero_crossings == (n - 1) // p
-        assert r.duration_ms == n * 1000 / 8000
-        assert (synth_audio(i) == synth_audio(i)).all()

@@ -224,22 +224,6 @@ def test_gif_roundtrip_any_paletted_frames(n, h, w, seed):
         assert (a == b).all()
 
 
-@settings(max_examples=30, deadline=None)
-@given(st.integers(1, 300), st.integers(1, 2), st.integers(0, 2**32 - 1))
-def test_wav_roundtrip_any_pcm(n, ch, seed):
-    import numpy as np
-
-    from medical_and_charity_document_extraction_system_spark.functions.wavpcm import (
-        decode_wav, encode_wav,
-    )
-
-    rng = np.random.RandomState(seed)
-    shape = (n,) if ch == 1 else (n, ch)
-    samples = rng.randint(-32768, 32768, shape).astype(np.int16)
-    out, rate = decode_wav(encode_wav(samples, 8000))
-    assert rate == 8000 and out.shape == shape and (out == samples).all()
-
-
 @settings(max_examples=25, deadline=None)
 @given(st.integers(1, 40), st.integers(1, 40), st.integers(0, 2**32 - 1))
 def test_jpeg_decode_total_on_own_encoder(h, w, seed):

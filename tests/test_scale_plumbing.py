@@ -3,12 +3,10 @@ spark-submit job entrypoint."""
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from medical_and_charity_document_extraction_system_spark.plans.checkpoint import (
     run_checkpointed,
-    with_part_id,
 )
 from medical_and_charity_document_extraction_system_spark.plans.metrics import (
     host_quality_metrics,

@@ -2,7 +2,6 @@
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from medical_and_charity_document_extraction_system_spark.operators.similarity import (
     ann_topk_lsh,
@@ -101,79 +100,6 @@ def test_ivf_deterministic_and_normalized(spark, emb):
     assert np.allclose(np.linalg.norm(c1, axis=1), 1.0)
 
 
-def test_ivf_full_probe_equals_brute_force(spark, emb):
-    from medical_and_charity_document_extraction_system_spark.operators.similarity import (
-        ivf_topk,
-        topk_cosine,
-        train_ivf_centroids,
-    )
-
-    q = [float(x) for x in emb.where("vec_id = 0").first().embedding]
-    rest = emb.where("vec_id <> 0")
-    cents = train_ivf_centroids(rest, n_clusters=8)
-    exact = [r.vec_id for r in topk_cosine(rest, q, k=10).collect()]
-    full = [
-        r.vec_id
-        for r in ivf_topk(rest, q, k=10, centroids=cents, nprobe=8).collect()
-    ]
-    assert full == exact  # probing every cluster degenerates to exact
-
-
-def test_ivf_partial_probe_recall(spark, emb):
-    from medical_and_charity_document_extraction_system_spark.operators.similarity import (
-        ivf_topk,
-        topk_cosine,
-        train_ivf_centroids,
-    )
-
-    q = [float(x) for x in emb.where("vec_id = 0").first().embedding]
-    rest = emb.where("vec_id <> 0")
-    cents = train_ivf_centroids(rest, n_clusters=16)
-    exact = {r.vec_id for r in topk_cosine(rest, q, k=10).collect()}
-    approx = {
-        r.vec_id
-        for r in ivf_topk(rest, q, k=10, centroids=cents, nprobe=4).collect()
-    }
-    assert len(exact & approx) >= 6  # recall@10 >= 0.6 probing 1/4 of space
-
-
-def test_ivf_pruned_layout_matches_and_prunes(spark, emb, tmp_path):
-    """The materialized IVF layout: same answer as the on-the-fly
-    operator, and the probe's cluster filter reaches the scan as a
-    partition filter (pruned at file listing — the 100-TB story)."""
-    from medical_and_charity_document_extraction_system_spark.operators.similarity import (
-        ivf_topk,
-        ivf_topk_pruned,
-        train_ivf_centroids,
-        write_ivf_clustered,
-    )
-
-    q = [float(x) for x in emb.where("vec_id = 0").first().embedding]
-    rest = emb.where("vec_id <> 0")
-    cents = train_ivf_centroids(rest, n_clusters=8)
-    path = str(tmp_path / "ivf_layout")
-    write_ivf_clustered(rest, path, cents)
-
-    pruned = ivf_topk_pruned(spark, path, q, cents, k=10, nprobe=2)
-    flying = ivf_topk(rest, q, k=10, centroids=cents, nprobe=2)
-    assert [(r.vec_id, r.cos_sim) for r in pruned.collect()] == [
-        (r.vec_id, r.cos_sim) for r in flying.collect()
-    ]
-    import contextlib
-    import io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        pruned.explain("formatted")
-    plan = buf.getvalue()
-    assert "PartitionFilters" in plan and "_ivf" in plan.split("PartitionFilters", 1)[1]
-    # only the probed clusters' files are listed
-    import glob
-
-    n_cluster_dirs = len(glob.glob(path + "/_ivf=*"))
-    assert n_cluster_dirs > 2  # layout actually split the data
-
-
 def test_exact_near_dup_collect_guard(emb):
     """Above max_broadcast_rows the driver collect must never happen:
     default refuses (naming the scale path), on_overflow='lsh'
@@ -218,163 +144,6 @@ def test_stable_sign_dots_matches_fold_near_zero():
     for i in range(5):
         for j in range(9):
             assert (dots[i, j] >= 0) == (_fold_dot(mat[i], proj[j]) >= 0)
-
-
-def test_ivf_pruned_oracle_generalizes_across_sf(spark):
-    """ann_topk_ivf_sql embeds data-derived centroids; rebuilding it
-    for a DIFFERENT sf (different vectors, different centroids) must
-    still match the Spark pruned IVF bit-for-bit — the construction is
-    a function of the table, not a hardcoded answer."""
-    import duckdb
-
-    from medical_and_charity_document_extraction_system_spark.oracles import ann_topk_ivf_sql
-
-    sf = SF_SMALL
-    import __spark_entry__ as entry
-
-    got = [
-        (r.vec_id, r.cos_sim)
-        for r in entry.q_ann_topk_ivf(spark, sf).collect()
-    ]
-    con = duckdb.connect()
-    con.sql(
-        f"CREATE VIEW embeddings AS SELECT * FROM '{sf}/embeddings.parquet'"
-    )
-    want = [(int(a), float(b)) for a, b in con.sql(ann_topk_ivf_sql(sf_dir=sf)).fetchall()]
-    con.close()
-    assert got == want
-
-
-# ------------------------------------------------------------ SQ8 ANN
-
-
-def test_sq8_quantize_endpoints_and_constant_dim():
-    from medical_and_charity_document_extraction_system_spark.operators.similarity import (
-        sq8_params_from_minmax,
-        sq8_quantize_vec,
-    )
-
-    params = sq8_params_from_minmax([0.0, 5.0], [1.0, 5.0])
-    assert params[1][1] == 0.0  # constant dim -> scale 0
-    assert sq8_quantize_vec([0.0, 5.0], params) == [0, 0]  # min -> 0
-    assert sq8_quantize_vec([1.0, 5.0], params) == [255, 0]  # max -> 255
-    assert sq8_quantize_vec([0.5, 5.0], params) == [128, 0]  # floor(127.5+0.5)
-    # outliers clamp (params may come from a sample at real scale)
-    assert sq8_quantize_vec([9.9, 5.0], params) == [255, 0]
-    assert sq8_quantize_vec([-9.9, 5.0], params) == [0, 0]
-
-
-def test_sq8_topk_recovers_planted_neighbor(spark):
-    from medical_and_charity_document_extraction_system_spark.operators.similarity import (
-        ann_topk_sq8,
-        sq8_params_from_minmax,
-        sq8_quantize_vec,
-    )
-
-    import numpy as np
-
-    rng = np.random.RandomState(7)
-    base = rng.rand(50, 8).astype("float32")
-    # unit-normalize: integer dot then ranks like cosine, so the
-    # planted near-copy must win (raw SQ8 scoring is MIPS semantics)
-    base = (base / np.linalg.norm(base, axis=1, keepdims=True)).astype("float32")
-    q = base[13] + 0.001  # vector 13 is (nearly) the query itself
-    rows = [(int(i), [float(x) for x in v]) for i, v in enumerate(base)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    mins = base.min(axis=0).tolist()
-    maxs = base.max(axis=0).tolist()
-    params = sq8_params_from_minmax([float(x) for x in mins], [float(x) for x in maxs])
-    q_ints = sq8_quantize_vec([float(x) for x in q], params)
-    top = ann_topk_sq8(df, params, q_ints, k=5).collect()
-    assert top[0]["vec_id"] == 13  # the planted neighbor wins
-    # integer scores, descending with deterministic tie-break
-    dots = [r["dot_q"] for r in top]
-    assert dots == sorted(dots, reverse=True)
-    assert all(isinstance(d, int) for d in dots)
-
-
-def test_sq8_scores_partitioning_invariant(spark):
-    from medical_and_charity_document_extraction_system_spark.operators.similarity import (
-        ann_topk_sq8,
-        sq8_params_from_minmax,
-        sq8_quantize_vec,
-    )
-
-    rows = [(i, [float((i * j) % 7) for j in range(4)]) for i in range(30)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    params = sq8_params_from_minmax([0.0] * 4, [6.0] * 4)
-    q_ints = sq8_quantize_vec([3.0, 1.0, 4.0, 1.0], params)
-    a = [tuple(r) for r in ann_topk_sq8(df, params, q_ints, 10).collect()]
-    b = [tuple(r) for r in ann_topk_sq8(df.repartition(8), params, q_ints, 10).collect()]
-    assert a == b
-
-
-# ------------------------------------------------------------- PQ ANN
-
-
-def test_pq_roundtrip_quality_and_determinism(spark):
-    import numpy as np
-
-    from medical_and_charity_document_extraction_system_spark.operators.similarity import (
-        pq_adc_topk,
-        pq_code_margins,
-        pq_codes_np,
-        pq_distance_table_fp,
-        pq_encode,
-        pq_train,
-    )
-
-    rng = np.random.RandomState(3)
-    # 4 well-separated blobs in 16 dims -> PQ must keep blob members
-    # nearest to a query from their own blob
-    centers = rng.rand(4, 16) * 10
-    base = np.vstack([c + rng.rand(25, 16) * 0.1 for c in centers]).astype(
-        "float64"
-    )
-    codebooks = pq_train(base, m=4, k=4)
-    assert pq_code_margins(base, codebooks) > 1e-9
-    rows = [(int(i), [float(x) for x in v]) for i, v in enumerate(base)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    # distributed encoding equals the numpy reference
-    # (float32 storage: quantize the same float32-rounded values)
-    mat32 = np.array([r[1] for r in rows], dtype=np.float32).astype(np.float64)
-    want = pq_codes_np(mat32, codebooks).tolist()
-    got = {
-        r["vec_id"]: list(r["code"]) for r in pq_encode(df, codebooks).collect()
-    }
-    assert [got[i] for i in range(len(rows))] == want
-    # ADC top-10 for a blob-0 query is all blob-0 members
-    q = centers[0] + 0.05
-    dtab = pq_distance_table_fp([float(x) for x in q], codebooks)
-    top = pq_adc_topk(pq_encode(df, codebooks), dtab, k=10).collect()
-    assert all(r["vec_id"] < 25 for r in top)
-    # integer scores ascend with deterministic tie-break
-    fps = [r["adc_fp"] for r in top]
-    assert fps == sorted(fps)
-    # partitioning cannot move a single integer score
-    top8 = pq_adc_topk(pq_encode(df.repartition(8), codebooks), dtab, k=10).collect()
-    assert [tuple(r) for r in top8] == [tuple(r) for r in top]
-
-
-def test_pq_distance_table_is_fixed_point_int(spark):
-    import numpy as np
-
-    from medical_and_charity_document_extraction_system_spark.operators.similarity import (
-        PQ_FP_SCALE,
-        pq_distance_table_fp,
-        pq_train,
-    )
-
-    rng = np.random.RandomState(5)
-    mat = rng.rand(40, 8)
-    cbs = pq_train(mat, m=2, k=4)
-    dtab = pq_distance_table_fp([0.5] * 8, cbs)
-    assert len(dtab) == 2 and all(len(r) == 4 for r in dtab)
-    assert all(isinstance(v, int) and v >= 0 for r in dtab for v in r)
-    # descale recovers the float distance to within half an ulp step
-    q = np.array([0.5] * 4)
-    d0 = float(((q - cbs[0][0]) ** 2).sum())
-    assert abs(dtab[0][0] / PQ_FP_SCALE - d0) <= 1.0 / PQ_FP_SCALE
 
 
 def test_lsh_recall_eval_planted_duplicates_always_hit(spark):

@@ -1,6 +1,5 @@
 """Chunking, URL canonicalization, and redaction operators."""
 
-import numpy as np
 import pytest
 
 from .conftest import SF_SMALL

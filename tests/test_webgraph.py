@@ -136,51 +136,6 @@ def test_crawl_frontier_composition(spark):
     assert all(r["rank_units"] > 0 for r in rows)
 
 
-def test_pagerank_converged_matches_unrolled_k(spark):
-    """Convergence-driven mode: a 4-cycle reaches an EXACT integer
-    fixed point well before max_iter; the result must be bit-equal to
-    pagerank_fixed unrolled to the same round count."""
-    from medical_and_charity_document_extraction_system_spark.operators.webgraph import (
-        pagerank_converged,
-        pagerank_fixed,
-    )
-
-    edges = spark.createDataFrame(
-        [(i, (i + 1) % 4) for i in range(4)], "src long, dst long"
-    )
-    ranks, k = pagerank_converged(edges, max_iter=50)
-    assert 0 < k < 50  # converged, did not exhaust the budget
-    got = {r.node: r.rank_units for r in ranks.collect()}
-    want = {
-        r.node: r.rank_units for r in pagerank_fixed(edges, iterations=k).collect()
-    }
-    assert got == want
-    # symmetric cycle: all four ranks identical, and stable one more round
-    assert len(set(got.values())) == 1
-    again = {
-        r.node: r.rank_units
-        for r in pagerank_fixed(edges, iterations=k + 1).collect()
-    }
-    assert again == got
-
-
-def test_pagerank_converged_respects_max_iter(spark):
-    from medical_and_charity_document_extraction_system_spark.operators.webgraph import (
-        pagerank_converged,
-        pagerank_fixed,
-    )
-
-    edges = spark.createDataFrame(
-        [(0, 1), (1, 2), (2, 0), (0, 2)], "src long, dst long"
-    )
-    ranks, k = pagerank_converged(edges, max_iter=2)
-    assert k == 2
-    want = {
-        r.node: r.rank_units for r in pagerank_fixed(edges, iterations=2).collect()
-    }
-    assert {r.node: r.rank_units for r in ranks.collect()} == want
-
-
 def test_hits_hubs_and_authorities_structure(spark):
     """A node everyone links to is the top authority; a node that
     only links out is a pure hub (authority 0); L1 normalization
@@ -383,27 +338,6 @@ def test_kcore_ignores_self_loops_and_duplicates(spark):
     assert got == {"a": 2, "b": 2, "c": 2}
 
 
-def test_reciprocity_counts_and_full_outer_hosts(spark):
-    from medical_and_charity_document_extraction_system_spark.operators.webgraph import (
-        link_reciprocity,
-    )
-
-    # a<->b reciprocated, a->c one-way, c has no out-edges at all;
-    # self-loop and duplicate edges must not count
-    pairs = [
-        ("a", "b"), ("b", "a"), ("a", "c"), ("a", "c"), ("b", "b"),
-    ]
-    out = {
-        r.host: (r.out_deg, r.in_deg, r.n_reciprocal, r.reciprocity_bp)
-        for r in link_reciprocity(_edges(spark, pairs)).collect()
-    }
-    assert out == {
-        "a": (2, 1, 1, 5000),
-        "b": (1, 1, 1, 10000),
-        "c": (0, 1, 0, 0),
-    }
-
-
 def test_ktruss_keeps_clique_peels_pendant_triangle(spark):
     from medical_and_charity_document_extraction_system_spark.operators.webgraph import (
         ktruss_fixed,
@@ -453,40 +387,3 @@ def test_ktruss_rejects_k_below_3(spark):
     with pytest.raises(ValueError):
         ktruss_fixed(_edges(spark, [("a", "b")]), k=2, rounds=2)
 
-
-def test_anf_exact_ball_on_a_path(spark):
-    from medical_and_charity_document_extraction_system_spark.operators.webgraph import (
-        neighborhood_anf,
-    )
-
-    # path a-b-c-d-e: radius-2 balls are 3/4/5/4/3 nodes (incl. self)
-    pairs = [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e")]
-    out = {
-        r.node: r for r in neighborhood_anf(_edges(spark, pairs)).collect()
-    }
-    assert {n: r.n_exact for n, r in out.items()} == {
-        "a": 3, "b": 4, "c": 5, "d": 4, "e": 3,
-    }
-    for r in out.values():
-        # tiny sets: every member lands its own register, so the raw
-        # estimate is a pure function of n_buckets — just pin sanity
-        assert 1 <= r.n_buckets <= r.n_exact
-        assert r.hll_estimate > 0.0
-
-
-def test_anf_estimate_only_form_matches_sketch_columns(spark):
-    from medical_and_charity_document_extraction_system_spark.operators.webgraph import (
-        neighborhood_anf,
-    )
-
-    pairs = [("a", "b"), ("b", "c")]
-    df = _edges(spark, pairs)
-    full = {
-        r.node: (r.n_buckets, r.n_empty, r.hll_estimate)
-        for r in neighborhood_anf(df).collect()
-    }
-    sketch_only = {
-        r.node: (r.n_buckets, r.n_empty, r.hll_estimate)
-        for r in neighborhood_anf(df, with_exact=False).collect()
-    }
-    assert full == sketch_only
