@@ -11,6 +11,13 @@ Replaces the reference's uvicorn/FastAPI serving layer
 (main.py:82-88): one batch job = one resumable run over an input
 table, with salted repartition, checkpointed buckets, and metrics
 writes.
+
+``--partitions`` repartitions the input before extraction. Without
+heavy hosts the layout is the url hash the checkpoint buckets on, so
+when ``--partitions`` divides ``--buckets`` every bucket lives in one
+task and the write makes ``--buckets`` files, not
+``--partitions`` x ``--buckets``. A re-run whose buckets are all in the
+manifest extracts nothing and writes no metrics.
 """
 
 from __future__ import annotations
@@ -70,20 +77,20 @@ def build_parser() -> argparse.ArgumentParser:
 def choose_layout(
     pages: DataFrame, partitions: int | None, salt_buckets: int
 ) -> tuple[DataFrame, list[str]]:
-    """north_rule partitioning: detect heavy hosts on a seeded sample
-    FIRST, then repartition once. With heavy hosts the layout is
-    host-grouped with the heavy keys salted across
+    """north_rule partitioning: when ``partitions`` is set, detect heavy
+    hosts on a seeded sample FIRST, then repartition once. With heavy
+    hosts the layout is host-grouped with the heavy keys salted across
     pmod(xxhash64(url), salt_buckets) — host locality for downstream
     per-host ops without the 40%-of-rows-in-one-task penalty; with no
     skew detected, uniform url-hash (perfect balance for the per-row
-    extraction map). Returns (repartitioned_df, heavy_hosts)."""
+    extraction map). Without ``partitions`` the input layout is kept
+    and no probe runs. Returns (repartitioned_df, heavy_hosts)."""
+    if not partitions:
+        return pages, []
     heavy = find_heavy_hosts(pages, sample_fraction=0.1)
-    if partitions:
-        if heavy:
-            pages = salted_host_repartition(pages, partitions, heavy, salt_buckets)
-        else:
-            pages = repartition_by_url(pages, partitions)
-    return pages, heavy
+    if heavy:
+        return salted_host_repartition(pages, partitions, heavy, salt_buckets), heavy
+    return repartition_by_url(pages, partitions), heavy
 
 
 def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> dict:
@@ -106,22 +113,23 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> di
             spark, pages, args.output, args.manifest, args.run_id,
             n_buckets=args.buckets, cfg=cfg,
         )
-        extracted = spark.read.parquet(args.output)
-        write_metrics(partition_metrics(extracted, args.run_id), args.metrics)
-        write_metrics(
-            host_quality_metrics(extracted, args.run_id), args.metrics + "_hosts"
-        )
         snapshot_id = None
-        if args.snapshot_table and done:
-            from pyspark.sql import functions as F
-
-            from medical_and_charity_document_extraction_system_spark.plans.snapstore import (
-                SnapshotTable,
+        if done:  # a no-op re-run already has its metrics and snapshot
+            extracted = spark.read.parquet(args.output)
+            write_metrics(partition_metrics(extracted, args.run_id), args.metrics)
+            write_metrics(
+                host_quality_metrics(extracted, args.run_id), args.metrics + "_hosts"
             )
+            if args.snapshot_table:
+                from pyspark.sql import functions as F
 
-            snapshot_id = SnapshotTable(spark, args.snapshot_table).commit(
-                extracted.where(F.col("part_id").isin(done)), "append"
-            )
+                from medical_and_charity_document_extraction_system_spark.plans.snapstore import (
+                    SnapshotTable,
+                )
+
+                snapshot_id = SnapshotTable(spark, args.snapshot_table).commit(
+                    extracted.where(F.col("part_id").isin(done)), "append"
+                )
         return {
             "completed_parts": done,
             "heavy_hosts": heavy,

@@ -30,7 +30,7 @@ int64, i.e. n_nodes * 10^6 < 10^17 — fine up to 10^11 nodes
 Scale shape (10^12 pages): outlink extraction is a zero-shuffle
 projection. PageRank shuffles the edge list once per iteration
 (join on src, agg on dst) — the standard distributed PageRank plan;
-pre-partitioning edges and ranks on the node key (plans/bucketing.py)
+pre-partitioning edges and ranks on the node key (a bucketed table)
 makes the per-iteration join co-located, leaving only the inflow agg
 shuffle. ``pagerank_fixed`` runs a fixed unrolled K (the oracle needs a
 finite SQL twin) and cuts the round lineage every five rounds.

@@ -5,12 +5,17 @@ NotImplementedError) and its glob-based sequential task counter
 (json_utils.py:13-32 — a global serialization bottleneck and race) are
 replaced by deterministic work partitioning:
 
-- every url maps to a stable ``part_id = pmod(xxhash64(url), n_buckets)``
+- every url maps to a stable ``part_id = pmod(hash(url), n_buckets)``
+  — Murmur3 seed 42, the very expression Spark's hash partitioner
+  evaluates, so ``salting.repartition_by_url(df, p)`` with ``p``
+  dividing ``n_buckets`` puts each bucket in exactly one task and the
+  write makes one file per bucket
 - a **manifest** table records (run_id, part_id, completed_ts) per
-  completed bucket
-- resume = input anti-joined against the manifest on part_id — the one
-  join this engine introduces (SURVEY.md section 2.8); the manifest is
-  tiny (n_buckets rows) and always broadcast.
+  completed bucket; it holds at most ``n_buckets`` rows per run
+- resume = a set difference on the driver: the buckets not in the
+  manifest are the ones to run, and the input is filtered to them with
+  ``isin`` — no join, and no scan of the input when nothing remains.
+  A bucket no url hashes to counts as complete.
 
 Output is written partitioned by part_id so a re-run of bucket B
 replaces exactly bucket B's files (dynamic partition overwrite), making
@@ -21,30 +26,29 @@ commits.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import datetime
+
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, ExtractionConfig
+from ..schema import MANIFEST_SCHEMA
 from .pipeline import run_extraction
 
 
-def with_part_id(df: DataFrame, n_buckets: int) -> DataFrame:
-    return df.withColumn("part_id", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int"))
+def url_bucket(n_buckets: int) -> Column:
+    """The checkpoint bucket of ``url``: the partition Spark's hash
+    partitioner gives it among ``n_buckets`` partitions."""
+    return F.pmod(F.hash("url"), F.lit(n_buckets))
 
 
 def read_manifest(spark: SparkSession, manifest_dir: str, run_id: str) -> DataFrame:
     try:
-        m = spark.read.parquet(manifest_dir)
-    except Exception:
-        return spark.createDataFrame([], "run_id string, part_id int, completed_ts timestamp")
+        m = spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_dir)
+    except AnalysisException:  # no run has completed a bucket yet
+        return spark.createDataFrame([], MANIFEST_SCHEMA)
     return m.where(F.col("run_id") == run_id)
-
-
-def remaining_parts(
-    pages_with_part: DataFrame, manifest: DataFrame
-) -> DataFrame:
-    done = manifest.select("part_id").distinct()
-    return pages_with_part.join(F.broadcast(done), "part_id", "left_anti")
 
 
 def run_checkpointed(
@@ -60,29 +64,21 @@ def run_checkpointed(
     """Process all not-yet-completed buckets (optionally restricted to
     ``only_parts`` — the test hook that simulates a mid-run kill).
     Returns the list of part_ids completed in this invocation."""
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    tagged = with_part_id(pages, n_buckets)
-    manifest = read_manifest(spark, manifest_dir, run_id)
-    todo = remaining_parts(tagged, manifest)
-    if only_parts is not None:
-        todo = todo.where(F.col("part_id").isin(only_parts))
-
-    part_ids = [r.part_id for r in todo.select("part_id").distinct().collect()]
-    if not part_ids:
+    done = {r.part_id for r in read_manifest(spark, manifest_dir, run_id).collect()}
+    wanted = set(range(n_buckets) if only_parts is None else only_parts)
+    remaining = sorted((set(range(n_buckets)) - done) & wanted)
+    if not remaining:
         return []
 
-    out = run_extraction(todo.drop("part_id"), cfg)
-    out = with_part_id(out, n_buckets)
-    (
-        out.write.mode("overwrite")
-        .partitionBy("part_id")
-        .parquet(out_dir)
-    )
-    rows = [(run_id, int(p)) for p in sorted(part_ids)]
-    (
-        spark.createDataFrame(rows, "run_id string, part_id int")
-        .withColumn("completed_ts", F.current_timestamp())
-        .write.mode("append")
-        .parquet(manifest_dir)
-    )
-    return sorted(part_ids)
+    bucket = url_bucket(n_buckets)
+    if len(remaining) < n_buckets:
+        pages = pages.where(bucket.isin(remaining))
+    out = run_extraction(pages, cfg).withColumn("part_id", bucket)
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    out.write.mode("overwrite").partitionBy("part_id").parquet(out_dir)
+
+    now = datetime.datetime.now()
+    spark.createDataFrame(
+        [(run_id, p, now) for p in remaining], MANIFEST_SCHEMA
+    ).write.mode("append").parquet(manifest_dir)
+    return remaining

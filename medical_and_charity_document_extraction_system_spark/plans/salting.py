@@ -4,21 +4,27 @@ The input is url-keyed; hosts are Zipf-skewed (a handful of hosts can
 dominate — sources/pages.py plants host0 at ~40% to exercise this).
 Plain DataFrame code, no custom Catalyst rules (SURVEY.md section 4):
 
-- ``repartition_by_url``      — uniform spread by ``xxhash64(url)``;
-  the right choice for the extraction map stages (no key locality
-  needed, perfect balance).
+- ``repartition_by_url``      — uniform spread by Spark's hash
+  partitioner on ``url``: the right choice for the extraction map
+  stages (no key locality needed, perfect balance), and the same
+  ``pmod(hash(url), n)`` the checkpoint buckets on, so a width that
+  divides the bucket count keeps each bucket in one task.
 - ``find_heavy_hosts``        — heavy-hitter detection on a sample
   (one small agg, collected to the driver; the list is tiny).
 - ``salted_host_repartition`` — host-grouped layout where heavy hosts
   are split across ``salt_buckets`` partitions via
   ``pmod(xxhash64(url), k)``.
-- ``salted_host_agg``         — the canonical skew-safe two-phase
-  aggregation: partial agg by (host, salt), final agg by host. Turns
-  one 40%-of-data reducer into ``salt_buckets`` parallel ones.
+- ``skew_safe_bucket_self_join`` — the LSH candidate self-join with
+  degenerate buckets split across salted reducers.
+
+Per-host aggregations need no salting: Spark's ``HashAggregate``
+already runs a partial aggregate in every map task before the host
+shuffle, so a 40%-of-rows host reaches its reducer as one partial row
+per task.
 
 AQE (enabled in config.spark_conf_overrides) additionally rebalances
 post-shuffle partitions at runtime; explicit salting covers the
-single-hot-key case AQE cannot split for aggregations.
+single-hot-key layouts and joins AQE cannot split.
 """
 
 from __future__ import annotations
@@ -32,7 +38,7 @@ def host_of(url: Column) -> Column:
 
 
 def repartition_by_url(df: DataFrame, num_partitions: int) -> DataFrame:
-    return df.repartition(num_partitions, F.xxhash64("url"))
+    return df.repartition(num_partitions, "url")
 
 
 def find_heavy_hosts(
@@ -104,8 +110,7 @@ def skew_safe_bucket_self_join(
        bucket's work spreads over ``k`` reducers, each holding 1/k of
        the left rows. Every pair still appears exactly once (a pair
        joins only at the left row's own salt), so results are
-       IDENTICAL to the plain join — only the shuffle shape changes
-       (the same contract as salted_host_agg).
+       IDENTICAL to the plain join — only the shuffle shape changes.
 
     Quadratic OUTPUT within a hot bucket is inherent to LSH candidate
     semantics and is not changed here — callers that want to drop
@@ -172,23 +177,3 @@ def skew_safe_bucket_self_join(
     hot_pairs = pair_join(a_salted, b_salted, bucket_cols + ["_salt"])
     return cold_pairs.unionByName(hot_pairs)
 
-
-def salted_host_agg(
-    df: DataFrame,
-    heavy_hosts: list[str],
-    salt_buckets: int = 8,
-) -> DataFrame:
-    """Per-host row counts + byte totals, skew-safe: partial agg on
-    (host, salt), final agg on host. Result is identical to a direct
-    groupBy(host) — only the shuffle shape changes."""
-    salted = df.select(
-        host_of(F.col("url")).alias("host"),
-        salt_column(F.col("url"), heavy_hosts, salt_buckets).alias("_salt"),
-        F.length("text").alias("_chars"),
-    )
-    partial = salted.groupBy("host", "_salt").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("_chars").alias("chars")
-    )
-    return partial.groupBy("host").agg(
-        F.sum("n").alias("n_docs"), F.sum("chars").alias("total_chars")
-    )

@@ -1,6 +1,6 @@
 """Z-order (Morton curve) clustering for multi-dimension data skipping.
 
-Partition pruning (plans/bucketing.py) skips on ONE
+Partition pruning skips on ONE
 key. A crawl table is queried by host AND by time; sorting by either
 leaves the other scattered across every file. Z-ordering interleaves
 the bits of both dimensions and sorts by the interleaved value, so

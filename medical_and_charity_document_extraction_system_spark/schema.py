@@ -87,17 +87,7 @@ EXTRACTION_SCHEMA = T.StructType(
 )
 
 # ------------------------------------------------------- auxiliary tables
-METRICS_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("docs_in", T.LongType(), True),
-        T.StructField("docs_ok", T.LongType(), True),
-        T.StructField("docs_error", T.LongType(), True),
-        T.StructField("chars_out", T.LongType(), True),
-    ]
-)
-
+# one row per completed checkpoint bucket (plans/checkpoint.py)
 MANIFEST_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType(), False),

@@ -8,6 +8,8 @@ from pyspark.sql import SparkSession
 
 from .config import DEFAULT_CONFIG, ExtractionConfig, spark_conf_overrides
 
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def default_cpus() -> str:
     """local[] width: ``SPARK_GRAFT_CPUS`` when set, else the number of
@@ -37,6 +39,12 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", default_mem))
         .config("spark.ui.enabled", "false")
+        # Python workers import this package by name: put its parent
+        # directory (or its --py-files zip) on their path, so a driver
+        # started from any directory needs no PYTHONPATH
+        .config("spark.executorEnv.PYTHONPATH", os.pathsep.join(
+            p for p in (PACKAGE_PARENT, os.environ.get("PYTHONPATH")) if p
+        ))
     )
     for k, v in spark_conf_overrides(cfg).items():
         builder = builder.config(k, v)

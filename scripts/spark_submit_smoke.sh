@@ -1,6 +1,7 @@
 #!/usr/bin/env bash
 # North-rule launch path: package the library, launch the batch job via
-# spark-submit --py-files, verify outputs + manifest + metrics land.
+# spark-submit --py-files, verify outputs + manifest + metrics land, then
+# launch it again and verify the re-run redoes nothing.
 set -euo pipefail
 
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
@@ -22,18 +23,25 @@ synthesize_pages(spark, "/root/testdata/sf0.001").write.parquet(f"{work}/pages")
 spark.stop()
 EOF
 
-spark-submit \
-  --master 'local[8]' \
-  --conf spark.ui.enabled=false \
-  --py-files "$WORK/mcdes_spark.zip" \
-  medical_and_charity_document_extraction_system_spark/job.py \
-  --input "$WORK/pages" \
-  --output "$WORK/out" \
-  --metrics "$WORK/metrics" \
-  --manifest "$WORK/manifest" \
-  --run-id smoke1 \
-  --buckets 16 \
-  --snapshot-table "$WORK/snaptbl" 2>&1 | tail -2
+submit() {
+  spark-submit \
+    --master 'local[8]' \
+    --conf spark.ui.enabled=false \
+    --py-files "$WORK/mcdes_spark.zip" \
+    medical_and_charity_document_extraction_system_spark/job.py \
+    --input "$WORK/pages" \
+    --output "$WORK/out" \
+    --metrics "$WORK/metrics" \
+    --manifest "$WORK/manifest" \
+    --run-id smoke1 \
+    --buckets 16 \
+    --snapshot-table "$WORK/snaptbl" 2>&1 | tail -2
+}
+
+# the second launch finds every bucket in the manifest and must redo
+# nothing: no manifest rows, metrics or snapshot are added
+submit
+submit
 
 python - "$WORK" <<'EOF'
 import sys
@@ -51,5 +59,6 @@ assert log[-1]["snapshot_id"] == 1 and log[-1]["operation"] == "append", log
 s = duckdb.sql(f"select count(*) from read_parquet('{work}/snaptbl/data/*.parquet')").fetchone()[0]
 assert s == 500, s
 print(f"spark-submit smoke OK: {n} docs extracted, {m} manifest buckets, "
-      f"metrics docs_in={x}, snapshot 1 committed with {s} rows")
+      f"metrics docs_in={x}, snapshot 1 committed with {s} rows; "
+      f"the no-op second launch added nothing")
 EOF

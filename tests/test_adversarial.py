@@ -8,7 +8,6 @@ import pytest
 from pyspark.sql import types as T
 
 from medical_and_charity_document_extraction_system_spark.plans import run_extraction
-from medical_and_charity_document_extraction_system_spark.schema import PAGES_SCHEMA
 
 NASTY = [
     b"\x00\xff\xfe garbage \x80\x81",                 # not utf-8
@@ -103,7 +102,6 @@ def test_media_decoders_never_crash_uncontrolled():
     from medical_and_charity_document_extraction_system_spark.functions import (
         gif, jpeg, minipdf, netpbm, png,
     )
-    from medical_and_charity_document_extraction_system_spark.sources import warc
 
     img = (np.arange(240, dtype=np.uint8).reshape(12, 20) * 3) % 256
     rgb = np.stack([img] * 3, axis=2)

@@ -1,8 +1,6 @@
 """C4 cleanup (functions/c4.py), CCNet buckets (operators/ccnet.py),
 sequence packing (operators/packing.py)."""
 
-from pyspark.sql import functions as F
-
 from medical_and_charity_document_extraction_system_spark.functions.c4 import c4_clean
 from medical_and_charity_document_extraction_system_spark.operators.ccnet import ccnet_buckets
 from medical_and_charity_document_extraction_system_spark.operators.lm import (

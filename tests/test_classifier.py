@@ -1,9 +1,6 @@
 """NB log-odds quality classifier (operators/classifier.py)."""
 
-import pyspark.sql.functions as F
-
 from medical_and_charity_document_extraction_system_spark.operators.classifier import (
-    NB_BUCKETS,
     nb_scores,
     nb_weights_from_counts,
     train_nb_classifier,

@@ -1,7 +1,6 @@
 """Dedup operators: planted near-duplicates with pure-Python oracles."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from medical_and_charity_document_extraction_system_spark.operators.dedup import (
     exact_dedup,
@@ -348,8 +347,6 @@ def test_signature_store_upsert_revision_aware(spark, tmp_path):
     append-only), read serves only the latest generation, and the
     incremental run emits the revised doc's fresh pairs instead of
     silently keeping the stale signature (r4 review finding)."""
-    from pyspark.sql import functions as F
-
     from medical_and_charity_document_extraction_system_spark.operators.dedup import (
         incremental_minhash_near_dup,
         read_signature_store,

@@ -45,10 +45,16 @@ def _rows(rows):
 QUERY_NAMES = sorted(entry_mod.queries())
 
 
+@pytest.fixture(scope="module")
+def oracles():
+    # building the oracle dict takes ~70 s: once per module, not per row
+    return entry_mod.oracle_sql()
+
+
 @pytest.mark.parametrize("name", QUERY_NAMES)
-def test_query_matches_oracle(spark, ddb, name):
+def test_query_matches_oracle(spark, ddb, oracles, name):
     q = entry_mod.queries()[name]
-    sql = entry_mod.oracle_sql()[name]
+    sql = oracles[name]
     sdf = q(spark, SF_ORACLE)
     got_cols = [c.lower() for c in sdf.columns]
     got = _rows([tuple(r) for r in sdf.collect()])

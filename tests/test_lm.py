@@ -2,8 +2,6 @@
 
 import math
 
-import pyspark.sql.functions as F
-
 from medical_and_charity_document_extraction_system_spark.operators.lm import (
     train_unigram_lm,
     unigram_lm_scores,

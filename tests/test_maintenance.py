@@ -92,7 +92,6 @@ def test_assign_split_partitions_everything(spark):
     from medical_and_charity_document_extraction_system_spark.operators.sampling import (
         assign_split,
     )
-    from pyspark.sql import functions as F
 
     df = spark.range(10000).withColumnRenamed("id", "doc_id")
     out = assign_split(df, "doc_id")

@@ -71,39 +71,6 @@ def test_dedup_paths_never_cartesian(spark, name):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_bucketed_layout_removes_join_exchange(spark, tmp_path):
-    """The 100-TB join story: a self-join on the bucket key plans NO
-    Exchange over the bucketed table, while the same join over plain
-    parquet shuffles both sides."""
-    from pyspark.sql import functions as F
-
-    from medical_and_charity_document_extraction_system_spark.plans.bucketing import (
-        bucketed_join_is_shuffle_free,
-        write_bucketed,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    # AQE broadcast would hide the effect at this tiny scale: force
-    # the sort-merge path the big-table case takes
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        write_bucketed(docs, "docs_bkt", ["doc_id"], n_buckets=8,
-                       sort_cols=["doc_id"])
-        assert bucketed_join_is_shuffle_free(spark, "docs_bkt", "doc_id")
-        # contrast: plain parquet plans Exchanges for the same join
-        plain = docs.alias("a").join(docs.alias("b"), "doc_id")
-        plan = plain._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" in plan
-        # and the bucketed join result is identical
-        t = spark.table("docs_bkt")
-        n_b = t.alias("a").join(t.alias("b"), "doc_id").count()
-        assert n_b == plain.count() == docs.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.sql("DROP TABLE IF EXISTS docs_bkt")
-
-
 def test_decontamination_broadcasts_benchmark_grams(spark):
     """The benchmark side (eval-suite-sized) must broadcast so the
     corpus never shuffles on the gram key; the only corpus shuffle is

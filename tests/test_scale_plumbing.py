@@ -14,7 +14,6 @@ from medical_and_charity_document_extraction_system_spark.plans.metrics import (
 )
 from medical_and_charity_document_extraction_system_spark.plans.salting import (
     find_heavy_hosts,
-    salted_host_agg,
     salted_host_repartition,
     repartition_by_url,
 )
@@ -51,24 +50,6 @@ def test_salted_repartition_splits_heavy_host(pages_small):
     )
     # without salting host0's ~200 rows land in one partition
     assert sizes < 150
-
-
-def test_salted_agg_equals_plain_agg(pages_small):
-    heavy = ["host0.example.com"]
-    salted = {
-        (r.host, r.n_docs, r.total_chars)
-        for r in salted_host_agg(pages_small.fillna({"text": ""}), heavy).collect()
-    }
-    from medical_and_charity_document_extraction_system_spark.plans.salting import host_of
-
-    plain = {
-        (r.host, r.n, r.c)
-        for r in pages_small.fillna({"text": ""})
-        .groupBy(host_of(F.col("url")).alias("host"))
-        .agg(F.count(F.lit(1)).alias("n"), F.sum(F.length("text")).alias("c"))
-        .collect()
-    }
-    assert salted == plain
 
 
 def test_job_layout_applies_salting_under_skew(pages_small):
@@ -187,6 +168,7 @@ def test_job_entrypoint(spark, pages_small, tmp_path):
             "--manifest", str(tmp_path / "job_manifest"),
             "--run-id", "jobrun",
             "--buckets", "8",
+            "--partitions", "8",
         ],
         spark=spark,
     )
@@ -197,6 +179,68 @@ def test_job_entrypoint(spark, pages_small, tmp_path):
     assert out.count() == 500
     metrics = spark.read.parquet(str(tmp_path / "job_metrics"))
     assert metrics.agg(F.sum("docs_in")).first()[0] == 500
+
+
+def _job_args(tmp_path, inp, buckets, partitions=None):
+    args = [
+        "--input", inp,
+        "--output", str(tmp_path / "job_out"),
+        "--metrics", str(tmp_path / "job_metrics"),
+        "--manifest", str(tmp_path / "job_manifest"),
+        "--run-id", "jobrun",
+        "--buckets", str(buckets),
+    ]
+    return args + ["--partitions", str(partitions)] if partitions else args
+
+
+def _flat_pages(spark, tmp_path):
+    """200 skew-free urls (one host each) as a pages parquet input."""
+    rows = [(f"https://host{i}.example.com/doc/{i}", f"t{i}") for i in range(200)]
+    inp = str(tmp_path / "flat_in")
+    spark.createDataFrame(rows, "url string, text string").write.parquet(inp)
+    return inp
+
+
+def test_url_layout_aligns_with_checkpoint_buckets(spark, tmp_path):
+    """repartition_by_url and the checkpoint bucket are one hash: with
+    the width dividing the bucket count each bucket sits in one task,
+    so the job writes one file per bucket."""
+    import glob
+
+    from medical_and_charity_document_extraction_system_spark.job import main
+    from medical_and_charity_document_extraction_system_spark.plans.checkpoint import (
+        url_bucket,
+    )
+
+    inp = _flat_pages(spark, tmp_path)
+    laid_out = repartition_by_url(spark.read.parquet(inp), 4)
+    misplaced = laid_out.where(
+        url_bucket(8) % 4 != F.spark_partition_id()
+    ).count()
+    assert misplaced == 0
+
+    res = main(_job_args(tmp_path, inp, buckets=8, partitions=4), spark=spark)
+    assert res["heavy_hosts"] == []
+    out = str(tmp_path / "job_out")
+    dirs = sorted(glob.glob(f"{out}/part_id=*"))
+    assert [d.rsplit("=", 1)[1] for d in dirs] == [str(b) for b in range(8)]
+    for d in dirs:
+        assert len(glob.glob(f"{d}/*.parquet")) == 1, d
+
+
+def test_job_noop_rerun_keeps_metrics(spark, tmp_path):
+    """A re-run whose buckets are all in the manifest redoes nothing
+    and appends no second copy of the metrics."""
+    from medical_and_charity_document_extraction_system_spark.job import main
+
+    inp = _flat_pages(spark, tmp_path)
+    args = _job_args(tmp_path, inp, buckets=8)
+    assert main(args, spark=spark)["completed_parts"] == list(range(8))
+    assert main(args, spark=spark)["completed_parts"] == []
+    metrics = spark.read.parquet(str(tmp_path / "job_metrics"))
+    assert metrics.agg(F.sum("docs_in")).first()[0] == 200
+    hosts = spark.read.parquet(str(tmp_path / "job_metrics_hosts"))
+    assert hosts.agg(F.sum("docs")).first()[0] == 200
 
 
 def test_host_rate_stream_windowed_counts(spark, pages_small, tmp_path):

@@ -3,7 +3,6 @@ k-token-span (Lee et al. 2022-style) exact deduplication
 (operators/textdedup.py)."""
 
 import pyspark.sql.functions as F
-import pytest
 
 from medical_and_charity_document_extraction_system_spark.operators.textdedup import (
     paragraph_dedup,

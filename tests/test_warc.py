@@ -3,8 +3,6 @@
 import datetime
 import gzip
 
-import pytest
-
 from medical_and_charity_document_extraction_system_spark.sources.warc import (
     _gunzip_members,
     build_warc_record,
