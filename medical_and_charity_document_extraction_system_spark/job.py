@@ -18,6 +18,11 @@ when ``--partitions`` divides ``--buckets`` every bucket lives in one
 task and the write makes ``--buckets`` files, not
 ``--partitions`` x ``--buckets``. A re-run whose buckets are all in the
 manifest extracts nothing and writes no metrics.
+
+The session this entrypoint builds for itself keeps Spark's stock
+Python worker daemon, not ``get_spark``'s ``worker_daemon``: on a
+cluster ``--py-files`` reach an executor only with its tasks, so the
+package may not be importable yet when the daemon starts there.
 """
 
 from __future__ import annotations
@@ -34,6 +39,7 @@ from medical_and_charity_document_extraction_system_spark.config import (
     spark_conf_overrides,
 )
 from medical_and_charity_document_extraction_system_spark.plans.checkpoint import (
+    read_output,
     run_checkpointed,
 )
 from medical_and_charity_document_extraction_system_spark.plans.metrics import (
@@ -115,7 +121,7 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> di
         )
         snapshot_id = None
         if done:  # a no-op re-run already has its metrics and snapshot
-            extracted = spark.read.parquet(args.output)
+            extracted = read_output(spark, args.output)
             write_metrics(partition_metrics(extracted, args.run_id), args.metrics)
             write_metrics(
                 host_quality_metrics(extracted, args.run_id), args.metrics + "_hosts"

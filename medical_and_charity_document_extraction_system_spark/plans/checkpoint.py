@@ -31,9 +31,10 @@ import datetime
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..config import DEFAULT_CONFIG, ExtractionConfig
-from ..schema import MANIFEST_SCHEMA
+from ..schema import EXTRACTION_SCHEMA, MANIFEST_SCHEMA
 from .pipeline import run_extraction
 
 
@@ -41,6 +42,18 @@ def url_bucket(n_buckets: int) -> Column:
     """The checkpoint bucket of ``url``: the partition Spark's hash
     partitioner gives it among ``n_buckets`` partitions."""
     return F.pmod(F.hash("url"), F.lit(n_buckets))
+
+
+# what run_checkpointed writes: the extraction records plus their bucket
+OUTPUT_SCHEMA = T.StructType(
+    EXTRACTION_SCHEMA.fields + [T.StructField("part_id", T.IntegerType(), True)]
+)
+
+
+def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
+    """The checkpointed output, read with its known schema: a run over
+    an empty input writes no data file to infer one from."""
+    return spark.read.schema(OUTPUT_SCHEMA).parquet(out_dir)
 
 
 def read_manifest(spark: SparkSession, manifest_dir: str, run_id: str) -> DataFrame:

@@ -45,6 +45,12 @@ def get_spark(
         .config("spark.executorEnv.PYTHONPATH", os.pathsep.join(
             p for p in (PACKAGE_PARENT, os.environ.get("PYTHONPATH")) if p
         ))
+        # the worker daemon keeps zip directories cached: stock workers
+        # re-read pyspark.zip's directory ~16 times per task before
+        # Python 3.13 (worker_daemon.py). It rides with the PYTHONPATH
+        # above, which is what makes it importable when the daemon
+        # starts; job.main under spark-submit keeps the stock daemon
+        .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
     )
     for k, v in spark_conf_overrides(cfg).items():
         builder = builder.config(k, v)

@@ -1,0 +1,73 @@
+"""Python worker daemon: ``pyspark.daemon`` with zip directories cached.
+
+``get_spark`` names this module as ``spark.python.daemon.module``, so
+Spark starts it in place of ``pyspark.daemon``; ``sys.argv[1]``, the
+worker module, passes through unchanged.
+
+Every task a Python worker runs calls ``importlib.invalidate_caches()``
+(``pyspark.worker_util.setup_spark_files``). Before Python 3.13,
+``zipimport.zipimporter.invalidate_caches`` re-reads the archive's
+whole central directory, once per zipimporter instance: the workers
+import pyspark from ``pyspark.zip`` (1,328 entries, ~5.6 ms a read)
+through ~16 instances, one per subpackage, so each task spent
+0.15-0.25 s of CPU before its first row. The replacement installed
+here re-reads an archive only when its file changed on disk since this
+process last read it; otherwise the instance takes the directory
+already in ``zipimport._zip_directory_cache``. Python 3.13 drops the
+shared entry and re-reads lazily, so nothing is patched there.
+
+Importing this module changes nothing; the patch happens only when it
+runs as ``__main__``, in the daemon, and the workers it forks inherit
+it.
+"""
+
+from __future__ import annotations
+
+import os
+import sys
+import zipimport
+
+
+def cached_invalidate_caches():
+    """A ``zipimporter.invalidate_caches`` that re-reads an archive only
+    when its ``(st_size, st_mtime_ns, st_ino)`` differs from the stat
+    taken before this function's last read of it. A missing archive
+    falls through to the stock method, which empties the instance."""
+    stock = zipimport.zipimporter.invalidate_caches
+    read_at: dict[str, tuple[int, int, int]] = {}
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            stock(self)
+            return
+        key = (st.st_size, st.st_mtime_ns, st.st_ino)
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if files is not None and read_at.get(self.archive) == key:
+            self._files = files
+            return
+        # stat before reading: a change landing mid-read shows up as a
+        # different key on the next call, which reads again
+        stock(self)
+        read_at[self.archive] = key
+
+    return invalidate_caches
+
+
+def main() -> None:
+    if sys.version_info < (3, 13):
+        zipimport.zipimporter.invalidate_caches = cached_invalidate_caches()
+    # imported here: pyspark.daemon picks its worker module from
+    # sys.argv at import time
+    from pyspark import daemon
+
+    daemon.manager()
+
+
+if __name__ == "__main__":
+    # run the copy imported under the package name, so the installed
+    # method's __module__ names this module, not __main__
+    from .worker_daemon import main as _main
+
+    _main()

@@ -243,6 +243,21 @@ def test_job_noop_rerun_keeps_metrics(spark, tmp_path):
     assert hosts.agg(F.sum("docs")).first()[0] == 200
 
 
+def test_job_empty_input_writes_empty_metrics(spark, tmp_path):
+    """A zero-row input completes every bucket and writes zero-row
+    metrics tables; the re-run then redoes nothing."""
+    from medical_and_charity_document_extraction_system_spark.job import main
+    from medical_and_charity_document_extraction_system_spark.schema import PAGES_SCHEMA
+
+    inp = str(tmp_path / "empty_in")
+    spark.createDataFrame([], PAGES_SCHEMA).write.parquet(inp)
+    args = _job_args(tmp_path, inp, buckets=4)
+    assert main(args, spark=spark)["completed_parts"] == [0, 1, 2, 3]
+    assert spark.read.parquet(str(tmp_path / "job_metrics")).count() == 0
+    assert spark.read.parquet(str(tmp_path / "job_metrics_hosts")).count() == 0
+    assert main(args, spark=spark)["completed_parts"] == []
+
+
 def test_host_rate_stream_windowed_counts(spark, pages_small, tmp_path):
     """Watermarked tumbling window counts match the batch twin."""
     from medical_and_charity_document_extraction_system_spark.streaming import host_rate_stream
