@@ -1,15 +1,19 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship extraction pipeline on sf0.001.
-``queries()`` exposes one callable per implemented operator from
-SURVEY.md section 2; ``oracle_sql()`` gives the DuckDB twin for each
-(construction oracles for the extraction pipeline, expression twins
-for the analytics — see medical_and_charity_document_extraction_system_spark/oracles.py).
+``CATALOG`` is the ordered catalog table: one row per implemented
+operator from SURVEY.md section 2, pairing its Spark query with the
+builder of its DuckDB twin (construction oracles for the extraction
+pipeline, expression twins for the analytics — see
+medical_and_charity_document_extraction_system_spark/oracles.py).
+``queries()`` and ``oracle_sql()`` are views of it.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import partial, wraps
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -21,6 +25,7 @@ from medical_and_charity_document_extraction_system_spark.plans import run_extra
 from medical_and_charity_document_extraction_system_spark.sources import synthesize_pages
 
 SF_DEFAULT = "/root/testdata/sf0.001"
+SF_GATE = "/root/testdata/sf0.01"
 
 _STREAM_STAGE_DIRS: list[str] = []
 _STAGE_TAG = "spark_entry_stage_"
@@ -506,108 +511,41 @@ def q_retention_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kept.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_kept"))
 
 
-def q_image_preprocess(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full E/D/K/B image chain over binary page images. Oracle:
-    golden-fixture construction — the same deterministic kernels run
-    once single-process on the driver and the expected
+def q_image_preprocess(
+    spark: SparkSession, sf_dir: str, codec: str = "netpbm"
+) -> DataFrame:
+    """Full E/D/K/B image chain over binary page images in the
+    ``codec`` container (netpbm, or the pure-Python png/jpeg/gif/bmp/
+    tiff/webp codecs under functions/). Oracle: golden-fixture
+    construction — the same deterministic kernels run once
+    single-process on the driver and the expected
     (width, height, skew_angle) land in the SQL as literals
     (oracles.image_preprocess_sql); pytest carries the independent
-    planted-skew oracle (tests/test_preprocess_stage.py)."""
+    planted-skew oracle (tests/test_preprocess_stage.py). PNG, BMP and
+    TIFF are lossless gray containers, so the netpbm rows ARE their
+    expected rows (container-independent decode). JPEG is lossy and
+    GIF/WebP decode to RGB (H, W, 3), so their oracles run the same
+    encode->decode round trip driver-side, over exactly the pixels
+    the executors see."""
     from medical_and_charity_document_extraction_system_spark.operators.multimodal import attach_page_images
     from medical_and_charity_document_extraction_system_spark.operators.preprocess import preprocess_images
 
     docs = _docs(spark, sf_dir).where("doc_id < 200")
-    return preprocess_images(attach_page_images(docs)).select(
+    return preprocess_images(attach_page_images(docs, codec=codec)).select(
         "media_id", "width", "height", "skew_angle", "error"
     )
 
 
-def q_image_preprocess_png(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME E/D/K/B chain fed real PNG payloads through the
-    pure-Python PNG codec (functions/png.py) instead of netpbm — the
-    first real-corpus image container. Same pixels, different bytes on
-    the wire: the construction oracle (identical to image_preprocess's)
-    passing proves container-independent decode correctness."""
-    from medical_and_charity_document_extraction_system_spark.operators.multimodal import attach_page_images
-    from medical_and_charity_document_extraction_system_spark.operators.preprocess import preprocess_images
+def _image_preprocess_in(codec: str) -> Callable[[SparkSession, str], DataFrame]:
+    """``q_image_preprocess`` over ``codec`` payloads as a catalog
+    callable named ``q_image_preprocess_<codec>``."""
 
-    docs = _docs(spark, sf_dir).where("doc_id < 200")
-    return preprocess_images(attach_page_images(docs, codec="png")).select(
-        "media_id", "width", "height", "skew_angle", "error"
-    )
+    @wraps(q_image_preprocess)
+    def q(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return q_image_preprocess(spark, sf_dir, codec)
 
-
-def q_image_preprocess_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The E/D/K/B chain over baseline JPEG payloads through the
-    pure-Python JPEG codec (functions/jpeg.py). JPEG is lossy, so the
-    construction oracle runs the SAME encode->decode round trip on the
-    driver (oracles._image_preprocess_rows codec='jpeg') — the gate
-    pins distributed-vs-single-process determinism over exactly the
-    pixels the executors see."""
-    from medical_and_charity_document_extraction_system_spark.operators.multimodal import attach_page_images
-    from medical_and_charity_document_extraction_system_spark.operators.preprocess import preprocess_images
-
-    docs = _docs(spark, sf_dir).where("doc_id < 200")
-    return preprocess_images(attach_page_images(docs, codec="jpeg")).select(
-        "media_id", "width", "height", "skew_angle", "error"
-    )
-
-
-def q_image_preprocess_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The E/D/K/B chain over GIF payloads (functions/gif.py routed
-    through the image-stage sniffer — new in r4). GIF is palette-RGB,
-    so the decoded array is (H, W, 3); the construction oracle runs the
-    SAME encode->decode round trip on the driver so the expected rows
-    are computed over exactly the pixels the executors see."""
-    from medical_and_charity_document_extraction_system_spark.operators.multimodal import attach_page_images
-    from medical_and_charity_document_extraction_system_spark.operators.preprocess import preprocess_images
-
-    docs = _docs(spark, sf_dir).where("doc_id < 200")
-    return preprocess_images(attach_page_images(docs, codec="gif")).select(
-        "media_id", "width", "height", "skew_angle", "error"
-    )
-
-
-def q_image_preprocess_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The E/D/K/B chain over BMP payloads (functions/bmp.py, new in
-    r4) — lossless 8-bit paletted container, so the oracle rows are
-    identical to the netpbm-fed chain's (reference accepts .bmp,
-    file_utils.py:271-273)."""
-    from medical_and_charity_document_extraction_system_spark.operators.multimodal import attach_page_images
-    from medical_and_charity_document_extraction_system_spark.operators.preprocess import preprocess_images
-
-    docs = _docs(spark, sf_dir).where("doc_id < 200")
-    return preprocess_images(attach_page_images(docs, codec="bmp")).select(
-        "media_id", "width", "height", "skew_angle", "error"
-    )
-
-
-def q_image_preprocess_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The E/D/K/B chain over uncompressed-TIFF payloads
-    (functions/tiff.py, new in r4) — lossless, same oracle rows as the
-    netpbm chain (reference accepts .tiff/.tif, file_utils.py:271-273)."""
-    from medical_and_charity_document_extraction_system_spark.operators.multimodal import attach_page_images
-    from medical_and_charity_document_extraction_system_spark.operators.preprocess import preprocess_images
-
-    docs = _docs(spark, sf_dir).where("doc_id < 200")
-    return preprocess_images(attach_page_images(docs, codec="tiff")).select(
-        "media_id", "width", "height", "skew_angle", "error"
-    )
-
-
-def q_image_preprocess_webp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The E/D/K/B chain over lossless-WebP payloads (functions/webp.py
-    — a from-scratch VP8L codec, new in r4; the LAST image suffix the
-    reference accepts that the engine couldn't read). VP8L is ARGB, so
-    like GIF the decoded array is (H, W, 3); the construction oracle
-    runs the same webp round trip driver-side."""
-    from medical_and_charity_document_extraction_system_spark.operators.multimodal import attach_page_images
-    from medical_and_charity_document_extraction_system_spark.operators.preprocess import preprocess_images
-
-    docs = _docs(spark, sf_dir).where("doc_id < 200")
-    return preprocess_images(attach_page_images(docs, codec="webp")).select(
-        "media_id", "width", "height", "skew_angle", "error"
-    )
+    q.__name__ = q.__qualname__ = f"q_image_preprocess_{codec}"
+    return q
 
 
 def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2781,338 +2719,216 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_extraction_doc_records(spark, SF_DEFAULT)
 
 
+class Entry(NamedTuple):
+    """One catalog row. ``query(spark, sf_dir)`` is the Spark plan and
+    ``oracle`` builds its DuckDB twin. With ``per_sf`` the builder takes
+    ``sf_dir``: its SQL embeds literals derived from that dir's parquet
+    (vocab log-probs, centroids, idf, ...), so it must re-derive them
+    from the tables the query reads or it only matches at sf0.01.
+    ``bench`` puts the row in bench.py's timed catalog list."""
+
+    name: str
+    query: Callable[[SparkSession, str], DataFrame]
+    oracle: Callable[..., str]
+    per_sf: bool = False
+    bench: bool = False
+
+    def oracle_sql(self, sf_dir: str) -> str:
+        return self.oracle(sf_dir) if self.per_sf else self.oracle()
+
+
+# The 140 catalog queries in gate order. The correctness gate samples
+# the FIRST 50 rows, so the 54 with no attestation row
+# (CORRECTNESS_r0*.json) lead, then the rest by the round of their
+# latest row, oldest first (tests/test_entry_contract.py::
+# test_gate_window_is_never_attested pins the window). The full-catalog
+# replica (scripts/check_oracles.py) checks every row regardless.
+CATALOG: tuple[Entry, ...] = (
+    # --- never attested ---
+    Entry("host_ktruss", q_host_ktruss, oracles.host_ktruss_sql, bench=True),
+    # streaming register-max merge must equal the one-shot sketch
+    Entry("stream_hll_sketch", q_stream_hll_sketch, oracles.hll_host_cardinality_sql, bench=True),
+    Entry("host_kcore", q_host_kcore, oracles.host_kcore_sql, bench=True),
+    Entry("docs_cube", q_docs_cube, oracles.docs_cube_sql, bench=True),
+    Entry("edit_distance_pairs", q_edit_distance_pairs,
+          oracles.edit_distance_pairs_sql, bench=True),
+    Entry("distinctive_terms", q_distinctive_terms, oracles.distinctive_terms_sql, bench=True),
+    Entry("textrank_keywords", q_textrank_keywords, oracles.textrank_keywords_sql, bench=True),
+    Entry("image_dhash", q_image_dhash, oracles.image_dhash_sql),
+    Entry("bitext_mine", q_bitext_mine, oracles.bitext_mine_sql, bench=True),
+    Entry("pca_project", q_pca_project, oracles.pca_project_sql, per_sf=True, bench=True),
+    Entry("term_cooccurrence", q_term_cooccurrence, oracles.term_cooccurrence_sql, bench=True),
+    Entry("entity_resolution", q_entity_resolution, oracles.entity_resolution_sql, bench=True),
+    Entry("snapshot_evolution", q_snapshot_evolution, oracles.snapshot_evolution_sql, bench=True),
+    Entry("quality_ensemble", q_quality_ensemble,
+          oracles.quality_ensemble_sql, per_sf=True, bench=True),
+    Entry("incremental_report", q_incremental_report, oracles.incremental_report_sql, bench=True),
+    Entry("dedup_eval", q_dedup_eval, oracles.dedup_eval_sql, bench=True),
+    Entry("hybrid_retrieval", q_hybrid_retrieval,
+          partial(oracles.hybrid_retrieval_sql, tuple(BM25_TERMS)), per_sf=True, bench=True),
+    Entry("golden_records", q_golden_records, oracles.golden_records_sql, bench=True),
+    Entry("table_profile", q_table_profile, oracles.table_profile_sql, bench=True),
+    Entry("image_near_dup", q_image_near_dup, oracles.image_near_dup_sql, bench=True),
+    Entry("winnow_fingerprints", q_winnow_fingerprints,
+          oracles.winnow_fingerprints_sql, bench=True),
+    Entry("shingle_jaccard_pairs", q_shingle_jaccard_pairs,
+          oracles.shingle_jaccard_pairs_sql, bench=True),
+    Entry("host_communities", q_host_communities, oracles.host_communities_sql, bench=True),
+    Entry("snapshot_changelog", q_snapshot_changelog, oracles.snapshot_changelog_sql, bench=True),
+    Entry("host_triangles", q_host_triangles, oracles.host_triangles_sql, bench=True),
+    # streaming epoch-union must equal the one-shot all-pairs truth
+    Entry("stream_incremental_dedup", q_stream_incremental_dedup, oracles.minhash_near_dup_sql),
+    Entry("bpe_fertility", q_bpe_fertility, oracles.bpe_fertility_sql, per_sf=True, bench=True),
+    Entry("source_topk", q_source_topk, oracles.source_topk_sql, bench=True),
+    Entry("stratified_sample", q_stratified_sample, oracles.stratified_sample_sql, bench=True),
+    Entry("corpus_report", q_corpus_report, oracles.corpus_report_sql, bench=True),
+    Entry("topic_tags", q_topic_tags, oracles.topic_tags_sql, bench=True),
+    Entry("lm_quality_trigram", q_lm_quality_trigram,
+          oracles.trigram_lm_sql, per_sf=True, bench=True),
+    # merged two-half CMS must equal the oracle's one-shot build
+    Entry("cms_heavy_hitters", q_cms_heavy_hitters, oracles.cms_heavy_hitters_sql, bench=True),
+    Entry("bloom_decontamination", q_bloom_decontamination,
+          oracles.bloom_decontamination_sql, bench=True),
+    Entry("quality_classifier", q_quality_classifier,
+          oracles.nb_classifier_sql, per_sf=True, bench=True),
+    Entry("bpe_train", q_bpe_train, oracles.bpe_train_sql, per_sf=True, bench=True),
+    Entry("bpe_segment", q_bpe_segment, oracles.bpe_segment_sql, per_sf=True),
+    Entry("collocations", q_collocations, oracles.collocations_sql, bench=True),
+    # streamed epoch-delta merge must equal the one-shot sketch
+    Entry("stream_cms_sketch", q_stream_cms_sketch, oracles.cms_heavy_hitters_sql),
+    Entry("hist_quantiles", q_hist_quantiles, oracles.hist_quantiles_sql, bench=True),
+    Entry("host_hits", q_host_hits, oracles.host_hits_sql, bench=True),
+    Entry("containment_decontamination", q_containment_decontamination,
+          oracles.containment_decontamination_sql, bench=True),
+    Entry("c4_filter", q_c4_filter, oracles.c4_filter_sql, bench=True),
+    Entry("ccnet_buckets", q_ccnet_buckets, oracles.ccnet_buckets_sql, per_sf=True, bench=True),
+    Entry("sequence_packing", q_sequence_packing, oracles.sequence_packing_sql, bench=True),
+    Entry("pretraining_corpus", q_pretraining_corpus, oracles.pretraining_corpus_sql, bench=True),
+    Entry("fuzzy_decontamination", q_fuzzy_decontamination,
+          oracles.fuzzy_decontamination_sql, bench=True),
+    Entry("decontamination", q_decontamination, oracles.decontamination_sql, bench=True),
+    Entry("semdedup", q_semdedup, oracles.semdedup_sql, per_sf=True, bench=True),
+    Entry("dsir_weights", q_dsir_weights, oracles.dsir_sql, per_sf=True, bench=True),
+    Entry("lm_quality_bigram", q_lm_quality_bigram, oracles.bigram_lm_sql, per_sf=True),
+    Entry("gopher_repetition", q_gopher_repetition, oracles.gopher_repetition_sql),
+    Entry("dup_ngram_coverage", q_dup_ngram_coverage, oracles.dup_ngram_coverage_sql),
+    Entry("quality_filter", q_quality_filter, oracles.quality_filter_sql),
+    # --- last attested in CORRECTNESS_r03.json ---
+    Entry("embedding_near_dup_lsh", q_embedding_near_dup_lsh,
+          oracles.embedding_near_dup_lsh_sql, bench=True),
+    Entry("minhash_near_dup", q_minhash_near_dup, oracles.minhash_near_dup_sql, bench=True),
+    # incremental(batch2 | store(batch1)) ∪ pairs(batch1) must equal
+    # the FULL all-pairs truth — the same oracle pins both layouts
+    Entry("minhash_near_dup_incremental", q_minhash_near_dup_incremental,
+          oracles.minhash_near_dup_sql),
+    Entry("near_dup_components", q_near_dup_components, oracles.near_dup_components_sql),
+    Entry("simhash", q_simhash, oracles.simhash_sql),
+    Entry("simhash_near_dup", q_simhash_near_dup, oracles.simhash_near_dup_sql),
+    Entry("ann_topk_lsh", q_ann_topk_lsh, oracles.ann_topk_lsh_sql),
+    Entry("image_preprocess", q_image_preprocess, oracles.image_preprocess_sql, bench=True),
+    Entry("image_preprocess_png", _image_preprocess_in("png"),
+          oracles.image_preprocess_sql, bench=True),
+    Entry("image_preprocess_jpeg", _image_preprocess_in("jpeg"),
+          partial(oracles.image_preprocess_sql, codec="jpeg"), bench=True),
+    Entry("pdf_pages", q_pdf_pages, oracles.pdf_pages_sql),
+    Entry("host_quality", q_host_quality, oracles.host_quality_sql),
+    Entry("error_taxonomy", q_error_taxonomy, oracles.error_taxonomy_sql),
+    Entry("ocr_words", q_ocr_words, oracles.ocr_words_sql),
+    Entry("route_stats", q_route_stats, oracles.route_stats_sql),
+    Entry("media_features", q_media_features, oracles.media_features_sql),
+    Entry("media_resize", q_media_resize, oracles.media_resize_sql),
+    Entry("merge_pdf_artifacts", q_merge_pdf_artifacts, oracles.merge_pdf_artifacts_sql),
+    Entry("extraction_spans", q_extraction_spans, oracles.extraction_spans_sql),
+    Entry("rollup_source", q_rollup_source, oracles.rollup_source_sql, bench=True),
+    Entry("quality_score", q_quality_score, oracles.quality_score_sql, bench=True),
+    Entry("lang_agreement", q_lang_agreement, oracles.lang_agreement_sql),
+    Entry("exact_dedup", q_exact_dedup, oracles.exact_dedup_sql, bench=True),
+    Entry("ngram_jaccard", q_ngram_jaccard, oracles.ngram_jaccard_sql),
+    Entry("topk_cosine", q_topk_cosine, oracles.topk_cosine_sql, bench=True),
+    Entry("retention_cleanup", q_retention_cleanup, oracles.retention_cleanup_sql),
+    Entry("token_count", q_token_count, oracles.token_count_sql, bench=True),
+    Entry("lang_guess", q_lang_guess, oracles.lang_guess_sql),
+    Entry("bpe_token_count", q_bpe_token_count, oracles.bpe_token_count_sql),
+    Entry("fingerprint", q_fingerprint, oracles.fingerprint_sql),
+    Entry("merge_sources", q_merge_sources, oracles.merge_sources_sql),
+    # --- last attested in CORRECTNESS_r04.json ---
+    Entry("inverted_index", q_inverted_index, oracles.inverted_index_sql, bench=True),
+    Entry("snapshot_merge", q_snapshot_merge, oracles.snapshot_merge_sql),
+    # the streamed upsert must land on the batch-merge construction
+    Entry("stream_merge_sink", q_stream_merge_sink, oracles.snapshot_merge_sql),
+    # Type0 generation: CMap-decoded extraction must be byte-equal
+    Entry("pdf_pages_type0", q_pdf_pages_type0, oracles.pdf_pages_type0_sql),
+    Entry("lm_quality", q_lm_quality, oracles.unigram_lm_sql, per_sf=True),
+    Entry("paragraph_dedup", q_paragraph_dedup, oracles.paragraph_dedup_sql),
+    Entry("span_dedup", q_span_dedup, oracles.span_dedup_sql, bench=True),
+    Entry("outlink_graph", q_outlink_graph, oracles.outlink_graph_sql),
+    Entry("host_pagerank", q_host_pagerank, oracles.host_pagerank_sql),
+    Entry("anchor_text_index", q_anchor_text_index, oracles.anchor_text_index_sql),
+    Entry("crawl_frontier", q_crawl_frontier, oracles.crawl_frontier_sql),
+    Entry("site_domains", q_site_domains, oracles.site_domains_sql),
+    Entry("mojibake_repair", q_mojibake_repair, oracles.mojibake_repair_sql),
+    Entry("temperature_mix", q_temperature_mix, oracles.temperature_mix_sql),
+    Entry("shard_manifest", q_shard_manifest, oracles.shard_manifest_sql),
+    # the file round trip must land on the same manifest
+    Entry("shard_export", q_shard_export, oracles.shard_manifest_sql),
+    Entry("training_pipeline", q_training_pipeline, oracles.training_pipeline_sql, bench=True),
+    Entry("hll_cardinality", q_hll_cardinality, oracles.hll_host_cardinality_sql),
+    Entry("zorder_curve", q_zorder_curve, oracles.zorder_curve_sql),
+    Entry("robots_filter", q_robots_filter, oracles.robots_filter_sql),
+    Entry("image_preprocess_gif", _image_preprocess_in("gif"),
+          partial(oracles.image_preprocess_sql, codec="gif")),
+    Entry("image_preprocess_bmp", _image_preprocess_in("bmp"), oracles.image_preprocess_sql),
+    Entry("image_preprocess_tiff", _image_preprocess_in("tiff"), oracles.image_preprocess_sql),
+    Entry("image_preprocess_webp", _image_preprocess_in("webp"),
+          partial(oracles.image_preprocess_sql, codec="webp"), bench=True),
+    Entry("gopher_quality", q_gopher_quality, oracles.gopher_sql),
+    Entry("pii_redact", q_pii_redact, oracles.pii_redact_sql),
+    Entry("snapshot_time_travel", q_snapshot_time_travel, oracles.snapshot_time_travel_sql),
+    Entry("bm25_scores", q_bm25_scores,
+          partial(oracles.bm25_scores_sql, tuple(BM25_TERMS)), per_sf=True),
+    Entry("boilerplate_removal", q_boilerplate_removal, oracles.boilerplate_removal_sql),
+    Entry("crawl_diff", q_crawl_diff, oracles.crawl_diff_sql),
+    Entry("host_length_quantiles", q_host_length_quantiles, oracles.host_length_quantiles_sql),
+    Entry("sample_10pct", q_sample_10pct, oracles.sample_10pct_sql),
+    Entry("split_counts", q_split_counts, oracles.split_counts_sql),
+    Entry("top_docs_per_source", q_top_docs_per_source, oracles.top_docs_per_source_sql),
+    Entry("extraction_doc_records", q_extraction_doc_records, oracles.extraction_doc_records_sql),
+    # batch/streaming/WARC parity: every ingestion shape must match
+    # the same construction oracle the batch plan matches
+    Entry("warc_extraction", q_warc_extraction, oracles.extraction_doc_records_sql),
+    Entry("stream_extraction", q_stream_extraction, oracles.extraction_doc_records_sql),
+    Entry("stream_host_rate", q_stream_host_rate, oracles.stream_host_rate_sql),
+    Entry("stream_host_totals", q_stream_host_totals, oracles.stream_host_totals_sql),
+    # streaming -> snapshot sink must reconstruct the same table
+    Entry("stream_snapshot_sink", q_stream_snapshot_sink, oracles.extraction_doc_records_sql),
+    Entry("stream_dedup_urls", q_stream_dedup_urls, oracles.stream_dedup_urls_sql),
+    Entry("chunk_documents", q_chunk_documents, oracles.chunk_documents_sql),
+    Entry("url_dedup", q_url_dedup, oracles.url_dedup_sql),
+    Entry("embedding_near_dup", q_embedding_near_dup, oracles.embedding_near_dup_sql, bench=True),
+    # --- last attested in CORRECTNESS_r05.json ---
+    Entry("source_topk_dense", q_source_topk_dense, oracles.source_topk_dense_sql, bench=True),
+    Entry("dataset_split", q_dataset_split, oracles.split_report_sql, bench=True),
+    Entry("phrase_match", q_phrase_match, oracles.phrase_match_sql, bench=True),
+    Entry("vocab_coverage", q_vocab_coverage, partial(oracles.vocab_coverage_sql, 16), bench=True),
+    Entry("weighted_sample", q_weighted_sample, oracles.weighted_sample_sql, bench=True),
+    Entry("k_anonymity", q_k_anonymity, oracles.k_anonymity_sql, bench=True),
+    Entry("frontier_shards", q_frontier_shards, oracles.frontier_shards_sql, bench=True),
+    Entry("dup_cluster_stats", q_dup_cluster_stats, oracles.dup_cluster_stats_sql, bench=True),
+    Entry("concordance", q_concordance, oracles.concordance_sql, bench=True),
+    Entry("mirror_report", q_mirror_report, oracles.mirror_report_sql, bench=True),
+    Entry("ann_recall_eval", q_ann_recall_eval, oracles.lsh_recall_eval_sql, bench=True),
+)
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """The 140 catalog queries. Order is attestation-aware: the
-    correctness gate samples the FIRST 50 entries, so the 54 queries
-    with no attestation row (CORRECTNESS_r0*.json) lead, then the rest
-    by the round of their latest row, oldest first
-    (tests/test_entry_contract.py::test_gate_window_is_never_attested
-    pins the window). The full-catalog replica
-    (scripts/check_oracles.py) checks every entry regardless."""
-    return {
-        # --- never attested ---
-        "host_ktruss": q_host_ktruss,
-        "stream_hll_sketch": q_stream_hll_sketch,
-        "host_kcore": q_host_kcore,
-        "docs_cube": q_docs_cube,
-        "edit_distance_pairs": q_edit_distance_pairs,
-        "distinctive_terms": q_distinctive_terms,
-        "textrank_keywords": q_textrank_keywords,
-        "image_dhash": q_image_dhash,
-        "bitext_mine": q_bitext_mine,
-        "pca_project": q_pca_project,
-        "term_cooccurrence": q_term_cooccurrence,
-        "entity_resolution": q_entity_resolution,
-        "snapshot_evolution": q_snapshot_evolution,
-        "quality_ensemble": q_quality_ensemble,
-        "incremental_report": q_incremental_report,
-        "dedup_eval": q_dedup_eval,
-        "hybrid_retrieval": q_hybrid_retrieval,
-        "golden_records": q_golden_records,
-        "table_profile": q_table_profile,
-        "image_near_dup": q_image_near_dup,
-        "winnow_fingerprints": q_winnow_fingerprints,
-        "shingle_jaccard_pairs": q_shingle_jaccard_pairs,
-        "host_communities": q_host_communities,
-        "snapshot_changelog": q_snapshot_changelog,
-        "host_triangles": q_host_triangles,
-        "stream_incremental_dedup": q_stream_incremental_dedup,
-        "bpe_fertility": q_bpe_fertility,
-        "source_topk": q_source_topk,
-        "stratified_sample": q_stratified_sample,
-        "corpus_report": q_corpus_report,
-        "topic_tags": q_topic_tags,
-        "lm_quality_trigram": q_lm_quality_trigram,
-        "cms_heavy_hitters": q_cms_heavy_hitters,
-        "bloom_decontamination": q_bloom_decontamination,
-        "quality_classifier": q_quality_classifier,
-        "bpe_train": q_bpe_train,
-        "bpe_segment": q_bpe_segment,
-        "collocations": q_collocations,
-        "stream_cms_sketch": q_stream_cms_sketch,
-        "hist_quantiles": q_hist_quantiles,
-        "host_hits": q_host_hits,
-        "containment_decontamination": q_containment_decontamination,
-        "c4_filter": q_c4_filter,
-        "ccnet_buckets": q_ccnet_buckets,
-        "sequence_packing": q_sequence_packing,
-        "pretraining_corpus": q_pretraining_corpus,
-        "fuzzy_decontamination": q_fuzzy_decontamination,
-        "decontamination": q_decontamination,
-        "semdedup": q_semdedup,
-        "dsir_weights": q_dsir_weights,
-        "lm_quality_bigram": q_lm_quality_bigram,
-        "gopher_repetition": q_gopher_repetition,
-        "dup_ngram_coverage": q_dup_ngram_coverage,
-        "quality_filter": q_quality_filter,
-        # --- last attested in CORRECTNESS_r03.json ---
-        "embedding_near_dup_lsh": q_embedding_near_dup_lsh,
-        "minhash_near_dup": q_minhash_near_dup,
-        "minhash_near_dup_incremental": q_minhash_near_dup_incremental,
-        "near_dup_components": q_near_dup_components,
-        "simhash": q_simhash,
-        "simhash_near_dup": q_simhash_near_dup,
-        "ann_topk_lsh": q_ann_topk_lsh,
-        "image_preprocess": q_image_preprocess,
-        "image_preprocess_png": q_image_preprocess_png,
-        "image_preprocess_jpeg": q_image_preprocess_jpeg,
-        "pdf_pages": q_pdf_pages,
-        "host_quality": q_host_quality,
-        "error_taxonomy": q_error_taxonomy,
-        "ocr_words": q_ocr_words,
-        "route_stats": q_route_stats,
-        "media_features": q_media_features,
-        "media_resize": q_media_resize,
-        "merge_pdf_artifacts": q_merge_pdf_artifacts,
-        "extraction_spans": q_extraction_spans,
-        "rollup_source": q_rollup_source,
-        "quality_score": q_quality_score,
-        "lang_agreement": q_lang_agreement,
-        "exact_dedup": q_exact_dedup,
-        "ngram_jaccard": q_ngram_jaccard,
-        "topk_cosine": q_topk_cosine,
-        "retention_cleanup": q_retention_cleanup,
-        "token_count": q_token_count,
-        "lang_guess": q_lang_guess,
-        "bpe_token_count": q_bpe_token_count,
-        "fingerprint": q_fingerprint,
-        "merge_sources": q_merge_sources,
-        # --- last attested in CORRECTNESS_r04.json ---
-        "inverted_index": q_inverted_index,
-        "snapshot_merge": q_snapshot_merge,
-        "stream_merge_sink": q_stream_merge_sink,
-        "pdf_pages_type0": q_pdf_pages_type0,
-        "lm_quality": q_lm_quality,
-        "paragraph_dedup": q_paragraph_dedup,
-        "span_dedup": q_span_dedup,
-        "outlink_graph": q_outlink_graph,
-        "host_pagerank": q_host_pagerank,
-        "anchor_text_index": q_anchor_text_index,
-        "crawl_frontier": q_crawl_frontier,
-        "site_domains": q_site_domains,
-        "mojibake_repair": q_mojibake_repair,
-        "temperature_mix": q_temperature_mix,
-        "shard_manifest": q_shard_manifest,
-        "shard_export": q_shard_export,
-        "training_pipeline": q_training_pipeline,
-        "hll_cardinality": q_hll_cardinality,
-        "zorder_curve": q_zorder_curve,
-        "robots_filter": q_robots_filter,
-        "image_preprocess_gif": q_image_preprocess_gif,
-        "image_preprocess_bmp": q_image_preprocess_bmp,
-        "image_preprocess_tiff": q_image_preprocess_tiff,
-        "image_preprocess_webp": q_image_preprocess_webp,
-        "gopher_quality": q_gopher_quality,
-        "pii_redact": q_pii_redact,
-        "snapshot_time_travel": q_snapshot_time_travel,
-        "bm25_scores": q_bm25_scores,
-        "boilerplate_removal": q_boilerplate_removal,
-        "crawl_diff": q_crawl_diff,
-        "host_length_quantiles": q_host_length_quantiles,
-        "sample_10pct": q_sample_10pct,
-        "split_counts": q_split_counts,
-        "top_docs_per_source": q_top_docs_per_source,
-        "extraction_doc_records": q_extraction_doc_records,
-        "warc_extraction": q_warc_extraction,
-        "stream_extraction": q_stream_extraction,
-        "stream_host_rate": q_stream_host_rate,
-        "stream_host_totals": q_stream_host_totals,
-        "stream_snapshot_sink": q_stream_snapshot_sink,
-        "stream_dedup_urls": q_stream_dedup_urls,
-        "chunk_documents": q_chunk_documents,
-        "url_dedup": q_url_dedup,
-        "embedding_near_dup": q_embedding_near_dup,
-        # --- last attested in CORRECTNESS_r05.json ---
-        "source_topk_dense": q_source_topk_dense,
-        "dataset_split": q_dataset_split,
-        "phrase_match": q_phrase_match,
-        "vocab_coverage": q_vocab_coverage,
-        "weighted_sample": q_weighted_sample,
-        "k_anonymity": q_k_anonymity,
-        "frontier_shards": q_frontier_shards,
-        "dup_cluster_stats": q_dup_cluster_stats,
-        "concordance": q_concordance,
-        "mirror_report": q_mirror_report,
-        "ann_recall_eval": q_ann_recall_eval,
-    }
+    """The catalog's Spark plans, in gate order."""
+    return {e.name: e.query for e in CATALOG}
 
 
-def oracle_sql(sf_dir: str = "/root/testdata/sf0.01") -> dict[str, str]:
-    """The driver calls this with no args (sf0.01, its gate dir).
-    ``sf_dir`` exists for the local gate replica
-    (scripts/check_oracles.py --sf-dir ...): the oracles that embed
-    DATA-DERIVED literals (lm_quality vocab log-probs, semdedup
-    centroids, bm25 idf/avgdl, ...) must re-derive them from the same
-    parquet the Spark query reads, or they only match at sf0.01."""
-    return {
-        "source_topk_dense": oracles.source_topk_dense_sql(),
-        "dataset_split": oracles.split_report_sql(),
-        "phrase_match": oracles.phrase_match_sql(),
-        "vocab_coverage": oracles.vocab_coverage_sql(16),
-        "weighted_sample": oracles.weighted_sample_sql(),
-        "k_anonymity": oracles.k_anonymity_sql(),
-        "frontier_shards": oracles.frontier_shards_sql(),
-        "dup_cluster_stats": oracles.dup_cluster_stats_sql(),
-        "concordance": oracles.concordance_sql(),
-        "mirror_report": oracles.mirror_report_sql(),
-        "ann_recall_eval": oracles.lsh_recall_eval_sql(),
-        "host_ktruss": oracles.host_ktruss_sql(),
-        # streaming register-max merge must equal the one-shot sketch
-        "stream_hll_sketch": oracles.hll_host_cardinality_sql(),
-        "host_kcore": oracles.host_kcore_sql(),
-        "docs_cube": oracles.docs_cube_sql(),
-        "shingle_jaccard_pairs": oracles.shingle_jaccard_pairs_sql(),
-        "host_communities": oracles.host_communities_sql(),
-        "snapshot_changelog": oracles.snapshot_changelog_sql(),
-        "host_triangles": oracles.host_triangles_sql(),
-        # streaming epoch-union must equal the one-shot all-pairs truth
-        "stream_incremental_dedup": oracles.minhash_near_dup_sql(),
-        "extraction_doc_records": oracles.extraction_doc_records_sql(),
-        # batch/streaming/WARC parity: every ingestion shape must match
-        # the same construction oracle the batch plan matches
-        "stream_extraction": oracles.extraction_doc_records_sql(),
-        "warc_extraction": oracles.extraction_doc_records_sql(),
-        "stream_host_rate": oracles.stream_host_rate_sql(),
-        "stream_host_totals": oracles.stream_host_totals_sql(),
-        # streaming -> snapshot sink must reconstruct the same table
-        "stream_snapshot_sink": oracles.extraction_doc_records_sql(),
-        "extraction_spans": oracles.extraction_spans_sql(),
-        "rollup_source": oracles.rollup_source_sql(),
-        "token_count": oracles.token_count_sql(),
-        "quality_score": oracles.quality_score_sql(),
-        "lang_guess": oracles.lang_guess_sql(),
-        "lang_agreement": oracles.lang_agreement_sql(),
-        "fingerprint": oracles.fingerprint_sql(),
-        "exact_dedup": oracles.exact_dedup_sql(),
-        "ngram_jaccard": oracles.ngram_jaccard_sql(),
-        "topk_cosine": oracles.topk_cosine_sql(),
-        "embedding_near_dup": oracles.embedding_near_dup_sql(),
-        "minhash_near_dup": oracles.minhash_near_dup_sql(),
-        # incremental(batch2 | store(batch1)) ∪ pairs(batch1) must equal
-        # the FULL all-pairs truth — the same oracle pins both layouts
-        "minhash_near_dup_incremental": oracles.minhash_near_dup_sql(),
-        "near_dup_components": oracles.near_dup_components_sql(),
-        "merge_sources": oracles.merge_sources_sql(),
-        "retention_cleanup": oracles.retention_cleanup_sql(),
-        "pdf_pages": oracles.pdf_pages_sql(),
-        # Type0 generation: CMap-decoded extraction must be byte-equal
-        "pdf_pages_type0": oracles.pdf_pages_type0_sql(),
-        "bpe_token_count": oracles.bpe_token_count_sql(),
-        "host_quality": oracles.host_quality_sql(),
-        "error_taxonomy": oracles.error_taxonomy_sql(),
-        "ocr_words": oracles.ocr_words_sql(),
-        "route_stats": oracles.route_stats_sql(),
-        "chunk_documents": oracles.chunk_documents_sql(),
-        "url_dedup": oracles.url_dedup_sql(),
-        "pii_redact": oracles.pii_redact_sql(),
-        "snapshot_time_travel": oracles.snapshot_time_travel_sql(),
-        # corpus-stat literals default to the gate's sf0.01 tables
-        "bm25_scores": oracles.bm25_scores_sql(tuple(BM25_TERMS), sf_dir),
-        "boilerplate_removal": oracles.boilerplate_removal_sql(),
-        "paragraph_dedup": oracles.paragraph_dedup_sql(),
-        "span_dedup": oracles.span_dedup_sql(),
-        "outlink_graph": oracles.outlink_graph_sql(),
-        "host_pagerank": oracles.host_pagerank_sql(),
-        "anchor_text_index": oracles.anchor_text_index_sql(),
-        "crawl_frontier": oracles.crawl_frontier_sql(),
-        "site_domains": oracles.site_domains_sql(),
-        "mojibake_repair": oracles.mojibake_repair_sql(),
-        "temperature_mix": oracles.temperature_mix_sql(),
-        "shard_manifest": oracles.shard_manifest_sql(),
-        # the file round trip must land on the same manifest
-        "shard_export": oracles.shard_manifest_sql(),
-        "inverted_index": oracles.inverted_index_sql(),
-        "training_pipeline": oracles.training_pipeline_sql(),
-        "snapshot_merge": oracles.snapshot_merge_sql(),
-        "hll_cardinality": oracles.hll_host_cardinality_sql(),
-        # merged two-half CMS must equal the oracle's one-shot build
-        "cms_heavy_hitters": oracles.cms_heavy_hitters_sql(),
-        "bloom_decontamination": oracles.bloom_decontamination_sql(),
-        "zorder_curve": oracles.zorder_curve_sql(),
-        # data-derived literals (the semdedup trick), re-derived per sf_dir
-        "lm_quality": oracles.unigram_lm_sql(sf_dir),
-        "lm_quality_bigram": oracles.bigram_lm_sql(sf_dir),
-        "lm_quality_trigram": oracles.trigram_lm_sql(sf_dir),
-        "topic_tags": oracles.topic_tags_sql(),
-        "corpus_report": oracles.corpus_report_sql(),
-        "c4_filter": oracles.c4_filter_sql(),
-        # ccnet re-derives the unigram log-prob literals from the
-        # target sf_dir (the lm_quality trick)
-        "ccnet_buckets": oracles.ccnet_buckets_sql(sf_dir),
-        "sequence_packing": oracles.sequence_packing_sql(),
-        "pretraining_corpus": oracles.pretraining_corpus_sql(),
-        "fuzzy_decontamination": oracles.fuzzy_decontamination_sql(),
-        "decontamination": oracles.decontamination_sql(),
-        # bucket counts / log-ratio literals / threshold re-derived
-        # from the target sf_dir (the lm_quality trick)
-        "dsir_weights": oracles.dsir_sql(sf_dir),
-        # data-derived literals: re-derive from the gate's sf_dir
-        "quality_classifier": oracles.nb_classifier_sql(sf_dir),
-        "bpe_train": oracles.bpe_train_sql(sf_dir),
-        "bpe_segment": oracles.bpe_segment_sql(sf_dir),
-        "bpe_fertility": oracles.bpe_fertility_sql(sf_dir),
-        "source_topk": oracles.source_topk_sql(),
-        "stratified_sample": oracles.stratified_sample_sql(),
-        "edit_distance_pairs": oracles.edit_distance_pairs_sql(),
-        "distinctive_terms": oracles.distinctive_terms_sql(),
-        "textrank_keywords": oracles.textrank_keywords_sql(),
-        "image_dhash": oracles.image_dhash_sql(),
-        "bitext_mine": oracles.bitext_mine_sql(),
-        "pca_project": oracles.pca_project_sql(sf_dir),
-        "term_cooccurrence": oracles.term_cooccurrence_sql(),
-        "entity_resolution": oracles.entity_resolution_sql(),
-        "snapshot_evolution": oracles.snapshot_evolution_sql(),
-        "quality_ensemble": oracles.quality_ensemble_sql(sf_dir),
-        "incremental_report": oracles.incremental_report_sql(),
-        "dedup_eval": oracles.dedup_eval_sql(),
-        "hybrid_retrieval": oracles.hybrid_retrieval_sql(tuple(BM25_TERMS), sf_dir),
-        "golden_records": oracles.golden_records_sql(),
-        "table_profile": oracles.table_profile_sql(),
-        "image_near_dup": oracles.image_near_dup_sql(),
-        "winnow_fingerprints": oracles.winnow_fingerprints_sql(),
-        "collocations": oracles.collocations_sql(),
-        # streamed epoch-delta merge must equal the one-shot sketch
-        "stream_cms_sketch": oracles.cms_heavy_hitters_sql(),
-        "hist_quantiles": oracles.hist_quantiles_sql(),
-        "host_hits": oracles.host_hits_sql(),
-        "containment_decontamination": oracles.containment_decontamination_sql(),
-        # centroid literals re-derived from the target sf_dir
-        "semdedup": oracles.semdedup_sql(sf_dir),
-        # the streamed upsert must land on the batch-merge construction
-        "stream_merge_sink": oracles.snapshot_merge_sql(),
-        "gopher_quality": oracles.gopher_sql(),
-        "gopher_repetition": oracles.gopher_repetition_sql(),
-        "dup_ngram_coverage": oracles.dup_ngram_coverage_sql(),
-        "quality_filter": oracles.quality_filter_sql(),
-        "robots_filter": oracles.robots_filter_sql(),
-        "crawl_diff": oracles.crawl_diff_sql(),
-        "host_length_quantiles": oracles.host_length_quantiles_sql(),
-        "sample_10pct": oracles.sample_10pct_sql(),
-        "split_counts": oracles.split_counts_sql(),
-        "top_docs_per_source": oracles.top_docs_per_source_sql(),
-        "simhash": oracles.simhash_sql(),
-        "simhash_near_dup": oracles.simhash_near_dup_sql(),
-        "embedding_near_dup_lsh": oracles.embedding_near_dup_lsh_sql(),
-        "ann_topk_lsh": oracles.ann_topk_lsh_sql(),
-        "media_features": oracles.media_features_sql(),
-        "image_preprocess": oracles.image_preprocess_sql(),
-        # same construction oracle: the PNG-fed chain must land on the
-        # exact same (width, height, skew) rows as the netpbm-fed one
-        "image_preprocess_png": oracles.image_preprocess_sql(),
-        # lossy container: expected rows computed over the jpeg
-        # round-tripped pixels (same driver-side chain the executors run)
-        "image_preprocess_jpeg": oracles.image_preprocess_sql(codec="jpeg"),
-        # GIF decodes to palette-RGB (H,W,3): the oracle runs the same
-        # gif round trip driver-side so expected rows cover the RGB path
-        "image_preprocess_gif": oracles.image_preprocess_sql(codec="gif"),
-        # BMP/TIFF are lossless gray containers: the netpbm-fed chain's
-        # rows ARE the expected rows (container-independence proof,
-        # same as image_preprocess_png)
-        "image_preprocess_bmp": oracles.image_preprocess_sql(),
-        "image_preprocess_tiff": oracles.image_preprocess_sql(),
-        # VP8L decodes to RGB like GIF: same driver-side round trip
-        "image_preprocess_webp": oracles.image_preprocess_sql(codec="webp"),
-        "media_resize": oracles.media_resize_sql(),
-        "merge_pdf_artifacts": oracles.merge_pdf_artifacts_sql(),
-        "stream_dedup_urls": oracles.stream_dedup_urls_sql(),
-    }
+def oracle_sql(sf_dir: str = SF_GATE) -> dict[str, str]:
+    """Every catalog row's DuckDB twin. The driver calls this with no
+    args (sf0.01, its gate dir); ``sf_dir`` is for the local gate
+    replica (scripts/check_oracles.py --sf-dir ...). Building all of
+    them takes ~70 s at sf0.01, most of it the image-container
+    oracles: a caller that needs one row calls its ``Entry.oracle_sql``."""
+    return {e.name: e.oracle_sql(sf_dir) for e in CATALOG}

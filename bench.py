@@ -49,148 +49,8 @@ CORPUS = os.environ.get(
     os.path.join(tempfile.gettempdir(), f"bench_pages_sf{SF}_x{REPEAT}"),
 )
 
-# the non-extraction headline queries, run straight from the catalog
-CATALOG_QUERIES = [
-    "rollup_source",
-    "token_count",
-    "quality_score",
-    "exact_dedup",
-    "minhash_near_dup",
-    "topk_cosine",
-    "embedding_near_dup",
-    "embedding_near_dup_lsh",
-    "image_preprocess",
-    # round-3 additions: the same E/D/K/B chain through the pure-Python
-    # PNG and baseline-JPEG codecs (real-corpus container cost)
-    "image_preprocess_png",
-    "image_preprocess_jpeg",
-    # round 4: the from-scratch VP8L (lossless WebP) container
-    "image_preprocess_webp",
-    # round 4: sub-document dedup (window-hash explode), index build,
-    # and the composed extract->filter->dedup->manifest pipeline
-    "span_dedup",
-    "inverted_index",
-    "training_pipeline",
-    # round 5: eval-set 13-gram decontamination (broadcast overlap
-    # join) and SemDeDup (cluster-bounded semantic near-dup)
-    "decontamination",
-    "semdedup",
-    # round 5: DSIR hashed-ngram importance weights + top-k selection
-    "dsir_weights",
-    # round 5: selection-stage trio — C4 line/page cleanup (zero-
-    # shuffle projection over extraction text), CCNet per-language
-    # perplexity terciles, and sequence-packing coordinates
-    "c4_filter",
-    "ccnet_buckets",
-    "sequence_packing",
-    # round 5: MinHash-Jaccard eval-overlap removal (benchmark side
-    # broadcast through band + verify joins), and asymmetric shingle
-    # containment (eval item quoted inside a long page)
-    "fuzzy_decontamination",
-    "containment_decontamination",
-    # round 5 capstone: extract -> C4 -> Gopher -> dedup ->
-    # decontaminate -> packing summary, one composed query
-    "pretraining_corpus",
-    # late round 5: fixed-memory sketches (Count-Min heavy hitters,
-    # Bloom decontamination), the NB quality classifier, distributed
-    # BPE training (12 merge rounds over the word table), and
-    # collocation lift
-    "cms_heavy_hitters",
-    "bloom_decontamination",
-    "quality_classifier",
-    "bpe_train",
-    "collocations",
-    "hist_quantiles",
-    # late round 5: iterative HITS over the shared host graph (integer
-    # fixed point, localCheckpoint-chained rounds)
-    "host_hits",
-    # final round 5: trigram stupid-backoff LM scoring, keyword-
-    # taxonomy tagging, and the per-source corpus report
-    "lm_quality_trigram",
-    "topic_tags",
-    "corpus_report",
-    # continuation round 5: exact posting-join similarity (the
-    # LSH-free complement), label-propagation communities and
-    # degree-oriented triangle counts over the shared host graph,
-    # and the snapshot CDC scan (commit + merge + changelog)
-    "shingle_jaccard_pairs",
-    "host_communities",
-    "host_triangles",
-    "snapshot_changelog",
-    # continuation round 5, second batch: tokenizer fertility (reuses
-    # the session BPE training), per-group top-k
-    "bpe_fertility",
-    "source_topk",
-    "stratified_sample",
-    # continuation round 5: exact Levenshtein similarity join
-    # (q-gram count filter + FastSS deletion neighborhoods)
-    "edit_distance_pairs",
-    # continuation round 5: MOSS winnowing fingerprints (per-doc
-    # array HOFs, zero shuffles)
-    "winnow_fingerprints",
-    # continuation round 5: class-distinctive terms (c-TF-IDF analog,
-    # integer lift + grouped_topk)
-    "distinctive_terms",
-    # continuation round 5: TextRank keywords (integer PageRank over
-    # the per-doc word-adjacency union graph)
-    "textrank_keywords",
-    # continuation round 5: perceptual image dedup (integer dHash +
-    # banded hamming join)
-    "image_near_dup",
-    # continuation round 5: one-scan column profiler
-    "table_profile",
-    # continuation round 5: survivorship consolidation over near-dup
-    # components (golden record)
-    "golden_records",
-    # continuation round 5: hybrid search (BM25 + cosine, RRF-fused)
-    "hybrid_retrieval",
-    # continuation round 5: blocking-scheme precision/recall audit
-    "dedup_eval",
-    # continuation round 5: fuzzy-key entity resolution composite
-    "entity_resolution",
-    # continuation round 5: market-basket term co-occurrence
-    "term_cooccurrence",
-    # continuation round 5: deterministic PCA projection (whitening)
-    "pca_project",
-    # continuation round 5: margin-based bitext mining
-    "bitext_mine",
-    # continuation round 5: CDC-driven materialized-view refresh
-    "incremental_report",
-    # continuation round 5: three-filter agreement report
-    "quality_ensemble",
-    # continuation round 5: manifest-schema evolution read path
-    "snapshot_evolution",
-    # continuation round 5, fourth batch: grouping-sets cube, k-core
-    # peeling, and streaming HLL register maintenance
-    "docs_cube",
-    "host_kcore",
-    "stream_hll_sketch",
-    # continuation round 5, fourth batch: the 5-truss (edge-support
-    # peeling over oriented triangles)
-    "host_ktruss",
-    # continuation round 5, fourth batch: ANN recall@k audit (exact
-    # vs LSH top-k per held-out query)
-    "ann_recall_eval",
-    # continuation round 5, fourth batch: KWIC snippets and mirror
-    # triage
-    "concordance",
-    "mirror_report",
-    # continuation round 5, fifth batch: the k-anonymity audit,
-    # politeness crawl sharding, and the dup-cluster histogram
-    "k_anonymity",
-    "frontier_shards",
-    "dup_cluster_stats",
-    # continuation round 5, fifth batch: PPSWOR weighted sampling and
-    # tokenizer-vocab coverage
-    "weighted_sample",
-    "vocab_coverage",
-    # continuation round 5, seventh batch: positional phrase search
-    "phrase_match",
-    # continuation round 5, eighth batch: deterministic split report
-    "dataset_split",
-    # continuation round 5, ninth batch: dense-rank top-k
-    "source_topk_dense",
-]
+# the non-extraction headline queries: the catalog rows flagged for bench
+CATALOG_QUERIES = [e.name for e in entry_mod.CATALOG if e.bench]
 
 
 # split count for the timed scan: fixed so every local[] width reads

@@ -58,6 +58,13 @@ from medical_and_charity_document_extraction_system_spark.sources.validate impor
 )
 
 
+def _positive_int(s: str) -> int:
+    n = int(s)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be >= 1, got {n}")
+    return n
+
+
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(description="PySpark extraction job")
     p.add_argument("--input", required=True, help="pages parquet/Iceberg path")
@@ -65,9 +72,11 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--metrics", required=True)
     p.add_argument("--manifest", required=True)
     p.add_argument("--run-id", required=True)
-    p.add_argument("--buckets", type=int, default=256, help="checkpoint buckets")
-    p.add_argument("--partitions", type=int, default=None, help="input repartition width")
-    p.add_argument("--salt-buckets", type=int, default=8)
+    p.add_argument("--buckets", type=_positive_int, default=256, help="checkpoint buckets")
+    p.add_argument(
+        "--partitions", type=_positive_int, default=None, help="input repartition width"
+    )
+    p.add_argument("--salt-buckets", type=_positive_int, default=8)
     p.add_argument("--engine", default="stub")
     p.add_argument("--html-method", default="auto")
     p.add_argument(

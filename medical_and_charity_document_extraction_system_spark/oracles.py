@@ -3230,7 +3230,9 @@ def bpe_segment_sql(sf_dir: str = "/root/testdata/sf0.01", n_merges: int = 12) -
     if not syms:
         seg = "SELECT CAST(NULL AS VARCHAR) AS word, CAST(NULL AS BIGINT) AS n_sub WHERE FALSE"
     else:
-        rows = ",\n".join(f"({_sq(w)}, {len(ss)})" for w, ss in syms.items())
+        # sorted: the word counts arrive in duckdb GROUP BY order, which
+        # varies run to run, and the oracle text must not
+        rows = ",\n".join(f"({_sq(w)}, {len(ss)})" for w, ss in sorted(syms.items()))
         seg = f"SELECT word, CAST(n_sub AS BIGINT) AS n_sub FROM (VALUES {rows}) AS s(word, n_sub)"
     return f"""
 WITH seg AS ({seg}),
@@ -3261,7 +3263,8 @@ def bpe_fertility_sql(
             "CAST(NULL AS BIGINT) AS n_sub WHERE FALSE"
         )
     else:
-        rows = ",\n".join(f"({_sq(w)}, {len(ss)})" for w, ss in syms.items())
+        # sorted for a run-to-run identical text, as in bpe_segment_sql
+        rows = ",\n".join(f"({_sq(w)}, {len(ss)})" for w, ss in sorted(syms.items()))
         seg = (
             "SELECT word, CAST(n_sub AS BIGINT) AS n_sub "
             f"FROM (VALUES {rows}) AS s(word, n_sub)"

@@ -1,9 +1,11 @@
 """Local stand-in for the driver's CORRECTNESS gate.
 
-Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin
-on DuckDB against the same sf dir, compares row count, column names,
-and a value hash computed over columns sorted by name (rows sorted by
-their full tuple) — the same comparison shape the driver uses.
+Runs every catalog row's query on Spark and its oracle twin on DuckDB
+against the same sf dir, compares row count, column names, and a value
+hash computed over columns sorted by name (rows sorted by their full
+tuple) — the same comparison shape the driver uses. Each row's oracle
+is built when that row runs, so ``--only`` builds only the selected
+oracles; a name not in the catalog is an error.
 
     python scripts/check_oracles.py [--sf-dir /root/testdata/sf0.01] [--only q1,q2]
     python scripts/check_oracles.py --changed-since HEAD~3
@@ -201,23 +203,11 @@ def main() -> None:
     import __spark_entry__ as entry_mod
     from medical_and_charity_document_extraction_system_spark.session import get_spark
 
-    spark = get_spark(app_name="check_oracles")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    con = duckdb.connect()
-    for t in TABLES:
-        path = os.path.join(args.sf_dir, f"{t}.parquet")
-        if os.path.exists(path):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
-            )
-
     qs = entry_mod.queries()
-    # pass the target dir so data-derived oracle literals (lm vocab,
-    # IVF centroids, bm25 idf/avgdl) are re-derived from the same
-    # parquet the Spark queries read — the gate is sf-portable
-    sqls = entry_mod.oracle_sql(args.sf_dir)
     only = {s for s in args.only.split(",") if s}
+    unknown = sorted(only - set(qs))
+    if unknown:
+        sys.exit(f"--only: not in the catalog: {', '.join(unknown)}")
     if args.changed_since and not only:
         only = select_changed(args.changed_since, entry_mod, list(qs))
         print(
@@ -230,28 +220,35 @@ def main() -> None:
             print(json.dumps({"bad": [], "n": 0}))
             return
 
+    spark = get_spark(app_name="check_oracles")
+    spark.sparkContext.setLogLevel("ERROR")
+
+    con = duckdb.connect()
+    for t in TABLES:
+        path = os.path.join(args.sf_dir, f"{t}.parquet")
+        if os.path.exists(path):
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
+            )
+
     results = {}
-    for name, fn in qs.items():
+    for entry in entry_mod.CATALOG:
+        name = entry.name
         if only and name not in only:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, args.sf_dir)
+            sdf = entry.query(spark, args.sf_dir)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:  # noqa: BLE001
             results[name] = {"status": "SPARK_ERROR", "error": str(e)[:300]}
             print(f"{name}: SPARK_ERROR {e}", flush=True)
             continue
-        if name not in sqls:
-            results[name] = {
-                "status": "ROWS_ONLY", "rows": len(srows),
-                "sec": round(time.time() - t0, 1),
-            }
-            print(f"{name}: ROWS_ONLY rows={len(srows)}", flush=True)
-            continue
         try:
-            rel = con.execute(sqls[name])
+            # only this row's oracle, built from the target dir so its
+            # data-derived literals come from the parquet the query read
+            rel = con.execute(entry.oracle_sql(args.sf_dir))
             ocols = [d[0] for d in rel.description]
             orows = rel.fetchall()
         except Exception as e:  # noqa: BLE001
@@ -285,7 +282,7 @@ def main() -> None:
             for ln in list(oset - sset)[:3]:
                 print(f"   oracle-only: {ln[:200]}")
 
-    bad = [n for n, r in results.items() if r["status"] not in ("MATCH", "ROWS_ONLY")]
+    bad = [n for n, r in results.items() if r["status"] != "MATCH"]
     print(json.dumps({"bad": bad, "n": len(results)}))
     spark.stop()
     sys.exit(1 if bad else 0)

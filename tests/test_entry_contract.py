@@ -43,19 +43,15 @@ def _rows(rows):
 
 
 QUERY_NAMES = sorted(entry_mod.queries())
-
-
-@pytest.fixture(scope="module")
-def oracles():
-    # building the oracle dict takes ~70 s: once per module, not per row
-    return entry_mod.oracle_sql()
+CATALOG = {e.name: e for e in entry_mod.CATALOG}
 
 
 @pytest.mark.parametrize("name", QUERY_NAMES)
-def test_query_matches_oracle(spark, ddb, oracles, name):
-    q = entry_mod.queries()[name]
-    sql = oracles[name]
-    sdf = q(spark, SF_ORACLE)
+def test_query_matches_oracle(spark, ddb, name):
+    # only this row's oracle: building all of them takes ~70 s
+    entry = CATALOG[name]
+    sql = entry.oracle_sql(SF_ORACLE)
+    sdf = entry.query(spark, SF_ORACLE)
     got_cols = [c.lower() for c in sdf.columns]
     got = _rows([tuple(r) for r in sdf.collect()])
     res = ddb.sql(sql)
@@ -77,6 +73,13 @@ def test_every_query_has_oracle_or_is_documented(spark):
     qs = entry_mod.queries()
     os_ = entry_mod.oracle_sql()
     assert set(os_) == set(qs)
+
+
+def test_catalog_names_are_unique():
+    # queries() and oracle_sql() are dicts: a duplicate name would
+    # silently drop a row from the gate
+    names = [e.name for e in entry_mod.CATALOG]
+    assert len(names) == len(set(names))
 
 
 def test_bench_catalog_queries_exist():

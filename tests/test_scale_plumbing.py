@@ -3,6 +3,7 @@ spark-submit job entrypoint."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from medical_and_charity_document_extraction_system_spark.plans.checkpoint import (
@@ -179,6 +180,23 @@ def test_job_entrypoint(spark, pages_small, tmp_path):
     assert out.count() == 500
     metrics = spark.read.parquet(str(tmp_path / "job_metrics"))
     assert metrics.agg(F.sum("docs_in")).first()[0] == 500
+
+
+def test_job_rejects_non_positive_widths(capsys):
+    # 0 buckets would checkpoint nothing and "succeed", 0 partitions
+    # would read as unset, 0 salt buckets would pmod by zero
+    from medical_and_charity_document_extraction_system_spark.job import build_parser
+
+    base = ["--input", "i", "--output", "o", "--metrics", "m", "--manifest", "f",
+            "--run-id", "r"]
+    parser = build_parser()
+    for flag in ("--buckets", "--partitions", "--salt-buckets"):
+        with pytest.raises(SystemExit):
+            parser.parse_args(base + [flag, "0"])
+        assert "must be >= 1" in capsys.readouterr().err
+    args = parser.parse_args(base)
+    assert (args.buckets, args.partitions, args.salt_buckets) == (256, None, 8)
+    assert parser.parse_args(base + ["--partitions", "4"]).partitions == 4
 
 
 def _job_args(tmp_path, inp, buckets, partitions=None):
