@@ -147,7 +147,7 @@ def q_stream_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME extraction plan executed as a Structured Streaming job
     (``trigger(availableNow=True)`` one-shot backfill through
     streaming/stream.run_extraction_stream): pages staged to parquet,
-    streamed through readStream -> mapInPandas -> writeStream, result
+    streamed through readStream -> mapInArrow -> writeStream, result
     read back as a batch table. Oracle: the batch construction oracle
     — streamed output must match it bit-for-bit, proving the engine's
     batch/streaming parity on the flagship path."""
@@ -2369,7 +2369,7 @@ def q_host_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pdf_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F1/F2: PDF doc -> one row per page (mapInPandas flatMap;
+    """F1/F2: PDF doc -> one row per page (Arrow row-stage flatMap;
     reference per-page loops pdf_service.py:130-143, :185-195)."""
     from medical_and_charity_document_extraction_system_spark.operators.pdf import explode_pdf_pages
 

@@ -12,7 +12,7 @@ lang STRING)``:
   preprocessing + OCR, /root/reference/backend/app/services/
   preprocessing_service.py:82-133) — plus the ACTUAL image operator
   inventory (enhance/denoise/deskew/binarize, ~30 methods) in pure
-  numpy as a mapInPandas stage over binary image columns
+  numpy as an Arrow row stage over binary image columns
   (functions/image_ops.py, operators/preprocess.py).
 - PDF-style layout parse with a scanned-vs-text predicate and an
   OCR-engine registry with per-worker engine caching
@@ -29,8 +29,8 @@ lang STRING)``:
 
 Design rules (see SURVEY.md section 7): DataFrame + vectorized
 pandas/Arrow UDFs only — no per-row Python UDFs, no RDDs, no custom
-Catalyst rules. Heavy per-row logic lives inside ``mapInPandas``
-stages; everything column-shaped stays in ``pyspark.sql.functions``
+Catalyst rules. Heavy per-row logic lives inside ``mapInArrow``
+stages (stage.py: Python lists in, ``from_pylist`` out); everything column-shaped stays in ``pyspark.sql.functions``
 so Catalyst/whole-stage-codegen keep it JVM-side.
 """
 

@@ -1,15 +1,16 @@
 """Job configuration.
 
 The reference drives behavior from a pydantic ``Settings`` object
-(backend/app/config/settings.py:8-140). We keep only the knobs a
-caller sets — the HTML method and the OCR engine, both ``job.py``
-flags — and the Arrow batch size, as a plain frozen dataclass plus
-``spark.conf`` for the physical knobs. The data-path constants the
-reference also exposes (block-length and link-density cutoffs, the
-scanned-page sample and threshold at pdf_service.py:249, the
-preprocessing toggles at settings.py:47-51, the OCR language) are the
-defaults of the functions that use them (functions/html_extract,
-operators/pdf, functions/normalize, operators/engines).
+(backend/app/config/settings.py:8-140). We keep only the knob a
+caller sets — the OCR engine, a ``job.py`` flag — and the Arrow batch
+size, as a plain frozen dataclass plus ``spark.conf`` for the physical
+knobs. The data-path constants the reference also exposes (block-length
+and link-density cutoffs, the scanned-page sample and threshold at
+pdf_service.py:249, the preprocessing toggles at settings.py:47-51, the
+OCR language) are the defaults of the functions that use them
+(functions/html_extract, operators/pdf, functions/normalize,
+operators/engines); the HTML extractor picks density or plain per page
+from the page's own link text (``main_text``'s ``auto``).
 """
 
 from __future__ import annotations
@@ -19,7 +20,6 @@ from dataclasses import dataclass
 
 @dataclass(frozen=True)
 class ExtractionConfig:
-    html_method: str = "auto"          # auto|density|plain (functions/html_extract.py)
     ocr_engine: str = "stub"           # stub|easyocr|paddleocr (tesseract blocked)
     arrow_max_records: int = 256       # rows/Arrow batch (rows carry big binaries)
 

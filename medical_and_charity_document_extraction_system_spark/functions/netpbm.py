@@ -2,8 +2,8 @@
 
 PIL/cv2 are not installed in this container, so image payloads travel
 through the pipeline as binary netpbm — a real, public, trivially
-parseable format — instead of PNG/JPEG. The decode step for compressed
-formats stays stubbed (operators/multimodal.py:decode_image); this
+parseable format — or one of the pure-Python compressed codecs
+(functions/imageio.decode_auto sniffs and decodes them all); this
 codec is the deterministic stand-in that keeps the Spark-side plumbing
 (binary column -> ndarray -> binary column) fully real and testable.
 

@@ -5,8 +5,8 @@ pipeline meets, and this container has no image libraries; this codec
 closes that gap with public-spec code only (ISO/IEC 15948 / RFC 2083).
 The reference loads any cv2-readable format
 (/root/reference/backend/app/utils/file_utils.py:129-173); here PNG is
-decoded natively and other compressed formats (JPEG/WebP) stay gated
-behind the PIL import-try in operators/multimodal.py.
+decoded natively, like the other containers functions/imageio.py
+sniffs.
 
 Decoder coverage: color types 0 (gray), 2 (RGB), 3 (palette),
 4 (gray+alpha), 6 (RGBA); bit depths 1/2/4/8/16 where the spec allows

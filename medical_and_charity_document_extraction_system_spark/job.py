@@ -78,7 +78,6 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument("--salt-buckets", type=_positive_int, default=8)
     p.add_argument("--engine", default="stub")
-    p.add_argument("--html-method", default="auto")
     p.add_argument(
         "--snapshot-table",
         default=None,
@@ -110,7 +109,7 @@ def choose_layout(
 
 def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> dict:
     args = build_parser().parse_args(argv)
-    cfg = ExtractionConfig(ocr_engine=args.engine, html_method=args.html_method)
+    cfg = ExtractionConfig(ocr_engine=args.engine)
     owns_spark = spark is None
     if owns_spark:
         builder = SparkSession.builder.appName(f"extraction-{args.run_id}")

@@ -31,12 +31,8 @@ per key.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from typing import Iterator
 
 from medical_and_charity_document_extraction_system_spark.operators.similarity import (
     dot_fold,
@@ -44,6 +40,7 @@ from medical_and_charity_document_extraction_system_spark.operators.similarity i
 from medical_and_charity_document_extraction_system_spark.operators.topk import (
     grouped_topk,
 )
+from medical_and_charity_document_extraction_system_spark.stage import map_rows
 
 # cross-join bound: every pair costs one Python fold-dot, so past this
 # the brute-force candidate set is the wrong tool
@@ -61,29 +58,17 @@ def _normalized(emb: DataFrame, label: int, id_alias: str, v_alias: str) -> Data
 
 def _fold_cos_pairs(pairs: DataFrame) -> DataFrame:
     """(id_a, id_b, cos_sim) via strict left-fold dot per pair."""
-    schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType(), False),
-            T.StructField("id_b", T.LongType(), False),
-            T.StructField("cos_sim", T.DoubleType(), False),
-        ]
+    def cos(ia: int, va: list, ib: int, vb: list) -> list[dict]:
+        acc = 0.0
+        for x, y in zip(va, vb):
+            acc += x * y
+        return [{"id_a": ia, "id_b": ib, "cos_sim": acc}]
+
+    return map_rows(
+        pairs.select("id_a", "va", "id_b", "vb"),
+        "id_a long not null, id_b long not null, cos_sim double not null",
+        cos,
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"id_a": [], "id_b": [], "cos_sim": []}
-            for ia, va, ib, vb in zip(
-                pdf["id_a"], pdf["va"], pdf["id_b"], pdf["vb"]
-            ):
-                acc = 0.0
-                for x, y in zip(va, vb):
-                    acc += x * y
-                out["id_a"].append(int(ia))
-                out["id_b"].append(int(ib))
-                out["cos_sim"].append(acc)
-            yield pd.DataFrame(out)
-
-    return pairs.mapInPandas(run, schema=schema)
 
 
 def _rank_sum(scores: DataFrame, key: str, other: str, knn: int) -> DataFrame:

@@ -24,13 +24,12 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.robots import DEFAULT_AGENT, parse_robots, pattern_to_like
+from ..stage import map_rows
 
 RULE_SCHEMA = T.StructType(
     [
@@ -57,27 +56,18 @@ def robots_rules(
     (pattern length in octets) and ``like_pat`` the SQL-LIKE
     compilation shared bit-for-bit with the DuckDB twin.
     """
-    cols = robots.select(host_col, text_col)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for host, txt in zip(pdf[host_col], pdf[text_col]):
-                for pattern, allow in parse_robots(txt, agent):
-                    rows.append(
-                        (
-                            host,
-                            pattern,
-                            allow,
-                            pattern_to_like(pattern),
-                            len(pattern.encode("utf-8")),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=["host", "pattern", "allow", "like_pat", "pat_len"]
-            )
+    def rules(host: str, txt: str) -> Iterator[dict]:
+        for pattern, allow in parse_robots(txt, agent):
+            yield {
+                "host": host,
+                "pattern": pattern,
+                "allow": allow,
+                "like_pat": pattern_to_like(pattern),
+                "pat_len": len(pattern.encode("utf-8")),
+            }
 
-    return cols.mapInPandas(gen, RULE_SCHEMA)
+    return map_rows(robots.select(host_col, text_col), RULE_SCHEMA, rules)
 
 
 def robots_filter(

@@ -9,7 +9,7 @@ Re-expresses the reference's engine factory + cache:
 - per-process engine cache keyed ``{engine}_{language}``:
   ocr_service.py:170-186 — here a module-level dict, so each Spark
   Python worker initializes an engine once and reuses it across Arrow
-  batches (the canonical mapInPandas heavy-state pattern; relies on
+  batches (the canonical mapInArrow heavy-state pattern; relies on
   ``spark.python.worker.reuse=true``).
 
 Real OCR models (easyocr/paddleocr) are not installable in this

@@ -4,32 +4,28 @@ stages.
 
 Image decode is REAL for every suffix the reference accepts (the
 pure-Python codecs in functions/: PNG, baseline JPEG, GIF, BMP, TIFF,
-lossless WebP, netpbm); the shapes those codecs do not cover fall back
-to PIL when installed, else raise a documented gate. Media features
-use a deterministic fake embedding carrying the Spark-side plumbing —
-schema, partitioning, UDF signature, Arrow batch shape — the way the
-reference gates real OCR engines behind the registry while the
-deterministic stub carries the tests (operators/engines.py).
+lossless WebP, netpbm), through the one decoder
+``functions/imageio.decode_auto``; the shapes those codecs do not
+cover (progressive JPEG, lossy-VP8 WebP, compressed TIFF) raise a
+typed ``ValueError`` that the stages turn into error rows. Media
+features use a deterministic fake embedding carrying the Spark-side
+plumbing — schema, partitioning, UDF signature, Arrow batch shape —
+the way the reference gates real OCR engines behind the registry while
+the deterministic stub carries the tests (operators/engines.py).
 """
 
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-try:  # pragma: no cover - not installed here
-    from PIL import Image  # noqa: F401
-
-    _HAS_PIL = True
-except ImportError:
-    _HAS_PIL = False
+from ..functions import imageio
+from ..stage import map_rows
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -100,7 +96,7 @@ def attach_page_images(
     codec: str = "netpbm",
 ) -> DataFrame:
     """(id) -> (media_id, payload=binary PGM or PNG per ``codec``) via
-    a mapInPandas render stage; the test/bench feeder for
+    an Arrow row render stage; the test/bench feeder for
     operators/preprocess.py. ``codec="png"`` feeds real PNG payloads
     through the pure-Python decoder (functions/png.py) — same pixels,
     different container, so downstream results must be identical.
@@ -110,34 +106,17 @@ def attach_page_images(
     otherwise put the whole render+preprocess chain on ONE core
     (measured 9.3s -> 0.9s on the bench). The shuffle moves only ids —
     always cheap relative to per-image work."""
-    from ..functions import imageio
-
     if fan_out:
         df = df.select(id_col).repartition(
             df.sparkSession.sparkContext.defaultParallelism
         )
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-        ]
+    def render(i: int) -> list[dict]:
+        return [{"media_id": i, "payload": imageio.encode_as(render_page_image(i), codec)}]
+
+    return map_rows(
+        df.select(F.col(id_col).cast("long")), "media_id long not null, payload binary", render
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "payload": [
-                        imageio.encode_as(render_page_image(int(i)), codec)
-                        for i in ids
-                    ],
-                }
-            )
-
-    return df.select(id_col).mapInPandas(run, schema=schema)
 
 
 def resize_images(
@@ -154,76 +133,26 @@ def resize_images(
     pipeline; accepts netpbm or PNG and answers in kind
     (functions/imageio.py). Undecodable payloads degrade to error
     rows."""
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("image", T.BinaryType(), True),
-            T.StructField("width", T.IntegerType(), True),
-            T.StructField("height", T.IntegerType(), True),
-            T.StructField("error", T.StringType(), True),
-        ]
-    )
+    schema = "media_id long not null, image binary, width int, height int, error string"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions import imageio
+    def resize(mid: int, payload: bytes | None) -> list[dict]:
+        img, fmt = imageio.decode_auto(bytes(payload))
+        # nearest-neighbor grid (floor((i+0.5)*src/dst))
+        ys = ((np.arange(height) + 0.5) * img.shape[0] / height).astype(int)
+        xs = ((np.arange(width) + 0.5) * img.shape[1] / width).astype(int)
+        resized = img[np.clip(ys, 0, img.shape[0] - 1)][:, np.clip(xs, 0, img.shape[1] - 1)]
+        return [{
+            "media_id": mid,
+            "image": imageio.encode_as(resized, fmt),
+            "height": height,
+            "width": width,
+        }]
 
-        for pdf in batches:
-            out = {k: [] for k in ("media_id", "image", "width", "height", "error")}
-            for mid, payload in zip(pdf[id_col], pdf[image_col]):
-                out["media_id"].append(int(mid))
-                try:
-                    img, fmt = imageio.decode_auto(bytes(payload))
-                    # nearest-neighbor grid (floor((i+0.5)*src/dst))
-                    ys = ((np.arange(height) + 0.5) * img.shape[0] / height).astype(int)
-                    xs = ((np.arange(width) + 0.5) * img.shape[1] / width).astype(int)
-                    resized = img[np.clip(ys, 0, img.shape[0] - 1)][
-                        :, np.clip(xs, 0, img.shape[1] - 1)
-                    ]
-                    out["image"].append(imageio.encode_as(resized, fmt))
-                    out["height"].append(height)
-                    out["width"].append(width)
-                    out["error"].append(None)
-                except Exception as exc:
-                    out["image"].append(None)
-                    out["height"].append(None)
-                    out["width"].append(None)
-                    out["error"].append(str(exc)[:200])
-            yield pd.DataFrame(out)
+    def failed(mid: int, payload, exc: Exception) -> list[dict]:
+        return [{"media_id": mid, "error": str(exc)[:200]}]
 
-    return df.select(
-        F.col(id_col).cast("long").alias(id_col), F.col(image_col)
-    ).mapInPandas(run, schema=schema)
-
-
-def decode_image(payload: bytes) -> "np.ndarray":
-    """Decode a binary image payload: PNG, baseline JPEG, GIF, BMP,
-    uncompressed TIFF and lossless WebP (VP8L) via the pure-Python
-    codecs in functions/, netpbm via functions/netpbm.py — every
-    suffix the reference accepts (file_utils.py:271-273). The
-    remaining gated shapes (progressive JPEG, lossy-VP8 WebP,
-    compressed TIFF) fall back to PIL when installed, else raise the
-    documented gate."""
-    from ..functions import imageio
-
-    payload = bytes(payload)
-    if imageio.sniff_format(payload) is not None:
-        try:
-            return imageio.decode_auto(payload)[0]
-        except ValueError:
-            # a recognized container our codec can't finish (e.g.
-            # progressive JPEG, exotic PNG): symmetric PIL fallback
-            # for every format, typed error without PIL
-            if not _HAS_PIL:
-                raise
-    if _HAS_PIL:  # pragma: no cover - PIL absent in this container
-        import io
-
-        return np.asarray(Image.open(io.BytesIO(payload)))
-    raise NotImplementedError(
-        "unrecognized image container (or a gated shape: progressive "
-        "JPEG, lossy-VP8 WebP, compressed TIFF) — requires PIL/cv2, "
-        "not installed in this container"
-    )
+    images = df.select(F.col(id_col).cast("long").alias(id_col), F.col(image_col))
+    return map_rows(images, schema, resize, failed)
 
 
 def deterministic_features(payload: bytes, dim: int = FEATURE_DIM) -> list[float]:
@@ -236,22 +165,16 @@ def deterministic_features(payload: bytes, dim: int = FEATURE_DIM) -> list[float
 
 
 def extract_media_features(df: DataFrame) -> DataFrame:
-    """mapInPandas feature-extraction stage over MEDIA_SCHEMA rows.
-    The Arrow plumbing (iterator form, per-batch numpy work, binary
+    """Arrow row feature-extraction stage over MEDIA_SCHEMA rows.
+    The Arrow plumbing (iterator form, per-row numpy work, binary
     columns) is exactly what a real decoder stage uses."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": [len(p) if p is not None else 0 for p in pdf["payload"]],
-                    "features": [
-                        deterministic_features(bytes(p)) if p is not None else None
-                        for p in pdf["payload"]
-                    ],
-                }
-            )
+    def features(mid: int, kind: str, payload: bytes | None) -> list[dict]:
+        return [{
+            "media_id": mid,
+            "kind": kind,
+            "n_bytes": 0 if payload is None else len(payload),
+            "features": None if payload is None else deterministic_features(payload),
+        }]
 
-    return df.mapInPandas(run, schema=_FEATURES_SCHEMA)
+    return map_rows(df.select("media_id", "kind", "payload"), _FEATURES_SCHEMA, features)

@@ -20,7 +20,7 @@ Determinism discipline (the semdedup centroid-literal playbook):
   No GEMM anywhere near the output values.
 
 Scale shape: fit cost is independent of corpus size (bounded sample);
-projection is embarrassingly parallel (Arrow-batched mapInPandas, one
+projection is embarrassingly parallel (one Arrow row stage, one
 pass). At production scale swap the Python fold for einsum + exact
 re-fold only where downstream consumers compare values across engines
 (the embedding_near_dup_exact pattern).
@@ -29,12 +29,10 @@ re-fold only where downstream consumers compare values across engines
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from typing import Iterator
+from ..stage import map_rows
 
 
 def pca_fit_np(mat: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
@@ -85,33 +83,22 @@ def pca_project(
     component, exact 0.0-seeded left-fold per value."""
     mean_l = [float(x) for x in mean]
     comps_l = [[float(x) for x in c] for c in comps]
-    dim, k = len(mean_l), len(comps_l)
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType(), False),
-            T.StructField("component", T.IntegerType(), False),
-            T.StructField("value", T.DoubleType(), False),
-        ]
+    dim = len(mean_l)
+
+    def project(vid: int, v: list) -> list[dict]:
+        out = []
+        for j, c in enumerate(comps_l):
+            acc = 0.0
+            for i in range(dim):
+                acc += (v[i] - mean_l[i]) * c[i]
+            out.append({"vec_id": vid, "component": j, "value": acc})
+        return out
+
+    return map_rows(
+        df.select(
+            F.col(id_col).cast("long").alias("vec_id"),
+            F.col(vec_col).cast("array<double>").alias("v"),
+        ),
+        "vec_id long not null, component int not null, value double not null",
+        project,
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, cs, vals = [], [], []
-            for vid, v in zip(pdf["vec_id"], pdf["v"]):
-                for j in range(k):
-                    c = comps_l[j]
-                    acc = 0.0
-                    for i in range(dim):
-                        acc += (v[i] - mean_l[i]) * c[i]
-                    ids.append(int(vid))
-                    cs.append(j)
-                    vals.append(acc)
-            yield pd.DataFrame(
-                {"vec_id": ids, "component": pd.array(cs, dtype="int32"),
-                 "value": vals}
-            )
-
-    return df.select(
-        F.col(id_col).cast("long").alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    ).mapInPandas(run, schema=schema)

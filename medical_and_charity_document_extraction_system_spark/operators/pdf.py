@@ -11,26 +11,24 @@ Reference semantics re-expressed:
   per page < 50 => scanned; **any parse error defaults to scanned**:
   pdf_service.py:231-259 (threshold :249, error-default :258)
 
-Real PDFs (``%PDF`` magic) are parsed with PyMuPDF when available
-(gated import — fitz is not installed in this environment). For
-deterministic testing we define a trivial container format
-``%FPDF\\n<page>\\f<page>...`` (see sources/pages.py) whose pages are
-UTF-8 text payloads; scanned-classified payloads are treated as
-"pixels" and routed through the OCR engine registry.
+Real PDFs (``%PDF`` magic) are parsed by the pure-Python
+functions/minipdf.py, the one PDF parser. For deterministic testing we
+define a trivial container format ``%FPDF\\n<page>\\f<page>...`` (see
+sources/pages.py) whose pages are UTF-8 text payloads;
+scanned-classified payloads are treated as "pixels" and routed through
+the OCR engine registry.
 
-Pure Python: called from inside mapInPandas stages.
+Pure Python: called from inside Arrow row stages (stage.py).
 """
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 from ..sources.pages import FAKE_PDF_MAGIC, PAGE_SEP
+from ..stage import map_rows
 
 PDF_MAGIC = b"%PDF"
-
-try:  # pragma: no cover - not installed in this environment
-    import fitz  # PyMuPDF
-except ImportError:
-    fitz = None
 
 
 def is_pdf_bytes(data: bytes | None) -> bool:
@@ -47,19 +45,13 @@ def extract_pdf_pages(data: bytes) -> list[str]:
         payload = data[len(FAKE_PDF_MAGIC):].decode("utf-8")
         return payload.split(PAGE_SEP)
     if data.startswith(PDF_MAGIC):
-        if fitz is None:
-            # pure-Python fallback for the text-PDF subset
-            # (functions/minipdf.py): uncompressed / FlateDecode
-            # content streams with literal-string Tj/TJ operands.
-            # Unsupported shapes raise ValueError and degrade to the
-            # error record, the pdf_service.py:258 semantics.
-            from ..functions.minipdf import extract_text_pages
+        # the text-PDF subset functions/minipdf.py reads: uncompressed /
+        # FlateDecode content streams with literal-string Tj/TJ
+        # operands. Unsupported shapes raise ValueError and degrade to
+        # the error record, the pdf_service.py:258 semantics.
+        from ..functions.minipdf import extract_text_pages
 
-            return extract_text_pages(data)
-        doc = fitz.open(stream=data, filetype="pdf")
-        if doc.is_encrypted or doc.page_count == 0:
-            raise ValueError("encrypted or empty PDF")
-        return [page.get_text() for page in doc]
+        return extract_text_pages(data)
     raise ValueError("not a PDF payload")
 
 
@@ -89,57 +81,41 @@ def docs_to_pdfs(df, cols=("source",), id_col="doc_id", text_col="text",
     /ToUnicode CMap) instead of simple Type1 — the other common
     modern-writer shape (reference reads both via fitz,
     pdf_service.py:174-229)."""
-    import pandas as pd
-
     from ..functions.minipdf import build_pdf
 
     schema = ", ".join(f"{c} string" for c in cols) + f", {id_col} long, pdf binary"
 
-    def run(batches):
-        for pdf in batches:
-            out = {c: pdf[c] for c in cols}
-            ids = pdf[id_col].astype("int64")
-            out[id_col] = ids
-            out["pdf"] = [
-                build_pdf([t or ""], xref_stream=bool(int(i) % 2), font=font)
-                for i, t in zip(ids, pdf[text_col])
-            ]
-            yield pd.DataFrame(out)
+    def to_pdf(*values) -> list[dict]:
+        *kept, i, t = values
+        pdf = build_pdf([t or ""], xref_stream=bool(i % 2), font=font)
+        return [{**dict(zip(cols, kept)), id_col: i, "pdf": pdf}]
 
-    return df.select(*cols, id_col, text_col).mapInPandas(run, schema)
+    return map_rows(
+        df.select(*cols, F.col(id_col).cast("long"), text_col), schema, to_pdf
+    )
 
 
 def explode_pdf_pages(pages_df):
     """F1/F2 as a standalone Spark operator: PDF documents -> one row
     per page (the reference's per-page loops at pdf_service.py:130-143
-    and :185-195, re-expressed as a mapInPandas flatMap — more output
-    rows than input rows). Non-PDF and unparseable payloads are
+    and :185-195, re-expressed as an Arrow row-stage flatMap — more
+    output rows than input rows). Non-PDF and unparseable payloads are
     skipped (degrade-don't-fail). Columns:
     (url, page_number 1-based, page_text, char_count)."""
-    import pandas as pd
+    def pages(url: str, data: bytes | None) -> list[dict]:
+        if not is_pdf_bytes(data):
+            return []
+        try:
+            texts = extract_pdf_pages(data)
+        except ValueError:
+            return []
+        return [
+            {"url": url, "page_number": i + 1, "page_text": t, "char_count": len(t)}
+            for i, t in enumerate(texts)
+        ]
 
-    def run(batches):
-        for pdf in batches:
-            urls, pns, texts, chars = [], [], [], []
-            for url, data in zip(pdf["url"], pdf["html"]):
-                if data is None:
-                    continue
-                b = bytes(data)
-                if not is_pdf_bytes(b):
-                    continue
-                try:
-                    for i, t in enumerate(extract_pdf_pages(b)):
-                        urls.append(url)
-                        pns.append(i + 1)
-                        texts.append(t)
-                        chars.append(len(t))
-                except ValueError:
-                    continue
-            yield pd.DataFrame(
-                {"url": urls, "page_number": pns, "page_text": texts,
-                 "char_count": chars}
-            )
-
-    return pages_df.select("url", "html").mapInPandas(
-        run, "url string, page_number int, page_text string, char_count int"
+    return map_rows(
+        pages_df.select("url", "html"),
+        "url string, page_number int, page_text string, char_count int",
+        pages,
     )

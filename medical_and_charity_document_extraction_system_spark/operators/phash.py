@@ -32,12 +32,11 @@ mass-produced blanks.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from typing import Iterator
+from ..functions import imageio
+from ..stage import map_rows
 
 GRID_H = 8
 GRID_W = 8  # bits per row; sampling grid is GRID_H x (GRID_W + 1)
@@ -75,33 +74,15 @@ def image_dhash(
     JPEG/... via functions/imageio sniffing) then the integer dHash.
     Undecodable payloads degrade to error rows (dhash NULL) — the
     resize_images convention."""
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("dhash", T.LongType(), True),
-            T.StructField("error", T.StringType(), True),
-        ]
-    )
+    def dhash(mid: int, payload: bytes | None) -> list[dict]:
+        img, _ = imageio.decode_auto(bytes(payload))
+        return [{"media_id": mid, "dhash": dhash64_np(img)}]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions import imageio
+    def failed(mid: int, payload, exc: Exception) -> list[dict]:
+        return [{"media_id": mid, "error": str(exc)[:200]}]
 
-        for pdf in batches:
-            out = {"media_id": [], "dhash": [], "error": []}
-            for mid, payload in zip(pdf[id_col], pdf[image_col]):
-                out["media_id"].append(int(mid))
-                try:
-                    img, _ = imageio.decode_auto(bytes(payload))
-                    out["dhash"].append(dhash64_np(img))
-                    out["error"].append(None)
-                except Exception as exc:
-                    out["dhash"].append(None)
-                    out["error"].append(str(exc)[:200])
-            yield pd.DataFrame(out)
-
-    return df.select(
-        F.col(id_col).cast("long").alias(id_col), F.col(image_col)
-    ).mapInPandas(run, schema=schema)
+    images = df.select(F.col(id_col).cast("long").alias(id_col), F.col(image_col))
+    return map_rows(images, "media_id long not null, dhash long, error string", dhash, failed)
 
 
 def dhash_near_dup(

@@ -5,7 +5,7 @@ image between PDF rendering and OCR
 (/root/reference/backend/app/services/preprocessing_service.py:82-133),
 round-tripping every step through PNG files on disk
 (preprocessing_service.py:61). Here the whole 4-step chain is ONE
-iterator-form ``mapInPandas`` stage over a binary image column:
+iterator-form Arrow row stage (stage.py) over a binary image column:
 intermediates stay in memory inside the Python worker, only the final
 image crosses the Arrow boundary — the reference's biggest I/O cost is
 gone by construction.
@@ -23,15 +23,12 @@ image-sized binaries so keep Arrow batches small
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import image_ops, imageio
+from ..stage import map_rows
 
 PREPROCESSED_SCHEMA = T.StructType(
     [
@@ -60,32 +57,22 @@ def preprocess_images(
     ``skew_angle`` surfaced as real columns (the reference keeps them
     in a metadata dict)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("media_id", "image", "width", "height",
-                                   "skew_angle", "steps_applied", "error")}
-            for mid, payload in zip(pdf[id_col], pdf[image_col]):
-                out["media_id"].append(int(mid))
-                try:
-                    img, fmt = imageio.decode_auto(bytes(payload))
-                    processed, meta = image_ops.preprocess_image_array(
-                        img, document_type=document_type
-                    )
-                    out["image"].append(imageio.encode_as(processed, fmt))
-                    out["height"].append(int(processed.shape[0]))
-                    out["width"].append(int(processed.shape[1]))
-                    out["skew_angle"].append(float(meta["skew_angle"]))
-                    out["steps_applied"].append(list(meta["steps_applied"]))
-                    out["error"].append(None)
-                except Exception as exc:  # degrade, never fail the task
-                    out["image"].append(None)
-                    out["height"].append(None)
-                    out["width"].append(None)
-                    out["skew_angle"].append(None)
-                    out["steps_applied"].append([])
-                    out["error"].append(str(exc)[:500])
-            yield pd.DataFrame(out)
+    def preprocess(mid: int, payload: bytes | None) -> list[dict]:
+        img, fmt = imageio.decode_auto(bytes(payload))
+        processed, meta = image_ops.preprocess_image_array(
+            img, document_type=document_type
+        )
+        return [{
+            "media_id": mid,
+            "image": imageio.encode_as(processed, fmt),
+            "height": int(processed.shape[0]),
+            "width": int(processed.shape[1]),
+            "skew_angle": float(meta["skew_angle"]),
+            "steps_applied": list(meta["steps_applied"]),
+        }]
 
-    return df.select(
-        F.col(id_col).cast("long").alias(id_col), F.col(image_col)
-    ).mapInPandas(run, schema=PREPROCESSED_SCHEMA)
+    def failed(mid: int, payload, exc: Exception) -> list[dict]:
+        return [{"media_id": mid, "steps_applied": [], "error": str(exc)[:500]}]
+
+    images = df.select(F.col(id_col).cast("long").alias(id_col), F.col(image_col))
+    return map_rows(images, PREPROCESSED_SCHEMA, preprocess, failed)

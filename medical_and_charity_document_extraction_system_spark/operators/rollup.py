@@ -4,7 +4,7 @@ Two implementations of the same semantics
 (/root/reference/backend/app/services/ocr_service.py:188-227):
 
 1. ``combine_page_results`` — pure Python, run *inside* the extraction
-   ``mapInPandas`` stage where a document's pages are already local to
+   ``mapInArrow`` stage where a document's pages are already local to
    one row. This is the hot path: because pages never leave the row,
    the rollup costs **zero shuffle** at any scale. It reproduces the
    reference byte-for-byte, including the ``--- Page N ---`` headers,

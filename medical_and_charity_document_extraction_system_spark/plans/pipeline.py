@@ -22,12 +22,10 @@ Scale notes (the properties that must hold at 10^12 rows):
   pages stay inside their document's row, so the A1 rollup happens
   in-stage (operators/rollup.py).
 - Heavy per-row work (DOM parse, PDF parse, OCR) is in iterator-form
-  ``mapInArrow`` with per-worker engine caching (operators/engines.py)
-  — one model init per Python worker, not per row or batch. Arrow in
-  and Arrow out: the input columns are read as Python lists and the
-  records built straight into a record batch, so no pandas frame is
-  made on either side (pyspark's pandas->Arrow conversion of the
-  nested ``pages``/``spans`` columns cost ~4x ``from_pylist``).
+  ``mapInArrow`` (stage.map_batches: Python lists in, ``from_pylist``
+  out, no pandas frame) with per-worker engine caching
+  (operators/engines.py) — one model init per Python worker, not per
+  row or batch.
 - Rows carry MB-scale binaries: keep
   ``spark.sql.execution.arrow.maxRecordsPerBatch`` small
   (config.spark_conf_overrides).
@@ -37,20 +35,19 @@ Scale notes (the properties that must hold at 10^12 rows):
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Iterator
 
 import pandas as pd
-import pyarrow as pa
 
 from pyspark.sql import DataFrame
-from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..config import DEFAULT_CONFIG, ExtractionConfig
 from ..functions.fields import extract_spans
 from ..functions.html_extract import main_text
 from ..functions.normalize import preprocess_text
 from ..operators.engines import get_engine
-from ..operators.pdf import extract_pdf_pages, is_scanned
+from ..operators.pdf import extract_pdf_pages, is_pdf_bytes, is_scanned
 from ..operators.rollup import combine_page_results
 from ..schema import (
     EXTRACTION_SCHEMA,
@@ -59,7 +56,7 @@ from ..schema import (
     METHOD_HTML,
     METHOD_OCR,
 )
-from ..sources.pages import FAKE_PDF_MAGIC
+from ..stage import map_batches
 
 
 def _error_record(url: str, lang, msg: str) -> dict:
@@ -108,7 +105,7 @@ def _records_frame(records: list[dict]) -> pd.DataFrame:
 def _process_html(url, data, lang, cfg: ExtractionConfig) -> dict:
     try:
         html_str = bytes(data).decode("utf-8")
-        text = main_text(html_str, method=cfg.html_method)
+        text = main_text(html_str)
         return _finish_record(
             url, lang,
             [{"text": text, "confidence": 100.0}],
@@ -153,10 +150,6 @@ def _process_direct(url, text, lang) -> dict:
 _MISSING_MSG = "missing: no html and no text"
 
 
-def _is_pdf_payload(data: bytes) -> bool:
-    return data.startswith(FAKE_PDF_MAGIC) or data.startswith(b"%PDF")
-
-
 def _route_rows(cfg: ExtractionConfig, urls, htmls, texts, langs) -> list[dict]:
     """One extraction record per input row, in input order: per-row
     routing inside Python — the direct analog of the reference's
@@ -168,7 +161,7 @@ def _route_rows(cfg: ExtractionConfig, urls, htmls, texts, langs) -> list[dict]:
                 records.append(_process_direct(url, txt, lang))
             elif data is None:
                 records.append(_error_record(url, lang, _MISSING_MSG))
-            elif _is_pdf_payload(bytes(data)):
+            elif is_pdf_bytes(bytes(data)):
                 records.append(_process_pdf(url, data, lang, cfg))
             else:
                 records.append(_process_html(url, data, lang, cfg))
@@ -181,7 +174,7 @@ def _fused_stage(cfg: ExtractionConfig):
     """The fused stage over pandas batches: ``_route_rows`` with each
     batch's records as one pandas frame (spans as lists of dicts). A
     thin adapter for in-process replays; ``run_extraction`` runs
-    ``_arrow_stage``."""
+    ``_route_rows`` as an Arrow stage."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -192,30 +185,14 @@ def _fused_stage(cfg: ExtractionConfig):
     return run
 
 
-def _arrow_stage(cfg: ExtractionConfig):
-    """The fused stage over Arrow batches, with no pandas round trip:
-    the four input columns are read as Python lists and the records
-    are built straight into an ``EXTRACTION_SCHEMA`` record batch."""
-
-    schema = to_arrow_schema(EXTRACTION_SCHEMA)
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            records = _route_rows(
-                cfg,
-                *(batch.column(c).to_pylist() for c in ("url", "html", "text", "lang")),
-            )
-            yield pa.RecordBatch.from_pylist(records, schema=schema)
-
-    return run
-
-
 def run_extraction(
     pages_df: DataFrame, cfg: ExtractionConfig = DEFAULT_CONFIG
 ) -> DataFrame:
     """pages (url, warc_ts, html, text, lang) -> extractions (one
     row/url). Fused single-pass plan: ONE scan, ONE mapInArrow stage,
     per-row routing inside Python."""
-    return pages_df.select("url", "html", "text", "lang").mapInArrow(
-        _arrow_stage(cfg), schema=EXTRACTION_SCHEMA
+    return map_batches(
+        pages_df.select("url", "html", "text", "lang"),
+        EXTRACTION_SCHEMA,
+        partial(_route_rows, cfg),
     )

@@ -29,13 +29,12 @@ from __future__ import annotations
 
 import html as _html
 from datetime import datetime, timedelta
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from ..schema import PAGES_SCHEMA
+from ..stage import map_rows
 
 # deterministic roster; every entry matches [A-Z][a-z]+ [A-Z][a-z]+
 NAMES = [
@@ -183,17 +182,6 @@ def render_row(doc_id: int, text: str) -> tuple[bytes | None, str | None]:
 
 
 # --------------------------------------------------------- Spark source
-_PAGES_OUT_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("warc_ts", T.TimestampType(), True),
-        T.StructField("html", T.BinaryType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-    ]
-)
-
-
 def synthesize_pages(
     spark: SparkSession,
     sf_dir: str,
@@ -202,9 +190,9 @@ def synthesize_pages(
 ) -> DataFrame:
     """documents.parquet -> pages table (url, warc_ts, html, text, lang).
 
-    Rendering runs as a vectorized ``mapInPandas`` stage — the
-    column-shaped pieces (url, warc_ts) are pure ``pyspark.sql.functions``
-    so only the HTML/PDF byte rendering pays the Python worker cost.
+    Rendering runs as one Arrow row stage (stage.map_rows): each
+    doc_id gives its url, its naive-UTC ``warc_ts`` and its HTML/PDF/
+    text payload.
 
     ``repeat`` amplifies the corpus for benchmarking (distinct doc_ids
     ``doc_id + rep * 10^7`` keep urls unique and formulas
@@ -221,21 +209,17 @@ def synthesize_pages(
     if partitions:
         docs = docs.repartition(partitions)
 
-    def _render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pd.DataFrame(
-                {
-                    "url": [url_for(int(i)) for i in pdf["doc_id"]],
-                    "warc_ts": [warc_ts_for(int(i)) for i in pdf["doc_id"]],
-                    "lang": pdf["lang"].values,
-                }
-            )
-            rendered = [render_row(int(i), t) for i, t in zip(pdf["doc_id"], pdf["text"])]
-            out["html"] = [r[0] for r in rendered]
-            out["text"] = [r[1] for r in rendered]
-            yield out[["url", "warc_ts", "html", "text", "lang"]]
+    def _render(doc_id: int, text: str, lang: str | None) -> list[dict]:
+        html, txt = render_row(doc_id, text)
+        return [{
+            "url": url_for(doc_id),
+            "warc_ts": warc_ts_for(doc_id),
+            "html": html,
+            "text": txt,
+            "lang": lang,
+        }]
 
-    return docs.mapInPandas(_render, schema=_PAGES_OUT_SCHEMA)
+    return map_rows(docs, PAGES_SCHEMA, _render)
 
 
 # --------------------------------------------- construction-time oracle

@@ -39,22 +39,15 @@ import gzip
 import zlib
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-_CRLF2 = b"\r\n\r\n"
+from ..schema import PAGES_SCHEMA
+from ..stage import map_rows
 
-PAGES_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("warc_ts", T.TimestampType(), True),
-        T.StructField("html", T.BinaryType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-    ]
-)
+_CRLF2 = b"\r\n\r\n"
 
 
 # ----------------------------------------------------------------- write
@@ -65,7 +58,11 @@ def build_warc_record(
     content_type: str,
     lang: str | None = None,
 ) -> bytes:
-    """One WARC response record wrapping an HTTP/1.1 200 response."""
+    """One WARC response record wrapping an HTTP/1.1 200 response.
+    ``WARC-Date`` is UTC: an aware ``ts`` is converted, a naive one is
+    taken as UTC."""
+    if ts.tzinfo is not None:
+        ts = ts.astimezone(datetime.timezone.utc)
     http = (
         b"HTTP/1.1 200 OK\r\n"
         + b"Content-Type: " + content_type.encode("ascii") + b"\r\n"
@@ -105,48 +102,44 @@ def pages_to_warc_files(
 
     os.makedirs(out_dir, exist_ok=True)
 
-    def member(row) -> bytes:
-        if row.text is not None:
-            payload, ctype = row.text.encode("utf-8"), "text/plain; charset=utf-8"
+    def member(row: dict) -> bytes:
+        if row["text"] is not None:
+            payload, ctype = row["text"].encode("utf-8"), "text/plain; charset=utf-8"
         else:
-            payload, ctype = bytes(row.html), "application/octet-stream"
-        rec = build_warc_record(row.url, row.warc_ts, payload, ctype, row.lang)
+            payload, ctype = row["html"], "application/octet-stream"
+        rec = build_warc_record(row["url"], row["warc_ts"], payload, ctype, row["lang"])
         return gzip.compress(rec, 6, mtime=0)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as _pd
-
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
 
         # one partition may arrive as several Arrow batches: gather
         # them all before sorting, or member order would depend on
         # batch boundaries
         parts = list(batches)
-        if not parts:
-            return
-        pdf = _pd.concat(parts, ignore_index=True)
-        if not len(pdf):
+        if not sum(b.num_rows for b in parts):
             return
         # shuffle-fetch order is NOT deterministic: sort by url inside
-        # the partition so two runs concatenate members in identical
-        # order (the byte-determinism contract)
-        pdf = pdf.sort_values("url", kind="mergesort")
+        # the partition (stable) so two runs concatenate members in
+        # identical order (the byte-determinism contract)
+        table = pa.Table.from_batches(parts).sort_by("url")
         # repartition(n, "url") maps urls to partition ids by hash —
         # deterministic, so the file name is stable across runs
         pid = TaskContext.get().partitionId()
         path = os.path.join(out_dir, f"part-{pid:05d}.warc.gz")
         tmp = f"{path}.inprogress-{os.getpid()}"
         with open(tmp, "wb") as f:
-            for row in pdf.itertuples(index=False):
+            for row in table.to_pylist():
                 f.write(member(row))
         os.replace(tmp, path)
-        yield _pd.DataFrame({"path": [path], "n_records": [len(pdf)]})
+        yield pa.RecordBatch.from_pydict({"path": [path], "n_records": [table.num_rows]})
 
     # the collect is bounded by FILE count (one tiny row per non-empty
     # partition), never by corpus size
     rows = (
-        pages.repartition(n_files, "url")
-        .mapInPandas(run, "path string, n_records long")
+        pages.select(*PAGES_SCHEMA.names)
+        .repartition(n_files, "url")
+        .mapInArrow(run, "path string, n_records long")
         .collect()
     )
     return sorted(r.path for r in rows)
@@ -242,34 +235,23 @@ def read_warc(
     free when unused."""
     cols = ["content"] + (["path"] if with_provenance else [])
     files = spark.read.format("binaryFile").load(path).select(*cols)
-    out_cols = ("url", "warc_ts", "html", "text", "lang") + (
-        ("warc_file",) if with_provenance else ()
-    )
     schema = (
         PAGES_SCHEMA
         if not with_provenance
         else T.StructType(PAGES_SCHEMA.fields + [T.StructField("warc_file", T.StringType(), True)])
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in out_cols}
-            paths = pdf["path"] if with_provenance else [None] * len(pdf)
-            for content, src in zip(pdf["content"], paths):
-                for rec in parse_warc(_gunzip_members(bytes(content))):
-                    rows["url"].append(rec["url"])
-                    rows["warc_ts"].append(rec["warc_ts"])
-                    if rec["content_type"].startswith("text/plain"):
-                        rows["html"].append(None)
-                        rows["text"].append(
-                            rec["payload"].decode("utf-8", "replace")
-                        )
-                    else:
-                        rows["html"].append(rec["payload"])
-                        rows["text"].append(None)
-                    rows["lang"].append(rec["lang"])
-                    if with_provenance:
-                        rows["warc_file"].append(src)
-            yield pd.DataFrame(rows)
+    def pages(content: bytes, src: str | None = None) -> Iterator[dict]:
+        for rec in parse_warc(_gunzip_members(content)):
+            plain = rec["content_type"].startswith("text/plain")
+            yield {
+                "url": rec["url"],
+                # naive UTC: Arrow stores it as that instant
+                "warc_ts": rec["warc_ts"],
+                "html": None if plain else rec["payload"],
+                "text": rec["payload"].decode("utf-8", "replace") if plain else None,
+                "lang": rec["lang"],
+                "warc_file": src,
+            }
 
-    return files.mapInPandas(run, schema=schema)
+    return map_rows(files, schema, pages)

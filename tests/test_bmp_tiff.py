@@ -170,14 +170,10 @@ class TestImageioRouting:
         with pytest.raises(ValueError):
             imageio.decode_auto(b"RIFF....WEBPVP8 ")  # WebP stays gated
 
-    def test_decode_image_operator_path(self):
-        from medical_and_charity_document_extraction_system_spark.operators.multimodal import (
-            decode_image,
-        )
-
+    def test_decode_auto_non_square_bmp_tiff(self):
         img = _gray(8, 12)
         for fmt in ("bmp", "tiff"):
-            assert (decode_image(imageio.encode_as(img, fmt)) == img).all()
+            assert (imageio.decode_auto(imageio.encode_as(img, fmt))[0] == img).all()
 
 
 class TestTiffCompressed:

@@ -2,18 +2,12 @@ import pytest
 
 from medical_and_charity_document_extraction_system_spark.operators.multimodal import (
     attach_fake_media,
-    decode_image,
     deterministic_features,
     extract_media_features,
     FEATURE_DIM,
 )
 
 from .conftest import SF_SMALL
-
-
-def test_decode_is_clearly_stubbed():
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\x89PNG fake")
 
 
 def test_feature_plumbing_end_to_end(spark):
@@ -123,27 +117,31 @@ def test_resize_accepts_png_and_answers_png(spark):
         assert fmt == "png" and img.shape == (32, 48)
 
 
-def test_decode_image_handles_png_netpbm_jpeg_and_gates_rest():
+def test_decode_auto_handles_png_netpbm_jpeg_webp_and_rejects_rest():
     import numpy as np
-    import pytest as _pytest
 
-    from medical_and_charity_document_extraction_system_spark.functions import jpeg, netpbm, png
-    from medical_and_charity_document_extraction_system_spark.operators.multimodal import (
-        decode_image,
+    from medical_and_charity_document_extraction_system_spark.functions import (
+        imageio,
+        jpeg,
+        netpbm,
+        png,
     )
-
-    arr = (np.arange(48, dtype=np.uint8).reshape(6, 8) * 5) % 256
-    assert (decode_image(png.encode_png(arr)) == arr).all()
-    assert (decode_image(netpbm.encode(arr)) == arr).all()
-    out = decode_image(jpeg.encode_jpeg(arr, quality=95))
-    assert out.shape == arr.shape  # lossy but real decode
-    with _pytest.raises(jpeg.JpegError):
-        decode_image(b"\xff\xd8\xff\xe0fakejpeg")  # damaged JPEG
     from medical_and_charity_document_extraction_system_spark.functions import webp as _webp
 
-    with _pytest.raises(_webp.WebpError):
-        decode_image(b"RIFF....WEBP")  # recognized container, no VP8L chunk
-    assert (decode_image(_webp.encode_webp(arr))[:, :, 0] == arr).all()
-    with _pytest.raises(NotImplementedError, match="PIL"):
-        decode_image(b"II\x00\x00 not any container")  # truly unknown
+    def decode(payload):
+        return imageio.decode_auto(payload)[0]
+
+    arr = (np.arange(48, dtype=np.uint8).reshape(6, 8) * 5) % 256
+    assert (decode(png.encode_png(arr)) == arr).all()
+    assert (decode(netpbm.encode(arr)) == arr).all()
+    out = decode(jpeg.encode_jpeg(arr, quality=95))
+    assert out.shape == arr.shape  # lossy but real decode
+    with pytest.raises(jpeg.JpegError):
+        decode(b"\xff\xd8\xff\xe0fakejpeg")  # damaged JPEG
+    with pytest.raises(_webp.WebpError):
+        decode(b"RIFF....WEBP")  # recognized container, no VP8L chunk
+    assert (decode(_webp.encode_webp(arr))[:, :, 0] == arr).all()
+    for unknown in (b"II\x00\x00 not any container", b"\x89PNG fake"):
+        with pytest.raises(ValueError):
+            decode(unknown)
 

@@ -1,7 +1,10 @@
 """WARC(.gz) source tests (sources/warc.py)."""
 
+import contextlib
 import datetime
 import gzip
+
+from pyspark.sql import functions as F
 
 from medical_and_charity_document_extraction_system_spark.sources.warc import (
     _gunzip_members,
@@ -85,3 +88,47 @@ def test_read_warc_provenance_column(spark, pages_small, tmp_path):
     # every member file contributed, and counts reconcile
     assert len({r.warc_file.rsplit("/", 1)[-1] for r in rows}) == len(paths)
     assert len(rows) == pages_small.count()
+
+
+# 2026-01-01T00:00:00Z as epoch seconds
+NEW_YEAR_UTC = 1767225600
+
+
+@contextlib.contextmanager
+def _session_time_zone(spark, tz):
+    old = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old)
+
+
+def test_warc_writer_dates_are_utc_under_non_utc_session(spark, tmp_path):
+    """``WARC-Date`` is the page's instant in UTC whatever the session
+    time zone is."""
+    page = spark.range(1).select(
+        F.lit("https://tz.example.com/1").alias("url"),
+        F.timestamp_seconds(F.lit(NEW_YEAR_UTC)).alias("warc_ts"),
+        F.lit(None).cast("binary").alias("html"),
+        F.lit("hello").alias("text"),
+        F.lit("en").alias("lang"),
+    )
+    with _session_time_zone(spark, "America/New_York"):
+        (path,) = pages_to_warc_files(page, str(tmp_path / "w"), n_files=1)
+    stream = _gunzip_members(open(path, "rb").read())
+    assert b"WARC-Date: 2026-01-01T00:00:00Z\r\n" in stream
+
+
+def test_warc_reader_dates_are_utc_under_non_utc_session(spark, tmp_path):
+    """A ``WARC-Date`` read back under a non-UTC session is the same
+    instant, not its wall clock re-read in the session zone."""
+    rec = build_warc_record(
+        "https://tz.example.com/1", datetime.datetime(2026, 1, 1), b"hi", "text/plain"
+    )
+    (tmp_path / "r").mkdir()
+    (tmp_path / "r" / "one.warc.gz").write_bytes(gzip.compress(rec, 6, mtime=0))
+    with _session_time_zone(spark, "America/New_York"):
+        back = read_warc(spark, str(tmp_path / "r"))
+        (row,) = back.select(F.col("warc_ts").cast("long").alias("s")).collect()
+    assert row.s == NEW_YEAR_UTC
