@@ -117,7 +117,8 @@ def test_resize_accepts_png_and_answers_png(spark):
         assert fmt == "png" and img.shape == (32, 48)
 
 
-def test_decode_auto_handles_png_netpbm_jpeg_webp_and_rejects_rest():
+def test_decode_image_handles_png_netpbm_jpeg_and_gates_rest():
+    """imageio.decode_auto is the one image decoder every stage uses."""
     import numpy as np
 
     from medical_and_charity_document_extraction_system_spark.functions import (
@@ -141,7 +142,15 @@ def test_decode_auto_handles_png_netpbm_jpeg_webp_and_rejects_rest():
     with pytest.raises(_webp.WebpError):
         decode(b"RIFF....WEBP")  # recognized container, no VP8L chunk
     assert (decode(_webp.encode_webp(arr))[:, :, 0] == arr).all()
-    for unknown in (b"II\x00\x00 not any container", b"\x89PNG fake"):
-        with pytest.raises(ValueError):
-            decode(unknown)
+    with pytest.raises(ValueError, match="unrecognized image container"):
+        decode(b"II\x00\x00 not any container")  # truly unknown
+
+
+def test_decode_is_clearly_stubbed():
+    """A payload that only looks like PNG (no full signature) is refused
+    with a clear error rather than decoded to garbage."""
+    from medical_and_charity_document_extraction_system_spark.functions import imageio
+
+    with pytest.raises(ValueError, match="unrecognized image container"):
+        imageio.decode_auto(b"\x89PNG fake")
 
