@@ -9,15 +9,18 @@
 
 Replaces the reference's uvicorn/FastAPI serving layer
 (main.py:82-88): one batch job = one resumable run over an input
-table, with salted repartition, checkpointed buckets, and metrics
+table, with url-hash repartition, checkpointed buckets, and metrics
 writes.
 
-``--partitions`` repartitions the input before extraction. Without
-heavy hosts the layout is the url hash the checkpoint buckets on, so
-when ``--partitions`` divides ``--buckets`` every bucket lives in one
-task and the write makes ``--buckets`` files, not
-``--partitions`` x ``--buckets``. A re-run whose buckets are all in the
-manifest extracts nothing and writes no metrics.
+``--partitions`` repartitions the input by the url hash the checkpoint
+buckets on, so when ``--partitions`` divides ``--buckets`` every bucket
+lives in one task and the write makes ``--buckets`` files, not
+``--partitions`` x ``--buckets``. A url hash cannot be host-skewed:
+a host carrying 40% of the rows spreads over every task like any
+other. ``main`` reports as ``heavy_hosts`` the hosts over 5% of the
+docs in the per-host metrics table it writes. A re-run whose buckets
+are all in the manifest extracts nothing, writes no metrics and
+reports no heavy hosts.
 
 The session this entrypoint builds for itself keeps Spark's stock
 Python worker daemon, not ``get_spark``'s ``worker_daemon``: on a
@@ -43,14 +46,13 @@ from medical_and_charity_document_extraction_system_spark.plans.checkpoint impor
     run_checkpointed,
 )
 from medical_and_charity_document_extraction_system_spark.plans.metrics import (
+    heavy_hosts,
     host_quality_metrics,
     partition_metrics,
     write_metrics,
 )
 from medical_and_charity_document_extraction_system_spark.plans.salting import (
-    find_heavy_hosts,
     repartition_by_url,
-    salted_host_repartition,
 )
 from medical_and_charity_document_extraction_system_spark.schema import PAGES_SCHEMA
 from medical_and_charity_document_extraction_system_spark.sources.validate import (
@@ -76,7 +78,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--partitions", type=_positive_int, default=None, help="input repartition width"
     )
-    p.add_argument("--salt-buckets", type=_positive_int, default=8)
     p.add_argument("--engine", default="stub")
     p.add_argument(
         "--snapshot-table",
@@ -88,23 +89,13 @@ def build_parser() -> argparse.ArgumentParser:
     return p
 
 
-def choose_layout(
-    pages: DataFrame, partitions: int | None, salt_buckets: int
-) -> tuple[DataFrame, list[str]]:
-    """north_rule partitioning: when ``partitions`` is set, detect heavy
-    hosts on a seeded sample FIRST, then repartition once. With heavy
-    hosts the layout is host-grouped with the heavy keys salted across
-    pmod(xxhash64(url), salt_buckets) — host locality for downstream
-    per-host ops without the 40%-of-rows-in-one-task penalty; with no
-    skew detected, uniform url-hash (perfect balance for the per-row
-    extraction map). Without ``partitions`` the input layout is kept
-    and no probe runs. Returns (repartitioned_df, heavy_hosts)."""
+def choose_layout(pages: DataFrame, partitions: int | None) -> DataFrame:
+    """The extraction layout: ``repartition_by_url`` to ``partitions``
+    tasks when set — the checkpoint's own hash, balanced whatever the
+    host skew — else the input's own layout."""
     if not partitions:
-        return pages, []
-    heavy = find_heavy_hosts(pages, sample_fraction=0.1)
-    if heavy:
-        return salted_host_repartition(pages, partitions, heavy, salt_buckets), heavy
-    return repartition_by_url(pages, partitions), heavy
+        return pages
+    return repartition_by_url(pages, partitions)
 
 
 def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> dict:
@@ -121,19 +112,22 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> di
         pages = spark.read.schema(PAGES_SCHEMA).parquet(args.input)
         validate_pages_schema(pages)  # real check, unlike the
         # reference's empty validator stubs (core/validators/*.py)
-        pages, heavy = choose_layout(pages, args.partitions, args.salt_buckets)
+        pages = choose_layout(pages, args.partitions)
 
         done = run_checkpointed(
             spark, pages, args.output, args.manifest, args.run_id,
             n_buckets=args.buckets, cfg=cfg,
         )
-        snapshot_id = None
+        snapshot_id, heavy = None, []
         if done:  # a no-op re-run already has its metrics and snapshot
             extracted = read_output(spark, args.output)
             write_metrics(partition_metrics(extracted, args.run_id), args.metrics)
-            write_metrics(
-                host_quality_metrics(extracted, args.run_id), args.metrics + "_hosts"
-            )
+            hosts = host_quality_metrics(extracted, args.run_id).cache()
+            try:
+                write_metrics(hosts, args.metrics + "_hosts")
+                heavy = heavy_hosts(hosts)
+            finally:
+                hosts.unpersist()
             if args.snapshot_table:
                 from pyspark.sql import functions as F
 

@@ -4,13 +4,17 @@ obligation #3).
 Replaces the reference's task JSON sink (json_utils.py:35-74) and
 health probe (health_routes.py:22-62) with queryable tables:
 
-- ``partition_metrics`` — one row per Spark partition of the
-  extraction output: docs in/ok/error, chars out. groupBy on
-  ``spark_partition_id()`` — map-side combinable, no extra scan.
+- ``partition_metrics`` — one row per checkpoint bucket
+  (``part_id``) of the extraction output: docs in/ok/error, chars
+  out. A bucket is the unit a resume redoes, so each row names work
+  that can be rerun; the aggregate is map-side combined but does read
+  the written output once.
 - ``host_quality_metrics`` — extraction-quality rollup by host:
   error share, scanned share, avg confidence, span yield. This is
   the table an operator watches at 100 TB to spot a host whose
   markup breaks the extractor.
+- ``heavy_hosts`` — the hosts of that table carrying more than a
+  fraction of the run's docs: exact, and a function of the rows alone.
 - ``write_metrics`` — append to a parquet/Iceberg-style metrics dir.
 """
 
@@ -24,7 +28,7 @@ from .salting import host_of
 
 def partition_metrics(extracted: DataFrame, run_id: str) -> DataFrame:
     return (
-        extracted.groupBy(F.spark_partition_id().alias("partition_id"))
+        extracted.groupBy("part_id")
         .agg(
             F.count(F.lit(1)).alias("docs_in"),
             F.sum(F.when(F.col("error").isNull(), 1).otherwise(0)).alias("docs_ok"),
@@ -48,6 +52,16 @@ def host_quality_metrics(extracted: DataFrame, run_id: str) -> DataFrame:
         )
         .select(F.lit(run_id).alias("run_id"), "*")
     )
+
+
+def heavy_hosts(host_metrics: DataFrame, heavy_fraction: float = 0.05) -> list[str]:
+    """Hosts of a ``host_quality_metrics`` table with more than
+    ``heavy_fraction`` of its docs, sorted."""
+    total = host_metrics.agg(F.sum("docs")).first()[0]
+    if not total:
+        return []
+    rows = host_metrics.where(F.col("docs") > heavy_fraction * total).collect()
+    return sorted(r.host for r in rows)
 
 
 def write_metrics(df: DataFrame, metrics_dir: str) -> None:

@@ -14,8 +14,8 @@ reference's per-document ``if not is_scanned:`` dispatch at
 ocr_service.py:56. One plan, one scan, one Python worker pool: Spark
 does not share scans between union branches, so a filter-per-branch
 plan would read the input once per branch and run one Python worker
-pool per Python stage. Layout (url-hash or salted-host repartition)
-is the job entrypoint's business (job.choose_layout), not the plan's.
+pool per Python stage. Layout (the url-hash repartition) is the job
+entrypoint's business (job.choose_layout), not the plan's.
 
 Scale notes (the properties that must hold at 10^12 rows):
 - **Zero mandatory shuffles.** The fused plan is scan -> narrow ops;

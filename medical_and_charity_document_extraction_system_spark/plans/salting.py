@@ -5,17 +5,13 @@ dominate — sources/pages.py plants host0 at ~40% to exercise this).
 Plain DataFrame code, no custom Catalyst rules (SURVEY.md section 4):
 
 - ``repartition_by_url``      — uniform spread by Spark's hash
-  partitioner on ``url``: the right choice for the extraction map
-  stages (no key locality needed, perfect balance), and the same
+  partitioner on ``url``: the one extraction layout (no key locality
+  needed, and a url hash cannot be host-skewed), and the same
   ``pmod(hash(url), n)`` the checkpoint buckets on, so a width that
   divides the bucket count keeps each bucket in one task.
-- ``find_heavy_hosts``        — heavy-hitter detection on a sample
-  (one small agg, collected to the driver; the list is tiny).
-- ``salted_host_repartition`` — host-grouped layout where heavy hosts
-  are split across ``salt_buckets`` partitions via
-  ``pmod(xxhash64(url), k)``.
 - ``skew_safe_bucket_self_join`` — the LSH candidate self-join with
-  degenerate buckets split across salted reducers.
+  degenerate buckets split across salted reducers: explicit salting
+  where a hot key is shuffled into a join.
 
 Per-host aggregations need no salting: Spark's ``HashAggregate``
 already runs a partial aggregate in every map task before the host
@@ -24,7 +20,7 @@ per task.
 
 AQE (enabled in config.spark_conf_overrides) additionally rebalances
 post-shuffle partitions at runtime; explicit salting covers the
-single-hot-key layouts and joins AQE cannot split.
+single-hot-key joins AQE cannot split.
 """
 
 from __future__ import annotations
@@ -39,44 +35,6 @@ def host_of(url: Column) -> Column:
 
 def repartition_by_url(df: DataFrame, num_partitions: int) -> DataFrame:
     return df.repartition(num_partitions, "url")
-
-
-def find_heavy_hosts(
-    df: DataFrame,
-    heavy_fraction: float = 0.05,
-    sample_fraction: float | None = None,
-) -> list[str]:
-    """Hosts carrying more than ``heavy_fraction`` of rows. Runs on a
-    seeded sample when ``sample_fraction`` is given (at 10^12 rows you
-    never count exactly)."""
-    hosts = df.select(host_of(F.col("url")).alias("host"))
-    if sample_fraction:
-        hosts = hosts.sample(fraction=sample_fraction, seed=42)
-    freq = hosts.groupBy("host").agg(F.count(F.lit(1)).alias("n"))
-    total = freq.agg(F.sum("n")).first()[0] or 0
-    if not total:
-        return []
-    rows = freq.where(F.col("n") > heavy_fraction * total).collect()
-    return sorted(r.host for r in rows)
-
-
-def salt_column(url: Column, heavy_hosts: list[str], salt_buckets: int) -> Column:
-    """0 for normal hosts; pmod(xxhash64(url), k) for heavy ones."""
-    if not heavy_hosts:
-        return F.lit(0)
-    return F.when(
-        host_of(url).isin(heavy_hosts), F.pmod(F.xxhash64(url), F.lit(salt_buckets))
-    ).otherwise(F.lit(0))
-
-
-def salted_host_repartition(
-    df: DataFrame,
-    num_partitions: int,
-    heavy_hosts: list[str],
-    salt_buckets: int = 8,
-) -> DataFrame:
-    salt = salt_column(F.col("url"), heavy_hosts, salt_buckets)
-    return df.repartition(num_partitions, host_of(F.col("url")), salt)
 
 
 def skew_safe_bucket_self_join(

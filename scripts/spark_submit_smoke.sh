@@ -1,7 +1,8 @@
 #!/usr/bin/env bash
 # North-rule launch path: package the library, launch the batch job via
-# spark-submit --py-files, verify outputs + manifest + metrics land, then
-# launch it again and verify the re-run redoes nothing.
+# spark-submit --py-files, verify outputs + manifest + metrics land and
+# that the url-hash layout writes one file per bucket, then launch it
+# again and verify the re-run redoes nothing.
 set -euo pipefail
 
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
@@ -35,6 +36,7 @@ submit() {
     --manifest "$WORK/manifest" \
     --run-id smoke1 \
     --buckets 16 \
+    --partitions 8 \
     --snapshot-table "$WORK/snaptbl" 2>&1 | tail -2
 }
 
@@ -44,9 +46,14 @@ submit
 submit
 
 python - "$WORK" <<'EOF'
+import glob
 import sys
 import duckdb
 work = sys.argv[1]
+# --partitions 8 divides --buckets 16: each bucket is one task, one file
+dirs = glob.glob(f"{work}/out/part_id=*")
+files = [len(glob.glob(f"{d}/*.parquet")) for d in dirs]
+assert len(dirs) == 16 and files == [1] * 16, (len(dirs), files)
 n = duckdb.sql(f"select count(*) from read_parquet('{work}/out/*/*.parquet', hive_partitioning=1)").fetchone()[0]
 m = duckdb.sql(f"select count(*) from read_parquet('{work}/manifest/*.parquet')").fetchone()[0]
 x = duckdb.sql(f"select sum(docs_in) from read_parquet('{work}/metrics/*.parquet')").fetchone()[0]
@@ -59,6 +66,7 @@ assert log[-1]["snapshot_id"] == 1 and log[-1]["operation"] == "append", log
 s = duckdb.sql(f"select count(*) from read_parquet('{work}/snaptbl/data/*.parquet')").fetchone()[0]
 assert s == 500, s
 print(f"spark-submit smoke OK: {n} docs extracted, {m} manifest buckets, "
+      f"{sum(files)} output files, "
       f"metrics docs_in={x}, snapshot 1 committed with {s} rows; "
       f"the no-op second launch added nothing")
 EOF

@@ -1,7 +1,9 @@
-"""North_rule plumbing: salting, checkpoint/resume, metrics, streaming,
+"""North_rule plumbing: layout, checkpoint/resume, metrics, streaming,
 spark-submit job entrypoint."""
 
+import glob
 import os
+import statistics
 
 import pytest
 from pyspark.sql import functions as F
@@ -9,13 +11,18 @@ from pyspark.sql import functions as F
 from medical_and_charity_document_extraction_system_spark.plans.checkpoint import (
     run_checkpointed,
 )
+from medical_and_charity_document_extraction_system_spark.job import (
+    build_parser,
+    choose_layout,
+    main,
+)
 from medical_and_charity_document_extraction_system_spark.plans.metrics import (
+    heavy_hosts,
     host_quality_metrics,
     partition_metrics,
 )
 from medical_and_charity_document_extraction_system_spark.plans.salting import (
-    find_heavy_hosts,
-    salted_host_repartition,
+    host_of,
     repartition_by_url,
 )
 from medical_and_charity_document_extraction_system_spark.plans import run_extraction
@@ -35,57 +42,70 @@ def test_default_cpus_is_affinity_unless_env_set(monkeypatch):
     assert default_cpus() == "3"
 
 
-def test_find_heavy_hosts(pages_small):
-    heavy = find_heavy_hosts(pages_small, heavy_fraction=0.2)
-    assert heavy == ["host0.example.com"]  # planted ~40% skew
+PLANTED_HEAVY = ["host0.example.com", "host1.example.com", "host2.example.com"]
 
 
-def test_salted_repartition_splits_heavy_host(pages_small):
-    heavy = ["host0.example.com"]
-    df = salted_host_repartition(pages_small, 16, heavy, salt_buckets=8)
-    sizes = (
-        df.groupBy(F.spark_partition_id().alias("p"))
-        .count()
-        .agg(F.max("count"))
-        .first()[0]
-    )
-    # without salting host0's ~200 rows land in one partition
-    assert sizes < 150
+def test_find_heavy_hosts(extracted_small):
+    """heavy_hosts reads the per-host metrics table: exact counts, no
+    sample, so the same rows give the same list at any width."""
+    hosts = host_quality_metrics(extracted_small, "run1")
+    assert heavy_hosts(hosts, heavy_fraction=0.2) == ["host0.example.com"]  # planted ~40%
+    assert heavy_hosts(hosts) == PLANTED_HEAVY
+    assert heavy_hosts(hosts.limit(0)) == []
 
 
-def test_job_layout_applies_salting_under_skew(pages_small):
-    """The production entrypoint must actually APPLY the heavy-host
-    detection it pays for: under the planted 40% host0 skew,
-    choose_layout returns the salted host layout whose extraction-
-    stage partitions are balanced (host0 split across salt buckets)."""
-    from medical_and_charity_document_extraction_system_spark.job import choose_layout
-
-    laid_out, heavy = choose_layout(pages_small, partitions=16, salt_buckets=8)
-    assert "host0.example.com" in heavy
+def test_url_layout_balances_skewed_hosts(spark, pages_small, tmp_path):
+    """host0 carries ~40% of pages_small, yet the url-hash layout keeps
+    every extraction task near the median, and a --partitions 8
+    --buckets 16 job writes one file per bucket: a layout keyed by
+    anything but the bucket's own hash spreads each bucket over many
+    tasks, each writing its own file."""
     sizes = [
         r["count"]
-        for r in laid_out.groupBy(F.spark_partition_id()).count().collect()
+        for r in choose_layout(pages_small, 16)
+        .groupBy(F.spark_partition_id())
+        .count()
+        .collect()
     ]
-    # host0 carries ~200 of 500 rows; salted layout caps any single
-    # extraction task well below that
-    assert max(sizes) < 150
+    assert len(sizes) == 16
+    assert max(sizes) <= 2 * statistics.median(sizes)
+
+    inp = str(tmp_path / "skew_in")
+    pages_small.write.parquet(inp)
+    main(_job_args(tmp_path, inp, buckets=16, partitions=8), spark=spark)
+    dirs = glob.glob(str(tmp_path / "job_out" / "part_id=*"))
+    assert len(dirs) == 16
+    for d in dirs:
+        assert len(glob.glob(f"{d}/*.parquet")) == 1, d
+
+
+def test_job_heavy_hosts_independent_of_input_files(spark, pages_small, tmp_path):
+    """The same pages as 1 file and as 8 files give the same
+    heavy_hosts: the list is a function of the rows alone."""
+    got = []
+    for n in (1, 8):
+        inp = str(tmp_path / f"in{n}")
+        pages_small.repartition(n).write.parquet(inp)
+        res = main(_job_args(tmp_path / f"run{n}", inp, buckets=8), spark=spark)
+        got.append(res["heavy_hosts"])
+    assert got == [PLANTED_HEAVY, PLANTED_HEAVY]
 
 
 def test_job_layout_uniform_without_skew(spark):
-    """No heavy hosts -> uniform url-hash layout (and no layout change
-    when partitions is None)."""
-    from medical_and_charity_document_extraction_system_spark.job import choose_layout
-
+    """url-hash layout at the asked width; no layout change when
+    partitions is None; no heavy host among 200 one-doc hosts."""
     rows = [(f"https://host{i}.example.com/doc/{i}", f"t{i}") for i in range(200)]
     flat = spark.createDataFrame(rows, "url string, text string")
-    laid_out, heavy = choose_layout(flat, partitions=16, salt_buckets=8)
-    assert heavy == []
     counts = [
-        r["count"] for r in laid_out.groupBy(F.spark_partition_id()).count().collect()
+        r["count"]
+        for r in choose_layout(flat, 16).groupBy(F.spark_partition_id()).count().collect()
     ]
     assert len(counts) == 16
-    same, heavy2 = choose_layout(flat, partitions=None, salt_buckets=8)
-    assert same is flat and heavy2 == []
+    assert choose_layout(flat, None) is flat
+    hosts = flat.groupBy(host_of(F.col("url")).alias("host")).agg(
+        F.count(F.lit(1)).alias("docs")
+    )
+    assert heavy_hosts(hosts) == []
 
 
 def test_repartition_by_url_balances(pages_small):
@@ -122,7 +142,12 @@ def test_checkpoint_resume_equals_single_run(spark, pages_small, tmp_path):
 
 
 def test_partition_metrics_totals(extracted_small):
-    m = partition_metrics(extracted_small, "run1")
+    from medical_and_charity_document_extraction_system_spark.plans.checkpoint import (
+        url_bucket,
+    )
+
+    m = partition_metrics(extracted_small.withColumn("part_id", url_bucket(8)), "run1")
+    assert sorted(r.part_id for r in m.collect()) == list(range(8))  # one row per bucket
     tot = m.agg(F.sum("docs_in"), F.sum("docs_ok"), F.sum("docs_error")).first()
     assert tot[0] == 500
     assert tot[1] + tot[2] == 500
@@ -159,8 +184,6 @@ def test_streaming_matches_batch(spark, pages_small, tmp_path):
 def test_job_entrypoint(spark, pages_small, tmp_path):
     inp = str(tmp_path / "job_in")
     pages_small.write.parquet(inp)
-    from medical_and_charity_document_extraction_system_spark.job import main
-
     res = main(
         [
             "--input", inp,
@@ -175,7 +198,7 @@ def test_job_entrypoint(spark, pages_small, tmp_path):
     )
     assert res["completed_parts"] == list(range(8))
     # default threshold 5%: the three planted heavy hosts (40/20/10%)
-    assert "host0.example.com" in res["heavy_hosts"]
+    assert res["heavy_hosts"] == PLANTED_HEAVY
     out = spark.read.parquet(str(tmp_path / "job_out"))
     assert out.count() == 500
     metrics = spark.read.parquet(str(tmp_path / "job_metrics"))
@@ -184,19 +207,21 @@ def test_job_entrypoint(spark, pages_small, tmp_path):
 
 def test_job_rejects_non_positive_widths(capsys):
     # 0 buckets would checkpoint nothing and "succeed", 0 partitions
-    # would read as unset, 0 salt buckets would pmod by zero
-    from medical_and_charity_document_extraction_system_spark.job import build_parser
-
+    # would read as unset
     base = ["--input", "i", "--output", "o", "--metrics", "m", "--manifest", "f",
             "--run-id", "r"]
     parser = build_parser()
-    for flag in ("--buckets", "--partitions", "--salt-buckets"):
+    for flag in ("--buckets", "--partitions"):
         with pytest.raises(SystemExit):
             parser.parse_args(base + [flag, "0"])
         assert "must be >= 1" in capsys.readouterr().err
     args = parser.parse_args(base)
-    assert (args.buckets, args.partitions, args.salt_buckets) == (256, None, 8)
+    assert (args.buckets, args.partitions) == (256, None)
     assert parser.parse_args(base + ["--partitions", "4"]).partitions == 4
+    # --salt-buckets is no option: a launch line still passing it fails loudly
+    with pytest.raises(SystemExit):
+        parser.parse_args(base + ["--salt-buckets", "8"])
+    assert "unrecognized arguments: --salt-buckets 8" in capsys.readouterr().err
 
 
 def _job_args(tmp_path, inp, buckets, partitions=None):
@@ -223,9 +248,6 @@ def test_url_layout_aligns_with_checkpoint_buckets(spark, tmp_path):
     """repartition_by_url and the checkpoint bucket are one hash: with
     the width dividing the bucket count each bucket sits in one task,
     so the job writes one file per bucket."""
-    import glob
-
-    from medical_and_charity_document_extraction_system_spark.job import main
     from medical_and_charity_document_extraction_system_spark.plans.checkpoint import (
         url_bucket,
     )
@@ -238,7 +260,7 @@ def test_url_layout_aligns_with_checkpoint_buckets(spark, tmp_path):
     assert misplaced == 0
 
     res = main(_job_args(tmp_path, inp, buckets=8, partitions=4), spark=spark)
-    assert res["heavy_hosts"] == []
+    assert res["heavy_hosts"] == []  # 200 hosts of one doc each: none over 5%
     out = str(tmp_path / "job_out")
     dirs = sorted(glob.glob(f"{out}/part_id=*"))
     assert [d.rsplit("=", 1)[1] for d in dirs] == [str(b) for b in range(8)]
@@ -249,8 +271,6 @@ def test_url_layout_aligns_with_checkpoint_buckets(spark, tmp_path):
 def test_job_noop_rerun_keeps_metrics(spark, tmp_path):
     """A re-run whose buckets are all in the manifest redoes nothing
     and appends no second copy of the metrics."""
-    from medical_and_charity_document_extraction_system_spark.job import main
-
     inp = _flat_pages(spark, tmp_path)
     args = _job_args(tmp_path, inp, buckets=8)
     assert main(args, spark=spark)["completed_parts"] == list(range(8))
@@ -264,7 +284,6 @@ def test_job_noop_rerun_keeps_metrics(spark, tmp_path):
 def test_job_empty_input_writes_empty_metrics(spark, tmp_path):
     """A zero-row input completes every bucket and writes zero-row
     metrics tables; the re-run then redoes nothing."""
-    from medical_and_charity_document_extraction_system_spark.job import main
     from medical_and_charity_document_extraction_system_spark.schema import PAGES_SCHEMA
 
     inp = str(tmp_path / "empty_in")
@@ -290,8 +309,6 @@ def test_host_rate_stream_windowed_counts(spark, pages_small, tmp_path):
         (r.window_start, r.host): r.n_pages
         for r in spark.read.parquet(outp).collect()
     }
-    from medical_and_charity_document_extraction_system_spark.plans.salting import host_of
-
     import datetime
 
     max_ts = pages_small.agg(F.max("warc_ts")).first()[0]
@@ -330,7 +347,6 @@ def test_dedup_url_stream_drops_recrawls(spark, pages_small, tmp_path):
 def test_host_running_totals_stateful_stream(spark, pages_small, tmp_path):
     """applyInPandasWithState keeps per-host running totals across
     micro-batches; the final row per host equals the batch totals."""
-    from medical_and_charity_document_extraction_system_spark.plans.salting import host_of
     from medical_and_charity_document_extraction_system_spark.streaming import (
         host_running_totals_stream,
     )
@@ -392,8 +408,6 @@ def test_streaming_cms_matches_one_shot_and_is_idempotent(spark, tmp_path):
     )
     docs.repartition(6).write.parquet(inp)
     cms_register_stream(spark, inp, regs, ck, max_files_per_trigger=2).awaitTermination()
-    import glob
-
     epochs = glob.glob(f"{regs}/epoch_*")
     assert len(epochs) >= 2  # genuinely incremental, not one batch
     merged = {
@@ -425,8 +439,6 @@ def test_streaming_incremental_dedup_matches_one_shot(spark, tmp_path):
     each batch only deduplicates against strictly earlier epochs
     (partition-pruned store slice), and a replay over the same
     checkpoint adds nothing."""
-    import glob
-
     from medical_and_charity_document_extraction_system_spark.operators.dedup import (
         minhash_near_dup,
     )
@@ -501,8 +513,6 @@ def test_streaming_hll_matches_one_shot_and_double_apply_is_safe(
     hll_register_stream(
         spark, inp, regs, ck, max_files_per_trigger=2
     ).awaitTermination()
-    import glob
-
     epochs = sorted(glob.glob(f"{regs}/epoch_*"))
     assert len(epochs) >= 2  # genuinely incremental
     merged = {
