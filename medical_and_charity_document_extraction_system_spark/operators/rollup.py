@@ -39,7 +39,8 @@ def combine_page_results(pages: list[dict]) -> dict:
         f"--- Page {i + 1} ---\n{t}" for i, t in enumerate(texts)
     )
     total_chars = sum(len(t) for t in texts)
-    total_words = sum(len(t.split()) for t in texts)
+    words = [len(t.split()) for t in texts]
+    total_words = sum(words)
     avg_conf = round(sum(confs) / len(confs), 2) if confs else 0.0
     return {
         "text": full_text,
@@ -52,13 +53,13 @@ def combine_page_results(pages: list[dict]) -> dict:
                 "page_number": i + 1,
                 "text": t,
                 "char_count": len(t),
-                "word_count": len(t.split()),
+                "word_count": n,
                 "confidence": c,
                 # OCR engine pages carry word records; text/html pages
                 # have none (reference: words[] only in engine output)
                 "words": p.get("words"),
             }
-            for i, (t, c, p) in enumerate(zip(texts, confs, pages))
+            for i, (t, c, p, n) in enumerate(zip(texts, confs, pages, words))
         ],
     }
 

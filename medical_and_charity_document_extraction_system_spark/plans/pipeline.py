@@ -6,7 +6,9 @@ Spark re-expression of the reference's flagship trace
 ocr_service.py:33-127):
 
     scan -> ONE iterator-form mapInArrow stage
-            (route per row: direct-text | pdf | html | error
+            ([parse pages, when the input is an Arrow row stage's
+              output: read_warc, synthesize_pages]
+             -> route per row: direct-text | pdf | html | error
              -> extraction -> field spans -> page rollup)
 
 Routing happens per row inside Python — the direct analog of the
@@ -190,9 +192,12 @@ def run_extraction(
 ) -> DataFrame:
     """pages (url, warc_ts, html, text, lang) -> extractions (one
     row/url). Fused single-pass plan: ONE scan, ONE mapInArrow stage,
-    per-row routing inside Python."""
+    per-row routing inside Python. Pages an uncached Arrow row stage
+    returned (``read_warc``, ``synthesize_pages``) are extracted in
+    that stage's own ``mapInArrow`` (stage.py)."""
     return map_batches(
-        pages_df.select("url", "html", "text", "lang"),
+        pages_df,
         EXTRACTION_SCHEMA,
         partial(_route_rows, cfg),
+        columns=("url", "html", "text", "lang"),
     )

@@ -12,8 +12,11 @@ source — exactly how crawl archives are processed in practice (the
 gzip stream is not block-splittable; Common Crawl publishes ~1 GB
 files in the tens of thousands, so parallelism comes from file count,
 and ``spark.sql.files.maxPartitionBytes`` is irrelevant here). Records
-are parsed inside one Arrow stage; malformed records degrade to
-skipped, never task failures.
+are parsed inside one Arrow row stage, and ``run_extraction`` over
+``read_warc`` fuses into it (stage.py): each file is gunzipped, parsed
+and extracted in one Python task, with no second stage and no pass of
+the parsed pages through the JVM. Malformed records degrade to skipped
+and non-ASCII header values decode as Latin-1, never task failures.
 
 The writer produces real archives for tests/fixtures and round-trip
 proofs: each record is an independent gzip member (the Common Crawl
@@ -48,6 +51,7 @@ from ..schema import PAGES_SCHEMA
 from ..stage import map_rows
 
 _CRLF2 = b"\r\n\r\n"
+_FEED = 4096  # first piece of a gzip member fed to zlib (_gunzip_members)
 
 
 # ----------------------------------------------------------------- write
@@ -149,19 +153,30 @@ def pages_to_warc_files(
 def _gunzip_members(data: bytes) -> bytes:
     """Concatenated gzip members -> concatenated plaintext (zlib
     member loop; gzip.decompress also handles multi-member, but the
-    explicit loop recovers cleanly from trailing garbage)."""
+    explicit loop recovers cleanly from trailing garbage: a member
+    that fails to inflate, and all after it, add nothing).
+
+    Each member is fed zero-copy ``memoryview`` pieces that double
+    from ``_FEED``, so its leftover ``unused_data`` copy is bounded by
+    about its own compressed size and the loop is linear in members;
+    handing zlib the whole rest of the file per member would make it
+    quadratic."""
     out = bytearray()
-    pos = 0
-    while pos < len(data):
+    view = memoryview(data)
+    pos, n = 0, len(data)
+    while pos < n:
         d = zlib.decompressobj(wbits=47)
+        kept, step = len(out), _FEED
         try:
-            out += d.decompress(data[pos:])
+            while not d.eof and pos < n:
+                piece = view[pos : pos + step]
+                pos += len(piece)
+                step *= 2
+                out += d.decompress(piece)
         except zlib.error:
+            del out[kept:]
             break
-        rest = d.unused_data
-        if not rest:
-            break
-        pos = len(data) - len(rest)
+        pos -= len(d.unused_data)
     return bytes(out)
 
 
@@ -217,7 +232,7 @@ def parse_warc(stream: bytes) -> list[dict]:
                 "warc_ts": ts,
                 "payload": body[http_end + 4 :],
                 "content_type": ctype.decode("latin-1"),
-                "lang": lang.decode("ascii") if lang else None,
+                "lang": lang.decode("latin-1") if lang else None,
             }
         )
     return out

@@ -28,11 +28,11 @@ def test_fused_extraction_zero_shuffles_one_scan(spark):
     tree = plan_of(df, "simple")  # tree only: node counts are exact
     assert "Exchange" not in tree  # zero shuffles, at any scale
     assert tree.count("Scan parquet") == 1  # one pass over the input
-    # exactly one extraction stage; synthesize_pages renders in its own
-    # Arrow stage, and no stage goes through pandas
+    # exactly one Python stage: synthesize_pages' rendering fuses into
+    # the extraction stage, and no stage goes through pandas
     stages = [line for line in tree.splitlines() if "MapInArrow" in line]
-    assert len(stages) == 2 and "MapInPandas" not in tree
-    assert sum("is_scanned" in line for line in stages) == 1
+    assert len(stages) == 1 and "MapInPandas" not in tree
+    assert "is_scanned" in stages[0]
     # column pruning reaches the scan: warc_ts never deserialized
     read_schema = [l for l in plan_of(df).splitlines() if "ReadSchema" in l]
     assert read_schema and "warc_ts" not in read_schema[0]

@@ -1,10 +1,13 @@
-"""The worker daemon's zip-directory cache (worker_daemon.py): re-read
-an archive only when its file changed, and run in every Python worker
-that ``get_spark`` sessions start."""
+"""The worker daemon (worker_daemon.py): the zip-directory cache
+re-reads an archive only when its file changed and runs in every
+Python worker that ``get_spark`` sessions start; each worker freezes
+its heap once, after its first task."""
 
+import gc
 import importlib
 import os
 import sys
+import time
 import zipfile
 import zipimport
 
@@ -14,7 +17,7 @@ import pytest
 from medical_and_charity_document_extraction_system_spark import worker_daemon
 
 # 3.13's invalidate_caches re-reads lazily; the daemon patches nothing there
-pytestmark = pytest.mark.skipif(sys.version_info >= (3, 13), reason="no patch on 3.13+")
+zip_patch = pytest.mark.skipif(sys.version_info >= (3, 13), reason="no patch on 3.13+")
 
 
 @pytest.fixture
@@ -43,6 +46,7 @@ def zip_path(tmp_path, monkeypatch):
     zipimport._zip_directory_cache.pop(path, None)
 
 
+@zip_patch
 def test_unchanged_archive_is_not_reread(zip_path):
     path, reads = zip_path
     assert importlib.import_module("m1").X == 1
@@ -53,6 +57,7 @@ def test_unchanged_archive_is_not_reread(zip_path):
     assert len(reads) == n
 
 
+@zip_patch
 def test_rewritten_archive_is_reread_once(zip_path):
     path, reads = zip_path
     importlib.import_module("m1")
@@ -69,6 +74,7 @@ def test_rewritten_archive_is_reread_once(zip_path):
     assert other.find_spec("m2") is not None
 
 
+@zip_patch
 def test_deleted_archive_reads_as_empty(zip_path):
     path, reads = zip_path
     importer = zipimport.zipimporter(path)
@@ -81,6 +87,7 @@ def test_deleted_archive_reads_as_empty(zip_path):
     assert importer.find_spec("m1") is None
 
 
+@zip_patch
 def test_workers_run_the_daemon(spark):
     def worker_method(batches):
         for _ in batches:
@@ -92,3 +99,28 @@ def test_workers_run_the_daemon(spark):
     assert {r.module for r in rows} == {worker_daemon.__name__}
     # the driver, which imported the module, keeps the stock method
     assert zipimport.zipimporter.invalidate_caches.__module__ == "zipimport"
+
+
+def test_workers_freeze_once_after_their_first_task(spark):
+    """Every task reports its worker's pid and frozen-object count: a
+    worker's first task (count 0, unless an earlier test ran one
+    there) is followed by tasks that all see a frozen heap, and the
+    count never grows, so the heap is frozen once, not per task."""
+
+    def report(batches):
+        for _ in batches:
+            yield pa.RecordBatch.from_pylist(
+                [{"pid": os.getpid(), "at": time.monotonic_ns(), "frozen": gc.get_freeze_count()}]
+            )
+
+    rows = spark.range(0, 64, 1, 32).mapInArrow(report, "pid long, at long, frozen long").collect()
+    by_pid = {}
+    for r in sorted(rows, key=lambda r: r.at):
+        by_pid.setdefault(r.pid, []).append(r.frozen)
+    reused = [counts for counts in by_pid.values() if len(counts) >= 2]
+    assert reused, "no worker ran two tasks"
+    for counts in reused:
+        assert all(c > 0 for c in counts[1:])
+        assert all(b <= a for a, b in zip(counts[1:], counts[2:]))
+    # the driver, which never ran the daemon, froze nothing
+    assert gc.get_freeze_count() == 0
